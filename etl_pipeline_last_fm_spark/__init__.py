@@ -10,7 +10,7 @@ scales from the local test fixtures to a 1000-executor cluster:
 - ``sources``    — JSON raw-zone reader, parquet table catalog, HTTP ingest
 - ``operators``  — the operator library (flatten, impute, idempotent append,
                    surrogate keys, star join, windowed top-k, dedup family,
-                   similarity search, text analysis, multimodal plumbing)
+                   similarity search, text analysis)
 - ``functions``  — scalar expression helpers with Postgres-parity semantics
 - ``plans``      — the DDS star build and DM mart queries
 - ``streaming``  — Structured Streaming variant of the ingest path

@@ -112,8 +112,7 @@ def cosine_similarity_expr(a: Column, b: Column) -> Column:
     Python. dot = sum(zip_with(a,b,*)); norms likewise.
 
     At 100 TB this is the expression you want inlined in codegen rather than
-    an Arrow round-trip; for very wide vectors a pandas_udf variant exists in
-    operators.similarity.
+    an Arrow round-trip (see operators.similarity on very wide vectors).
     """
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
     norm_a = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))

@@ -2,8 +2,7 @@
 
 Core relational set (SURVEY.md §2): flatten, impute, idempotent append,
 surrogate keys, star join, windowed top-k. Extension set (BASELINE.json
-north-star): dedup family, similarity search, text analysis, multimodal
-column plumbing.
+north-star): dedup family, similarity search, text analysis.
 """
 
 from etl_pipeline_last_fm_spark.operators.dedup import (

@@ -328,60 +328,6 @@ def incremental_attribution_batches(
     return totals
 
 
-def incremental_attribution_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_attribution_batches`` with the carried KEY state
-    (last touch + fold frontier) as a catalog table bucketed on ``key``
-    — the fold's full-outer state⋈batch join consumes the state side
-    exchange-free exactly as the EMA/CUSUM members do (shared
-    ``frontier_ordered_join`` scaffold; plan-asserted in
-    tests/test_bucketing.py). The two-part result keeps its commit
-    order: the fold is materialized inside ``attribution_fold_batch``
-    (the shared localCheckpoint) BEFORE the state overwrite lands, so
-    the round reads exactly the pre-round state. The ADDITIVE channel
-    totals are channel-cardinality-sized — they stay a driver-held
-    accumulator here (the streaming twin is where their crash-safe
-    commit protocol lives, streaming/ivm.py)."""
-    from etl_pipeline_last_fm_spark.sources.bucketing import write_bucketed
-
-    if not batches:
-        raise ValueError(
-            "incremental_attribution_batches_bucketed needs >= 1 batch"
-        )
-    totals = None
-    for t, batch in enumerate(batches):
-        prev = spark.table(table_name) if t else None
-        state, delta = attribution_fold_batch(
-            prev, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        # state/delta both derive from the fold's own localCheckpoint,
-        # so the overwrite below cannot invalidate them.
-        write_bucketed(state, table_name, ["key"], n_buckets=n_buckets)
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_conversions").alias("n_conversions"),
-                F.sum("attributed_cents").alias("attributed_cents"),
-            )
-            .localCheckpoint()
-        )
-    return totals
-
-
 def decay_attribution_fold_batch(
     touch_state: DataFrame | None,
     batch: DataFrame,

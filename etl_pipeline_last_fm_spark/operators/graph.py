@@ -350,9 +350,22 @@ def pagerank_micro(
         .union(adj.select(F.explode("__adj").alias("node")))
         .distinct()
     )
+    return _final_ranks(nodes, contrib, _rank)
+
+
+def _final_ranks(
+    nodes: DataFrame, contrib: DataFrame | None, rank: F.Column
+) -> DataFrame:
+    """(node, rank_micro) for every node after the last round; with no
+    round run (n_iter=0) every node keeps its INIT rank, as the oracle's
+    ``r0`` does."""
+    if contrib is None:
+        return nodes.select(
+            "node", F.lit(PR_INIT_MICRO).cast("long").alias("rank_micro")
+        )
     return nodes.join(
         contrib.withColumnRenamed("dst", "node"), "node", "left"
-    ).select("node", _rank.alias("rank_micro"))
+    ).select("node", rank.alias("rank_micro"))
 
 
 # Shared oracle edge derivation (weighted base; the unweighted graph is
@@ -597,9 +610,7 @@ def pagerank_weighted_micro(
         )
         .distinct()
     )
-    return nodes.join(
-        contrib.withColumnRenamed("dst", "node"), "node", "left"
-    ).select("node", _rank.alias("rank_micro"))
+    return _final_ranks(nodes, contrib, _rank)
 
 
 def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:

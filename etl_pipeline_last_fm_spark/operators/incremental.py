@@ -124,10 +124,7 @@ def incremental_join_batches(
     which is the only sane contract for a 100 TB join maintained daily
     (the reference recomputes its joins from scratch each run; this is
     the incremental-aggregate contract of this module extended from
-    GROUP BY to ⋈). At cluster scale the states are bucketed on the
-    join key so every delta join is exchange-free on the state side —
-    implemented in ``incremental_join_batches_bucketed`` and
-    plan-asserted in tests/test_bucketing.py.
+    GROUP BY to ⋈).
 
     Correctness is an algebraic identity — after round t the maintained
     M equals (A_0 ∪..∪ A_t) ⋈ (B_0 ∪..∪ B_t) for ANY batching of either
@@ -156,66 +153,4 @@ def incremental_join_batches(
         m_state = m_state.localCheckpoint()
         a_state = (da if a_state is None else a_state.unionByName(da)).localCheckpoint()
         b_state = (db if b_state is None else b_state.unionByName(db)).localCheckpoint()
-    return m_state
-
-
-def incremental_join_batches_bucketed(
-    spark,
-    a_batches: Sequence[DataFrame],
-    b_batches: Sequence[DataFrame],
-    on: Sequence[str],
-    table_prefix: str,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """``incremental_join_batches`` with the side states kept as catalog
-    tables BUCKETED on the join key — the cluster-scale layout the plain
-    variant's docstring promises, now implemented and plan-asserted
-    (VERDICT r5 item 4; tests/test_bucketing.py proves the state side of
-    a delta join carries ZERO Exchange — the delta alone shuffles into
-    the state's bucket layout, or broadcasts when small).
-
-    The states are APPEND-ONLY: each round appends only its delta's rows
-    to the bucketed table (Spark appends per-bucket files; readers still
-    derive bucket partitioning from the union of files). That makes the
-    per-round WRITE cost O(delta) too — closing the snapshot-rewrite
-    caveat the versioned-commit protocol carries (streaming/ivm.py
-    module docstring): compute O(delta x state), write O(delta), read
-    exchange-free. Batch compaction of many small per-round files is the
-    standard table-maintenance job, orthogonal to the algebra.
-
-    Ordering discipline: each round's ΔM is materialized
-    (localCheckpoint) BEFORE the side appends land, so the delta terms
-    join against exactly the pre-round states even though both reference
-    the same live tables. Same delta rule (``join_delta``), same bag
-    semantics, same maintenance-identity oracle as the plain variant.
-    Replays are the streaming twin's concern (its versioned guard);
-    batch mode runs each round exactly once by construction.
-
-    Returns the maintained M. The side tables (``{prefix}_a``,
-    ``{prefix}_b``) are left registered — they ARE the persistent state;
-    the caller owns their lifecycle.
-    """
-    from etl_pipeline_last_fm_spark.sources.bucketing import write_bucketed
-
-    if len(a_batches) != len(b_batches):
-        raise ValueError(
-            f"batch lists must pair up: {len(a_batches)} != {len(b_batches)}"
-            " (pad the shorter side with empty frames)"
-        )
-    if not a_batches:
-        raise ValueError("incremental_join_batches_bucketed needs >= 1 batch")
-    on = list(on)
-    a_tbl = f"{table_prefix}_a"
-    b_tbl = f"{table_prefix}_b"
-    m_state = None
-    for t, (da, db) in enumerate(zip(a_batches, b_batches)):
-        a_state = spark.table(a_tbl) if t else None
-        b_state = spark.table(b_tbl) if t else None
-        delta = join_delta(da, db, a_state, b_state, on)
-        m_state = delta if m_state is None else m_state.unionByName(delta)
-        # Eager: pins this round's ΔM against the PRE-append states.
-        m_state = m_state.localCheckpoint()
-        mode = "append" if t else "overwrite"
-        write_bucketed(da, a_tbl, on, n_buckets=n_buckets, mode=mode)
-        write_bucketed(db, b_tbl, on, n_buckets=n_buckets, mode=mode)
     return m_state

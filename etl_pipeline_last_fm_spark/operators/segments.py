@@ -364,62 +364,3 @@ def incremental_twap_batches(
         ).localCheckpoint()
     assert state is not None, "need at least one batch"
     return present_twap_state(state, key_col)
-
-
-def incremental_twap_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_twap_batches`` over the bucketed OVERWRITE layout
-    (operators/timeseries.fold_batches_bucketed — the state-side-
-    exchange-free join, plan-asserted in tests/test_bucketing.py for
-    this member too). Presents the time_weighted_avg shape."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_bucketed,
-    )
-
-    state = fold_batches_bucketed(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: twap_fold_batch(s, b, key_col, ts_col, value_col,
-                                     tiebreak_col),
-        n_buckets=n_buckets,
-    )
-    return present_twap_state(state, key_col)
-
-
-def incremental_twap_batches_versioned(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_twap_batches`` over the VERSIONED append-only
-    layout (operators/timeseries.fold_batches_versioned): O(batch-keys)
-    writes, exchange-free latest-per-key reads, the decimal(38,0)
-    integral carried through the parquet rounds intact."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_versioned,
-    )
-
-    final = fold_batches_versioned(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: twap_fold_batch(s, b, key_col, ts_col, value_col,
-                                     tiebreak_col),
-        key_col,
-        n_buckets=n_buckets,
-    )
-    return present_twap_state(final, key_col)

@@ -3,8 +3,6 @@
 Batch form: the classic lag/flag/cumsum/aggregate window pipeline, all
 native expressions (one shuffle on the user key; every window and the final
 aggregate share that partitioning, so Catalyst plans a single Exchange).
-
-Streaming form: see streaming/sessions.py (applyInPandasWithState).
 """
 
 from __future__ import annotations

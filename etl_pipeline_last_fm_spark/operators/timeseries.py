@@ -321,237 +321,6 @@ def incremental_ema_batches(
     )
 
 
-def fold_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    fold_fn,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """Generic OVERWRITE-layout driver for the ordered-fold tier: carry
-    any ``fold_fn(state | None, batch) -> state`` fold's state as a
-    catalog table BUCKETED on ``key`` — the cluster-scale layout,
-    mirroring ``incremental_join_batches_bucketed``: the per-batch
-    full-outer state⋈batch join consumes the state side through its
-    bucket-derived partitioning with ZERO Exchange (only the batch's
-    per-key aggregate shuffles, and that one Exchange serves the
-    aggregate itself) — plan-asserted in tests/test_bucketing.py for
-    the EMA and CUSUM members; the property is the join scaffold's
-    (``frontier_ordered_join``), so it holds for every member.
-
-    Unlike the join states this state is NOT append-only (the fold
-    REWRITES the rows of every key present in the batch), so each round
-    overwrites the table — write O(state). An O(batch-keys) write needs
-    the versioned key-value layout (``fold_batches_versioned``); the
-    algebra and the exchange-free READ are unchanged. Ordering
-    discipline: each round's fold is materialized (localCheckpoint)
-    BEFORE the overwrite lands, so the fold reads exactly the pre-round
-    state even though both reference the same table.
-
-    Returns the final state DF (schema = the fold's state schema); the
-    state table stays registered — the caller owns its lifecycle."""
-    from etl_pipeline_last_fm_spark.sources.bucketing import write_bucketed
-
-    if not batches:
-        raise ValueError("fold_batches_bucketed needs >= 1 batch")
-    state = None
-    for t, batch in enumerate(batches):
-        prev = spark.table(table_name) if t else None
-        state = fold_fn(prev, batch).localCheckpoint()
-        # pinned BEFORE overwriting the table it read
-        write_bucketed(state, table_name, ["key"], n_buckets=n_buckets)
-    return state
-
-
-def incremental_ema_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_ema_batches`` over the bucketed overwrite layout
-    (``fold_batches_bucketed`` — see there for the layout contract).
-    Returns (key, n_events, ema_cents)."""
-    state = fold_batches_bucketed(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: ema_fold_batch(s, b, key_col, ts_col, value_col,
-                                    tiebreak_col),
-        n_buckets=n_buckets,
-    )
-    return state.select(
-        F.col("key").alias(key_col), "n_events", "ema_cents"
-    )
-
-
-def incremental_cusum_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_cusum_batches`` over the bucketed overwrite layout
-    (``fold_batches_bucketed``): the CUSUM member takes the identical
-    state-side-exchange-free plan because the join scaffold is shared
-    (``frontier_ordered_join``). Presents the ``cusum_alarms`` shape."""
-    state = fold_batches_bucketed(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: cusum_fold_batch(
-            s, b, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        ),
-        n_buckets=n_buckets,
-    )
-    return state.select(
-        F.col("key").alias(key_col),
-        "n_events", "cusum_final", "cusum_max", "n_alarms",
-    )
-
-
-def read_versioned_state(spark, table_name: str) -> DataFrame:
-    """Latest-row-per-key read of a versioned append-only state table
-    (the LSM-style layout ``incremental_ema_batches_versioned`` writes):
-    one max_by aggregate per key over the ``__v`` round stamp. On a
-    table BUCKETED on ``key`` this aggregate is EXCHANGE-FREE — the scan
-    already satisfies the group-by distribution (plan-asserted in
-    tests/test_bucketing.py) — so reads cost one bucket-local pass, no
-    shuffle, ever."""
-    t = spark.table(table_name)
-    data_cols = [c for c in t.columns if c not in ("key", "__v")]
-    packed = F.max_by(
-        F.struct(*[F.col(c) for c in data_cols]), F.col("__v")
-    ).alias("__s")
-    return t.groupBy("key").agg(packed).select(
-        "key", *[F.col("__s")[c].alias(c) for c in data_cols]
-    )
-
-
-def fold_batches_versioned(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    fold_fn,
-    key_col: str,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """Generic VERSIONED APPEND-ONLY layout driver for the ordered-fold
-    tier — closing the O(state)-write caveat of the overwrite variant:
-    each round appends only the rows of keys PRESENT in the batch
-    (stamped ``__v`` = round), so the write is O(batch keys); the
-    pre-round state is the latest-row-per-key read
-    (``read_versioned_state``), which the bucket layout makes
-    exchange-free; and the fold's state side is restricted to the
-    batch's keys with a semi-join BEFORE folding (keys absent from a
-    batch cannot change, so their rows need neither read amplification
-    nor a rewrite — the fold's full-outer join then emits exactly the
-    batch's keys as the round's delta). This is the relational form of
-    the state-store/LSM trade: compute O(batch × per-key history),
-    write O(batch keys), read exchange-free; compacting many small
-    per-round files is the standard table-maintenance job, orthogonal
-    to the algebra. Maintenance identity and the plan shape are
-    asserted in tests/test_bucketing.py for the EMA and CUSUM members.
-
-    ``fold_fn(state | None, batch) -> state`` is any ordered-fold member
-    built on ``frontier_ordered_join``. Returns the latest-per-key read
-    of the final table; the table stays registered — the caller owns
-    its lifecycle."""
-    from etl_pipeline_last_fm_spark.sources.bucketing import write_bucketed
-
-    if not batches:
-        raise ValueError("fold_batches_versioned needs >= 1 batch")
-    for t, batch in enumerate(batches):
-        if t:
-            keys = batch.select(F.col(key_col).alias("key")).distinct()
-            state = read_versioned_state(spark, table_name).join(
-                keys, "key", "left_semi"
-            )
-        else:
-            state = None
-        delta = fold_fn(state, batch).localCheckpoint()
-        # pinned BEFORE appending to the table it read
-        write_bucketed(
-            delta.withColumn("__v", F.lit(t)),
-            table_name,
-            ["key"],
-            n_buckets=n_buckets,
-            mode="append" if t else "overwrite",
-        )
-    return read_versioned_state(spark, table_name)
-
-
-def incremental_ema_batches_versioned(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_ema_batches`` over the versioned append-only layout
-    (``fold_batches_versioned`` — see there for the layout contract).
-    Returns (key, n_events, ema_cents)."""
-    final = fold_batches_versioned(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: ema_fold_batch(s, b, key_col, ts_col, value_col,
-                                    tiebreak_col),
-        key_col,
-        n_buckets=n_buckets,
-    )
-    return final.select(
-        F.col("key").alias(key_col), "n_events", "ema_cents"
-    )
-
-
-def incremental_cusum_batches_versioned(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_cusum_batches`` over the versioned append-only
-    layout (``fold_batches_versioned``): O(batch-keys) writes and the
-    exchange-free latest-per-key read, with the CUSUM accumulator as
-    the carried row. Presents the ``cusum_alarms`` shape."""
-    final = fold_batches_versioned(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: cusum_fold_batch(
-            s, b, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        ),
-        key_col,
-        n_buckets=n_buckets,
-    )
-    return final.select(
-        F.col("key").alias(key_col),
-        "n_events", "cusum_final", "cusum_max", "n_alarms",
-    )
-
-
 def trend_fit(
     events: DataFrame,
     group_cols: list[str] | None = None,

@@ -81,10 +81,9 @@ class Warehouse:
         return os.path.join(self.root, "dm", name)
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame | None:
-    if os.path.exists(path) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-    ):
+def _read_or_empty(spark: SparkSession, path: str) -> DataFrame | None:
+    # Hadoop FS probe: the path may be a file:// or s3a:// URI.
+    if fs.has_files_with_suffix(spark, path, ".parquet"):
         return spark.read.parquet(path)
     return None
 
@@ -98,7 +97,7 @@ def run_ods(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
     """
     raw = read_raw_chart(spark, wh.raw, ingest_date=run_date)
     ods_batch = flatten_raw_chart(raw)
-    existing = _read_or_empty(spark, wh.ods, ODS_SCHEMA)
+    existing = _read_or_empty(spark, wh.ods)
     delta = idempotent_append(
         ods_batch,
         existing,
@@ -168,7 +167,7 @@ def run_dds(
     # _read_or_empty: a day-one run whose ingest landed zero rows leaves the
     # ODS path without parquet files — build against an empty ODS rather
     # than failing schema inference.
-    ods_all = _read_or_empty(spark, wh.ods, ODS_SCHEMA)
+    ods_all = _read_or_empty(spark, wh.ods)
     if ods_all is None:
         ods_all = spark.createDataFrame([], ODS_SCHEMA)
     ods = ods_all.filter(F.col("source_date") == F.lit(str(run_date)))
@@ -236,7 +235,7 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
     snap = _snapshot_dir(wh, versions[-1])
 
     dims: dict[str, DataFrame | None] = {
-        name: _read_or_empty(spark, os.path.join(snap, name), None) for name in _DIM_NAMES
+        name: _read_or_empty(spark, os.path.join(snap, name)) for name in _DIM_NAMES
     }
     missing = [n for n, df in dims.items() if df is None]
     if missing:
@@ -256,7 +255,7 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
     # silent empty fact would let the next mart run overwrite real data
     # with nothing. (Keyed on dim content, not snapshot count — snapshot
     # retention (keep_snapshots) can legitimately be 1.)
-    fact = _read_or_empty(spark, wh.dds("fact_daily_top_100"), FACT_SCHEMA)
+    fact = _read_or_empty(spark, wh.dds("fact_daily_top_100"))
     if fact is None:
         if dims["dim_country"].limit(1).count() > 0:
             import logging

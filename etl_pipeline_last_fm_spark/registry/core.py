@@ -612,8 +612,8 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (lag/flag/cumsum/aggregate window pipeline;
-    streaming-stateful twin in streaming/sessions.py)."""
+    """Gap-based sessionization (lag/flag/cumsum/aggregate window
+    pipeline)."""
     from etl_pipeline_last_fm_spark.operators.sessions import sessionize
 
     ev = load_table(spark, sf_dir, "events")

@@ -1,6 +1,6 @@
 """LLM-training-data tier: dedup (exact/minhash/simhash/ngram/embedding),
 similarity & ANN, text analysis, sampling, sketches, packing, profiling,
-multimodal plumbing. Split out of __spark_entry__.py in round 5."""
+binary-content metadata. Split out of __spark_entry__.py in round 5."""
 
 from __future__ import annotations
 

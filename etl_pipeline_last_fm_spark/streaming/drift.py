@@ -95,8 +95,8 @@ def read_drift(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 # APPEND-ONLY corpus contract: a doc_id must appear in exactly one batch
-# (re-sending a document doubles its tf — that is the dedup layer's job
-# upstream, streaming/dedup.py). The census itself is text.postings_census
+# (re-sending a document doubles its tf — deduplicating re-sent documents
+# is the producer's job). The census itself is text.postings_census
 # so the batch and streaming contracts can never drift.
 from etl_pipeline_last_fm_spark.operators.text import (  # noqa: E402
     postings_census,

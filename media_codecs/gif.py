@@ -4,9 +4,7 @@ GIF87a/89a is LZW-compressed palette indices inside a block structure —
 all implementable with integer arithmetic: the variable-width LSB-first
 LZW coder, the logical-screen/image-descriptor walk, graphics-control
 extensions (frame delay, transparency, disposal), local color tables
-and the 4-pass row interlace. Completes the image-container family next
-to BMP/PNG/JPEG (operators/multimodal.py, operators/jpeg.py) and gives
-``frame_sample`` a second real animated format.
+and the 4-pass row interlace. Sibling of media_codecs/jpeg.py.
 
 - ``gif_decode``: full composition semantics — frames are drawn onto
   the logical screen honoring per-frame sub-rectangles, transparency
@@ -16,7 +14,7 @@ to BMP/PNG/JPEG (operators/multimodal.py, operators/jpeg.py) and gives
 - ``gif_encode``: frames quantize-free (input colors must fit a 256-
   entry palette built from the frames themselves — fixture generator,
   like the other encoders), full-frame images, optional loop/delay.
-- Quarantine contract as everywhere in the codec family: malformed
+- Quarantine contract, as in media_codecs/jpeg.py: malformed
   payloads raise ValueError (bad magic, truncated blocks, LZW code
   stream errors), never a raw struct/index error.
 """

@@ -8,11 +8,9 @@ canonical-code Huffman encode/decode with byte stuffing, the JFIF
 marker walk, and for progressive the spectral-selection /
 successive-approximation scan machinery (EOBn run codes, the
 correction-bit refinement walk of T.81 G.1.2). No codec library
-involved — this module closes the JPEG branch of the multimodal decode
-surface the same way the BMP/PNG/WAV/AVI/GIF codecs closed theirs
-(operators/multimodal.py, operators/gif.py).
+involved.
 
-Scope (and the quarantine contract, matching the sibling codecs):
+Scope (and the quarantine contract, matching media_codecs/gif.py):
 
 - ``jpeg_encode``: baseline — 8-bit grayscale or RGB, 4:4:4 or 4:2:0
   chroma subsampling, libjpeg-style quality scaling of the Annex-K
@@ -27,18 +25,13 @@ Scope (and the quarantine contract, matching the sibling codecs):
 - ``jpeg_decode``: baseline (SOF0/SOF1) and progressive (SOF2), 8-bit
   precision, 1 or 3 components, sampling factors up to 2x2, restart
   markers, multi-table DQT/DHT segments, tables redefined between
-  scans. Returns (h, w, 3) uint8 RGB (grayscale replicated so the
-  downstream image tier — stats/features/resize — composes unchanged).
+  scans. Returns (h, w, 3) uint8 RGB (grayscale replicated, so every
+  decode has the same shape).
 - Malformed payloads raise ValueError (truncation, bad markers, invalid
   Huffman codes, runs past block/band end, bad scan parameters); format
   variants that genuinely need more machinery raise NotImplementedError
   (hierarchical/lossless SOFs, arithmetic coding, 16-bit quant tables,
   12-bit precision) — both quarantine-catchable.
-
-At 100 TB the per-row Python cost rides the one sanctioned hop
-(mapInPandas over Arrow batches, see operators/multimodal.py) exactly
-like the other codecs; entropy decode is inherently sequential per
-payload, and payload-level parallelism is the partition axis.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
-"""GIF codec (operators/gif.py): LZW round trips, full composition
+"""GIF codec (media_codecs/gif.py): LZW round trips, full composition
 semantics (sub-rectangles, transparency, disposal, interlace, local
 color tables — hand-built from the spec, since the encoder only emits
-full frames), the quarantine contract, and composition with the image
-tier via the multimodal routers."""
+full frames) and the quarantine contract."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ import struct
 import numpy as np
 import pytest
 
-from etl_pipeline_last_fm_spark.operators.gif import (
+from media_codecs.gif import (
     _lzw_decode,
     _lzw_encode,
     _sub_blocks,
@@ -157,55 +156,3 @@ def test_gif_quarantine_typed_errors():
     )
     with pytest.raises(ValueError, match="pixels decoded"):
         gif_decode(short)
-
-
-def test_gif_composes_with_image_tier(spark):
-    """sniff -> image_stats (first composed frame) -> extract_features ->
-    resize (GIF-in/GIF-out) -> frame_sample (animated source)."""
-    from etl_pipeline_last_fm_spark.operators.gif import gif_decode
-    from etl_pipeline_last_fm_spark.operators.multimodal import (
-        FEATURE_DIM,
-        bmp_decode,
-        extract_features,
-        frame_sample,
-        image_stats,
-        resize,
-        sniff_format,
-    )
-
-    rng = np.random.default_rng(7)
-    frames = (rng.integers(0, 4, (6, 8, 10, 1)).astype(np.uint8) * 80).repeat(
-        3, axis=3
-    )
-    enc = gif_encode(frames, delay_ms=40)
-    meta = {
-        "modality": "video", "mime": "image/gif",
-        "width": None, "height": None, "duration_ms": None,
-    }
-    df = spark.createDataFrame(
-        [(1, enc, meta)],
-        "media_id long, content binary, meta struct<modality string, "
-        "mime string, width int, height int, duration_ms int>",
-    )
-    [s] = sniff_format(df).select("sniffed").collect()
-    assert s.sniffed == "gif"
-
-    [st] = image_stats(df).collect()
-    first = frames[0].astype(np.int64)
-    assert (st.width, st.height) == (10, 8)
-    assert (st.sum_r, st.sum_g, st.sum_b) == tuple(
-        int(v) for v in first.reshape(-1, 3).sum(axis=0)
-    )
-
-    [feat] = extract_features(df, fake=False).collect()
-    assert len(feat.feature) == FEATURE_DIM
-
-    [rz] = resize(df, 5, 4, fake=False).collect()
-    out, _ = gif_decode(bytes(rz.content))
-    assert out.shape == (1, 4, 5, 3)
-
-    picked = frame_sample(df, n_frames=3, fake=False).collect()
-    picks = ((2 * np.arange(3) + 1) * 6) // 6
-    assert [(r.media_id, r.frame_idx) for r in picked] == [(1, 0), (1, 1), (1, 2)]
-    for r, p in zip(picked, picks):
-        assert np.array_equal(bmp_decode(bytes(r.frame)), frames[int(p)])

@@ -76,8 +76,12 @@ def test_pagerank_matches_python_reference(spark):
         (1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (5, 4),
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank_micro"] for r in pagerank_micro(df, n_iter=4).collect()}
-    assert got == _py_pagerank(edges, 4)
+    for n_iter in (0, 4):
+        got = {
+            r["node"]: r["rank_micro"]
+            for r in pagerank_micro(df, n_iter=n_iter).collect()
+        }
+        assert got == _py_pagerank(edges, n_iter), n_iter
 
 
 def test_pagerank_dangling_and_source_nodes(spark):
@@ -209,11 +213,12 @@ def test_weighted_pagerank_matches_python_reference(spark):
         (1, 2, 3), (1, 3, 1), (2, 3, 2), (3, 1, 5), (4, 3, 1), (4, 1, 4),
     ]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
-    got = {
-        r["node"]: r["rank_micro"]
-        for r in pagerank_weighted_micro(df, n_iter=4).collect()
-    }
-    assert got == _py_weighted_pagerank(edges, 4)
+    for n_iter in (0, 4):
+        got = {
+            r["node"]: r["rank_micro"]
+            for r in pagerank_weighted_micro(df, n_iter=n_iter).collect()
+        }
+        assert got == _py_weighted_pagerank(edges, n_iter), n_iter
 
 
 def test_weighted_pagerank_uniform_weights_equal_unweighted(spark):

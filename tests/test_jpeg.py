@@ -1,7 +1,6 @@
-"""Baseline JPEG codec (operators/jpeg.py): round-trip fidelity across
-quality/subsampling/restart paths, structural invariants, the
-ValueError/NotImplementedError quarantine contract, and composition with
-the image tier (image_stats / extract_features / resize routers)."""
+"""JPEG codec (media_codecs/jpeg.py): round-trip fidelity across
+quality/subsampling/restart paths, structural invariants, progressive
+scans, and the ValueError/NotImplementedError quarantine contract."""
 
 from __future__ import annotations
 
@@ -9,9 +8,8 @@ import struct
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F  # noqa: F401  (fixture parity w/ siblings)
 
-from etl_pipeline_last_fm_spark.operators.jpeg import (
+from media_codecs.jpeg import (
     _ZZ,
     jpeg_decode,
     jpeg_encode,
@@ -148,7 +146,7 @@ def test_progressive_equals_baseline_exactly():
     be bit-identical — across subsampling, quality extremes, odd sizes,
     grayscale, and white noise (the EOB-run / ZRL / correction-bit
     stress case)."""
-    from etl_pipeline_last_fm_spark.operators.jpeg import (
+    from media_codecs.jpeg import (
         jpeg_encode_progressive,
     )
 
@@ -171,7 +169,7 @@ def test_progressive_equals_baseline_exactly():
 
 
 def test_progressive_markers_and_determinism():
-    from etl_pipeline_last_fm_spark.operators.jpeg import (
+    from media_codecs.jpeg import (
         jpeg_encode_progressive,
     )
 
@@ -186,7 +184,7 @@ def test_progressive_markers_and_determinism():
 def test_progressive_restart_intervals_roundtrip():
     """DRI + RSTn inside progressive scans: DC preds and EOB runs reset
     at every interval on both sides — still exactly equal to baseline."""
-    from etl_pipeline_last_fm_spark.operators.jpeg import (
+    from media_codecs.jpeg import (
         jpeg_encode_progressive,
     )
 
@@ -204,7 +202,7 @@ def test_progressive_restart_intervals_roundtrip():
 
 
 def test_progressive_truncation_and_corruption_raise():
-    from etl_pipeline_last_fm_spark.operators.jpeg import (
+    from media_codecs.jpeg import (
         jpeg_encode_progressive,
     )
 
@@ -222,30 +220,6 @@ def test_progressive_truncation_and_corruption_raise():
         jpeg_decode(bytes(bad))
 
 
-def test_progressive_through_image_tier(spark):
-    """A progressive payload flows through the SAME routers as baseline
-    (magic bytes don't distinguish them) — image_stats sums must match
-    the baseline encoding's exactly, per the equality oracle."""
-    from etl_pipeline_last_fm_spark.operators.jpeg import (
-        jpeg_encode_progressive,
-    )
-    from etl_pipeline_last_fm_spark.operators.multimodal import image_stats
-
-    img = _gradient(24, 32)
-    df = spark.createDataFrame(
-        [
-            (1, jpeg_encode(img, quality=90)),
-            (2, jpeg_encode_progressive(img, quality=90)),
-        ],
-        "media_id long, content binary",
-    )
-    rows = {r.media_id: r for r in image_stats(df).collect()}
-    assert (rows[1].sum_r, rows[1].sum_g, rows[1].sum_b) == (
-        rows[2].sum_r, rows[2].sum_g, rows[2].sum_b,
-    )
-    assert rows[2].width == 32 and rows[2].height == 24
-
-
 def test_encoder_input_validation():
     with pytest.raises(ValueError, match="expected"):
         jpeg_encode(np.zeros((4, 4, 2), np.uint8))
@@ -253,45 +227,3 @@ def test_encoder_input_validation():
         jpeg_encode(np.zeros((4, 4, 3), np.uint8), subsampling="422")
     with pytest.raises(ValueError, match="restart"):
         jpeg_encode(np.zeros((4, 4, 3), np.uint8), restart_interval=-1)
-
-
-def test_jpeg_composes_with_image_tier(spark):
-    """The router arc: sniff -> image_stats (exact channel sums of the
-    DECODED pixels) -> extract_features (real path) -> resize
-    (JPEG-in/JPEG-out) — no fake flag anywhere."""
-    from etl_pipeline_last_fm_spark.operators.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-        image_stats,
-        resize,
-        sniff_format,
-    )
-
-    img = _gradient(24, 32)
-    enc = jpeg_encode(img, quality=95)
-    meta = {
-        "modality": "image", "mime": "image/jpeg",
-        "width": None, "height": None, "duration_ms": None,
-    }
-    df = spark.createDataFrame(
-        [(1, enc, meta)],
-        "media_id long, content binary, meta struct<modality string, "
-        "mime string, width int, height int, duration_ms int>",
-    )
-    [s] = sniff_format(df).select("sniffed").collect()
-    assert s.sniffed == "jpeg"
-
-    dec = jpeg_decode(enc).astype(np.int64)
-    [st] = image_stats(df).collect()
-    assert (st.width, st.height, st.n_px) == (32, 24, 768)
-    assert (st.sum_r, st.sum_g, st.sum_b) == tuple(
-        int(v) for v in dec.reshape(-1, 3).sum(axis=0)
-    )
-
-    [feat] = extract_features(df, fake=False).collect()
-    assert len(feat.feature) == FEATURE_DIM and feat.n_bytes == len(enc)
-
-    [rz] = resize(df, 8, 6, fake=False).collect()
-    out = jpeg_decode(bytes(rz.content))
-    assert out.shape == (6, 8, 3)
-    assert (rz.meta.width, rz.meta.height) == (8, 6)

@@ -243,6 +243,21 @@ def test_streaming_pipeline_rerun_is_noop(spark, warehouse, warehouse_streaming)
         assert _mart_rows(spark, warehouse_streaming, name) == before[name], name
 
 
+def test_pipeline_accepts_file_uri_root(spark, warehouse, tmp_path):
+    """Every warehouse read probes through the Hadoop FS API, so a
+    scheme-qualified root (file://, as s3a:// would be) runs the same
+    days to the same marts as a plain local path."""
+    wh = Warehouse(f"file://{tmp_path / 'wh_uri'}")
+    for date in (D1, D2):
+        raw = fetch_charts(
+            spark, date, countries=list(CHARTS[date]), fetch_fn=fetch_for(date)
+        )
+        write_raw_chart(raw, wh.raw)
+        run_pipeline(spark, wh.root, date)
+    for name in _MART_COLS:
+        assert _mart_rows(spark, wh, name) == _mart_rows(spark, warehouse, name), name
+
+
 def test_pipeline_leaves_no_pinned_rdds(spark, tmp_path):
     """VERDICT r11 item 3: the distributed fact-id assignment persists a
     range-repartitioned intermediate; run_dds must release it after the

@@ -205,8 +205,7 @@ def test_cdc_compact_uses_window_group_limit(spark, sf_dir):
 def test_every_query_stays_jvm_side(registry_plans):
     """Comprehensive guard: EVERY graded entry compiles without Python
     eval nodes (the §2.12 policy) — no curated list to forget to extend.
-    The multimodal pandas path is exercised separately (test_multimodal)
-    and is not a queries() entry."""
+    The engine has no Python UDF path at all, so this covers all of it."""
     for name, (plan, _) in registry_plans.items():
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 

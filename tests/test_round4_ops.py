@@ -175,52 +175,6 @@ def test_kmv_set_ops_estimate_accuracy(spark):
     assert abs(row.n_inter_est - 1000) < 400
 
 
-# ---------------------------------------------------------------------------
-# Streaming KMV maintenance (streaming/kmv_stream.py)
-# ---------------------------------------------------------------------------
-
-
-def _state_set(df):
-    return {(r["__v"], r["__h"]) for r in df.collect()}
-
-
-def test_kmv_stream_fold_equals_batch(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.kmv_stream import (
-        kmv_fold_batch,
-        read_kmv_state,
-    )
-
-    state = str(tmp_path / "kmv_state")
-    b0 = spark.createDataFrame([(v,) for v in range(0, 300)], "v long")
-    b1 = spark.createDataFrame([(v,) for v in range(200, 600)], "v long")
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    kmv_fold_batch(b1, 1, state, "v", [], k=64, salt="s")
-    # stream-maintained state == batch state of the union, row for row:
-    # bottom-k is a pure function of the value SET, not arrival order
-    union = b0.unionByName(b1)
-    want = _state_set(kmv_state(union, "v", [], k=64, salt="s"))
-    assert _state_set(read_kmv_state(spark, state)) == want
-
-
-def test_kmv_stream_fold_replay_idempotent(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.kmv_stream import (
-        kmv_fold_batch,
-        read_kmv_state,
-    )
-
-    state = str(tmp_path / "kmv_state")
-    b0 = spark.createDataFrame([(v,) for v in range(100)], "v long")
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    once = _state_set(read_kmv_state(spark, state))
-    # replay with the SAME batch_id: guarded no-op
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    assert _state_set(read_kmv_state(spark, state)) == once
-    # and even WITHOUT the guard the merge is idempotent: folding the same
-    # rows under a NEW batch_id also cannot change the state
-    kmv_fold_batch(b0, 1, state, "v", [], k=64, salt="s")
-    assert _state_set(read_kmv_state(spark, state)) == once
-
-
 def test_bloom_same_key_name_join(spark):
     # regression: fact_key == dim_key name must not raise
     # AMBIGUOUS_REFERENCE (caught by scripts/scale_smoke.py)

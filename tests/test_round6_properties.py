@@ -221,48 +221,6 @@ def test_link_prediction_matches_bruteforce_jaccard(spark, edges):
     assert got == sorted(want)
 
 
-@given(
-    h=st.integers(1, 6),
-    w=st.integers(1, 6),
-    seed=st.integers(0, 2**31),
-)
-@settings(**SETTINGS)
-def test_bmp_roundtrip_arbitrary_dims(h, w, seed):
-    import numpy as np
-
-    from etl_pipeline_last_fm_spark.operators.multimodal import (
-        bmp_decode,
-        bmp_encode,
-    )
-
-    px = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(bmp_decode(bmp_encode(px)), px)
-
-
-@given(
-    n=st.integers(0, 20),
-    ch=st.integers(1, 2),
-    rate=st.integers(1, 48_000),
-    seed=st.integers(0, 2**31),
-)
-@settings(**SETTINGS)
-def test_wav_roundtrip_arbitrary_payloads(n, ch, rate, seed):
-    import numpy as np
-
-    from etl_pipeline_last_fm_spark.operators.multimodal import (
-        wav_decode,
-        wav_encode,
-    )
-
-    s = (
-        np.random.default_rng(seed)
-        .integers(-(2**15), 2**15, (n, ch))
-        .astype(np.int16)
-    )
-    got, got_rate = wav_decode(wav_encode(s, rate))
-    assert got_rate == rate and np.array_equal(got, s)
-
-
 intervals_strategy = st.lists(
     st.tuples(st.integers(0, 50), st.integers(0, 30)),  # (start_min, len_min)
     min_size=1,

@@ -180,42 +180,6 @@ def test_holt_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     assert got == _want_holt(spark, slices)
 
 
-def test_holt_fold_bucketed_and_versioned_layouts(spark, tmp_path):
-    """The generic state layouts carry the Holt member too: identity vs
-    the one-shot through both fold_batches_bucketed (overwrite) and
-    fold_batches_versioned (append-only, latest-per-key read)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_bucketed,
-        fold_batches_versioned,
-        holt_fold_batch,
-        present_holt_state,
-    )
-
-    import shutil
-
-    for t in ("holt_state_b", "holt_state_v"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # a warehouse dir left by a DIFFERENT session survives the DROP
-        # (no catalog entry) and fails saveAsTable — remove it too
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    slices = _holt_slices(spark)
-    want = _want_holt(spark, slices)
-    got_b = sorted(map(tuple, present_holt_state(
-        fold_batches_bucketed(
-            spark, slices, "holt_state_b", holt_fold_batch, n_buckets=4
-        )
-    ).collect()))
-    assert got_b == want
-    got_v = sorted(map(tuple, present_holt_state(
-        fold_batches_versioned(
-            spark, slices, "holt_state_v", holt_fold_batch, "user_id",
-            n_buckets=4,
-        )
-    ).collect()))
-    assert got_v == want
-
-
 def _py_dw(rows):
     out = {}
     for uid in {r[1] for r in rows}:
