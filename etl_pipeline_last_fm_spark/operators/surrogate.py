@@ -63,7 +63,7 @@ def assign_surrogate_keys_distributed(
     persist() comment below). Pass a list to receive that handle and
     ``unpersist()`` it once the result has been materialized (ADVICE r11:
     without release, a long-running multi-day driver accumulates one
-    cached fact delta per day) — ``build_dds`` threads it to the pipeline,
+    cached fact delta per day) — ``build_fact`` threads it to the pipeline,
     which releases after the fact write. Without ``cache_out`` the cache
     lives until session eviction (fine for one-shot registry queries).
     """

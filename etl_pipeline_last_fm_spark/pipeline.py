@@ -30,6 +30,7 @@ from datetime import date as Date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_pipeline_last_fm_spark.operators.flatten import flatten_raw_chart
 from etl_pipeline_last_fm_spark.operators.idempotent import idempotent_append
@@ -38,8 +39,15 @@ from etl_pipeline_last_fm_spark.plans.marts import (
     mart_avg_duration_by_country,
     mart_expected_royalties,
 )
-from etl_pipeline_last_fm_spark.plans.star_build import DdsTables, build_dds
+from etl_pipeline_last_fm_spark.plans.star_build import (
+    DdsDims,
+    DdsTables,
+    build_dims,
+    build_fact,
+)
 from etl_pipeline_last_fm_spark.schemas import (
+    DIM_SCHEMAS,
+    DM_SCHEMAS,
     FACT_SCHEMA,
     ODS_CONFLICT_KEY,
     ODS_SCHEMA,
@@ -81,10 +89,12 @@ class Warehouse:
         return os.path.join(self.root, "dm", name)
 
 
-def _read_or_empty(spark: SparkSession, path: str) -> DataFrame | None:
-    # Hadoop FS probe: the path may be a file:// or s3a:// URI.
+def _read_or_empty(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame | None:
+    # Hadoop FS probe (file:// or s3a:// URIs); declared schema: no inference job.
     if fs.has_files_with_suffix(spark, path, ".parquet"):
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     return None
 
 
@@ -97,7 +107,7 @@ def run_ods(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
     """
     raw = read_raw_chart(spark, wh.raw, ingest_date=run_date)
     ods_batch = flatten_raw_chart(raw)
-    existing = _read_or_empty(spark, wh.ods)
+    existing = _read_or_empty(spark, wh.ods, ODS_SCHEMA)
     delta = idempotent_append(
         ods_batch,
         existing,
@@ -116,7 +126,6 @@ def run_ods(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
     )
 
 
-_DIM_NAMES = ("dim_country", "dim_artist", "dim_song")
 _COMMIT_MARKER = "_COMMITTED"
 
 
@@ -145,34 +154,31 @@ def _snapshot_dir(wh: Warehouse, version: int) -> str:
 def run_dds(
     spark: SparkSession, wh: Warehouse, run_date: str | Date, keep_snapshots: int = 2
 ) -> None:
-    """ODS date slice -> star build -> append fact delta, write a NEW dim
-    snapshot version and atomically commit it.
+    """ODS date slice -> dims -> NEW committed dim snapshot -> fact delta
+    built against that snapshot and appended.
 
     Dims are never overwritten in place and never collect()ed to the driver:
     each run writes all three to a fresh ``dim_snapshots/v=N+1/`` directory
-    (the plans read v=N — different paths, so no stale-file-index conflict)
-    and drops a ``_COMMITTED`` marker only after all three writes succeed.
-    Readers resolve the latest *committed* version, and the fact delta is
-    appended only AFTER the commit, so a crash anywhere leaves the star
-    self-consistent: either the old snapshot is live, or the new one is
-    live with the day's fact rows at worst absent (re-run appends them —
-    the delta is an anti-join against the existing fact). The
-    snapshot-pointer pattern (Iceberg-style) instead of the reference's
-    in-place UPSERTs. The version/commit-marker bookkeeping goes through
-    the Hadoop FileSystem API (sources/fs.py), so warehouse roots may be
-    object-store URIs (``s3a://...``, see ``s3a_conf``) — the marker
-    write is a single-object PUT, atomic on S3. This stays O(executor) however large dim_song grows
+    (the dim build reads v=N — different paths, so no stale-file-index
+    conflict) and drops a ``_COMMITTED`` marker only after all three writes
+    succeed. The fact delta is then built against the dims read back from
+    v=N+1, so it joins exactly the ids that were persisted, and is appended
+    only AFTER the commit (crash order: see below). The snapshot-pointer pattern
+    (Iceberg-style) instead of the reference's in-place UPSERTs. The
+    version/commit-marker bookkeeping goes through the Hadoop FileSystem
+    API (sources/fs.py), so warehouse roots may be object-store URIs
+    (``s3a://...``, see ``s3a_conf``) — the marker write is a single-object
+    PUT, atomic on S3. This stays O(executor) however large dim_song grows
     (it is ~distinct(song, duration) and scales with the corpus, unlike the
     genuinely bounded country dim)."""
-    # _read_or_empty: a day-one run whose ingest landed zero rows leaves the
-    # ODS path without parquet files — build against an empty ODS rather
-    # than failing schema inference.
-    ods_all = _read_or_empty(spark, wh.ods)
+    # A day-one run whose ingest landed zero rows leaves the ODS path
+    # without parquet files — build against an empty ODS.
+    ods_all = _read_or_empty(spark, wh.ods, ODS_SCHEMA)
     if ods_all is None:
         ods_all = spark.createDataFrame([], ODS_SCHEMA)
     ods = ods_all.filter(F.col("source_date") == F.lit(str(run_date)))
     existing = load_dds(spark, wh)
-    result = build_dds(ods, existing=existing)
+    dims = build_dims(ods, existing=existing)
 
     # Dim snapshot FIRST, fact delta second: a crash between the two leaves
     # committed dims whose fact rows for the day are simply absent — the
@@ -190,24 +196,28 @@ def run_dds(
     # is ~distinct(song, duration) and scales with the corpus, so a
     # coalesce(1) write funnels a corpus-scaled table through ONE task (and
     # produces a multi-GB single file at 100 TB). It goes through
-    # write_compacted — size-targeted repartition, parallel write.
+    # write_compacted — AQE-sized rebalance, row-capped files.
     for name, full in [
-        ("dim_country", result.dim_country),
-        ("dim_artist", result.dim_artist),
+        ("dim_country", dims.dim_country),
+        ("dim_artist", dims.dim_artist),
     ]:
         full.coalesce(1).write.mode("overwrite").parquet(os.path.join(snap, name))
     write_compacted(
-        result.dim_song, os.path.join(snap, "dim_song"),
+        dims.dim_song, os.path.join(snap, "dim_song"),
         target_rows_per_file=TARGET_ROWS_PER_FILE,
     )
     fs.write_text(spark, os.path.join(snap, _COMMIT_MARKER), str(run_date))
 
-    fact_path = wh.dds("fact_daily_top_100")
+    new_fact, fact_cache = build_fact(
+        ods,
+        _load_dims(spark, wh, new_v),
+        existing_fact=existing.fact if existing else None,
+    )
     # The fact delta is the table that scales to billions of rows/day —
     # repartition("date") would funnel the whole single-date delta through
     # ONE write task (SCALING.md file-count policy, round 11).
     write_compacted_partitioned(
-        result.new_fact, fact_path, partition_cols=["date"],
+        new_fact, wh.dds("fact_daily_top_100"), partition_cols=["date"],
         target_rows_per_file=TARGET_ROWS_PER_FILE,
         mode="append", dynamic_overwrite=False,
     )
@@ -216,11 +226,29 @@ def run_dds(
     # release it (ADVICE r11: a multi-day driver would otherwise hold one
     # cached fact delta per day until session eviction). Pinned by
     # tests/test_pipeline.py::test_pipeline_leaves_no_pinned_rdds.
-    result.release()
+    fact_cache.unpersist()
 
     # Retire old snapshots (keep a short history for readers mid-flight).
     for v in versions[:-keep_snapshots] if keep_snapshots else versions:
         fs.delete_recursive(spark, _snapshot_dir(wh, v))
+
+
+def _load_dims(spark: SparkSession, wh: Warehouse, version: int) -> DdsDims:
+    """The three dims of committed snapshot ``version``, read with their
+    declared schemas; raises if one is missing."""
+    snap = _snapshot_dir(wh, version)
+    dims = {
+        name: _read_or_empty(spark, os.path.join(snap, name), schema)
+        for name, schema in DIM_SCHEMAS.items()
+    }
+    missing = [n for n, df in dims.items() if df is None]
+    if missing:
+        raise RuntimeError(
+            f"DDS warehouse at {wh.root} is inconsistent: snapshot v={version} "
+            f"is committed but {', '.join(missing)} is missing — "
+            "a partial prior run or external deletion; re-run run_dds or remove the snapshot."
+        )
+    return DdsDims(**dims)
 
 
 def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
@@ -232,18 +260,7 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
     versions = _committed_versions(spark, wh)
     if not versions:
         return None
-    snap = _snapshot_dir(wh, versions[-1])
-
-    dims: dict[str, DataFrame | None] = {
-        name: _read_or_empty(spark, os.path.join(snap, name)) for name in _DIM_NAMES
-    }
-    missing = [n for n, df in dims.items() if df is None]
-    if missing:
-        raise RuntimeError(
-            f"DDS warehouse at {wh.root} is inconsistent: snapshot v={versions[-1]} "
-            f"is committed but {', '.join(missing)} is missing — "
-            "a partial prior run or external deletion; re-run run_dds or remove the snapshot."
-        )
+    dims = _load_dims(spark, wh, versions[-1])
     # An absent fact path is NOT inconsistency: an empty first run writes
     # dims (one empty part file each) but `.partitionBy` of an empty fact
     # delta emits no parquet at all, and a crash between snapshot commit
@@ -255,9 +272,9 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
     # silent empty fact would let the next mart run overwrite real data
     # with nothing. (Keyed on dim content, not snapshot count — snapshot
     # retention (keep_snapshots) can legitimately be 1.)
-    fact = _read_or_empty(spark, wh.dds("fact_daily_top_100"))
+    fact = _read_or_empty(spark, wh.dds("fact_daily_top_100"), FACT_SCHEMA)
     if fact is None:
-        if dims["dim_country"].limit(1).count() > 0:
+        if dims.dim_country.limit(1).count() > 0:
             import logging
 
             logging.getLogger(__name__).warning(
@@ -269,12 +286,7 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
                 wh.dds("fact_daily_top_100"),
             )
         fact = spark.createDataFrame([], FACT_SCHEMA)
-    return DdsTables(
-        dim_country=dims["dim_country"],
-        dim_artist=dims["dim_artist"],
-        dim_song=dims["dim_song"],
-        fact=fact,
-    )
+    return DdsTables(**vars(dims), fact=fact)
 
 
 def run_dm(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
@@ -301,13 +313,6 @@ def run_dm(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
             df, wh.dm(name), partition_cols=["date"],
             target_rows_per_file=TARGET_ROWS_PER_FILE,
         )
-
-
-_DM_MART_NAMES = (
-    "avg_song_duration_by_country",
-    "artist_appearances_by_date",
-    "expected_artist_royalties_by_date",
-)
 
 
 def publish_dm_to_bi(
@@ -344,8 +349,8 @@ def publish_dm_to_bi(
         write_jdbc_staged,
     )
 
-    for name in _DM_MART_NAMES:
-        mart = spark.read.parquet(wh.dm(name))
+    for name, schema in DM_SCHEMAS.items():
+        mart = spark.read.schema(schema).parquet(wh.dm(name))
         if run_date is None:
             write_jdbc_staged(
                 mart, url, name, driver=driver, num_partitions=num_partitions

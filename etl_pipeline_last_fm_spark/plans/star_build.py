@@ -8,6 +8,10 @@ because the fact build looks up the ids the dim loads just created):
 3. dim_song     — DISTINCT song_name + imputed dur, conflict key (song,duration)  (:68-83)
 4. fact         — 3-way star join on natural keys,  conflict key (date,ctry,rank) (:85-104)
 
+Steps 1-3 are ``build_dims`` and step 4 is ``build_fact``; the pipeline
+commits the dims between the two and builds the fact against the
+committed snapshot.
+
 Appendix A.1 (zero-duration fact-row loss): the reference joins the fact on
 the RAW ODS duration while dim_song stores the IMPUTED duration
 (dags/from_ods_to_dds_pg.py:98 vs :74-77), silently dropping zero-duration
@@ -33,47 +37,41 @@ from etl_pipeline_last_fm_spark.operators.star import star_join
 
 
 @dataclass
-class DdsTables:
+class DdsDims:
     dim_country: DataFrame
     dim_artist: DataFrame
     dim_song: DataFrame
+
+
+@dataclass
+class DdsTables(DdsDims):
     fact: DataFrame
-    # Per-run appended deltas (None on a from-scratch build where delta ==
-    # full). The pipeline appends fact deltas and overwrites dims, so both
-    # views are returned explicitly rather than recomputed by anti-join.
-    new_fact: DataFrame | None = None
-    # Persisted intermediate pinned by the distributed fact-id assignment
-    # (operators/surrogate.py); the caller unpersist()s it after the fact
-    # write materializes the numbering (ADVICE r11 — without release, a
-    # multi-day driver leaks one cached fact delta per day).
-    fact_cache: DataFrame | None = None
-
-    def release(self) -> None:
-        """Unpersist the fact-numbering cache (no-op if already released
-        or never pinned). Call after the action that consumes new_fact."""
-        if self.fact_cache is not None:
-            self.fact_cache.unpersist()
 
 
-def build_dds(
-    ods: DataFrame,
-    existing: DdsTables | None = None,
-    replicate_zero_duration_loss: bool = False,
-) -> DdsTables:
-    """Build (or incrementally extend) the DDS star from ODS rows.
+def _impute_duration(ods: DataFrame) -> DataFrame:
+    # P8/P9: zero durations -> the day's half-up mean of the non-zero ones.
+    return impute_zero_with_partition_mean(
+        ods,
+        value_col="duration_sec",
+        partition_cols=["source_date"],
+        out_col="duration_imputed",
+    )
+
+
+def build_dims(ods: DataFrame, existing: DdsDims | None = None) -> DdsDims:
+    """Extend the three dims with the natural keys of an ODS slice.
 
     ``ods`` is the slice to load — in the daily pipeline, one date partition
     (the reference filters ``source_date = <d>`` in every statement,
     dags/from_ods_to_dds_pg.py:49,62,79,100; callers pre-filter here, which
     Catalyst turns into partition pruning on the ODS scan).
 
-    Returns the *new full* dim/fact contents (existing ∪ appended delta) so
-    callers can either overwrite or append just the delta.
+    Returns the *new full* dims (existing ∪ appended delta), ready to be
+    written as the next snapshot.
     """
     ex_country = existing.dim_country if existing else None
     ex_artist = existing.dim_artist if existing else None
     ex_song = existing.dim_song if existing else None
-    ex_fact = existing.fact if existing else None
 
     # --- dim_country (A5 DISTINCT + §2.7 U2 + §2.6 serial) ---
     new_countries = idempotent_append(
@@ -85,7 +83,6 @@ def build_dds(
     new_countries = assign_surrogate_keys(
         new_countries, "country_id", ["country_name"], existing=ex_country
     ).select("country_id", "country_name")
-    dim_country = _union(ex_country, new_countries)
 
     # --- dim_artist (U3) ---
     new_artists = idempotent_append(
@@ -97,17 +94,10 @@ def build_dds(
     new_artists = assign_surrogate_keys(
         new_artists, "artist_id", ["artist_name"], existing=ex_artist
     ).select("artist_id", "artist_name")
-    dim_artist = _union(ex_artist, new_artists)
 
     # --- dim_song (U4): imputed duration (P8/P9) then DISTINCT ---
-    ods_imputed = impute_zero_with_partition_mean(
-        ods,
-        value_col="duration_sec",
-        partition_cols=["source_date"],
-        out_col="duration_imputed",
-    )
     new_songs = idempotent_append(
-        ods_imputed.select(
+        _impute_duration(ods).select(
             "song_name", F.col("duration_imputed").alias("duration_sec")
         ).distinct(),
         ex_song,
@@ -121,24 +111,43 @@ def build_dds(
     new_songs = assign_surrogate_keys(
         new_songs, "song_id", ["song_name", "duration_sec"], existing=ex_song
     ).select("song_id", "song_name", "duration_sec")
-    dim_song = _union(ex_song, new_songs)
 
+    return DdsDims(
+        dim_country=_union(ex_country, new_countries),
+        dim_artist=_union(ex_artist, new_artists),
+        dim_song=_union(ex_song, new_songs),
+    )
+
+
+def build_fact(
+    ods: DataFrame,
+    dims: DdsDims,
+    existing_fact: DataFrame | None = None,
+    replicate_zero_duration_loss: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The fact delta of an ODS slice, looked up against ``dims`` (in the
+    pipeline: the committed snapshot, so it joins exactly the persisted
+    ids), and the persisted intermediate its eager numbering pins (see
+    ``assign_surrogate_keys_distributed``) — unpersist that once the delta
+    is written."""
     # --- fact (J1-J3 star join + U5) ---
     if replicate_zero_duration_loss:
         # Reference behavior: join on RAW duration (rows with duration 0
         # silently vanish — Appendix A.1).
         fact_src = ods.withColumn("join_duration", F.col("duration_sec"))
     else:
-        fact_src = ods_imputed.withColumn("join_duration", F.col("duration_imputed"))
+        fact_src = _impute_duration(ods).withColumn(
+            "join_duration", F.col("duration_imputed")
+        )
 
-    song_side = dim_song.select(
+    song_side = dims.dim_song.select(
         "song_id",
         F.col("song_name").alias("__song_name"),
         F.col("duration_sec").alias("__song_duration"),
     )
     joined = star_join(
         fact_src,
-        [(dim_artist, "artist_name")],
+        [(dims.dim_artist, "artist_name")],
     ).join(
         # J2 composite key; null-safe on duration so an all-sentinel day
         # (imputed duration NULL, FIXTURES.md A5.2) still reaches the fact —
@@ -153,7 +162,7 @@ def build_dds(
     ).drop("__song_name", "__song_duration").join(
         # J3 has mismatched key names (dc.country_name = dr.country,
         # reference dags/from_ods_to_dds_pg.py:99) -> explicit join Column.
-        F.broadcast(dim_country),
+        F.broadcast(dims.dim_country),
         F.col("country") == F.col("country_name"),
         "inner",
     )
@@ -167,13 +176,13 @@ def build_dds(
             "song_rank",
             "listeners_count",
         ),
-        ex_fact,
+        existing_fact,
         keys=["date", "country_id", "song_rank"],
         tiebreaker=["song_id", "artist_id"],
         prune_on=["date"],
     )
     # Distributed id assignment for the FACT delta (VERDICT r10 item 1):
-    # the dims above use the global-window variant because their deltas are
+    # build_dims uses the global-window variant because the dim deltas are
     # dim-sized (hundreds of rows/day in the reference), but the fact delta
     # is the table that scales to billions of rows/day — a row_number()
     # OVER (ORDER BY ...) with no partition list would funnel every fact
@@ -182,23 +191,14 @@ def build_dds(
     # (equivalence-tested, tests/test_operator_properties.py) via
     # range-repartition + per-partition counts + a driver prefix sum over
     # #partitions integers; no single-partition stage anywhere.
-    fact_cache: list[DataFrame] = []
+    cache: list[DataFrame] = []
     new_fact = assign_surrogate_keys_distributed(
         new_fact, "fact_id", ["date", "country_id", "song_rank"],
-        existing=ex_fact, cache_out=fact_cache,
+        existing=existing_fact, cache_out=cache,
     ).select(
         "fact_id", "date", "country_id", "song_id", "artist_id", "song_rank", "listeners_count"
     )
-    fact = _union(ex_fact, new_fact)
-
-    return DdsTables(
-        dim_country=dim_country,
-        dim_artist=dim_artist,
-        dim_song=dim_song,
-        fact=fact,
-        new_fact=new_fact,
-        fact_cache=fact_cache[0] if fact_cache else None,
-    )
+    return new_fact, cache[0]
 
 
 def _union(existing: DataFrame | None, delta: DataFrame) -> DataFrame:

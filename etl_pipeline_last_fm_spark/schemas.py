@@ -121,6 +121,13 @@ FACT_SCHEMA = StructType(
 )
 FACT_CONFLICT_KEY = ["date", "country_id", "song_rank"]  # ddl_dds.sql:31
 
+# Each dim's directory name in a snapshot (dim_snapshots/v=N/<name>).
+DIM_SCHEMAS = {
+    "dim_country": DIM_COUNTRY_SCHEMA,
+    "dim_artist": DIM_ARTIST_SCHEMA,
+    "dim_song": DIM_SONG_SCHEMA,
+}
+
 # ---------------------------------------------------------------------------
 # DM: aggregate marts (reference scripts/ddl_dm.sql, CTAS-inferred there).
 # ---------------------------------------------------------------------------
@@ -145,6 +152,13 @@ DM_ROYALTIES_SCHEMA = StructType(
         StructField("royalties", DoubleType()),
     ]
 )
+
+# Each mart's directory name under <warehouse>/dm.
+DM_SCHEMAS = {
+    "avg_song_duration_by_country": DM_AVG_DURATION_SCHEMA,
+    "artist_appearances_by_date": DM_APPEARANCES_SCHEMA,
+    "expected_artist_royalties_by_date": DM_ROYALTIES_SCHEMA,
+}
 
 # Royalty rate: reference scripts/ddl_dm.sql:17 ("example price per listen").
 ROYALTY_RATE = 0.003

@@ -8,17 +8,19 @@ across files, no single-partition stage anywhere (the same reason
 would still range-partition, but an explicit repartitionByRange lets the
 caller pick the file count instead of inheriting shuffle.partitions).
 
-``write_compacted`` — the small-files fix: one pass to count (cheap:
-parquet metadata when possible), then ``repartition(ceil(n/target))`` so
-every output file lands near the target row count. A 100 TB table written
-at shuffle-partition granularity produces millions of KB-sized files that
+``write_compacted`` — the small-files fix in one action: a ``REBALANCE``
+hint lets AQE size the write tasks from
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (coalescing a small
+sink to one task, splitting a large one), and ``maxRecordsPerFile`` caps
+every output file at the target row count. A 100 TB table written at
+shuffle-partition granularity produces millions of KB-sized files that
 throttle every later scan on listing + open overhead; compaction at write
-time is cheaper than a follow-up OPTIMIZE pass.
+time is cheaper than a follow-up OPTIMIZE pass. With AQE off the rebalance
+falls back to ``spark.sql.shuffle.partitions`` tasks: the same rows, more
+files.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 
@@ -45,26 +47,12 @@ def write_compacted(
     path: str,
     target_rows_per_file: int = 1_000_000,
     mode: str = "overwrite",
-) -> int:
-    """Write parquet with ~target_rows_per_file per output file; returns
-    the file count used. The count() pass is the price of a deterministic
-    layout — for append-mode streams prefer maxRecordsPerFile, which caps
-    file size without the extra action but can still emit tiny tail files
-    per task."""
-    owned = not df.is_cached
-    if owned:
-        df = df.persist()
-    try:
-        n = df.count()
-        n_files = max(1, math.ceil(n / target_rows_per_file))
-        df.repartition(n_files).write.mode(mode).parquet(path)
-    finally:
-        # Only release a cache WE took (ADVICE r11): Spark persistence is
-        # not refcounted, so unpersisting a caller-persisted frame would
-        # silently evict the caller's cache.
-        if owned:
-            df.unpersist()
-    return n_files
+) -> None:
+    """Write parquet in AQE-sized tasks with at most
+    ``target_rows_per_file`` rows per output file, in one Spark action."""
+    write_compacted_partitioned(
+        df, path, [], target_rows_per_file, mode, dynamic_overwrite=False
+    )
 
 
 def write_compacted_partitioned(
@@ -74,28 +62,17 @@ def write_compacted_partitioned(
     target_rows_per_file: int = 1_000_000,
     mode: str = "overwrite",
     dynamic_overwrite: bool = True,
-) -> int:
-    """``write_compacted`` for hive-partitioned sinks (the daily marts):
-    spread the rows across ``ceil(n/target)`` round-robin tasks BEFORE the
-    ``partitionBy`` write, so a single-date run (where hash-repartitioning
-    on the partition column would collapse back to one task — the exact
-    ``coalesce(1)`` bottleneck this replaces) still writes in parallel.
-    File-count bound: tasks × dates-per-task, i.e. ``n_files`` per date
-    directory for the daily single-date case. The frame is persisted around
-    the count+write pair so the plan (an aggregate at mart scale) is not
-    computed twice; returns the task count used."""
-    owned = not df.is_cached
-    if owned:
-        df = df.persist()
-    try:
-        n = df.count()
-        n_files = max(1, math.ceil(n / target_rows_per_file))
-        writer = df.repartition(n_files).write.mode(mode)
-        if dynamic_overwrite:
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        writer.partitionBy(*partition_cols).parquet(path)
-    finally:
-        # Cache-ownership rule as in write_compacted (ADVICE r11).
-        if owned:
-            df.unpersist()
-    return n_files
+) -> None:
+    """``write_compacted`` for hive-partitioned sinks (the daily marts).
+    The rebalance is round-robin, NOT on the partition columns: hashing on
+    the partition column would send a single-date run to one task — the
+    exact ``coalesce(1)`` bottleneck this replaces — while a round-robin
+    rebalance lets AQE split a large single-date write across tasks."""
+    writer = (
+        df.hint("rebalance")
+        .write.mode(mode)
+        .option("maxRecordsPerFile", target_rows_per_file)
+    )
+    if dynamic_overwrite:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(*partition_cols).parquet(path)

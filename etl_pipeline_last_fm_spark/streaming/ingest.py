@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.flatten import flatten_raw_chart
 from etl_pipeline_last_fm_spark.operators.idempotent import idempotent_append
-from etl_pipeline_last_fm_spark.schemas import ODS_CONFLICT_KEY, RAW_SCHEMA
+from etl_pipeline_last_fm_spark.schemas import ODS_CONFLICT_KEY, ODS_SCHEMA, RAW_SCHEMA
 
 
 def stream_raw_to_ods(
@@ -62,7 +62,7 @@ def stream_raw_to_ods(
         # Hadoop FS probe, not os.walk: the ODS path may be an
         # object-store URI (sources/fs.py, round 11).
         if has_files_with_suffix(spark_b, ods_path, ".parquet"):
-            existing = spark_b.read.parquet(ods_path)
+            existing = spark_b.read.schema(ODS_SCHEMA).parquet(ods_path)
         delta = idempotent_append(
             ods_batch,
             existing,

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import math
 
 from pyspark.sql import functions as F
 
@@ -45,36 +46,77 @@ def test_write_sorted_plan_has_rangepartitioning(spark, sf_dir):
     assert "rangepartitioning" in plan.lower()
 
 
+def _rows_per_file(spark, files):
+    return [spark.read.parquet(f).count() for f in files]
+
+
 def test_write_compacted_hits_target_file_count(spark, sf_dir, tmp_path):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").coalesce(1)
     n = li.count()
+    target = max(1, n // 3)
     path = str(tmp_path / "compact")
-    used = write_compacted(li, path, target_rows_per_file=max(1, n // 3))
+    write_compacted(li, path, target_rows_per_file=target)
     files = glob.glob(f"{path}/part-*.parquet")
-    assert used == len(files) <= 4
+    # A one-task input: at most ceil(n/target) files, none over target.
+    assert 1 <= len(files) <= math.ceil(n / target)
+    assert max(_rows_per_file(spark, files)) <= target
     assert spark.read.parquet(path).count() == n
 
 
+def _write_stage_tasks(spark, group: str) -> int:
+    """Tasks of the last stage of the last job run under ``group`` — the
+    stage that writes the files. Status-tracker reads, no Spark action."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    job = max(tracker.getJobIdsForGroup(group))
+    stage = max(tracker.getJobInfo(job).stageIds)
+    return tracker.getStageInfo(stage).numTasks
+
+
 def test_write_compacted_partitioned_single_date_stays_parallel(spark, tmp_path):
-    """The round-11 fix class: a single-date daily mart/delta must spread
-    across ceil(n/target) write tasks, not collapse to one (which is what
-    both coalesce(1) and repartition(partition_col) did)."""
+    """The round-11 fix class: a single-date daily mart/delta must not
+    collapse to one write task (which is what both coalesce(1) and
+    repartition(partition_col) did). Files stay row-capped at the target,
+    and once AQE's advisory partition size is below the data size, the
+    round-robin rebalance of a multi-task input writes the single date in
+    several tasks."""
+    import uuid
+
     from etl_pipeline_last_fm_spark.sources.layout import (
         write_compacted_partitioned,
     )
     from pyspark.sql import functions as F
 
-    df = spark.range(0, 90).select(
-        F.lit("2024-04-01").alias("date"), F.col("id")
-    )
+    def one_date(n, tasks):
+        return spark.range(0, n, 1, tasks).select(
+            F.lit("2024-04-01").alias("date"), F.col("id")
+        )
+
     path = str(tmp_path / "mart")
-    used = write_compacted_partitioned(
-        df, path, partition_cols=["date"], target_rows_per_file=30
+    write_compacted_partitioned(
+        one_date(90, 1), path, partition_cols=["date"], target_rows_per_file=30
     )
-    assert used == 3
     files = glob.glob(f"{path}/date=2024-04-01/part-*.parquet")
-    assert len(files) == 3  # one per round-robin task, all in the date dir
+    # A one-task input: at most ceil(90/30) files, none over target.
+    assert len(files) <= 3
+    assert max(_rows_per_file(spark, files)) <= 30
     assert spark.read.parquet(path).count() == 90
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    group = f"single-date-{uuid.uuid4().hex}"
+    spark.conf.set(key, "1k")
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        write_compacted_partitioned(
+            one_date(9000, 4), str(tmp_path / "big"), partition_cols=["date"]
+        )
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+        spark.conf.set(key, old)
+    assert _write_stage_tasks(spark, group) > 1
+    assert spark.read.parquet(str(tmp_path / "big")).count() == 9000
 
 
 def test_write_compacted_partitioned_append_and_dynamic_overwrite(spark, tmp_path):

@@ -284,7 +284,7 @@ def test_surrogate_distributed_empty_batch(spark):
     zero per-partition counts — the prefix map is empty, and building
     create_map() with no entries types as map<void,void>, which fails
     analysis when indexed by the int partition id (round-11 find, hit by
-    build_dds's switch to the distributed variant). Must return an empty
+    the fact build's switch to the distributed variant). Must return an empty
     frame with the key column present, not raise."""
     df = spark.createDataFrame([], "name string")
     out = assign_surrogate_keys_distributed(df, "id", ["name"], num_partitions=4)

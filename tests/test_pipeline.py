@@ -285,3 +285,52 @@ def test_pipeline_leaves_no_pinned_rdds(spark, tmp_path):
     assert dds.fact.count() > 0
     ids = [r[0] for r in dds.fact.select("fact_id").orderBy("fact_id").collect()]
     assert ids == list(range(1, len(ids) + 1))  # dense, gap-free
+
+
+def test_daily_job_budget(spark, tmp_path):
+    """Spark jobs a new day costs per layer, after one warm-up day. At the
+    daily chart's size each job is fixed overhead, so the count is the
+    cost: one action per sink, declared read schemas (no inference job)
+    and a fact built against the committed dim snapshot keep it near
+    ODS 6 / DDS 40 / DM 13; the bounds leave headroom for AQE. Counted
+    through a job group and the status tracker, neither a Spark action."""
+    import uuid
+
+    from etl_pipeline_last_fm_spark.pipeline import run_dds, run_dm, run_ods
+
+    def fetch_for_day(day):
+        def fetch(country):
+            tracks = [
+                _track(f"song{(i + 7 * day) % 45}", f"artist{(i + day) % 13}",
+                       0 if i % 10 == 0 else 120 + i, 100 * (i + 1), i + 1)
+                for i in range(30)
+            ]
+            return {"tracks": {"track": tracks, "@attr": {"country": country}}}
+        return fetch
+
+    sc = spark.sparkContext
+
+    def jobs(layer, fn):
+        group = f"budget-{layer}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    wh = Warehouse(str(tmp_path / "wh_budget"))
+    counts = {}
+    for day, date in enumerate(("2024-06-01", "2024-06-02")):
+        raw = fetch_charts(spark, date, countries=["XA", "XB", "XC"],
+                           fetch_fn=fetch_for_day(day))
+        write_raw_chart(raw, wh.raw)
+        counts = {
+            "ods": jobs("ods", lambda: run_ods(spark, wh, date)),
+            "dds": jobs("dds", lambda: run_dds(spark, wh, date)),
+            "dm": jobs("dm", lambda: run_dm(spark, wh, date)),
+        }
+    budget = {"ods": 8, "dds": 48, "dm": 16}
+    assert all(counts[k] <= budget[k] for k in budget), (counts, budget)
+    assert load_dds(spark, wh).fact.count() == 180

@@ -567,7 +567,7 @@ def test_abc_classification_two_phase_shape(spark, sf_dir):
 def test_build_dds_fact_window_is_partitioned(spark):
     """Extends the dim-window invariant to the PIPELINE module (VERDICT
     r10 item 1): prior rounds' plan invariants cover the 205 registry
-    queries, not build_dds — which is how a single-partition global
+    queries, not the DDS build — which is how a single-partition global
     window survived ten rounds on the fact path. The fact delta (the
     table that scales to billions of rows/day) must be numbered by the
     distributed twin: its row_number window is partitioned by the
@@ -576,7 +576,7 @@ def test_build_dds_fact_window_is_partitioned(spark):
     are legal — they sit above the dim-producing Aggregate)."""
     import datetime
 
-    from etl_pipeline_last_fm_spark.plans.star_build import build_dds
+    from etl_pipeline_last_fm_spark.plans.star_build import build_dims, build_fact
     from etl_pipeline_last_fm_spark.schemas import ODS_SCHEMA
 
     rows = [
@@ -585,10 +585,11 @@ def test_build_dds_fact_window_is_partitioned(spark):
         for i in range(300)
     ]
     ods = spark.createDataFrame(rows, ODS_SCHEMA)
-    result = build_dds(ods)
+    dims = build_dims(ods)
+    new_fact, fact_cache = build_fact(ods, dims)
 
     # Positive: the fact numbering window is __pid-partitioned.
-    fact_plan = result.new_fact._jdf.queryExecution().optimizedPlan().toString()
+    fact_plan = new_fact._jdf.queryExecution().optimizedPlan().toString()
     assert re.search(r"windowspecdefinition\(__pid#\d+", fact_plan), fact_plan
     # Negative: no unpartitioned window anywhere in the DDS outputs sits
     # over a raw scan/relation. Same walk as the registry-wide invariant,
@@ -603,10 +604,10 @@ def test_build_dds_fact_window_is_partitioned(spark):
     )
     offenders = []
     for name, df in [
-        ("new_fact", result.new_fact),
-        ("dim_country", result.dim_country),
-        ("dim_artist", result.dim_artist),
-        ("dim_song", result.dim_song),
+        ("new_fact", new_fact),
+        ("dim_country", dims.dim_country),
+        ("dim_artist", dims.dim_artist),
+        ("dim_song", dims.dim_song),
     ]:
         lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
         for i, line in enumerate(lines):
@@ -618,6 +619,7 @@ def test_build_dds_fact_window_is_partitioned(spark):
                 if bad.search(below):
                     offenders.append((name, line.strip()[:120]))
                     break
+    fact_cache.unpersist()
     assert not offenders, offenders
 
 
