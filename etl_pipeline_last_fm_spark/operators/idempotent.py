@@ -17,9 +17,13 @@ Scale notes: the anti-join shuffles both sides on the conflict key unless the
 existing-keys projection is small enough to broadcast — for dimension tables
 it always is, so ``broadcast_existing=True`` is the default there. For a
 100 TB fact table, the existing side should first be partition-pruned to the
-date partitions present in the incoming batch (``prune_on``), which turns
-"anti-join against all of history" into "anti-join against today" — the same
-trick the reference gets from its date-scoped UNIQUE index probes. With
+date partitions the incoming batch can touch, which turns "anti-join against
+all of history" into "anti-join against today" — the same trick the
+reference gets from its date-scoped UNIQUE index probes. The daily pipeline
+knows its run date, so it pre-filters ``existing`` to that partition with a
+literal filter before calling here. Streaming ingest cannot (a micro-batch
+can span dates) and passes ``prune_on``, which semi-joins ``existing`` to the
+dates found in the batch itself. With
 concurrent writers this needs a transactional table format (Delta MERGE);
 single-writer-per-partition is assumed, as in the reference (SURVEY.md §7
 "what's hard" #3).

@@ -9,7 +9,7 @@ max. Assignment *order* within a batch is arbitrary in Postgres; here it is
 pinned to the natural-key sort so results are deterministic and
 oracle-checkable.
 
-Two implementations:
+Three implementations:
 
 - ``assign_surrogate_keys`` — ``row_number() over (order by natural key)``.
   A global window means a single-partition sort of the *new rows only*; for
@@ -20,6 +20,14 @@ Two implementations:
   partition, prefix-sum the counts on the driver (#partitions values, not
   rows), then number within partitions via a partition-local row_number.
   Equivalent output, no single-partition bottleneck.
+- ``assign_surrogate_keys_grouped`` — for batches whose natural key starts
+  with a bounded group (the fact delta's ``(date, country_id)``): the same
+  ids from one plan, numbered by group, with no persist, sample or driver
+  collect, so it can run inside the write that consumes it.
+
+The max-id offset of ``assign_surrogate_keys`` and
+``assign_surrogate_keys_grouped`` is an in-plan 1-row aggregate, so
+building either frame launches no Spark job.
 """
 
 from __future__ import annotations
@@ -36,12 +44,32 @@ def assign_surrogate_keys(
 ) -> DataFrame:
     """Number new rows 1..N (deterministically, by natural key) offset by the
     current max id in ``existing``."""
-    offset = 0
-    if existing is not None:
-        row = existing.agg(F.max(key_col).alias("m")).collect()[0]
-        offset = row["m"] or 0
     w = Window.orderBy(*[F.col(c) for c in natural_order])
-    return new_rows.withColumn(key_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
+    return _offset_by_max(
+        new_rows.withColumn("__rn", F.row_number().over(w)), key_col, existing
+    )
+
+
+def _offset_by_max(
+    numbered: DataFrame, key_col: str, existing: DataFrame | None
+) -> DataFrame:
+    """``key_col`` = ``__rn`` + the max ``key_col`` of ``existing`` (0 when
+    there is none), the max taken by a 1-row aggregate cross-joined into the
+    plan instead of collected to the driver."""
+    if existing is None:
+        base = F.lit(0)
+    else:
+        numbered = numbered.crossJoin(
+            F.broadcast(
+                existing.agg(
+                    F.coalesce(F.max(key_col).cast("long"), F.lit(0)).alias("__base")
+                )
+            )
+        )
+        base = F.col("__base")
+    return numbered.withColumn(key_col, (F.col("__rn") + base).cast("long")).drop(
+        "__rn", "__base"
+    )
 
 
 def assign_surrogate_keys_distributed(
@@ -50,22 +78,14 @@ def assign_surrogate_keys_distributed(
     natural_order: list[str],
     existing: DataFrame | None = None,
     num_partitions: int | None = None,
-    cache_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Scalable variant: same ids as ``assign_surrogate_keys`` (dense,
     natural-key-ordered, max-offset) without a global single-partition sort.
 
     spark_partition_id + per-partition counts -> driver prefix sum (one int
     per partition) -> partition-local row_number. The only global step moves
-    #partitions integers, not rows.
-
-    ``cache_out``: the numbering pins a persisted intermediate (see the
-    persist() comment below). Pass a list to receive that handle and
-    ``unpersist()`` it once the result has been materialized (ADVICE r11:
-    without release, a long-running multi-day driver accumulates one
-    cached fact delta per day) — ``build_fact`` threads it to the pipeline,
-    which releases after the fact write. Without ``cache_out`` the cache
-    lives until session eviction (fine for one-shot registry queries).
+    #partitions integers, not rows. The persisted intermediate it pins
+    lives until session eviction (see the persist() comment below).
     """
     offset = 0
     if existing is not None:
@@ -79,13 +99,9 @@ def assign_surrogate_keys_distributed(
     # its boundaries by sampling, so an unpersisted re-execution could
     # land rows in different partitions than the counts were taken from,
     # producing duplicate/gapped ids. Materializing the ranged frame pins
-    # both reads to the same partitioning. Cache ownership: the caller
-    # releases via ``cache_out`` after materializing the numbering;
-    # otherwise lives until session eviction, spills to disk (same note
-    # as dedup's candidate persists).
+    # both reads to the same partitioning. It lives until session
+    # eviction and spills to disk (same note as dedup's candidate persists).
     with_pid = ranged.withColumn("__pid", F.spark_partition_id()).persist()
-    if cache_out is not None:
-        cache_out.append(with_pid)
 
     counts = {
         r["__pid"]: r["cnt"]
@@ -114,3 +130,44 @@ def assign_surrogate_keys_distributed(
         )
         .drop("__pid")
     )
+
+
+def assign_surrogate_keys_grouped(
+    new_rows: DataFrame,
+    key_col: str,
+    group_cols: list[str],
+    order_cols: list[str],
+    existing: DataFrame | None = None,
+) -> DataFrame:
+    """Same ids as ``assign_surrogate_keys`` over the natural order
+    ``group_cols + order_cols``, from one plan: no persist, no range
+    sample, no driver collect.
+
+    Count the rows of each group, take an exclusive running sum over that
+    group table (the only unpartitioned window; its rows are groups, not
+    input rows), add ``row_number() over (partition by group_cols order by
+    order_cols)``, then the max-id offset. This is the bucketing device of
+    ``packing.value_ordered_row_number`` with the natural-key prefix as the
+    bucket. One task numbers a whole group, so the group must be bounded:
+    the fact delta's ``(date, country_id)`` group holds at most one row per
+    chart rank."""
+    before_group = Window.orderBy(*[F.col(c) for c in group_cols]).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    group_offsets = (
+        new_rows.groupBy(*group_cols)
+        .agg(F.count(F.lit(1)).alias("__gcnt"))
+        .select(
+            *[F.col(c).alias(f"__g_{c}") for c in group_cols],
+            F.coalesce(F.sum("__gcnt").over(before_group), F.lit(0)).alias("__goff"),
+        )
+    )
+    # Null-safe: a NULL group key is a group of its own, as in the windows.
+    on = [F.col(c).eqNullSafe(F.col(f"__g_{c}")) for c in group_cols]
+    in_group = Window.partitionBy(*group_cols).orderBy(*[F.col(c) for c in order_cols])
+    numbered = (
+        new_rows.join(F.broadcast(group_offsets), on)
+        .withColumn("__rn", F.col("__goff") + F.row_number().over(in_group))
+        .drop("__goff", *[f"__g_{c}" for c in group_cols])
+    )
+    return _offset_by_max(numbered, key_col, existing)

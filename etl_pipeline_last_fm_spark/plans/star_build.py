@@ -23,6 +23,7 @@ for bit-parity with the reference when wanted.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date as Date
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,7 +32,7 @@ from etl_pipeline_last_fm_spark.operators.idempotent import idempotent_append
 from etl_pipeline_last_fm_spark.operators.impute import impute_zero_with_partition_mean
 from etl_pipeline_last_fm_spark.operators.surrogate import (
     assign_surrogate_keys,
-    assign_surrogate_keys_distributed,
+    assign_surrogate_keys_grouped,
 )
 from etl_pipeline_last_fm_spark.operators.star import star_join
 
@@ -124,12 +125,16 @@ def build_fact(
     dims: DdsDims,
     existing_fact: DataFrame | None = None,
     replicate_zero_duration_loss: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+    run_date: str | Date | None = None,
+) -> DataFrame:
     """The fact delta of an ODS slice, looked up against ``dims`` (in the
     pipeline: the committed snapshot, so it joins exactly the persisted
-    ids), and the persisted intermediate its eager numbering pins (see
-    ``assign_surrogate_keys_distributed``) — unpersist that once the delta
-    is written."""
+    ids) and numbered above the max ``fact_id`` of ``existing_fact``.
+
+    ``run_date``: the date of the ``ods`` slice, when it is one date. Only
+    that partition of ``existing_fact`` can then hold a conflicting key,
+    so the conflict check reads it alone, through a literal partition
+    filter. Without it the check reads the whole fact."""
     # --- fact (J1-J3 star join + U5) ---
     if replicate_zero_duration_loss:
         # Reference behavior: join on RAW duration (rows with duration 0
@@ -167,6 +172,9 @@ def build_fact(
         "inner",
     )
 
+    fact_conflicts = existing_fact
+    if existing_fact is not None and run_date is not None:
+        fact_conflicts = existing_fact.filter(F.col("date") == F.lit(str(run_date)))
     new_fact = idempotent_append(
         joined.select(
             F.col("source_date").alias("date"),
@@ -176,29 +184,26 @@ def build_fact(
             "song_rank",
             "listeners_count",
         ),
-        existing_fact,
+        fact_conflicts,
         keys=["date", "country_id", "song_rank"],
         tiebreaker=["song_id", "artist_id"],
-        prune_on=["date"],
     )
-    # Distributed id assignment for the FACT delta (VERDICT r10 item 1):
-    # build_dims uses the global-window variant because the dim deltas are
-    # dim-sized (hundreds of rows/day in the reference), but the fact delta
-    # is the table that scales to billions of rows/day — a row_number()
+    # Fact ids (VERDICT r10 item 1): build_dims numbers with a global
+    # window because the dim deltas are dim-sized, but the fact delta is
+    # the table that scales to billions of rows/day, so a row_number()
     # OVER (ORDER BY ...) with no partition list would funnel every fact
-    # row of the day through ONE task for a global sort. The distributed
-    # twin produces the identical dense natural-key-ordered ids
-    # (equivalence-tested, tests/test_operator_properties.py) via
-    # range-repartition + per-partition counts + a driver prefix sum over
-    # #partitions integers; no single-partition stage anywhere.
-    cache: list[DataFrame] = []
-    new_fact = assign_surrogate_keys_distributed(
-        new_fact, "fact_id", ["date", "country_id", "song_rank"],
-        existing=existing_fact, cache_out=cache,
+    # row of the day through ONE task. The grouped variant gives the
+    # identical dense natural-key-ordered ids (equivalence-tested,
+    # tests/test_operator_properties.py) inside the write's own plan: each
+    # (date, country_id) group, at most one row per chart rank, is
+    # numbered by its own task, and only the group table's running count
+    # is unpartitioned.
+    return assign_surrogate_keys_grouped(
+        new_fact, "fact_id", ["date", "country_id"], ["song_rank"],
+        existing=existing_fact,
     ).select(
         "fact_id", "date", "country_id", "song_id", "artist_id", "song_rank", "listeners_count"
     )
-    return new_fact, cache[0]
 
 
 def _union(existing: DataFrame | None, delta: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from etl_pipeline_last_fm_spark.operators.impute import impute_zero_with_partiti
 from etl_pipeline_last_fm_spark.operators.surrogate import (
     assign_surrogate_keys,
     assign_surrogate_keys_distributed,
+    assign_surrogate_keys_grouped,
 )
 
 SETTINGS = dict(
@@ -92,6 +93,19 @@ def test_surrogate_distributed_matches_window(spark):
         for r in assign_surrogate_keys_distributed(df, "id", ["name"], num_partitions=8).collect()
     }
     assert a == b
+    # The grouped variant, bucketed by a prefix of the natural key (so the
+    # natural order (pfx, name) is the order of name), with and without an
+    # existing offset.
+    pfx = df.withColumn("pfx", F.substring("name", 1, 2))
+    existing = spark.createDataFrame([(41,), (7,)], "id long")
+    for ex, shift in [(None, 0), (existing, 41)]:
+        c = {
+            (r.name, r.id)
+            for r in assign_surrogate_keys_grouped(
+                pfx, "id", ["pfx"], ["name"], existing=ex
+            ).collect()
+        }
+        assert c == {(n, i + shift) for n, i in a}
 
 
 @given(
@@ -289,4 +303,9 @@ def test_surrogate_distributed_empty_batch(spark):
     df = spark.createDataFrame([], "name string")
     out = assign_surrogate_keys_distributed(df, "id", ["name"], num_partitions=4)
     assert out.columns == ["name", "id"]
+    assert out.count() == 0
+    # The grouped variant: no groups, so no offsets to join.
+    grouped = df.withColumn("pfx", F.substring("name", 1, 2))
+    out = assign_surrogate_keys_grouped(grouped, "id", ["pfx"], ["name"])
+    assert out.columns == ["name", "pfx", "id"]
     assert out.count() == 0

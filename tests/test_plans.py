@@ -570,10 +570,11 @@ def test_build_dds_fact_window_is_partitioned(spark):
     queries, not the DDS build — which is how a single-partition global
     window survived ten rounds on the fact path. The fact delta (the
     table that scales to billions of rows/day) must be numbered by the
-    distributed twin: its row_number window is partitioned by the
-    range-repartition partition id, and NO unpartitioned window in any
-    DDS output plan sits over a raw scan (the dim builds' global windows
-    are legal — they sit above the dim-producing Aggregate)."""
+    grouped variant: its row_number window is partitioned by the
+    (date, country_id) prefix of the natural key, and NO unpartitioned
+    window in any DDS output plan sits over a raw scan (the dim builds'
+    global windows and the fact's running count over its group table are
+    legal — they sit above an Aggregate)."""
     import datetime
 
     from etl_pipeline_last_fm_spark.plans.star_build import build_dims, build_fact
@@ -586,11 +587,13 @@ def test_build_dds_fact_window_is_partitioned(spark):
     ]
     ods = spark.createDataFrame(rows, ODS_SCHEMA)
     dims = build_dims(ods)
-    new_fact, fact_cache = build_fact(ods, dims)
+    new_fact = build_fact(ods, dims)
 
-    # Positive: the fact numbering window is __pid-partitioned.
+    # Positive: the fact numbering window is (date, country_id)-partitioned.
     fact_plan = new_fact._jdf.queryExecution().optimizedPlan().toString()
-    assert re.search(r"windowspecdefinition\(__pid#\d+", fact_plan), fact_plan
+    assert re.search(
+        r"windowspecdefinition\(date#\d+, country_id#\d+L?, song_rank#\d+ ASC", fact_plan
+    ), fact_plan
     # Negative: no unpartitioned window anywhere in the DDS outputs sits
     # over a raw scan/relation. Same walk as the registry-wide invariant,
     # but matcher-widened: new_fact's plan embeds the persisted
@@ -619,7 +622,6 @@ def test_build_dds_fact_window_is_partitioned(spark):
                 if bad.search(below):
                     offenders.append((name, line.strip()[:120]))
                     break
-    fact_cache.unpersist()
     assert not offenders, offenders
 
 
