@@ -53,11 +53,6 @@ def cents(col: Column | str) -> Column:
     return F.floor(c * F.lit(100.0) + F.lit(0.5)).cast("long")
 
 
-def cents_sql(expr: str) -> str:
-    """DuckDB twin of :func:`cents` for an arbitrary SQL expression."""
-    return f"CAST(FLOOR(({expr}) * 100 + 0.5) AS BIGINT)"
-
-
 def pg_avg_int(col: Column) -> Column:
     """``AVG(x)::INT`` with Postgres semantics (round, don't truncate) —
     reference dags/from_ods_to_dds_pg.py:75; SURVEY.md Appendix A.2."""

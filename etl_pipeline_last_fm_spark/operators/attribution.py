@@ -315,17 +315,40 @@ def incremental_attribution_batches(
             key_col, type_col, ts_col, value_col, tiebreak_col,
         )
         state = state.localCheckpoint()
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_conversions").alias("n_conversions"),
-                F.sum("attributed_cents").alias("attributed_cents"),
-            )
-            .localCheckpoint()
-        )
+        totals = merge_channel_totals(totals, delta).localCheckpoint()
     assert totals is not None, "need at least one batch"
     return totals
+
+
+def merge_channel_totals(
+    totals: DataFrame | None, delta: DataFrame
+) -> DataFrame:
+    """Per-channel credit totals plus one batch's credit delta: every
+    non-channel column sums. Shared by both batch folds and the streaming
+    step, so their totals cannot drift."""
+    merged = delta if totals is None else totals.unionByName(delta)
+    return merged.groupBy("channel").agg(
+        *[F.sum(c).alias(c) for c in delta.columns if c != "channel"]
+    )
+
+
+#: State parts of a streaming attribution fold: the per-key touch state,
+#: then the channel totals, which commit last and guard the pair.
+ATTRIBUTION_PARTS = ("k", "c")
+
+
+def attribution_step(fold=attribution_fold_batch):
+    """Fold step over ``ATTRIBUTION_PARTS`` for the streaming fold driver
+    (streaming/state.py): ``fold`` (last-touch by default, or
+    ``decay_attribution_fold_batch``) advances the key state, and its
+    credit delta merges into the channel totals."""
+
+    def step(prev, batch):
+        keys, totals = prev
+        state, delta = fold(keys, batch)
+        return state, merge_channel_totals(totals, delta)
+
+    return step
 
 
 def decay_attribution_fold_batch(
@@ -503,15 +526,7 @@ def incremental_decay_attribution_batches(
             state, batch, touch_types, conversion_type, window_us,
             key_col, type_col, ts_col, value_col, tiebreak_col,
         )
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_credited_touches").alias("n_credited_touches"),
-                F.sum("credited_cents").alias("credited_cents"),
-            )
-            .localCheckpoint()
-        )
+        totals = merge_channel_totals(totals, delta).localCheckpoint()
     assert totals is not None, "need at least one batch"
     return totals
 

@@ -124,14 +124,3 @@ def funnel_stages_oracle_sql(
                     ELSE 'none' END AS stage
         FROM u3
     """
-
-
-def funnel_summary_oracle_sql(
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    table: str = "events",
-) -> str:
-    return f"""
-        SELECT stage_depth, stage, COUNT(*) AS n_users
-        FROM ({funnel_stages_oracle_sql(stages, table)})
-        GROUP BY stage_depth, stage
-    """

@@ -26,13 +26,13 @@ one 4-decimal rounding boundary.)
 Scale: each batch pays one partial+final hash aggregate of ITS OWN rows
 plus a merge whose size is |existing groups| — O(batch) + O(mart), never
 O(history). The state is a plain DataFrame/parquet table, so it also
-serves as the foreachBatch fold state for a streaming mart (same pattern
-as streaming/sketch.py).
+serves as the foreachBatch fold state for a streaming mart: ``mart_step``
+is its step for streaming/state.py's fold driver.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,6 +65,44 @@ def merge_states(states: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame:
     )
 
 
+def additive_step(
+    make: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> Callable[[DataFrame | None, DataFrame], DataFrame]:
+    """Fold step of a mergeable state: the batch's own state (``make``),
+    merged into the previous one when there is one. This is the
+    ``step(prev, batch)`` shape streaming/state.fold_batch drives."""
+
+    def step(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        new = make(batch)
+        return new if prev is None else merge(prev, new)
+
+    return step
+
+
+def sum_by(keys: Sequence[str]) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Merge of two additive states keyed by ``keys``: every other column
+    sums per key (associative and commutative)."""
+    keys = list(keys)
+
+    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
+        return prev.unionByName(new).groupBy(*keys).agg(
+            *[F.sum(c).alias(c) for c in new.columns if c not in keys]
+        )
+
+    return merge
+
+
+def mart_step(keys: Sequence[str], value_col: str):
+    """Fold step of a streaming mart: ``additive_state`` per batch, summed
+    into the previous state per key."""
+    keys = list(keys)
+    return additive_step(
+        lambda batch: additive_state(batch, keys, value_col),
+        lambda prev, new: merge_states([prev, new], keys),
+    )
+
+
 def present(state: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Presentation view of the state: value_sum (2dp, exact), value_avg
     (4dp; one IEEE division of exact integers, so the rounding boundary is
@@ -94,7 +132,7 @@ def join_delta(
     """One application of the join delta rule:
     Δ(A ⋈ B) = ΔA ⋈ B_old ∪ A_old ⋈ ΔB ∪ ΔA ⋈ ΔB. THE single home of
     the identity — both the batch fold (incremental_join_batches) and the
-    streaming fold (streaming/ivm.py) call this, so the two paths cannot
+    streaming join step (streaming/ivm.py) call this, so the two paths cannot
     drift (bag semantics, null-key behavior, future state-side hints)."""
     on = list(on)
     terms = []

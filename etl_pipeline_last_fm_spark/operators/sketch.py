@@ -44,6 +44,7 @@ from etl_pipeline_last_fm_spark.functions.scalar import (
     portable_hash60,
     portable_hash60_sql,
 )
+from etl_pipeline_last_fm_spark.operators.incremental import additive_step
 
 # Standard HLL bias-correction constants (Flajolet et al. 2007).
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
@@ -80,23 +81,9 @@ def hll_distinct(
     (13% at b=6). The m registers per group are the full sketch state.
     """
     group_cols = group_cols or []
-    m = 1 << b
-    width = 60 - b  # bits remaining after the register index
-    h = portable_hash60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(value_col).cast("string"))
-    )
-    bucket = h.bitwiseAND(F.lit(m - 1))
-    rank = _hll_rank(F.shiftright(h, b), width)
-
-    # Register maxima: one row per (group, bucket) — the HLL state.
-    regs = df.select(
-        *group_cols, bucket.alias("__bkt"), rank.alias("__rank"), F.col(value_col)
-    )
-    per_bucket = regs.groupBy(*group_cols, "__bkt").agg(
-        F.max("__rank").alias("__mj"),
-        # countDistinct inside buckets would defeat the point; exact count
-        # is a separate partial+final distinct agg on the same shuffle data.
-    )
+    per_bucket = hll_registers(df, value_col, group_cols, b, salt)
+    # countDistinct inside buckets would defeat the point; the exact count
+    # is a separate partial+final distinct agg on the same shuffle data.
     exact = df.groupBy(*group_cols).agg(
         F.countDistinct(value_col).alias("n_exact")
     )
@@ -106,12 +93,57 @@ def hll_distinct(
     return exact.crossJoin(approx)
 
 
+def hll_registers(
+    df: DataFrame,
+    value_col: str,
+    group_cols: list[str],
+    b: int = 6,
+    salt: str = "hll1",
+) -> DataFrame:
+    """Register maxima, one row per (group, bucket): the full HLL state
+    (group_cols, __bkt, __mj)."""
+    m = 1 << b
+    width = 60 - b  # bits remaining after the register index
+    h = portable_hash60(
+        F.concat(F.lit(salt), F.lit(":"), F.col(value_col).cast("string"))
+    )
+    return (
+        df.select(
+            *group_cols,
+            h.bitwiseAND(F.lit(m - 1)).alias("__bkt"),
+            _hll_rank(F.shiftright(h, b), width).alias("__mj"),
+        )
+        .groupBy(*group_cols, "__bkt")
+        .agg(F.max("__mj").alias("__mj"))
+    )
+
+
+def hll_step(
+    value_col: str, group_cols: list[str], b: int = 6, salt: str = "hll1"
+):
+    """Fold step of stream-maintained HLL registers: each batch's
+    registers merge into the state by register-wise MAX — associative,
+    commutative and idempotent. The state stays |groups| * 2^b rows
+    forever; ``hll_estimate_from_registers`` turns it into counts."""
+
+    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
+        return (
+            prev.unionByName(new)
+            .groupBy(*group_cols, "__bkt")
+            .agg(F.max("__mj").alias("__mj"))
+        )
+
+    return additive_step(
+        lambda batch: hll_registers(batch, value_col, group_cols, b, salt), merge
+    )
+
+
 def hll_estimate_from_registers(
     registers: DataFrame, group_cols: list[str], b: int
 ) -> DataFrame:
     """Estimator over a register table (group_cols, __bkt, __mj) — the
     read-side of a persisted/stream-maintained sketch state (see
-    streaming/sketch.py). Returns group cols + n_approx."""
+    ``hll_step``). Returns group cols + n_approx."""
     group_cols = group_cols or []
     m = 1 << b
     width = 60 - b
@@ -226,6 +258,30 @@ def cms_counters(
         F.count(F.lit(1)).alias("__n")
     )
     return _grid_from_census(counts, depth=depth, width=width, salt=salt)
+
+
+def merge_cms_grids(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Cellwise sum of two CMS counter grids (associative, commutative)."""
+    return (
+        a.unionByName(b)
+        .groupBy("__d", "__cell")
+        .agg(F.sum("__cnt").alias("__cnt"))
+    )
+
+
+def cms_step(
+    token_col: str = "tok",
+    depth: int = 4,
+    width: int = 1024,
+    salt: str = "cms1",
+):
+    """Fold step of a stream-maintained CMS grid: each batch's grid sums
+    into the state cell by cell. A sum folded twice inflates, so this
+    step relies on the fold driver's replay guard (unlike HLL maxima)."""
+    return additive_step(
+        lambda batch: cms_counters(batch, token_col, depth, width, salt),
+        merge_cms_grids,
+    )
 
 
 def _grid_from_census(

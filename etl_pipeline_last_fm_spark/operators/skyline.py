@@ -149,12 +149,27 @@ def skyline_fold_batches(
     round truncates lineage, the iterative house rule."""
     if not batches:
         raise ValueError("skyline_fold_batches needs >= 1 batch")
+    step = skyline_step(id_col, cost_col, gain_col, bucket_width)
     state = None
     for batch in batches:
+        state = step(state, batch).localCheckpoint()
+    return state
+
+
+def skyline_step(
+    id_col: str, cost_col: str, gain_col: str, bucket_width: int = 1000
+):
+    """One frontier fold, state' = skyline(state ∪ batch) — shared by
+    ``skyline_fold_batches`` and the streaming twin (the fold driver in
+    streaming/state.py). Commutative set algebra: batch order is
+    immaterial, so the stream needs no delivery contract."""
+
+    def step(state: DataFrame | None, batch: DataFrame) -> DataFrame:
         pts = batch.select(id_col, cost_col, gain_col)
         if state is not None:
             pts = state.unionByName(pts)
-        state = skyline_2d(
+        return skyline_2d(
             pts, id_col, cost_col, gain_col, bucket_width=bucket_width
-        ).localCheckpoint()
-    return state
+        )
+
+    return step

@@ -115,15 +115,6 @@ def rolling_fingerprint_rows(
     )
 
 
-def rolling_fingerprints(docs: DataFrame, k: int = 16, window: int = 8) -> DataFrame:
-    """(doc_id, fingerprints array) view of rolling_fingerprint_rows."""
-    return (
-        rolling_fingerprint_rows(docs, k, window)
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("fp")).alias("fingerprints"))
-    )
-
-
 def fingerprint_overlap_pairs(
     docs: DataFrame,
     min_shared: int = 5,

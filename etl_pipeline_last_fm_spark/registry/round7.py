@@ -40,19 +40,11 @@ from etl_pipeline_last_fm_spark.sources.tables import load_table
 _LINKPRED_CAP = 24
 
 
-def _run_time_sliced_stream(spark, sf_dir, maintenance, read_state, present):
-    """Shared driver for the order-dependent streaming twins: write the
-    events table as 3 time-slice parquet files with STRICTLY INCREASING
-    modification times, stream them back availableNow with
-    maxFilesPerTrigger=1 so each micro-batch is one slice in time order
-    (FileStreamSource schedules files oldest-mtime-first), fold through
-    the given maintenance writer under the versioned-commit replay
-    guard, and present the final state. Same bounded driver
-    materialization + temp cleanup as q_streaming_join.
-
-    ``maintenance(stream, state_path, checkpoint)`` -> DataStreamWriter;
-    ``read_state(spark, state_path)`` -> state DF; ``present(df)`` ->
-    the graded output shape."""
+def _run_time_sliced_stream(spark, sf_dir, step, present, parts=None):
+    """Shared driver for the order-dependent streaming twins: the events
+    table as 3 time slices (``_EMA_CUTS``) through
+    ``run_file_sliced_stream``, so each micro-batch is one slice in time
+    order."""
     ev = load_table(spark, sf_dir, "events")
     c1, c2 = _EMA_CUTS
     slices = [
@@ -60,17 +52,27 @@ def _run_time_sliced_stream(spark, sf_dir, maintenance, read_state, present):
         ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
         ev.filter(F.col("ts") >= c2),
     ]
-    return run_file_sliced_stream(
-        spark, slices, maintenance, read_state, present
-    )
+    return run_file_sliced_stream(spark, slices, step, present, parts)
 
 
-def run_file_sliced_stream(spark, slices, maintenance, read_state, present):
-    """The generic file-slice machinery behind the streaming twins: any
-    list of same-schema slice DataFrames, delivered as one micro-batch
-    each in list order (forced mtimes; FileStreamSource schedules
-    oldest-first). Order-dependent members pass time slices; commutative
-    members (the skyline frontier) pass any partition."""
+def run_file_sliced_stream(spark, slices, step, present, parts=None):
+    """The file-slice harness behind every streaming registry entry: any
+    list of same-schema slice DataFrames, written as one parquet file each
+    with STRICTLY INCREASING modification times, streamed back
+    availableNow with maxFilesPerTrigger=1 so each slice is one
+    micro-batch in list order (FileStreamSource schedules
+    oldest-mtime-first). Every batch folds through ``step`` (and
+    ``parts``) under streaming/state.py's replay-guarded driver; the guard
+    state is then read and ``present``-ed. Order-dependent members pass
+    time slices; commutative ones (additive states, the join, the skyline
+    frontier) pass any partition.
+
+    Driver-side materialization: the presented state is collected once so
+    the temp streaming workspace (source files, checkpoint, state) can be
+    removed before returning; the returned DataFrame is a local-relation
+    rebuild of those rows."""
+    from etl_pipeline_last_fm_spark.streaming.state import maintain, read_state
+
     tmp = tempfile.mkdtemp(prefix="sgraft_stream7_")
     try:
         src = os.path.join(tmp, "src")
@@ -94,12 +96,13 @@ def run_file_sliced_stream(spark, slices, maintenance, read_state, present):
             .parquet(src)
         )
         q = (
-            maintenance(stream, state, ck)
+            maintain(stream, state, step, parts, checkpoint=ck)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        out = present(read_state(spark, state))
+        guard = state if parts is None else os.path.join(state, parts[-1])
+        out = present(read_state(spark, guard))
         schema = out.schema
         collected = out.collect()
     finally:
@@ -108,22 +111,15 @@ def run_file_sliced_stream(spark, slices, maintenance, read_state, present):
 
 
 def q_streaming_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `ema_fold` (streaming/ivm.py): per-batch
-    ema_fold_stream_batch under the versioned-commit replay guard, with
-    the out-of-order raise preserved. Oracle: the one-shot
-    ema_halflife."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_ema_state,
-        streaming_ema_maintenance,
-    )
+    """Streaming twin of `ema_fold`: per-batch ema_fold_batch under the
+    fold driver's replay guard, with the out-of-order raise preserved.
+    Oracle: the one-shot ema_halflife."""
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_ema_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_ema_state,
+        ema_fold_batch,
         lambda df: df.select(
             F.col("key").alias("user_id"), "n_events", "ema_cents"
         ),
@@ -155,22 +151,18 @@ def q_cusum_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `cusum_fold` (streaming/ivm.py): per-batch
-    cusum_fold_stream_batch under the versioned-commit replay guard.
-    Oracle: the one-shot cusum_alarms."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_cusum_state,
-        streaming_cusum_maintenance,
+    """Streaming twin of `cusum_fold`: per-batch cusum_fold_batch under
+    the fold driver's replay guard. Oracle: the one-shot cusum_alarms."""
+    from etl_pipeline_last_fm_spark.operators.timeseries import (
+        cusum_fold_batch,
     )
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_cusum_maintenance(
-            stream, state, drift_cents=_CUSUM_DRIFT,
-            threshold_cents=_CUSUM_H, checkpoint=ck,
+        lambda state, batch: cusum_fold_batch(
+            state, batch, _CUSUM_DRIFT, _CUSUM_H
         ),
-        read_cusum_state,
         lambda df: df.select(
             F.col("key").alias("user_id"),
             "n_events", "cusum_final", "cusum_max", "n_alarms",
@@ -201,24 +193,21 @@ def q_attribution_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `attribution_fold` (streaming/ivm.py): the
-    two-state commit (per-key touch state, then the additive channel
-    totals LAST as the replay guard — the join fold's m-last rule)
-    under the same time-sliced availableNow stream. Oracle: the
-    one-shot last_touch_attribution."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_attribution_state,
-        streaming_attribution_maintenance,
+    """Streaming twin of `attribution_fold`: the two-part fold (per-key
+    touch state, then the additive channel totals LAST as the replay
+    guard — the join fold's m-last rule) under the same time-sliced
+    availableNow stream. Oracle: the one-shot last_touch_attribution."""
+    from etl_pipeline_last_fm_spark.operators.attribution import (
+        ATTRIBUTION_PARTS,
+        attribution_step,
     )
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_attribution_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_attribution_state,
+        attribution_step(),
         lambda df: df.select("channel", "n_conversions", "attributed_cents"),
+        ATTRIBUTION_PARTS,
     )
 
 
@@ -282,24 +271,23 @@ def q_attribution_decay_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `attribution_decay_fold` (streaming/ivm.py):
-    the two-state commit protocol with the window-bounded key state.
-    Oracle: the one-shot time_decay_attribution."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_attribution_state,
-        streaming_decay_attribution_maintenance,
+    """Streaming twin of `attribution_decay_fold`: the two-part fold with
+    the window-bounded key state. Oracle: the one-shot
+    time_decay_attribution."""
+    from etl_pipeline_last_fm_spark.operators.attribution import (
+        ATTRIBUTION_PARTS,
+        attribution_step,
+        decay_attribution_fold_batch,
     )
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_decay_attribution_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_attribution_state,
+        attribution_step(decay_attribution_fold_batch),
         lambda df: df.select(
             "channel", "n_credited_touches", "credited_cents"
         ),
+        ATTRIBUTION_PARTS,
     )
 
 
@@ -457,25 +445,16 @@ def q_twap_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `twap_fold` (streaming/ivm.py): the single-state
-    versioned-commit protocol over the same time-sliced availableNow
-    stream. Oracle: the one-shot time_weighted_avg."""
+    """Streaming twin of `twap_fold`: twap_fold_batch under the fold
+    driver over the same time-sliced availableNow stream. Oracle: the
+    one-shot time_weighted_avg."""
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_twap_state,
-        streaming_twap_maintenance,
+        twap_fold_batch,
     )
 
     return _run_time_sliced_stream(
-        spark,
-        sf_dir,
-        lambda stream, state, ck: streaming_twap_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_twap_state,
-        present_twap_state,
+        spark, sf_dir, twap_fold_batch, present_twap_state
     )
 
 

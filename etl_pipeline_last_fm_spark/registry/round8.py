@@ -42,25 +42,19 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``roc_auc``: the per-value label census is an
     ADDITIVE state (order-free, unlike the ordered-fold IVM tier), so it
-    rides the drift/postings/checksum census-fold recipe with the
-    versioned-commit replay guard; AUC computed at read time. Oracle:
-    the one-shot roc_auc SQL — the maintenance identity."""
+    rides the drift/postings/checksum census-fold recipe under the fold
+    driver's replay guard; AUC computed at read time. Oracle: the
+    one-shot roc_auc SQL — the maintenance identity."""
+    from etl_pipeline_last_fm_spark.operators.evalmetrics import (
+        auc_from_census,
+    )
     from etl_pipeline_last_fm_spark.registry.round7 import (
         _run_time_sliced_stream,
     )
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        read_auc,
-        streaming_auc_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.drift import auc_step
 
     return _run_time_sliced_stream(
-        spark,
-        sf_dir,
-        lambda stream, state, ck: streaming_auc_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_auc,
-        lambda df: df,
+        spark, sf_dir, auc_step(), auc_from_census
     )
 
 

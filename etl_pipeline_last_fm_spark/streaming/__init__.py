@@ -1,31 +1,24 @@
-"""Structured Streaming variants of the ingest path (SURVEY.md §2.11, §7.6)."""
+"""Structured Streaming variants of the ingest path (SURVEY.md §2.11, §7.6)
+and the replay-guarded fold driver every streaming state goes through."""
 
-from etl_pipeline_last_fm_spark.streaming.drift import (
-    streaming_checksum_maintenance,
-    streaming_drift_maintenance,
-    streaming_postings_maintenance,
-)
 from etl_pipeline_last_fm_spark.streaming.ingest import (
     stream_raw_to_ods,
     windowed_event_stats,
 )
-from etl_pipeline_last_fm_spark.streaming.ivm import (
-    streaming_attribution_maintenance,
-    streaming_cusum_maintenance,
-    streaming_decay_attribution_maintenance,
-    streaming_ema_maintenance,
-    streaming_join_maintenance,
+from etl_pipeline_last_fm_spark.streaming.state import (
+    commit_state,
+    fold_batch,
+    list_state_versions,
+    maintain,
+    read_state,
 )
 
 __all__ = [
     "stream_raw_to_ods",
     "windowed_event_stats",
-    "streaming_drift_maintenance",
-    "streaming_postings_maintenance",
-    "streaming_checksum_maintenance",
-    "streaming_join_maintenance",
-    "streaming_ema_maintenance",
-    "streaming_cusum_maintenance",
-    "streaming_attribution_maintenance",
-    "streaming_decay_attribution_maintenance",
+    "commit_state",
+    "fold_batch",
+    "list_state_versions",
+    "maintain",
+    "read_state",
 ]

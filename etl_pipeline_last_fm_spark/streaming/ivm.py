@@ -4,21 +4,23 @@ Completes the IVM family: operators/incremental.py maintains aggregates
 (additive states) and batch-mode joins (incremental_join_batches); this
 module maintains a materialized two-sided inner join CONTINUOUSLY from
 one stream of TAGGED deltas — each row carries a ``side`` column ('a' or
-'b') plus that side's payload columns. Per micro-batch the fold applies
+'b') plus that side's payload columns. Per micro-batch the step applies
 the delta rule
 
     ΔM = ΔA ⋈ B_state ∪ A_state ⋈ ΔB ∪ ΔA ⋈ ΔB
 
 then appends ΔA/ΔB to the side states and ΔM to the join state. The
 delta rule bounds the JOIN COMPUTE to O(|Δ| × matched-state); the
-snapshot COMMIT in this implementation still rewrites each full state
-per batch (commit_state writes whole versioned snapshots — at true
-materialized-join scale the commit layout must become append/partitioned
-so the I/O matches the compute bound; the algebra is unchanged). All
-three states ride the crash-safe versioned commit protocol
-(streaming/sketch.py commit_state) under ONE shared replay guard: the
-batch_id is stamped into each state and the fold no-ops when replayed,
-because ΔM appends (unlike HLL maxima) double-count on replay.
+snapshot COMMIT still rewrites each full state per batch (commit_state
+writes whole versioned snapshots — at true materialized-join scale the
+commit layout must become append/partitioned so the I/O matches the
+compute bound; the algebra is unchanged).
+
+The three states are the parts ``JOIN_PARTS`` of one fold under
+streaming/state.py's driver: a and b commit first, m LAST, so m is the
+replay guard for the trio (ΔM appends, unlike HLL maxima, double-count
+on replay), and a crash between the side commits and the m commit
+replays against the pre-batch a/b versions.
 
 Why one tagged stream rather than two readStreams: foreachBatch binds a
 single streaming source per query, and a union-of-sources with a side
@@ -26,651 +28,58 @@ tag is the standard lowering — it also gives the delta rule its
 atomicity (one batch carries BOTH sides' deltas, so the ΔΔ term is
 well-defined per batch).
 
-Equality contract (tested): after any prefix of batches, read_join_state
+Equality contract (tested): after any prefix of batches, the m state
 equals the one-shot inner join of all side-a rows seen ⋈ all side-b rows
 seen — for ANY split of either side across batches, including replays.
-
-Scale: at cluster scale the three states are bucketed on the join key so
-every per-batch delta join is exchange-free on the state side; the
-per-batch JOIN cost is O(|Δ| × matched-state) — with the append-layout
-caveat above for the write side.
-
-State-retention coupling: the crash-window read of pre-batch versions
-relies on commit_state's default retain=2 keeping v=batch_id-1 alive
-while v=batch_id is being written; the fold asserts the invariant (m
-state present => both pre-batch side states present) and raises instead
-of silently refolding from empty.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.incremental import join_delta
-from etl_pipeline_last_fm_spark.streaming.sketch import (
-    BID_COL,
-    _read_state_or_none,
-    _strip_bid,
-    commit_state,
-    last_applied_batch,
-    read_latest_state,
-)
+
+#: Side states a and b, then the join state m, which commits last.
+JOIN_PARTS = ("a", "b", "m")
 
 
-def _read_state_before(
-    spark: SparkSession, path: str, batch_id: int
-) -> DataFrame | None:
-    """Latest committed snapshot with version < batch_id — the pre-batch
-    state, stable under replays (see join_fold_batch docstring)."""
-    from etl_pipeline_last_fm_spark.streaming.sketch import (
-        list_state_versions,
-    )
-
-    versions = [(b, p) for b, p in list_state_versions(spark, path)
-                if b < batch_id]
-    if not versions:
-        return None
-    return spark.read.parquet(versions[-1][1])
-
-
-def join_fold_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_root: str,
-    on: Sequence[str],
-    side_col: str = "side",
-) -> None:
-    """Fold ONE tagged micro-batch into the (a, b, m) state trio.
-    Module-level so the replay guard is directly testable. The guard is
-    checked against the M state; all three states commit in one fold, M
-    LAST. Crash-window safety: a crash after the a/b commits but before
-    the m commit replays the batch — the fold therefore reads the a/b
-    states at the latest version STRICTLY BEFORE this batch_id
-    (_read_state_before), so the replayed fold sees exactly the
-    pre-batch states and recommits v=batch_id idempotently; reading the
-    LATEST version there would double-count the batch's own deltas."""
-    spark = batch_df.sparkSession
+def join_step(on: Sequence[str], side_col: str = "side"):
+    """Fold step over ``JOIN_PARTS``: split the tagged batch into ΔA and
+    ΔB, apply the delta rule, and append each delta to its state."""
     on = list(on)
-    m_path = f"{state_root}/m"
-    a_path = f"{state_root}/a"
-    b_path = f"{state_root}/b"
-    prev_m = _read_state_or_none(spark, m_path)
-    if int(batch_id) <= last_applied_batch(prev_m):
-        return  # replayed micro-batch, already folded
-    # Tagged-schema contract, VALIDATED (not just implied): columns are
-    # exactly {side} ∪ on ∪ a_-prefixed payload ∪ b_-prefixed payload. A
-    # payload column without its side prefix would otherwise be silently
-    # dropped from the maintained state; an on-key with a side prefix
-    # would be selected twice and break the join.
-    cols = set(batch_df.columns)
-    bad_on = [k for k in on if k.startswith(("a_", "b_"))]
-    if bad_on:
-        raise ValueError(f"join keys must not use side prefixes: {bad_on}")
-    stray = cols - {side_col} - set(on) - {
-        c for c in cols if c.startswith(("a_", "b_"))
-    }
-    if stray:
-        raise ValueError(
-            f"unprefixed payload columns would be dropped: {sorted(stray)};"
-            " name side-a payloads a_* and side-b payloads b_*"
-        )
-    da = batch_df.filter(F.col(side_col) == "a").drop(side_col)
-    db = batch_df.filter(F.col(side_col) == "b").drop(side_col)
-    a_cols = on + [c for c in da.columns if c.startswith("a_")]
-    b_cols = on + [c for c in db.columns if c.startswith("b_")]
-    da = da.select(*a_cols)
-    db = db.select(*b_cols)
-    prev_a = _read_state_before(spark, a_path, int(batch_id))
-    prev_b = _read_state_before(spark, b_path, int(batch_id))
-    if prev_m is not None and (prev_a is None or prev_b is None):
-        # m exists => at least one earlier fold committed => both side
-        # states MUST have a pre-batch version (commit_state retain >= 2
-        # keeps it). Hitting this means retention was lowered or state
-        # dirs were tampered with; refolding from empty would silently
-        # discard all accumulated side state.
-        raise RuntimeError(
-            f"pre-batch side state missing under {state_root} for batch"
-            f" {batch_id} while m state exists — retention too aggressive?"
-        )
-    a_state = _strip_bid(prev_a) if prev_a is not None else None
-    b_state = _strip_bid(prev_b) if prev_b is not None else None
 
-    delta = join_delta(da, db, a_state, b_state, on)
-    if prev_m is not None:
-        delta = _strip_bid(prev_m).unionByName(delta)
-
-    new_a = da if a_state is None else a_state.unionByName(da)
-    new_b = db if b_state is None else b_state.unionByName(db)
-    bid = F.lit(int(batch_id))
-    commit_state(new_a.withColumn(BID_COL, bid), a_path, batch_id)
-    commit_state(new_b.withColumn(BID_COL, bid), b_path, batch_id)
-    # M last: its batch_id is the replay guard for the whole trio.
-    commit_state(delta.withColumn(BID_COL, bid), m_path, batch_id)
-
-
-def streaming_join_maintenance(
-    tagged_stream: DataFrame,
-    state_root: str,
-    on: Sequence[str],
-    side_col: str = "side",
-    checkpoint: str | None = None,
-):
-    """Maintain the materialized join over a tagged delta stream. Returns
-    a DataStreamWriter — the caller picks the trigger and calls
-    ``.start()``; read with ``read_join_state``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        join_fold_batch(batch_df, batch_id, state_root, on, side_col)
-
-    writer = tagged_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_join_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, f"{state_root}/m"))
-
-
-# --- Streaming EMA: the first ORDER-DEPENDENT IVM member (round 7) -----
-# The additive folds (marts, sketches) and the join maintenance above are
-# all batching-order-insensitive; the EMA recurrence s = (s + v) div 2 is
-# not — batches must arrive as time-ordered slices per key. The batch fold
-# (operators/timeseries.ema_fold_batch) already carries the per-key fold
-# frontier and RAISES on out-of-order delivery (raise_error inside the
-# fold expression, so the violation surfaces at commit time, never as a
-# silently corrupted trajectory); this wrapper adds the versioned-commit
-# replay guard so crash/replay cannot re-fold a batch either.
-
-
-def _single_state_stream_fold(
-    batch_df: DataFrame, batch_id: int, state_path: str, fold_fn
-) -> None:
-    """The single-state ordered-fold protocol, defined ONCE for every
-    order-dependent member maintaining one state: the replay guard is
-    the state's own batch_id, and the pre-batch snapshot is read at the
-    latest version STRICTLY BEFORE batch_id (the join fold's
-    crash-window rule) so a replayed fold sees exactly what the
-    original saw. An empty micro-batch still commits (advancing the
-    guard) and leaves every key's state unchanged — the folds'
-    full-outer joins keep absent-from-batch keys. ``fold_fn(state_or_
-    None, batch_df)`` -> the new state DataFrame.
-
-    Crash windows (both tested in test_streaming_ivm.py): (1) a crash
-    DURING the v=N append leaves a marker-less _v=N dir that
-    list_state_versions ignores — the replay's guard sees v<N as latest,
-    re-folds from the pre-batch snapshot, and overwrite-recommits v=N;
-    (2) a crash AFTER the v=N commit but BEFORE the streaming
-    checkpoint's offset commit replays batch N against a state whose
-    guard already records N — a no-op. There is no window in which a
-    batch can fold twice or a committed snapshot can be lost (at every
-    instant one complete _SUCCESS-marked copy exists, commit_state's
-    invariant)."""
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return  # replayed micro-batch, already folded
-    before = _read_state_before(spark, state_path, int(batch_id))
-    state = _strip_bid(before) if before is not None else None
-    commit_state(
-        fold_fn(state, batch_df).withColumn(BID_COL, F.lit(int(batch_id))),
-        state_path,
-        batch_id,
-    )
-
-
-def ema_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch of events into the per-key EMA state
-    (key, n_events, ema_cents, max_us, max_tb) under the single-state
-    protocol (_single_state_stream_fold)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: ema_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_ema_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key ½-decay EMA over a time-ordered event stream.
-    Returns a DataStreamWriter — the caller picks the trigger and calls
-    ``.start()``; read with ``read_ema_state``. Delivery contract: each
-    micro-batch is a time slice at or after every key's frontier (the
-    Kafka-partition-per-key model); violations raise inside the fold."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        ema_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
+    def step(prev, batch_df: DataFrame):
+        a_state, b_state, m_state = prev
+        # Tagged-schema contract, VALIDATED (not just implied): columns
+        # are exactly {side} ∪ on ∪ a_-prefixed payload ∪ b_-prefixed
+        # payload. A payload column without its side prefix would
+        # otherwise be silently dropped from the maintained state; an
+        # on-key with a side prefix would be selected twice and break
+        # the join.
+        cols = set(batch_df.columns)
+        bad_on = [k for k in on if k.startswith(("a_", "b_"))]
+        if bad_on:
+            raise ValueError(f"join keys must not use side prefixes: {bad_on}")
+        stray = cols - {side_col} - set(on) - {
+            c for c in cols if c.startswith(("a_", "b_"))
+        }
+        if stray:
+            raise ValueError(
+                f"unprefixed payload columns would be dropped: {sorted(stray)};"
+                " name side-a payloads a_* and side-b payloads b_*"
+            )
+        da = batch_df.filter(F.col(side_col) == "a").drop(side_col)
+        db = batch_df.filter(F.col(side_col) == "b").drop(side_col)
+        da = da.select(*on, *[c for c in da.columns if c.startswith("a_")])
+        db = db.select(*on, *[c for c in db.columns if c.startswith("b_")])
+        delta = join_delta(da, db, a_state, b_state, on)
+        return (
+            da if a_state is None else a_state.unionByName(da),
+            db if b_state is None else b_state.unionByName(db),
+            delta if m_state is None else m_state.unionByName(delta),
         )
 
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_ema_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def twap_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch into the per-key TWAP state (key, n_events,
-    first_us, num, last_us, last_tb, last_cents) under the single-state
-    protocol — ordered-fold member #5 (operators/segments.py
-    twap_fold_batch)."""
-    from etl_pipeline_last_fm_spark.operators.segments import twap_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: twap_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_twap_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key LOCF time-weighted-average state over a
-    time-ordered event stream (same contract as
-    streaming_ema_maintenance; read with ``read_twap_state`` and
-    present with operators/segments.present_twap_state)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        twap_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_twap_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def cusum_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """CUSUM sibling of ema_fold_stream_batch — the order-dependent IVM
-    family's second streaming member, same single-state replay-guard
-    protocol (_single_state_stream_fold; the out-of-order raise
-    surfaces at commit time)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        cusum_fold_batch,
-    )
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: cusum_fold_batch(
-            state, batch, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_cusum_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-key CUSUM change-point state over a time-ordered
-    event stream; read with ``read_cusum_state``. Same delivery contract
-    as streaming_ema_maintenance."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cusum_fold_stream_batch(
-            batch_df, batch_id, state_path, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_cusum_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def _merge_channel_totals(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Additive merge of per-channel totals: sum every non-channel
-    column — shared by both attribution twins."""
-    cols = [c for c in delta.columns if c != "channel"]
-    return prev.unionByName(delta).groupBy("channel").agg(
-        *[F.sum(c).alias(c) for c in cols]
-    )
-
-
-def _two_state_stream_fold(
-    batch_df: DataFrame, batch_id: int, state_root: str, fold_fn
-) -> None:
-    """The TWO-state ordered-fold protocol, defined ONCE: a per-key
-    carried state (k) plus additive per-channel totals (c). The totals
-    commit LAST and carry the replay guard (the join fold's m-last
-    rule: a crash after the k commit but before the c commit replays
-    the batch, and the replayed fold reads both states at the latest
-    version STRICTLY BEFORE this batch_id, so the batch's own credits
-    cannot double). ``fold_fn(state_or_None, batch)`` ->
-    (new_key_state, delta_totals)."""
-    spark = batch_df.sparkSession
-    k_path = f"{state_root}/k"
-    c_path = f"{state_root}/c"
-    prev_c = _read_state_or_none(spark, c_path)
-    if int(batch_id) <= last_applied_batch(prev_c):
-        return  # replayed micro-batch, already folded
-    before_k = _read_state_before(spark, k_path, int(batch_id))
-    if prev_c is not None and before_k is None:
-        raise RuntimeError(
-            f"pre-batch key state missing under {state_root} for batch"
-            f" {batch_id} while totals state exists — retention too"
-            " aggressive?"
-        )
-    before_c = _read_state_before(spark, c_path, int(batch_id))
-    key_state = _strip_bid(before_k) if before_k is not None else None
-    new_state, delta = fold_fn(key_state, batch_df)
-    if before_c is not None:
-        delta = _merge_channel_totals(_strip_bid(before_c), delta)
-    bid = F.lit(int(batch_id))
-    commit_state(new_state.withColumn(BID_COL, bid), k_path, batch_id)
-    # totals LAST: their batch_id is the replay guard for the pair.
-    commit_state(delta.withColumn(BID_COL, bid), c_path, batch_id)
-
-
-def attribution_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Last-touch attribution maintenance — order-dependent IVM member
-    #3, riding the two-state protocol (_two_state_stream_fold)."""
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        attribution_fold_batch,
-    )
-
-    _two_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_root,
-        lambda state, batch: attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_attribution_maintenance(
-    event_stream: DataFrame,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-channel last-touch attribution totals over a
-    time-ordered event stream; read with ``read_attribution_state``.
-    Same delivery contract as the EMA/CUSUM twins."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        attribution_fold_stream_batch(
-            batch_df, batch_id, state_root, touch_types, conversion_type,
-            window_us, key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_attribution_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, f"{state_root}/c"))
-
-
-def decay_attribution_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Time-decay multi-touch attribution maintenance — order-dependent
-    IVM member #4, same two-state protocol, and the first whose per-key
-    state is WINDOW-BOUNDED (the fold evicts touches older than
-    frontier − window each batch — watermark semantics, so the k state
-    never grows with history)."""
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        decay_attribution_fold_batch,
-    )
-
-    _two_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_root,
-        lambda state, batch: decay_attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_decay_attribution_maintenance(
-    event_stream: DataFrame,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-channel time-decay attribution totals over a
-    time-ordered event stream; read with ``read_attribution_state``
-    (same totals path as the last-touch twin)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        decay_attribution_fold_stream_batch(
-            batch_df, batch_id, state_root, touch_types, conversion_type,
-            window_us, key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def holt_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch into the per-key Holt (level, trend) state
-    (key, n_events, level_cents, trend_cents, max_us, max_tb) under the
-    single-state protocol — ordered-fold member #6
-    (operators/timeseries.py holt_fold_batch)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import holt_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: holt_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_holt_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key Holt linear-smoothing state over a
-    time-ordered event stream (same contract as
-    streaming_ema_maintenance; read with ``read_holt_state`` and present
-    with operators/timeseries.present_holt_state)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        holt_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_holt_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def skyline_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    id_col: str,
-    cost_col: str,
-    gain_col: str,
-    bucket_width: int = 1000,
-) -> None:
-    """Fold ONE micro-batch of points into the maintained Pareto
-    frontier (operators/skyline.py) under the single-state protocol —
-    the IVM family's first FRONTIER-STATE streaming member. The fold is
-    state' = skyline(state ∪ batch), exact by the set-algebraic
-    identity, so it is COMMUTATIVE: micro-batch order is immaterial and
-    there is no delivery contract / out-of-order raise — only the
-    replay guard matters (a replayed batch must not be re-folded, not
-    because re-folding corrupts the frontier — skyline is idempotent on
-    already-folded points — but to keep the protocol uniform)."""
-    from etl_pipeline_last_fm_spark.operators.skyline import skyline_2d
-
-    def fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
-        pts = batch.select(id_col, cost_col, gain_col)
-        if state is not None:
-            pts = state.unionByName(pts)
-        return skyline_2d(
-            pts, id_col, cost_col, gain_col, bucket_width=bucket_width
-        )
-
-    _single_state_stream_fold(batch_df, batch_id, state_path, fold)
-
-
-def streaming_skyline_maintenance(
-    point_stream: DataFrame,
-    state_path: str,
-    id_col: str,
-    cost_col: str,
-    gain_col: str,
-    bucket_width: int = 1000,
-    checkpoint: str | None = None,
-):
-    """Maintain the Pareto frontier over a stream of points. Returns a
-    DataStreamWriter; read with ``read_skyline_state``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        skyline_fold_stream_batch(
-            batch_df, batch_id, state_path, id_col, cost_col, gain_col,
-            bucket_width,
-        )
-
-    writer = point_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_skyline_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
+    return step

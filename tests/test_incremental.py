@@ -117,13 +117,11 @@ def test_merge_histograms_equals_full_build(spark, sf_dir):
 def test_streaming_mart_equals_batch_rebuild(spark, sf_dir, tmp_path):
     from etl_pipeline_last_fm_spark.operators.incremental import (
         additive_state,
+        mart_step,
         present,
     )
     from etl_pipeline_last_fm_spark.sources.tables import load_table
-    from etl_pipeline_last_fm_spark.streaming.marts import (
-        read_state,
-        streaming_mart_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.state import maintain, read_state
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     src = str(tmp_path / "ev_files")
@@ -136,8 +134,8 @@ def test_streaming_mart_equals_batch_rebuild(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_mart_maintenance(
-            stream, state, keys=["event_type"], value_col="value",
+        maintain(
+            stream, state, mart_step(keys=["event_type"], value_col="value"),
             checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)

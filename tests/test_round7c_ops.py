@@ -156,26 +156,27 @@ def test_holt_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     idempotent); an out-of-order batch raises WITHOUT committing, and a
     corrected batch then lands on the pre-violation state."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        holt_fold_batch,
         present_holt_state,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        holt_fold_stream_batch,
-        read_holt_state,
+    from etl_pipeline_last_fm_spark.streaming.state import (
+        fold_batch,
+        read_state,
     )
 
     path = str(tmp_path / "holt")
     slices = _holt_slices(spark)
-    holt_fold_stream_batch(slices[0], 0, path)
-    holt_fold_stream_batch(slices[0], 0, path)  # replay
+    fold_batch(slices[0], 0, path, holt_fold_batch)
+    fold_batch(slices[0], 0, path, holt_fold_batch)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])
     with pytest.raises(Exception, match="out-of-order"):
-        holt_fold_stream_batch(stale, 1, path)
-    holt_fold_stream_batch(slices[1], 1, path)  # corrected batch, same bid
-    holt_fold_stream_batch(slices[1].limit(0), 2, path)  # empty advances
-    holt_fold_stream_batch(slices[2], 3, path)
-    holt_fold_stream_batch(slices[2], 3, path)  # replay
+        fold_batch(stale, 1, path, holt_fold_batch)
+    fold_batch(slices[1], 1, path, holt_fold_batch)  # corrected batch, same bid
+    fold_batch(slices[1].limit(0), 2, path, holt_fold_batch)  # empty advances
+    fold_batch(slices[2], 3, path, holt_fold_batch)
+    fold_batch(slices[2], 3, path, holt_fold_batch)  # replay
     got = sorted(
-        map(tuple, present_holt_state(read_holt_state(spark, path)).collect())
+        map(tuple, present_holt_state(read_state(spark, path)).collect())
     )
     assert got == _want_holt(spark, slices)
 
@@ -544,10 +545,13 @@ def test_skyline_stream_fold_identity_replay_and_commutativity(
     frontier == the one-shot skyline; replays no-op; and — unique to
     this member — ANY batch order yields the same frontier (the fold is
     commutative set algebra, no delivery contract)."""
-    from etl_pipeline_last_fm_spark.operators.skyline import skyline_2d
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_skyline_state,
-        skyline_fold_stream_batch,
+    from etl_pipeline_last_fm_spark.operators.skyline import (
+        skyline_2d,
+        skyline_step,
+    )
+    from etl_pipeline_last_fm_spark.streaming.state import (
+        fold_batch,
+        read_state,
     )
 
     pts = [(i, (i * 37) % 50, (i * 23) % 40) for i in range(60)]
@@ -558,18 +562,15 @@ def test_skyline_stream_fold_identity_replay_and_commutativity(
     want = sorted(
         map(tuple, skyline_2d(df, "id", "cost", "gain", 7).collect())
     )
+    step = skyline_step("id", "cost", "gain", 7)
     for order, sub in (((0, 1, 2), "fwd"), ((2, 0, 1), "scrambled")):
         path = str(tmp_path / f"sky_{sub}")
         for bid, s in enumerate(order):
-            skyline_fold_stream_batch(
-                slices[s], bid, path, "id", "cost", "gain", 7
-            )
+            fold_batch(slices[s], bid, path, step)
             if bid == 1:  # replay mid-sequence must no-op
-                skyline_fold_stream_batch(
-                    slices[s], bid, path, "id", "cost", "gain", 7
-                )
+                fold_batch(slices[s], bid, path, step)
         got = sorted(
-            map(tuple, read_skyline_state(spark, path).collect())
+            map(tuple, read_state(spark, path).collect())
         )
         assert got == want, sub
 

@@ -311,10 +311,8 @@ def test_streaming_auc_census_fold(spark, tmp_path):
     SCRAMBLED batch order (the census is additive and order-free,
     unlike the ordered-fold IVM tier)."""
     from etl_pipeline_last_fm_spark.operators.evalmetrics import roc_auc
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        auc_census_fold_batch,
-        read_auc,
-    )
+    from etl_pipeline_last_fm_spark.streaming.drift import auc_step, read_auc
+    from etl_pipeline_last_fm_spark.streaming.state import fold_batch
 
     rows = [(i % 3 == 0, (i * 17) % 40) for i in range(30)]
     df = _scored(spark, rows)
@@ -325,11 +323,11 @@ def test_streaming_auc_census_fold(spark, tmp_path):
 
     path = str(tmp_path / "auc")
     # scrambled delivery: slice 2 as batch 0, slice 0 as 1, slice 1 as 2
-    auc_census_fold_batch(slices[2], 0, path)
-    auc_census_fold_batch(slices[2], 0, path)  # replay no-ops
-    auc_census_fold_batch(slices[0], 1, path)
-    auc_census_fold_batch(slices[1], 2, path)
-    auc_census_fold_batch(slices[1], 2, path)  # replay no-ops
+    fold_batch(slices[2], 0, path, auc_step())
+    fold_batch(slices[2], 0, path, auc_step())  # replay no-ops
+    fold_batch(slices[0], 1, path, auc_step())
+    fold_batch(slices[1], 2, path, auc_step())
+    fold_batch(slices[1], 2, path, auc_step())  # replay no-ops
     assert tuple(read_auc(spark, path).first()) == want
 
 

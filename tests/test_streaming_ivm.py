@@ -8,10 +8,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.streaming.ivm import (
-    join_fold_batch,
-    read_join_state,
-    streaming_join_maintenance,
+from etl_pipeline_last_fm_spark.streaming.ivm import JOIN_PARTS, join_step
+from etl_pipeline_last_fm_spark.streaming.state import (
+    fold_batch,
+    maintain,
+    read_state,
 )
 
 SCHEMA = "side string, k long, a_val string, b_val long"
@@ -38,20 +39,20 @@ WANT = sorted([(1, "a1", 10), (1, "a1", 11), (1, "a1", 11), (2, "a2", 20)])
 def test_stream_fold_equals_one_shot_join(spark, tmp_path):
     root = str(tmp_path / "jst")
     for i, b in enumerate(_batches(spark)):
-        join_fold_batch(b, i, root, ["k"])
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+        fold_batch(b, i, root, join_step(["k"]), JOIN_PARTS)
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
 def test_stream_fold_replay_is_noop(spark, tmp_path):
     root = str(tmp_path / "jst")
     batches = _batches(spark)
-    join_fold_batch(batches[0], 0, root, ["k"])
-    join_fold_batch(batches[0], 0, root, ["k"])  # replay
-    join_fold_batch(batches[1], 1, root, ["k"])
-    join_fold_batch(batches[2], 2, root, ["k"])
-    join_fold_batch(batches[2], 2, root, ["k"])  # replay
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    fold_batch(batches[0], 0, root, join_step(["k"]), JOIN_PARTS)
+    fold_batch(batches[0], 0, root, join_step(["k"]), JOIN_PARTS)  # replay
+    fold_batch(batches[1], 1, root, join_step(["k"]), JOIN_PARTS)
+    fold_batch(batches[2], 2, root, join_step(["k"]), JOIN_PARTS)
+    fold_batch(batches[2], 2, root, join_step(["k"]), JOIN_PARTS)  # replay
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
@@ -63,13 +64,13 @@ def test_stream_fold_crash_between_side_and_m_commit(spark, tmp_path):
 
     root = str(tmp_path / "jst")
     batches = _batches(spark)
-    join_fold_batch(batches[0], 0, root, ["k"])
-    join_fold_batch(batches[1], 1, root, ["k"])
-    join_fold_batch(batches[2], 2, root, ["k"])
+    fold_batch(batches[0], 0, root, join_step(["k"]), JOIN_PARTS)
+    fold_batch(batches[1], 1, root, join_step(["k"]), JOIN_PARTS)
+    fold_batch(batches[2], 2, root, join_step(["k"]), JOIN_PARTS)
     # "crash": the m commit for batch 2 is lost; a/b v=2 survive.
     shutil.rmtree(tmp_path / "jst" / "m" / "_v=2")
-    join_fold_batch(batches[2], 2, root, ["k"])  # replay after restart
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    fold_batch(batches[2], 2, root, join_step(["k"]), JOIN_PARTS)  # replay after restart
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
@@ -88,14 +89,15 @@ def test_streaming_join_maintenance_end_to_end(spark, tmp_path):
     )
     root = str(tmp_path / "jst")
     q = (
-        streaming_join_maintenance(
-            stream, root, ["k"], checkpoint=str(tmp_path / "ck")
+        maintain(
+            stream, root, join_step(["k"]), JOIN_PARTS,
+            checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(180)
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     a = _tagged(spark, rows).filter("side = 'a'").select("k", "a_val")
     b = _tagged(spark, rows).filter("side = 'b'").select("k", "b_val")
     want = sorted(map(tuple, a.join(b, "k").collect()))
@@ -110,12 +112,12 @@ def test_join_fold_rejects_unprefixed_payload_and_prefixed_keys(spark, tmp_path)
         [("a", 1, "x")], "side string, k long, payload string"
     )
     with pytest.raises(ValueError, match="unprefixed payload"):
-        join_fold_batch(bad, 0, root, ["k"])
+        fold_batch(bad, 0, root, join_step(["k"]), JOIN_PARTS)
     bad2 = spark.createDataFrame(
         [("a", 1, "x")], "side string, a_id long, a_val string"
     )
     with pytest.raises(ValueError, match="side prefixes"):
-        join_fold_batch(bad2, 0, root, ["a_id"])
+        fold_batch(bad2, 0, root, join_step(["a_id"]), JOIN_PARTS)
 
 
 # --- Streaming EMA: the first order-DEPENDENT IVM member (round 7) -----
@@ -151,17 +153,14 @@ def _want_ema(spark, slices):
 
 
 def test_ema_stream_fold_equals_one_shot(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
     for i, b in enumerate(slices):
-        ema_fold_stream_batch(b, i, path)
+        fold_batch(b, i, path, ema_fold_batch)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -172,21 +171,18 @@ def test_ema_stream_fold_replay_is_noop_and_empty_batch_advances(spark, tmp_path
     idempotent — a double fold halves the state again), and an EMPTY
     micro-batch must advance the guard while leaving every key's state
     unchanged."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
-    ema_fold_stream_batch(slices[0], 0, path)
-    ema_fold_stream_batch(slices[0], 0, path)  # replay
-    ema_fold_stream_batch(slices[1], 1, path)
-    ema_fold_stream_batch(slices[1].limit(0), 2, path)  # empty batch
-    ema_fold_stream_batch(slices[2], 3, path)
-    ema_fold_stream_batch(slices[2], 3, path)  # replay
+    fold_batch(slices[0], 0, path, ema_fold_batch)
+    fold_batch(slices[0], 0, path, ema_fold_batch)  # replay
+    fold_batch(slices[1], 1, path, ema_fold_batch)
+    fold_batch(slices[1].limit(0), 2, path, ema_fold_batch)  # empty batch
+    fold_batch(slices[2], 3, path, ema_fold_batch)
+    fold_batch(slices[2], 3, path, ema_fold_batch)  # replay
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -199,22 +195,19 @@ def test_ema_stream_fold_out_of_order_batch_raises(spark, tmp_path):
     pre-violation version and accepts a corrected batch."""
     import pytest
 
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
-    ema_fold_stream_batch(slices[0], 0, path)
+    fold_batch(slices[0], 0, path, ema_fold_batch)
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # day 1 <= user 1's day-2 frontier
     with pytest.raises(Exception, match="out-of-order"):
-        ema_fold_stream_batch(stale, 1, path)
+        fold_batch(stale, 1, path, ema_fold_batch)
     # the violating batch must not have committed as v=1
-    ema_fold_stream_batch(slices[1], 1, path)
-    ema_fold_stream_batch(slices[2], 2, path)
+    fold_batch(slices[1], 1, path, ema_fold_batch)
+    fold_batch(slices[2], 2, path, ema_fold_batch)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -227,10 +220,7 @@ def test_streaming_ema_maintenance_end_to_end(spark, tmp_path):
     make FileStreamSource deliver slices oldest-first."""
     import os
 
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_ema_state,
-        streaming_ema_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     slices = _ema_slices(spark)
     src = tmp_path / "src"
@@ -250,13 +240,13 @@ def test_streaming_ema_maintenance_end_to_end(spark, tmp_path):
     )
     path = str(tmp_path / "ema")
     q = (
-        streaming_ema_maintenance(stream, path, checkpoint=str(tmp_path / "ck"))
+        maintain(stream, path, ema_fold_batch, checkpoint=str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(180)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -269,25 +259,27 @@ def test_cusum_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     without committing."""
     import pytest
 
-    from etl_pipeline_last_fm_spark.operators.timeseries import cusum_alarms
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        cusum_fold_stream_batch,
-        read_cusum_state,
+    from functools import partial
+
+    from etl_pipeline_last_fm_spark.operators.timeseries import (
+        cusum_alarms,
+        cusum_fold_batch,
     )
 
     path = str(tmp_path / "cusum")
     slices = _ema_slices(spark)
     kw = dict(drift_cents=100, threshold_cents=400)
-    cusum_fold_stream_batch(slices[0], 0, path, **kw)
-    cusum_fold_stream_batch(slices[0], 0, path, **kw)  # replay
+    cusum = partial(cusum_fold_batch, **kw)
+    fold_batch(slices[0], 0, path, cusum)
+    fold_batch(slices[0], 0, path, cusum)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # at/before user 1's frontier
     with pytest.raises(Exception, match="out-of-order"):
-        cusum_fold_stream_batch(stale, 1, path, **kw)
-    cusum_fold_stream_batch(slices[1], 1, path, **kw)
-    cusum_fold_stream_batch(slices[2], 2, path, **kw)
-    cusum_fold_stream_batch(slices[2], 2, path, **kw)  # replay
+        fold_batch(stale, 1, path, cusum)
+    fold_batch(slices[1], 1, path, cusum)
+    fold_batch(slices[2], 2, path, cusum)
+    fold_batch(slices[2], 2, path, cusum)  # replay
     got = sorted(
-        map(tuple, read_cusum_state(spark, path).select(
+        map(tuple, read_state(spark, path).select(
             "key", "n_events", "cusum_final", "cusum_max", "n_alarms"
         ).collect())
     )
@@ -306,11 +298,9 @@ def test_attribution_stream_two_state_protocol(spark, tmp_path):
     import shutil
 
     from etl_pipeline_last_fm_spark.operators.attribution import (
+        ATTRIBUTION_PARTS,
+        attribution_step,
         last_touch_attribution,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        attribution_fold_stream_batch,
-        read_attribution_state,
     )
 
     def _tev(spark, rows):
@@ -329,36 +319,35 @@ def test_attribution_stream_two_state_protocol(spark, tmp_path):
     s2 = _tev(spark, [(1, 12, 20, "purchase", 2.0)])
     slices = [s0, s1, s2]
     root = str(tmp_path / "attr")
-    attribution_fold_stream_batch(slices[0], 0, root)
-    attribution_fold_stream_batch(slices[0], 0, root)  # replay
-    attribution_fold_stream_batch(slices[1], 1, root)
-    attribution_fold_stream_batch(slices[2], 2, root)
-    attribution_fold_stream_batch(slices[2], 2, root)  # replay
+    fold_batch(slices[0], 0, root, attribution_step(), ATTRIBUTION_PARTS)
+    fold_batch(slices[0], 0, root, attribution_step(), ATTRIBUTION_PARTS)  # replay
+    fold_batch(slices[1], 1, root, attribution_step(), ATTRIBUTION_PARTS)
+    fold_batch(slices[2], 2, root, attribution_step(), ATTRIBUTION_PARTS)
+    fold_batch(slices[2], 2, root, attribution_step(), ATTRIBUTION_PARTS)  # replay
     union = s0.unionByName(s1).unionByName(s2)
     want = sorted(map(tuple, last_touch_attribution(union).collect()))
-    got = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got == want
     assert ("none", 2, 800) in got  # the stale + the touchless purchase
     # crash window: the totals commit for batch 2 is lost; k v=2 survives
     shutil.rmtree(tmp_path / "attr" / "c" / "_v=2")
-    attribution_fold_stream_batch(slices[2], 2, root)
-    got2 = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    fold_batch(slices[2], 2, root, attribution_step(), ATTRIBUTION_PARTS)
+    got2 = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got2 == want
 
 
 def test_decay_attribution_stream_two_state_protocol(spark, tmp_path):
     """Time-decay streaming twin: maintained totals == the one-shot
     walk; replays no-op; the crash window (k committed, c lost) replays
-    without double-counting — the shared _two_state_stream_fold
-    protocol, now with the window-bounded key state."""
+    without double-counting — the fold driver's two-part protocol, now
+    with the window-bounded key state."""
     import shutil
 
     from etl_pipeline_last_fm_spark.operators.attribution import (
+        ATTRIBUTION_PARTS,
+        attribution_step,
+        decay_attribution_fold_batch,
         time_decay_attribution,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        decay_attribution_fold_stream_batch,
-        read_attribution_state,
     )
 
     def _tev(spark, rows):
@@ -377,17 +366,18 @@ def test_decay_attribution_stream_two_state_protocol(spark, tmp_path):
     s2 = _tev(spark, [(1, 13, 20, "purchase", 2.0)])
     slices = [s0, s1, s2]
     root = str(tmp_path / "dattr")
+    decay = attribution_step(decay_attribution_fold_batch)
     for i, b in enumerate(slices):
-        decay_attribution_fold_stream_batch(b, i, root)
-        decay_attribution_fold_stream_batch(b, i, root)  # replay
+        fold_batch(b, i, root, decay, ATTRIBUTION_PARTS)
+        fold_batch(b, i, root, decay, ATTRIBUTION_PARTS)  # replay
     union = s0.unionByName(s1).unionByName(s2)
     want = sorted(map(tuple, time_decay_attribution(union).collect()))
-    got = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got == want
     # crash window: totals commit for batch 2 lost; k v=2 survives
     shutil.rmtree(tmp_path / "dattr" / "c" / "_v=2")
-    decay_attribution_fold_stream_batch(slices[2], 2, root)
-    got2 = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    fold_batch(slices[2], 2, root, decay, ATTRIBUTION_PARTS)
+    got2 = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got2 == want
 
 
@@ -403,25 +393,22 @@ def test_twap_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
         time_weighted_avg,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_twap_state,
-        twap_fold_stream_batch,
+        twap_fold_batch,
     )
 
     path = str(tmp_path / "twap")
     slices = _ema_slices(spark)
-    twap_fold_stream_batch(slices[0], 0, path)
-    twap_fold_stream_batch(slices[0], 0, path)  # replay
+    fold_batch(slices[0], 0, path, twap_fold_batch)
+    fold_batch(slices[0], 0, path, twap_fold_batch)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # at/before user 1's frontier
     with pytest.raises(Exception, match="out-of-order"):
-        twap_fold_stream_batch(stale, 1, path)
-    twap_fold_stream_batch(slices[1], 1, path)
-    twap_fold_stream_batch(slices[1].limit(0), 2, path)  # empty batch
-    twap_fold_stream_batch(slices[2], 3, path)
-    twap_fold_stream_batch(slices[2], 3, path)  # replay
+        fold_batch(stale, 1, path, twap_fold_batch)
+    fold_batch(slices[1], 1, path, twap_fold_batch)
+    fold_batch(slices[1].limit(0), 2, path, twap_fold_batch)  # empty batch
+    fold_batch(slices[2], 3, path, twap_fold_batch)
+    fold_batch(slices[2], 3, path, twap_fold_batch)  # replay
     got = sorted(
-        map(tuple, present_twap_state(read_twap_state(spark, path)).collect())
+        map(tuple, present_twap_state(read_state(spark, path)).collect())
     )
     union = slices[0]
     for s in slices[1:]:
@@ -446,19 +433,14 @@ def test_single_state_replay_after_partial_commit(spark, tmp_path):
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
         time_weighted_avg,
+        twap_fold_batch,
     )
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        ema_fold_batch,
         ema_halflife,
+        holt_fold_batch,
         holt_linear,
         present_holt_state,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        holt_fold_stream_batch,
-        read_ema_state,
-        read_holt_state,
-        read_twap_state,
-        twap_fold_stream_batch,
     )
 
     slices = _ema_slices(spark)
@@ -467,21 +449,21 @@ def test_single_state_replay_after_partial_commit(spark, tmp_path):
         union = union.unionByName(s)
 
     members = [
-        ("ema", ema_fold_stream_batch,
+        ("ema", ema_fold_batch,
          lambda st: st.select("key", "n_events", "ema_cents"),
          lambda: ema_halflife(union)),
-        ("twap", twap_fold_stream_batch,
+        ("twap", twap_fold_batch,
          present_twap_state,
          lambda: time_weighted_avg(union)),
-        ("holt", holt_fold_stream_batch,
+        ("holt", holt_fold_batch,
          present_holt_state,
          lambda: holt_linear(union)),
     ]
-    for name, fold, present, one_shot in members:
+    for name, step, present, one_shot in members:
         path = str(tmp_path / name)
-        fold(slices[0], 0, path)
-        fold(slices[1], 1, path)
-        fold(slices[2], 2, path)
+        fold_batch(slices[0], 0, path, step)
+        fold_batch(slices[1], 1, path, step)
+        fold_batch(slices[2], 2, path, step)
         # "crash mid-append": v=2 loses its _SUCCESS marker and a part
         # file — a torn write no reader may trust.
         v2 = tmp_path / name / "_v=2"
@@ -492,10 +474,8 @@ def test_single_state_replay_after_partial_commit(spark, tmp_path):
                 break
         # restart replays batch 2: the guard must NOT see the partial as
         # applied, and the fold must read the v<2 snapshot, not the torn dir.
-        fold(slices[2], 2, path)
-        read = {"ema": read_ema_state, "twap": read_twap_state,
-                "holt": read_holt_state}[name]
-        got = sorted(map(tuple, present(read(spark, path)).collect()))
+        fold_batch(slices[2], 2, path, step)
+        got = sorted(map(tuple, present(read_state(spark, path)).collect()))
         want = sorted(map(tuple, one_shot().collect()))
         assert got == want, name
         # the recommitted v=2 is whole again (marker restored)
@@ -510,19 +490,16 @@ def test_single_state_crash_before_first_commit_replays_clean(spark, tmp_path):
     import os
 
     from etl_pipeline_last_fm_spark.operators.timeseries import ema_halflife
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     slices = _ema_slices(spark)
     path = str(tmp_path / "ema0")
-    ema_fold_stream_batch(slices[0], 0, path)
+    fold_batch(slices[0], 0, path, ema_fold_batch)
     v0 = tmp_path / "ema0" / "_v=0"
     os.remove(v0 / "_SUCCESS")
-    ema_fold_stream_batch(slices[0], 0, path)  # replay from empty
+    fold_batch(slices[0], 0, path, ema_fold_batch)  # replay from empty
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, [slices[0]])

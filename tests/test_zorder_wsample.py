@@ -15,12 +15,8 @@ from etl_pipeline_last_fm_spark.operators.zorder import (
     zorder_key,
 )
 from etl_pipeline_last_fm_spark.sources.tables import load_table
-from etl_pipeline_last_fm_spark.streaming.sketch import (
-    merge_cms_grids,
-    read_cms_state,
-    read_hll_state,
-    streaming_cms_maintenance,
-)
+from etl_pipeline_last_fm_spark.operators.sketch import cms_step, merge_cms_grids
+from etl_pipeline_last_fm_spark.streaming.state import maintain, read_state
 
 
 def test_zorder_canonical_4x4_traversal(spark):
@@ -122,8 +118,8 @@ def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_cms_maintenance(
-            stream, state, depth=2, width=64,
+        maintain(
+            stream, state, cms_step(depth=2, width=64),
             checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)
@@ -133,7 +129,7 @@ def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
 
     got = {
         (r["__d"], r["__cell"]): r["__cnt"]
-        for r in read_cms_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
     want = {
         (r["__d"], r["__cell"]): r["__cnt"]
@@ -163,9 +159,7 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
     from etl_pipeline_last_fm_spark.operators.sketch import (
         hll_distinct,
         hll_estimate_from_registers,
-    )
-    from etl_pipeline_last_fm_spark.streaming.sketch import (
-        streaming_hll_maintenance,
+        hll_step,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
@@ -179,9 +173,10 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_hll_maintenance(
-            stream, state, value_col="user_id", group_cols=["event_type"],
-            b=6, checkpoint=str(tmp_path / "ck"),
+        maintain(
+            stream, state,
+            hll_step(value_col="user_id", group_cols=["event_type"], b=6),
+            checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)
         .start()
@@ -192,7 +187,7 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
         map(
             tuple,
             hll_estimate_from_registers(
-                read_hll_state(spark, state), ["event_type"], b=6
+                read_state(spark, state), ["event_type"], b=6
             ).collect(),
         )
     )
