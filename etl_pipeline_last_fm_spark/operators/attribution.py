@@ -292,40 +292,11 @@ def attribution_fold_batch(
     return new_state, delta
 
 
-def incremental_attribution_batches(
-    batches: list[DataFrame],
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through
-    ``attribution_fold_batch``, summing the additive credit deltas —
-    must equal the one-shot ``last_touch_attribution`` over the union
-    for ANY time-split batching. localCheckpoint per round for BOTH the
-    carried key state and the accumulated totals (house rule)."""
-    state, totals = None, None
-    for batch in batches:
-        state, delta = attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        state = state.localCheckpoint()
-        totals = merge_channel_totals(totals, delta).localCheckpoint()
-    assert totals is not None, "need at least one batch"
-    return totals
-
-
 def merge_channel_totals(
     totals: DataFrame | None, delta: DataFrame
 ) -> DataFrame:
     """Per-channel credit totals plus one batch's credit delta: every
-    non-channel column sums. Shared by both batch folds and the streaming
-    step, so their totals cannot drift."""
+    non-channel column sums — the totals half of ``attribution_step``."""
     merged = delta if totals is None else totals.unionByName(delta)
     return merged.groupBy("channel").agg(
         *[F.sum(c).alias(c) for c in delta.columns if c != "channel"]
@@ -338,13 +309,15 @@ ATTRIBUTION_PARTS = ("k", "c")
 
 
 def attribution_step(fold=attribution_fold_batch):
-    """Fold step over ``ATTRIBUTION_PARTS`` for the streaming fold driver
-    (streaming/state.py): ``fold`` (last-touch by default, or
-    ``decay_attribution_fold_batch``) advances the key state, and its
-    credit delta merges into the channel totals."""
+    """Fold step over ``ATTRIBUTION_PARTS``, shared by the streaming fold
+    driver (streaming/state.py) and the batch one (operators/rounds.py):
+    ``fold`` (last-touch by default, or ``decay_attribution_fold_batch``)
+    advances the key state, and its credit delta merges into the channel
+    totals. ``prev=None`` starts both parts from scratch. Summing the
+    deltas of any time-split batching equals the one-shot operator."""
 
     def step(prev, batch):
-        keys, totals = prev
+        keys, totals = prev or (None, None)
         state, delta = fold(keys, batch)
         return state, merge_channel_totals(totals, delta)
 
@@ -501,34 +474,6 @@ def decay_attribution_fold_batch(
         )
     )
     return new_state, delta
-
-
-def incremental_decay_attribution_batches(
-    batches: list[DataFrame],
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through
-    ``decay_attribution_fold_batch``, summing the additive credit
-    deltas — must equal the one-shot ``time_decay_attribution`` over the
-    union for ANY time-split batching, with per-key state bounded by the
-    recency window throughout (the eviction makes this the first member
-    whose state does NOT grow with history)."""
-    state, totals = None, None
-    for batch in batches:
-        state, delta = decay_attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        totals = merge_channel_totals(totals, delta).localCheckpoint()
-    assert totals is not None, "need at least one batch"
-    return totals
 
 
 def time_decay_attribution_oracle_sql(

@@ -46,6 +46,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds, unroll_ctes
+
 SUPPLIER_NODE_OFFSET = 1_000_000_000  # disjoint node id spaces (cust vs supp)
 PR_INIT_MICRO = 1_000_000
 PR_BASE_MICRO = 150_000  # (1 - 0.85) * 1e6
@@ -384,8 +386,7 @@ def pagerank_oracle_sql(n_iter: int = 4) -> str:
     """Programmatically unrolled k-iteration twin: r0, c1, r1, ..., rk as
     chained CTEs running the same integer recurrence. Exact parity by
     construction — every operation is int64 floor division / sum."""
-    parts = [
-        f"""
+    head = f"""
         WITH ed AS (
             SELECT src, dst FROM ({_CUSTSUPP_W_EDGE_SQL})
         ),
@@ -393,10 +394,7 @@ def pagerank_oracle_sql(n_iter: int = 4) -> str:
         od AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY src),
         r0 AS (SELECT node, CAST({PR_INIT_MICRO} AS BIGINT) AS r FROM nodes)
         """
-    ]
-    for i in range(1, n_iter + 1):
-        parts.append(
-            f""",
+    return unroll_ctes(head, lambda i: f""",
         c{i} AS (
             SELECT ed.dst AS node, CAST(SUM(r{i-1}.r // od.d) AS BIGINT) AS s
             FROM ed JOIN r{i-1} ON ed.src = r{i-1}.node
@@ -408,10 +406,7 @@ def pagerank_oracle_sql(n_iter: int = 4) -> str:
                    CAST({PR_BASE_MICRO} + (85 * COALESCE(c{i}.s, 0)) // 100 AS BIGINT) AS r
             FROM nodes n LEFT JOIN c{i} ON n.node = c{i}.node
         )
-        """
-        )
-    parts.append(f"SELECT node, r AS rank_micro FROM r{n_iter}")
-    return "".join(parts)
+        """, n_iter) + f"SELECT node, r AS rank_micro FROM r{n_iter}"
 
 
 def kcore_rounds(edges: DataFrame, k: int = 3, n_rounds: int = 4) -> DataFrame:
@@ -432,37 +427,30 @@ def kcore_rounds(edges: DataFrame, k: int = 3, n_rounds: int = 4) -> DataFrame:
     linear in surviving edges; the classic distributed peeling schedule.
     Returns (node, core_degree) for nodes surviving ``n_rounds``.
     """
-    # localCheckpoint per round: e_{i+1}'s plan references e_i THREE
-    # times (the semi-join source plus both survivor branches), so an
-    # unpersisted loop builds a 3^n-copy plan — exponential analysis and
-    # execution (measured: minutes for n=6 on a 40-edge graph). Same
-    # lineage-truncation treatment as connected_components.
-    cur_edges = edges.select("a", "b").localCheckpoint()
-    for _ in range(n_rounds):
-        deg = (
-            cur_edges.select(F.col("a").alias("node"))
-            .unionAll(cur_edges.select(F.col("b").alias("node")))
+    def degrees(e: DataFrame, name: str) -> DataFrame:
+        return (
+            e.select(F.col("a").alias("node"))
+            .unionAll(e.select(F.col("b").alias("node")))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
+            .agg(F.count(F.lit(1)).alias(name))
         )
+
+    def peel(cur_edges: DataFrame, _round: int) -> DataFrame:
+        deg = degrees(cur_edges, "degree")
         survivors = deg.filter(F.col("degree") >= k).select("node")
-        cur_edges = (
-            cur_edges.join(
-                survivors.withColumnRenamed("node", "a"), "a", "left_semi"
-            )
-            .join(survivors.withColumnRenamed("node", "b"), "b", "left_semi")
-            .localCheckpoint()
-        )
+        return cur_edges.join(
+            survivors.withColumnRenamed("node", "a"), "a", "left_semi"
+        ).join(survivors.withColumnRenamed("node", "b"), "b", "left_semi")
+
+    # e_{i+1}'s plan references e_i THREE times (the semi-join source
+    # plus both survivor branches): fold_rounds' per-round cut keeps the
+    # plan linear (uncut, n=6 on a 40-edge graph took minutes).
+    cur_edges = fold_rounds(peel, range(n_rounds), state=edges.select("a", "b"))
     # The edge-derived node set after round n IS the round-(n-1) survivor
     # set (both semi-joins enforced it), so no survivor join is needed on
     # the way out — every node still on an edge survived, and a node with
     # zero in-core edges cannot meet k >= 1 anyway.
-    return (
-        cur_edges.select(F.col("a").alias("node"))
-        .unionAll(cur_edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
+    return degrees(cur_edges, "core_degree")
 
 
 def kcore_rounds_oracle_sql(k: int = 3, n_rounds: int = 4) -> str:
@@ -473,37 +461,27 @@ def kcore_rounds_oracle_sql(k: int = 3, n_rounds: int = 4) -> str:
     # references e_i three times (source + both survivor branches) — the
     # same 3^n blowup the Spark side breaks with localCheckpoint
     # (measured: 234 s inlined vs sub-second materialized at sf0.001).
-    parts = [
-        f"""
+    head = f"""
         WITH e0 AS MATERIALIZED ({_COSUPP_EDGE_SQL})
         """
-    ]
-    for i in range(n_rounds):
-        parts.append(
-            f""",
-        deg{i} AS MATERIALIZED (
+    return unroll_ctes(head, lambda i: f""",
+        deg{i - 1} AS MATERIALIZED (
             SELECT node, COUNT(*) AS degree FROM (
-                SELECT a AS node FROM e{i} UNION ALL SELECT b AS node FROM e{i}
+                SELECT a AS node FROM e{i - 1} UNION ALL SELECT b AS node FROM e{i - 1}
             ) GROUP BY node
         ),
-        surv{i} AS MATERIALIZED (SELECT node FROM deg{i} WHERE degree >= {k}),
-        e{i + 1} AS MATERIALIZED (
-            SELECT a, b FROM e{i}
-            WHERE a IN (SELECT node FROM surv{i})
-              AND b IN (SELECT node FROM surv{i})
+        surv{i - 1} AS MATERIALIZED (SELECT node FROM deg{i - 1} WHERE degree >= {k}),
+        e{i} AS MATERIALIZED (
+            SELECT a, b FROM e{i - 1}
+            WHERE a IN (SELECT node FROM surv{i - 1})
+              AND b IN (SELECT node FROM surv{i - 1})
         )
-        """
-        )
-    last = n_rounds
-    parts.append(
-        f"""
+        """, n_rounds) + f"""
         SELECT node, COUNT(*) AS core_degree FROM (
-            SELECT a AS node FROM e{last} UNION ALL SELECT b AS node FROM e{last}
+            SELECT a AS node FROM e{n_rounds} UNION ALL SELECT b AS node FROM e{n_rounds}
         )
         GROUP BY node
         """
-    )
-    return "".join(parts)
 
 
 def customer_supplier_weighted_edges(
@@ -616,8 +594,7 @@ def pagerank_weighted_micro(
 def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:
     """Unrolled-CTE twin of ``pagerank_weighted_micro`` over the
     order-count-weighted customer->supplier graph."""
-    parts = [
-        f"""
+    head = f"""
         WITH ed AS (
             {_CUSTSUPP_W_EDGE_SQL}
         ),
@@ -625,10 +602,7 @@ def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:
         ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS W FROM ed GROUP BY src),
         r0 AS (SELECT node, CAST({PR_INIT_MICRO} AS BIGINT) AS r FROM nodes)
         """
-    ]
-    for i in range(1, n_iter + 1):
-        parts.append(
-            f""",
+    return unroll_ctes(head, lambda i: f""",
         c{i} AS (
             SELECT ed.dst AS node,
                    CAST(SUM((r{i-1}.r * ed.w) // ow.W) AS BIGINT) AS s
@@ -641,10 +615,7 @@ def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:
                    CAST({PR_BASE_MICRO} + (85 * COALESCE(c{i}.s, 0)) // 100 AS BIGINT) AS r
             FROM nodes n LEFT JOIN c{i} ON n.node = c{i}.node
         )
-        """
-        )
-    parts.append(f"SELECT node, r AS rank_micro FROM r{n_iter}")
-    return "".join(parts)
+        """, n_iter) + f"SELECT node, r AS rank_micro FROM r{n_iter}"
 
 
 # ---------------------------------------------------------------------------
@@ -653,24 +624,15 @@ def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:
 
 def undirected(edges: DataFrame) -> DataFrame:
     """Both orientations of a canonical (a < b) edge list, lineage-truncated
-    — the shared expansion for every neighbor-propagation operator (LPA,
-    BFS). localCheckpoint: the result is read k+1 times by iterative
-    consumers, and it truncates the upstream pair-expansion lineage."""
+    — the shared expansion for the neighbor-scan operators (LPA, the
+    clustering coefficient). localCheckpoint: the result is read k+1
+    times by iterative consumers, and it truncates the upstream
+    pair-expansion lineage."""
     return (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .localCheckpoint()
     )
-
-
-#: Oracle twin of ``undirected`` over the co-supplier graph — shared CTE
-#: prefix for the LPA and BFS oracle builders.
-_UND_CTE = f"""
-        WITH e AS MATERIALIZED ({_COSUPP_EDGE_SQL}),
-        und AS MATERIALIZED (
-            SELECT a AS src, b AS dst FROM e
-            UNION ALL SELECT b AS src, a AS dst FROM e
-        )"""
 
 
 def label_propagation_rounds(edges: DataFrame, n_rounds: int = 3) -> DataFrame:
@@ -718,17 +680,17 @@ def label_propagation_oracle_sql(n_rounds: int = 3) -> str:
     """Unrolled-CTE twin over the co-supplier graph: votes_i (GROUP BY) +
     l_i (ROW_NUMBER argmax, count DESC / label ASC) per round. Every CTE
     MATERIALIZED — same blowup note as the k-core oracle."""
-    parts = [
-        _UND_CTE
-        + """,
+    head = f"""
+        WITH e AS MATERIALIZED ({_COSUPP_EDGE_SQL}),
+        und AS MATERIALIZED (
+            SELECT a AS src, b AS dst FROM e
+            UNION ALL SELECT b AS src, a AS dst FROM e
+        ),
         l0 AS MATERIALIZED (
             SELECT DISTINCT src AS node, src AS label FROM und
         )
         """
-    ]
-    for i in range(1, n_rounds + 1):
-        parts.append(
-            f""",
+    return unroll_ctes(head, lambda i: f""",
         v{i} AS MATERIALIZED (
             SELECT und.dst AS node, l{i-1}.label, COUNT(*) AS c
             FROM und JOIN l{i-1} ON und.src = l{i-1}.node
@@ -743,81 +705,7 @@ def label_propagation_oracle_sql(n_rounds: int = 3) -> str:
                 FROM v{i}
             ) WHERE rn = 1
         )
-        """
-        )
-    parts.append(
-        f"SELECT node, CAST(label AS BIGINT) AS label FROM l{n_rounds}"
-    )
-    return "".join(parts)
-
-
-def bfs_hops(edges: DataFrame, seeds: DataFrame, n_rounds: int = 3) -> DataFrame:
-    """Multi-source BFS over the undirected graph: hop distance from the
-    nearest seed, bounded by ``n_rounds`` relaxations —
-
-        d_0(v) = 0 if v in seeds
-        d_{i+1}(v) = min(d_i(v), 1 + min over neighbors u of d_i(u))
-
-    the Bellman-Ford/Pregel relaxation with unit weights. Only nodes
-    reached within ``n_rounds`` hops appear in the output (frontier
-    semantics); exact integers throughout.
-
-    INPUT CONTRACT: ``edges`` distinct canonical (a < b); ``seeds`` a
-    one-column (node) DataFrame, deduplicated here.
-
-    Scale shape: each round joins the CURRENT distance table to edges on
-    the node key and re-aggregates min — 2 shuffles/round, linear in |E|.
-    ``dist`` is referenced twice per round (carry + relax), so each round
-    localCheckpoints — the same 2^n lineage-blowup treatment as k-core's
-    3^n (measured there; the mechanism is identical).
-    """
-    und = undirected(edges)
-    dist = seeds.select(F.col("node").cast("long").alias("node")).distinct().select(
-        "node", F.lit(0).cast("long").alias("hops")
-    ).localCheckpoint()
-    for _ in range(n_rounds):
-        relax = (
-            und.join(dist.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), (F.col("hops") + F.lit(1)).alias("hops"))
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint()
-        )
-    return dist
-
-
-def bfs_hops_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
-    """Unrolled-CTE twin over the co-supplier graph: d_{i+1} = min over
-    (carry UNION ALL relax) per round, seeds from ``seed_sql`` (one
-    ``node`` column). MATERIALIZED for the same 2^n reason."""
-    parts = [
-        _UND_CTE
-        + f""",
-        d0 AS MATERIALIZED (
-            SELECT DISTINCT CAST(node AS BIGINT) AS node,
-                   CAST(0 AS BIGINT) AS hops
-            FROM ({seed_sql})
-        )
-        """
-    ]
-    for i in range(1, n_rounds + 1):
-        parts.append(
-            f""",
-        d{i} AS MATERIALIZED (
-            SELECT node, CAST(MIN(hops) AS BIGINT) AS hops FROM (
-                SELECT node, hops FROM d{i-1}
-                UNION ALL
-                SELECT und.dst AS node, d{i-1}.hops + 1 AS hops
-                FROM und JOIN d{i-1} ON und.src = d{i-1}.node
-            ) GROUP BY node
-        )
-        """
-        )
-    parts.append(f"SELECT node, hops FROM d{n_rounds}")
-    return "".join(parts)
+        """, n_rounds) + f"SELECT node, CAST(label AS BIGINT) AS label FROM l{n_rounds}"
 
 
 def cosupplier_weighted_edges(lineitem: DataFrame) -> DataFrame:
@@ -861,14 +749,17 @@ def sssp_rounds(
         d_{i+1}(v) = min(d_i(v), min over neighbors u of d_i(u) + w(u,v))
 
     Bellman-Ford's relaxation with integer weights; after k rounds the
-    distances are exact for every shortest path of <= k EDGES (frontier
-    semantics like ``bfs_hops``, whose unit-weight case this
-    generalizes). Pure int64 arithmetic -> oracle parity by construction.
+    distances are exact for every shortest path of <= k EDGES, and only
+    nodes reached within ``n_rounds`` edges appear (frontier semantics;
+    ``bfs_hops`` is the unit-weight case). Pure int64 arithmetic ->
+    oracle parity by construction.
 
     INPUT CONTRACT: ``edges`` distinct canonical (a, b, w) with a < b and
-    integer w >= 0; ``seeds`` one ``node`` column. Scale shape identical
-    to bfs_hops: 2 shuffles/round on the node key, localCheckpoint per
-    round against the 2^n carry+relax lineage.
+    integer w >= 0; ``seeds`` one ``node`` column, deduplicated here.
+    Scale shape: each round joins the current distances to the edges on
+    the node key and re-aggregates min — 2 shuffles/round, linear in
+    |E|. ``dist`` is referenced twice per round (carry + relax), hence
+    fold_rounds' per-round cut against the 2^n lineage.
     """
     und = (
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
@@ -877,33 +768,36 @@ def sssp_rounds(
         )
         .localCheckpoint()
     )
-    dist = (
-        seeds.select(F.col("node").cast("long").alias("node"))
-        .distinct()
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    for _ in range(n_rounds):
-        relax = und.join(
+
+    def relax(dist: DataFrame, _round: int) -> DataFrame:
+        relaxed = und.join(
             dist.withColumnRenamed("node", "src"), "src"
         ).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionByName(relax)
+        return (
+            dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
-    return dist
+
+    d0 = (
+        seeds.select(F.col("node").cast("long").alias("node"))
+        .distinct()
+        .select("node", F.lit(0).cast("long").alias("dist"))
+    )
+    return fold_rounds(relax, range(n_rounds), state=d0)
 
 
-def sssp_rounds_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
-    """Unrolled-CTE twin of ``sssp_rounds`` over the weighted co-supplier
-    graph (min over carry UNION ALL weighted relax, per round)."""
-    parts = [
-        f"""
-        WITH e AS MATERIALIZED ({_COSUPP_W_EDGE_SQL}),
+def sssp_rounds_oracle_sql(
+    seed_sql: str, n_rounds: int = 3, edge_sql: str = _COSUPP_W_EDGE_SQL
+) -> str:
+    """Unrolled-CTE twin of ``sssp_rounds`` over ``edge_sql``'s (a, b, w)
+    edges — the weighted co-supplier graph by default (min over carry
+    UNION ALL weighted relax, per round). MATERIALIZED for the 2^n
+    reason."""
+    head = f"""
+        WITH e AS MATERIALIZED ({edge_sql}),
         und AS MATERIALIZED (
             SELECT a AS src, b AS dst, w FROM e
             UNION ALL SELECT b AS src, a AS dst, w FROM e
@@ -914,10 +808,7 @@ def sssp_rounds_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
             FROM ({seed_sql})
         )
         """
-    ]
-    for i in range(1, n_rounds + 1):
-        parts.append(
-            f""",
+    return unroll_ctes(head, lambda i: f""",
         d{i} AS MATERIALIZED (
             SELECT node, CAST(MIN(dist) AS BIGINT) AS dist FROM (
                 SELECT node, dist FROM d{i-1}
@@ -926,10 +817,26 @@ def sssp_rounds_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
                 FROM und JOIN d{i-1} ON und.src = d{i-1}.node
             ) GROUP BY node
         )
-        """
-        )
-    parts.append(f"SELECT node, dist FROM d{n_rounds}")
-    return "".join(parts)
+        """, n_rounds) + f"SELECT node, dist FROM d{n_rounds}"
+
+
+def bfs_hops(edges: DataFrame, seeds: DataFrame, n_rounds: int = 3) -> DataFrame:
+    """Multi-source BFS over the undirected graph: hop distance from the
+    nearest seed, bounded by ``n_rounds`` relaxations — ``sssp_rounds``
+    with unit weights, ``dist`` renamed to ``hops``. Only nodes reached
+    within ``n_rounds`` hops appear (frontier semantics).
+
+    INPUT CONTRACT: ``edges`` distinct canonical (a < b); ``seeds`` a
+    one-column (node) DataFrame."""
+    unit = edges.select("a", "b", F.lit(1).cast("long").alias("w"))
+    return sssp_rounds(unit, seeds, n_rounds).withColumnRenamed("dist", "hops")
+
+
+def bfs_hops_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
+    """The SSSP oracle over the unweighted co-supplier edges at w = 1."""
+    unit = f"SELECT a, b, CAST(1 AS BIGINT) AS w FROM ({_COSUPP_EDGE_SQL})"
+    sssp = sssp_rounds_oracle_sql(seed_sql, n_rounds, edge_sql=unit)
+    return f"SELECT node, dist AS hops FROM ({sssp})"
 
 
 # --- Link prediction: common-neighbor / Jaccard scores (round 6) -------

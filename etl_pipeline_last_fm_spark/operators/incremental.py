@@ -131,9 +131,11 @@ def join_delta(
 ) -> DataFrame:
     """One application of the join delta rule:
     Δ(A ⋈ B) = ΔA ⋈ B_old ∪ A_old ⋈ ΔB ∪ ΔA ⋈ ΔB. THE single home of
-    the identity — both the batch fold (incremental_join_batches) and the
-    streaming join step (streaming/ivm.py) call this, so the two paths cannot
-    drift (bag semantics, null-key behavior, future state-side hints)."""
+    the identity: streaming/ivm.py's ``join_step`` calls it for both the
+    batch and the streaming fold, so the two paths cannot drift (bag
+    semantics, null-key behavior, future state-side hints). Round t pays
+    |ΔA_t| ⋈ |B_<t| + |A_<t| ⋈ |ΔB_t| + |ΔA_t| ⋈ |ΔB_t| — O(delta ×
+    state), never O(history × history)."""
     on = list(on)
     terms = []
     if b_state is not None:
@@ -145,50 +147,3 @@ def join_delta(
     for t in terms[1:]:
         delta = delta.unionByName(t)
     return delta
-
-
-def incremental_join_batches(
-    a_batches: Sequence[DataFrame],
-    b_batches: Sequence[DataFrame],
-    on: Sequence[str],
-) -> DataFrame:
-    """Maintain a materialized inner join incrementally over batched
-    arrivals on BOTH sides — the classic delta rule
-
-        Δ(A ⋈ B) = ΔA ⋈ B_old  ∪  A_old ⋈ ΔB  ∪  ΔA ⋈ ΔB
-
-    folded over k rounds. Round t pays |ΔA_t| ⋈ |B_<t| + |A_<t| ⋈ |ΔB_t|
-    + |ΔA_t| ⋈ |ΔB_t| — O(delta × state), never O(history × history) —
-    which is the only sane contract for a 100 TB join maintained daily
-    (the reference recomputes its joins from scratch each run; this is
-    the incremental-aggregate contract of this module extended from
-    GROUP BY to ⋈).
-
-    Correctness is an algebraic identity — after round t the maintained
-    M equals (A_0 ∪..∪ A_t) ⋈ (B_0 ∪..∪ B_t) for ANY batching of either
-    side, including keys whose matching rows arrive in different rounds
-    (the two one-sided terms) or the same round (the ΔΔ term). That
-    identity is the registered query's oracle (the plain one-shot join)
-    and is property-tested under splits that exercise all three terms.
-
-    Bag semantics (inner join of multisets) — no dedup anywhere, exactly
-    like the one-shot join. States are localCheckpoint-ed per round:
-    M is referenced once but A/B states feed two consumers each (the
-    delta join + the state union), the usual 2^n lineage guard.
-    """
-    if len(a_batches) != len(b_batches):
-        raise ValueError(
-            f"batch lists must pair up: {len(a_batches)} != {len(b_batches)}"
-            " (pad the shorter side with empty frames)"
-        )
-    if not a_batches:
-        raise ValueError("incremental_join_batches needs at least one batch")
-    on = list(on)
-    a_state = b_state = m_state = None
-    for da, db in zip(a_batches, b_batches):
-        delta = join_delta(da, db, a_state, b_state, on)
-        m_state = delta if m_state is None else m_state.unionByName(delta)
-        m_state = m_state.localCheckpoint()
-        a_state = (da if a_state is None else a_state.unionByName(da)).localCheckpoint()
-        b_state = (db if b_state is None else b_state.unionByName(db)).localCheckpoint()
-    return m_state

@@ -343,24 +343,3 @@ def present_twap_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
             ).alias("twap_cents"),
         )
     )
-
-
-def incremental_twap_batches(
-    batches: list[DataFrame],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through ``twap_fold_batch``
-    and present (key, n_events, span_us, twap_cents) — must equal
-    ``time_weighted_avg`` over the union for ANY time-split batching
-    (the ordered-fold maintenance identity; the one-shot IS the
-    oracle). localCheckpoint per round, the iterative house rule."""
-    state = None
-    for batch in batches:
-        state = twap_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ).localCheckpoint()
-    assert state is not None, "need at least one batch"
-    return present_twap_state(state, key_col)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import cosine_similarity_expr, half_up_round
+from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds, unroll_ctes
 
 
 def _as_double(vec: Column) -> Column:
@@ -1479,8 +1480,9 @@ def kmeans_lloyd_relational(
     Scale shape: per iteration one dim-key join (|rows| x k expansion —
     k is small by contract) + one (id, cid) aggregate + one per-id argmax
     window + one (cid, dim) aggregate, all shuffling on bounded keys;
-    centroids are k * dims rows. localCheckpoint per round truncates the
-    iterative lineage (same treatment as the graph tier). In production
+    centroids are k * dims rows. ``fold_rounds`` cuts the lineage every
+    round (same treatment as the graph tier); ``n_iters=0`` returns the
+    seed centroids, as the oracle's ``c0`` does. In production
     the TRAINING input is a bounded sample — the full corpus pays only
     the assignment map (cf. ivf_ann_topk_trained).
 
@@ -1504,9 +1506,10 @@ def kmeans_lloyd_relational(
     seed_ids = x.select("id").distinct().orderBy("id").limit(k)
     cents = x.join(seed_ids, "id", "left_semi").select(
         F.col("id").alias("cid"), "dim", F.col("xv").alias("cv")
-    ).localCheckpoint()
+    )
     w = Window.partitionBy("id").orderBy(F.col("dist").asc(), F.col("cid").asc())
-    for _ in range(n_iters):
+
+    def lloyd(cents: DataFrame, _round: int) -> DataFrame:
         diff = F.col("xv") - F.col("cv")
         dists = (
             x.join(cents, "dim")
@@ -1524,11 +1527,11 @@ def kmeans_lloyd_relational(
             .groupBy("cid", "dim")
             .agg(F.expr("sum(xv) div count(1)").alias("nv"))
         )
-        cents = (
-            cents.join(sums, ["cid", "dim"], "left")
-            .select("cid", "dim", F.coalesce("nv", "cv").alias("cv"))
-            .localCheckpoint()
+        return cents.join(sums, ["cid", "dim"], "left").select(
+            "cid", "dim", F.coalesce("nv", "cv").alias("cv")
         )
+
+    cents = fold_rounds(lloyd, range(n_iters), state=cents)
     return cents.select(
         F.col("cid").alias("cluster_id"), "dim",
         F.col("cv").alias("centroid_micro"),
@@ -1545,8 +1548,7 @@ def kmeans_lloyd_cte_sql(k: int = 8, n_iters: int = 2) -> str:
     index range with the values — ADVICE r5 item 2), exactly like the
     Spark side's posexplode: a fixture width change diverges loudly in
     the compare instead of silently truncating the oracle."""
-    parts = [
-        f"""x AS MATERIALIZED (
+    head = f"""x AS MATERIALIZED (
             SELECT vec_id AS id,
                    UNNEST(range(len(embedding))) AS dim,
                    CAST(FLOOR(CAST(UNNEST(embedding) AS DOUBLE) * 1000000
@@ -1558,10 +1560,7 @@ def kmeans_lloyd_cte_sql(k: int = 8, n_iters: int = 2) -> str:
             WHERE id IN (SELECT DISTINCT id FROM x ORDER BY id LIMIT {k})
         )
         """
-    ]
-    for i in range(1, n_iters + 1):
-        parts.append(
-            f""",
+    return unroll_ctes(head, lambda i: f""",
         d{i} AS MATERIALIZED (
             SELECT x.id, c.cid,
                    CAST(SUM((x.xv - c.cv) * (x.xv - c.cv)) AS BIGINT) AS dist
@@ -1588,9 +1587,7 @@ def kmeans_lloyd_cte_sql(k: int = 8, n_iters: int = 2) -> str:
             FROM c{i-1} c LEFT JOIN s{i} s
               ON c.cid = s.cid AND c.dim = s.dim
         )
-        """
-        )
-    return "".join(parts)
+        """, n_iters)
 
 
 def kmeans_lloyd_oracle_sql(k: int = 8, n_iters: int = 2) -> str:

@@ -123,15 +123,11 @@ def skyline_2d_oracle_sql(
     """
 
 
-def skyline_fold_batches(
-    batches: list[DataFrame],
-    id_col: str,
-    cost_col: str,
-    gain_col: str,
-    bucket_width: int = 1000,
-) -> DataFrame:
+def skyline_step(
+    id_col: str, cost_col: str, gain_col: str, bucket_width: int = 1000
+):
     """Incrementally-maintained skyline — the FRONTIER-STATE member of
-    the IVM family: carried state is the current Pareto frontier, and
+    the IVM family: the carried state is the current Pareto frontier, and
     one batch folds in as  state' = skyline(state ∪ batch),  which is
     exact because dominance only ever REMOVES points:
         skyline(A ∪ B) = skyline(skyline(A) ∪ B)
@@ -139,30 +135,14 @@ def skyline_fold_batches(
     witness, and a surviving witness of the dominator chain is itself in
     skyline(A)). Unlike the ordered folds (ema/holt/twap) this identity
     is SET-algebraic: it holds for ANY partition of the input, in any
-    order — no delivery contract, no frontier timestamps.
+    order — no delivery contract, no frontier timestamps. The one-shot
+    ``skyline_2d`` over the union IS the oracle.
 
-    Scale posture: the carried state is frontier-sized (for 2-D uniform
-    data, O(log n) expected), so each round costs skyline(tiny ∪ batch)
-    — the same bucket + carry plan as the one-shot, with the state
-    riding along as a few extra rows. The one-shot ``skyline_2d`` over
-    the union IS the oracle (maintenance identity). localCheckpoint per
-    round truncates lineage, the iterative house rule."""
-    if not batches:
-        raise ValueError("skyline_fold_batches needs >= 1 batch")
-    step = skyline_step(id_col, cost_col, gain_col, bucket_width)
-    state = None
-    for batch in batches:
-        state = step(state, batch).localCheckpoint()
-    return state
-
-
-def skyline_step(
-    id_col: str, cost_col: str, gain_col: str, bucket_width: int = 1000
-):
-    """One frontier fold, state' = skyline(state ∪ batch) — shared by
-    ``skyline_fold_batches`` and the streaming twin (the fold driver in
-    streaming/state.py). Commutative set algebra: batch order is
-    immaterial, so the stream needs no delivery contract."""
+    One step, shared by the batch fold (operators/rounds.py) and the
+    streaming twin (streaming/state.py). The carried state is
+    frontier-sized (for 2-D uniform data, O(log n) expected), so each
+    round costs skyline(tiny ∪ batch) — the one-shot's bucket + carry
+    plan with the state riding along as a few extra rows."""
 
     def step(state: DataFrame | None, batch: DataFrame) -> DataFrame:
         pts = batch.select(id_col, cost_col, gain_col)

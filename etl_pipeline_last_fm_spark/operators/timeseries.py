@@ -298,27 +298,11 @@ def ema_fold_batch(
     )
 
 
-def incremental_ema_batches(
-    batches: list[DataFrame],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through ``ema_fold_batch`` and
-    present (key, n_events, ema_cents) — must equal ``ema_halflife`` over
-    the union for ANY time-split batching (the ordered-fold maintenance
-    identity; the one-shot fold is the oracle). localCheckpoint per round
-    truncates the state lineage, the iterative-operator house rule."""
-    state = None
-    for batch in batches:
-        state = ema_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ).localCheckpoint()
-    assert state is not None, "need at least one batch"
-    return state.select(
-        F.col("key").alias(key_col), "n_events", "ema_cents"
-    )
+def present_ema_state(state: DataFrame) -> DataFrame:
+    """Graded output shape of the EMA state: (user_id, n_events,
+    ema_cents), the ``ema_halflife`` shape — the fold frontier stays
+    internal."""
+    return state.select(F.col("key").alias("user_id"), "n_events", "ema_cents")
 
 
 def trend_fit(
@@ -600,29 +584,12 @@ def cusum_fold_batch(
     )
 
 
-def incremental_cusum_batches(
-    batches: list[DataFrame],
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through ``cusum_fold_batch``
-    and present the ``cusum_alarms`` output shape — must equal the
-    one-shot detector over the union for ANY time-split batching (the
-    ordered-fold maintenance identity, second member). localCheckpoint
-    per round truncates the state lineage, the iterative house rule."""
-    state = None
-    for batch in batches:
-        state = cusum_fold_batch(
-            state, batch, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        ).localCheckpoint()
-    assert state is not None, "need at least one batch"
+def present_cusum_state(state: DataFrame) -> DataFrame:
+    """Graded output shape of the CUSUM state: the ``cusum_alarms``
+    columns keyed by user_id, without the carried prefix and frontier
+    fields."""
     return state.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("user_id"),
         "n_events", "cusum_final", "cusum_max", "n_alarms",
     )
 
@@ -849,26 +816,6 @@ def present_holt_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
         "trend_cents",
         (F.col("level_cents") + F.col("trend_cents")).alias("forecast_cents"),
     )
-
-
-def incremental_holt_batches(
-    batches: list[DataFrame],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Fold a time-ordered batch sequence through ``holt_fold_batch`` and
-    present the ``holt_linear`` shape — must equal the one-shot for ANY
-    time-split batching (ordered-fold maintenance identity, member #6).
-    localCheckpoint per round truncates the state lineage."""
-    state = None
-    for batch in batches:
-        state = holt_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ).localCheckpoint()
-    assert state is not None, "need at least one batch"
-    return present_holt_state(state, key_col)
 
 
 # --- Durbin–Watson serial-correlation statistic (round 7c) --------------

@@ -334,42 +334,49 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sssp_rounds(cosupplier_weighted_edges(li), seeds, n_rounds=3)
 
 
-def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental JOIN maintenance by delta rules (operators/
-    incremental.py incremental_join_batches): orders arrive in 3 batches
-    keyed o_orderkey % 3, lineitem in 3 batches keyed l_linenumber % 3 —
-    deliberately DIFFERENT batchings, so an order's lines land in other
-    rounds than the order row and all three delta terms (ΔA⋈B, A⋈ΔB,
-    ΔA⋈ΔB) fire. The maintained join then aggregates to per-date counts
-    and exact-integer revenue; the oracle is the plain one-shot join —
-    the maintenance identity IS the check."""
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches,
-    )
-
+def _join_sides(spark: SparkSession, sf_dir: str):
+    """ΔA = orders (k, date) and ΔB = lineitem (k, l_linenumber, rev4),
+    keyed k = orderkey — the two sides both join twins maintain."""
     orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
+        F.col("o_orderkey").alias("k"), F.col("o_orderdate").alias("date")
     )
     li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"),
-        "l_linenumber",
-        _rev4_col().alias("rev4"),
+        F.col("l_orderkey").alias("k"), "l_linenumber", _rev4_col().alias("rev4")
     )
-    a_batches = [
-        orders.filter(F.pmod(F.col("o_orderkey"), F.lit(3)) == i) for i in range(3)
-    ]
-    b_batches = [
-        li.filter(F.pmod(F.col("l_linenumber"), F.lit(3)) == i).drop("l_linenumber")
-        for i in range(3)
-    ]
-    m = incremental_join_batches(a_batches, b_batches, ["o_orderkey"])
-    return (
-        m.groupBy(F.col("o_orderdate").alias("date"))
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum("rev4").alias("rev4_sum"),
-        )
+    return orders, li
+
+
+def _present_join(m: DataFrame) -> DataFrame:
+    """The maintained join M as per-date line counts and exact revenue."""
+    return m.groupBy(F.col("a_date").alias("date")).agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum("b_rev4").alias("rev4_sum"),
     )
+
+
+def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental JOIN maintenance by delta rules (streaming/ivm.py
+    join_step under operators/rounds.py fold_rounds): orders arrive in 3
+    batches keyed o_orderkey % 3, lineitem in 3 batches keyed
+    l_linenumber % 3 — deliberately DIFFERENT batchings, so an order's
+    lines land in other rounds than the order row and all three delta
+    terms (ΔA⋈B, A⋈ΔB, ΔA⋈ΔB) fire. The maintained join then aggregates
+    to per-date counts and exact-integer revenue; the oracle is the plain
+    one-shot join — the maintenance identity IS the check."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.streaming.ivm import join_step, side_tagged
+
+    orders, li = _join_sides(spark, sf_dir)
+    slices = side_tagged(
+        [orders.filter(F.pmod(F.col("k"), F.lit(3)) == i) for i in range(3)],
+        [
+            li.filter(F.pmod(F.col("l_linenumber"), F.lit(3)) == i)
+            .drop("l_linenumber")
+            for i in range(3)
+        ],
+        ["k"],
+    )
+    return _present_join(fold_rounds(join_step(["k"]), slices)[-1])
 
 
 def q_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -398,40 +405,19 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_last_fm_spark.registry.round7 import (
         run_file_sliced_stream,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import JOIN_PARTS, join_step
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    tagged = (
-        orders.select(
-            F.lit("a").alias("side"),
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderdate").alias("a_date"),
-            F.lit(None).cast("long").alias("b_rev4"),
-        )
-        .unionByName(
-            li.select(
-                F.lit("b").alias("side"),
-                F.col("l_orderkey").alias("k"),
-                F.lit(None).cast(orders.schema["o_orderdate"].dataType).alias(
-                    "a_date"
-                ),
-                _rev4_col().alias("b_rev4"),
-            )
-        )
+    from etl_pipeline_last_fm_spark.streaming.ivm import (
+        JOIN_PARTS,
+        join_step,
+        side_tagged,
     )
+
+    orders, li = _join_sides(spark, sf_dir)
+    [tagged] = side_tagged([orders], [li.drop("l_linenumber")], ["k"])
     slices = [
         tagged.filter(F.pmod(F.col("k"), F.lit(3)) == i) for i in range(3)
     ]
     return run_file_sliced_stream(
-        spark,
-        slices,
-        join_step(["k"]),
-        lambda m: m.groupBy(F.col("a_date").alias("date")).agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum("b_rev4").alias("rev4_sum"),
-        ),
-        JOIN_PARTS,
+        spark, slices, join_step(["k"]), _present_join, JOIN_PARTS
     )
 
 

@@ -47,10 +47,7 @@ from etl_pipeline_last_fm_spark.sources.tables import load_table
 # could prune anyway. The epoch-µs constants in oracles are unchanged.
 _D_1996, _D_1996_07, _D_1997 = "1996-01-01", "1996-07-01", "1997-01-01"
 
-#: Time-slice cuts for the ordered-fold maintenance queries (ema_fold
-#: here; the round-7 fold/stream twins import these so every member
-#: replays the SAME batching of the events table — a divergence between
-#: any two of them then isolates the protocol, not the data).
+#: Time-slice cuts for the ordered-fold maintenance queries.
 EMA_CUTS = ("2024-01-11", "2024-01-21")
 
 #: The graded CUSUM detector's parameters (q_cusum and its oracle here;
@@ -58,6 +55,21 @@ EMA_CUTS = ("2024-01-11", "2024-01-21")
 #: SAME detector).
 CUSUM_DRIFT = 5_000
 CUSUM_H = 20_000
+
+
+def event_time_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The events table as 3 time slices at ``EMA_CUTS``, in time order —
+    the one batching every ordered-fold member replays (batch and
+    streaming twins alike), so a divergence between any two of them
+    isolates the protocol, not the data."""
+    ev = load_table(spark, sf_dir, "events")
+    c1, c2 = EMA_CUTS
+    return [
+        ev.filter(F.col("ts") < c1),
+        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
+        ev.filter(F.col("ts") >= c2),
+    ]
+
 
 #: DuckDB twin of _rev4_col() — exact integer 1e-4-dollar revenue units.
 _REV4_SQL = (
@@ -433,24 +445,22 @@ def q_ema_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ema_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for the NON-commutative EMA
-    (operators/timeseries.py incremental_ema_batches): the events table
-    split into 3 fixed time slices and folded through per-key state
-    carrying the fold frontier — must equal the one-shot ema_halflife
-    for any time-split batching, and that one-shot IS the oracle (the
-    incremental_join pattern, extended to an order-dependent operator;
-    out-of-order batches raise instead of corrupting the trajectory)."""
+    (operators/timeseries.py ema_fold_batch under operators/rounds.py's
+    fold_rounds): the events table split into 3 fixed time slices and
+    folded through per-key state carrying the fold frontier — must equal
+    the one-shot ema_halflife for any time-split batching, and that
+    one-shot IS the oracle (the incremental_join pattern, extended to an
+    order-dependent operator; out-of-order batches raise instead of
+    corrupting the trajectory)."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
-        incremental_ema_batches,
+        ema_fold_batch,
+        present_ema_state,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    cuts = EMA_CUTS
-    batches = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter(F.col("ts") >= cuts[1]),
-    ]
-    return incremental_ema_batches(batches)
+    return present_ema_state(
+        fold_rounds(ema_fold_batch, event_time_slices(spark, sf_dir))
+    )
 
 
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:

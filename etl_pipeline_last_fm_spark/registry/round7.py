@@ -32,7 +32,7 @@ from etl_pipeline_last_fm_spark.registry.round6 import (
     # ema_fold/cusum entries — a divergence then isolates the protocol.
     CUSUM_DRIFT as _CUSUM_DRIFT,
     CUSUM_H as _CUSUM_H,
-    EMA_CUTS as _EMA_CUTS,
+    event_time_slices,
 )
 from etl_pipeline_last_fm_spark.sources.tables import load_table
 
@@ -41,18 +41,30 @@ _LINKPRED_CAP = 24
 
 
 def _run_time_sliced_stream(spark, sf_dir, step, present, parts=None):
-    """Shared driver for the order-dependent streaming twins: the events
-    table as 3 time slices (``_EMA_CUTS``) through
-    ``run_file_sliced_stream``, so each micro-batch is one slice in time
-    order."""
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    slices = [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
-    return run_file_sliced_stream(spark, slices, step, present, parts)
+    """Streaming driver of the order-dependent twins: the events table's
+    time slices (``event_time_slices``) through ``run_file_sliced_stream``,
+    so each micro-batch is one slice in time order."""
+    return run_file_sliced_stream(
+        spark, event_time_slices(spark, sf_dir), step, present, parts
+    )
+
+
+def _fold_time_slices(spark, sf_dir, step, present, parts=None):
+    """Batch driver of the same twins: the same slices, ``step``,
+    ``present`` and ``parts`` through operators/rounds.py's
+    ``fold_rounds``; ``present`` reads the last part, the stream's
+    guard."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+
+    state = fold_rounds(step, event_time_slices(spark, sf_dir))
+    return present(state if parts is None else state[-1])
+
+
+def _cusum_step(state, batch):
+    """The graded detector's fold step, shared by both CUSUM twins."""
+    from etl_pipeline_last_fm_spark.operators.timeseries import cusum_fold_batch
+
+    return cusum_fold_batch(state, batch, _CUSUM_DRIFT, _CUSUM_H)
 
 
 def run_file_sliced_stream(spark, slices, step, present, parts=None):
@@ -114,82 +126,70 @@ def q_streaming_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `ema_fold`: per-batch ema_fold_batch under the
     fold driver's replay guard, with the out-of-order raise preserved.
     Oracle: the one-shot ema_halflife."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
+    from etl_pipeline_last_fm_spark.operators.timeseries import (
+        ema_fold_batch,
+        present_ema_state,
+    )
 
     return _run_time_sliced_stream(
-        spark,
-        sf_dir,
-        ema_fold_batch,
-        lambda df: df.select(
-            F.col("key").alias("user_id"), "n_events", "ema_cents"
-        ),
+        spark, sf_dir, ema_fold_batch, present_ema_state
     )
 
 
 def q_cusum_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for the CUSUM detector
-    (operators/timeseries.py incremental_cusum_batches): the events
-    table split into the SAME 3 time slices as ema_fold and folded
+    (operators/timeseries.py cusum_fold_batch under fold_rounds): the
+    events table split into the SAME 3 time slices as ema_fold and folded
     through per-key (p, min-prefix, s, smax, alarms) state carrying the
     fold frontier — must equal the one-shot cusum_alarms for any
     time-split batching, and that one-shot IS the oracle (order-dependent
     IVM member #2; out-of-order batches raise)."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
-        incremental_cusum_batches,
+        present_cusum_state,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    batches = [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
-    return incremental_cusum_batches(
-        batches, drift_cents=_CUSUM_DRIFT, threshold_cents=_CUSUM_H
-    )
+    return _fold_time_slices(spark, sf_dir, _cusum_step, present_cusum_state)
 
 
 def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `cusum_fold`: per-batch cusum_fold_batch under
     the fold driver's replay guard. Oracle: the one-shot cusum_alarms."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
-        cusum_fold_batch,
+        present_cusum_state,
     )
 
     return _run_time_sliced_stream(
-        spark,
-        sf_dir,
-        lambda state, batch: cusum_fold_batch(
-            state, batch, _CUSUM_DRIFT, _CUSUM_H
-        ),
-        lambda df: df.select(
-            F.col("key").alias("user_id"),
-            "n_events", "cusum_final", "cusum_max", "n_alarms",
-        ),
+        spark, sf_dir, _cusum_step, present_cusum_state
     )
 
 
 def q_attribution_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for LAST-TOUCH attribution
-    (operators/attribution.py incremental_attribution_batches): the
+    (operators/attribution.py attribution_step under fold_rounds): the
     events table in the same 3 time slices, folded through per-key
     last-touch state with the batch credit deltas summed additively —
     must equal the one-shot last_touch_attribution for any time-split
     batching (order-dependent IVM member #3: the carried state is the
     running last touch each conversion is judged against)."""
     from etl_pipeline_last_fm_spark.operators.attribution import (
-        incremental_attribution_batches,
+        ATTRIBUTION_PARTS,
+        attribution_step,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    batches = [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
-    return incremental_attribution_batches(batches)
+    return _fold_time_slices(
+        spark, sf_dir, attribution_step(), _present_last_touch,
+        ATTRIBUTION_PARTS,
+    )
+
+
+def _present_last_touch(totals: DataFrame) -> DataFrame:
+    """The last-touch twins' graded shape, read off the channel totals."""
+    return totals.select("channel", "n_conversions", "attributed_cents")
+
+
+def _present_decay(totals: DataFrame) -> DataFrame:
+    """The time-decay twins' graded shape, read off the channel totals."""
+    return totals.select("channel", "n_credited_touches", "credited_cents")
 
 
 def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,7 +206,7 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         attribution_step(),
-        lambda df: df.select("channel", "n_conversions", "attributed_cents"),
+        _present_last_touch,
         ATTRIBUTION_PARTS,
     )
 
@@ -250,24 +250,23 @@ def q_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_attribution_decay_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for TIME-DECAY attribution
-    (operators/attribution.py incremental_decay_attribution_batches):
-    order-dependent IVM member #4, and the first whose carried state is
-    WINDOW-BOUNDED — touches older than frontier − window are evicted
-    each batch (watermark semantics), so per-key state never grows with
-    history. Must equal the one-shot time_decay_attribution for any
-    time-split batching (the oracle)."""
+    (operators/attribution.py attribution_step over
+    decay_attribution_fold_batch, under fold_rounds): order-dependent IVM
+    member #4, and the first whose carried state is WINDOW-BOUNDED —
+    touches older than frontier − window are evicted each batch
+    (watermark semantics), so per-key state never grows with history.
+    Must equal the one-shot time_decay_attribution for any time-split
+    batching (the oracle)."""
     from etl_pipeline_last_fm_spark.operators.attribution import (
-        incremental_decay_attribution_batches,
+        ATTRIBUTION_PARTS,
+        attribution_step,
+        decay_attribution_fold_batch,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    batches = [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
-    return incremental_decay_attribution_batches(batches)
+    return _fold_time_slices(
+        spark, sf_dir, attribution_step(decay_attribution_fold_batch),
+        _present_decay, ATTRIBUTION_PARTS,
+    )
 
 
 def q_streaming_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,9 +283,7 @@ def q_streaming_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame
         spark,
         sf_dir,
         attribution_step(decay_attribution_fold_batch),
-        lambda df: df.select(
-            "channel", "n_credited_touches", "credited_cents"
-        ),
+        _present_decay,
         ATTRIBUTION_PARTS,
     )
 
@@ -425,23 +422,20 @@ def q_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_twap_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for the LOCF time-weighted
-    average (operators/segments.py incremental_twap_batches): member #5
-    of the order-dependent IVM tier — the integral telescopes across
-    batch boundaries through the bridge segment last_cents·Δµs, so the
-    folded state must equal the one-shot ``time_weighted_avg`` for any
-    time-split batching (the oracle; out-of-order batches raise)."""
+    average (operators/segments.py twap_fold_batch under fold_rounds):
+    member #5 of the order-dependent IVM tier — the integral telescopes
+    across batch boundaries through the bridge segment last_cents·Δµs,
+    so the folded state must equal the one-shot ``time_weighted_avg``
+    for any time-split batching (the oracle; out-of-order batches
+    raise)."""
     from etl_pipeline_last_fm_spark.operators.segments import (
-        incremental_twap_batches,
+        present_twap_state,
+        twap_fold_batch,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    batches = [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
-    return incremental_twap_batches(batches)
+    return _fold_time_slices(
+        spark, sf_dir, twap_fold_batch, present_twap_state
+    )
 
 
 def q_streaming_twap(spark: SparkSession, sf_dir: str) -> DataFrame:

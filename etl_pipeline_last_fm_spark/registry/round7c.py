@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.registry.round6 import EMA_CUTS as _EMA_CUTS
 from etl_pipeline_last_fm_spark.sources.tables import load_table
 
 #: Cost-bucket width for the parts skyline: $10 buckets over the ~[900,
@@ -32,19 +31,6 @@ from etl_pipeline_last_fm_spark.sources.tables import load_table
 #: every core at bench SF, and semantics-free (any width yields the same
 #: frontier; the property tests assert it).
 _SKYLINE_BUCKET_CENTS = 1000
-
-
-def _event_time_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
-    """The SAME 3 time slices as the ema/cusum/twap fold entries (one
-    definition of the cuts — registry/round6.EMA_CUTS), so every
-    ordered-fold member grades the same batching."""
-    ev = load_table(spark, sf_dir, "events")
-    c1, c2 = _EMA_CUTS
-    return [
-        ev.filter(F.col("ts") < c1),
-        ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
-        ev.filter(F.col("ts") >= c2),
-    ]
 
 
 def q_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,15 +45,19 @@ def q_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_holt_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-fold maintenance identity for Holt smoothing
-    (operators/timeseries.py incremental_holt_batches): member #6 — the
-    first 2-dimensional carried state. Must equal the one-shot
+    (operators/timeseries.py holt_fold_batch under fold_rounds): member
+    #6 — the first 2-dimensional carried state. Must equal the one-shot
     holt_linear for any time-split batching (the oracle; out-of-order
     batches raise)."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
-        incremental_holt_batches,
+        holt_fold_batch,
+        present_holt_state,
     )
+    from etl_pipeline_last_fm_spark.registry.round7 import _fold_time_slices
 
-    return incremental_holt_batches(_event_time_slices(spark, sf_dir))
+    return _fold_time_slices(
+        spark, sf_dir, holt_fold_batch, present_holt_state
+    )
 
 
 def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,18 +108,10 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/skyline.py skyline_2d): the Pareto frontier via cost
     buckets + broadcast carry — no global row-sized window. Price enters
     as exact cents so no float comparison sits on the dominance edge."""
-    from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
     from etl_pipeline_last_fm_spark.operators.skyline import skyline_2d
 
-    part = load_table(spark, sf_dir, "part")
-    pts = part.select(
-        "p_partkey",
-        half_up_round(F.col("p_retailprice") * 100).cast("long")
-        .alias("price_cents"),
-        F.col("p_size").cast("long").alias("p_size"),
-    )
     return skyline_2d(
-        pts,
+        _part_points(spark, sf_dir),
         id_col="p_partkey",
         cost_col="price_cents",
         gain_col="p_size",
@@ -255,31 +237,36 @@ _REVENUE_GINI_SQL = """
 """
 
 
-def q_skyline_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintained-skyline fold (operators/skyline.py skyline_fold_batches):
-    the parts table split 3 ways by partkey residue and folded through
-    frontier-sized state — must equal the one-shot skyline for ANY split
-    (the SET-algebraic maintenance identity skyline(A∪B) =
-    skyline(skyline(A)∪B); the one-shot IS the oracle). The IVM family's
-    first frontier-state member: commutative, no delivery contract."""
-    from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
-    from etl_pipeline_last_fm_spark.operators.skyline import (
-        skyline_fold_batches,
-    )
+def _part_slices(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The skyline fold twins' batching: the (partkey, price cents, size)
+    points split 3 ways by partkey residue."""
+    pts = _part_points(spark, sf_dir)
+    return [
+        pts.filter(F.pmod(F.col("p_partkey"), F.lit(3)) == i)
+        for i in range(3)
+    ]
 
-    part = load_table(spark, sf_dir, "part")
-    pts = part.select(
-        "p_partkey",
-        half_up_round(F.col("p_retailprice") * 100).cast("long")
-        .alias("price_cents"),
-        F.col("p_size").cast("long").alias("p_size"),
-    )
-    batches = [pts.filter(F.pmod(F.col("p_partkey"), F.lit(3)) == i)
-               for i in range(3)]
-    return skyline_fold_batches(
-        batches, "p_partkey", "price_cents", "p_size",
+
+def _skyline_step():
+    """The skyline fold twins' step over the parts' (price, size) points."""
+    from etl_pipeline_last_fm_spark.operators.skyline import skyline_step
+
+    return skyline_step(
+        "p_partkey", "price_cents", "p_size",
         bucket_width=_SKYLINE_BUCKET_CENTS,
     )
+
+
+def q_skyline_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maintained-skyline fold (operators/skyline.py skyline_step under
+    fold_rounds): the parts table split 3 ways by partkey residue and
+    folded through frontier-sized state — must equal the one-shot skyline
+    for ANY split (the SET-algebraic maintenance identity skyline(A∪B) =
+    skyline(skyline(A)∪B); the one-shot IS the oracle). The IVM family's
+    first frontier-state member: commutative, no delivery contract."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+
+    return fold_rounds(_skyline_step(), _part_slices(spark, sf_dir))
 
 
 def _part_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,24 +290,12 @@ def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold driver's replay guard. The fold is commutative (set
     algebra, no delivery contract) — slice order is immaterial. Oracle:
     the one-shot skyline."""
-    from etl_pipeline_last_fm_spark.operators.skyline import skyline_step
     from etl_pipeline_last_fm_spark.registry.round7 import (
         run_file_sliced_stream,
     )
 
-    pts = _part_points(spark, sf_dir)
-    slices = [
-        pts.filter(F.pmod(F.col("p_partkey"), F.lit(3)) == i)
-        for i in range(3)
-    ]
     return run_file_sliced_stream(
-        spark,
-        slices,
-        skyline_step(
-            "p_partkey", "price_cents", "p_size",
-            bucket_width=_SKYLINE_BUCKET_CENTS,
-        ),
-        lambda df: df,
+        spark, _part_slices(spark, sf_dir), _skyline_step(), lambda df: df
     )
 
 

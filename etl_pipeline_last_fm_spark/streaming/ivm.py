@@ -1,10 +1,12 @@
 """Streaming incremental JOIN maintenance (foreachBatch delta-rule fold).
 
 Completes the IVM family: operators/incremental.py maintains aggregates
-(additive states) and batch-mode joins (incremental_join_batches); this
-module maintains a materialized two-sided inner join CONTINUOUSLY from
-one stream of TAGGED deltas — each row carries a ``side`` column ('a' or
-'b') plus that side's payload columns. Per micro-batch the step applies
+(additive states); this module maintains a materialized two-sided inner
+join from one sequence of TAGGED deltas — continuously under
+streaming/state.py's driver, or over batches under operators/rounds.py's
+``fold_rounds``, with the same ``join_step``. Each row carries a
+``side`` column ('a' or 'b') plus that side's payload columns
+(``side_tagged`` builds such slices). Per micro-batch the step applies
 the delta rule
 
     ΔM = ΔA ⋈ B_state ∪ A_state ⋈ ΔB ∪ ΔA ⋈ ΔB
@@ -39,6 +41,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField
 
 from etl_pipeline_last_fm_spark.operators.incremental import join_delta
 
@@ -52,7 +55,7 @@ def join_step(on: Sequence[str], side_col: str = "side"):
     on = list(on)
 
     def step(prev, batch_df: DataFrame):
-        a_state, b_state, m_state = prev
+        a_state, b_state, m_state = prev or (None, None, None)
         # Tagged-schema contract, VALIDATED (not just implied): columns
         # are exactly {side} ∪ on ∪ a_-prefixed payload ∪ b_-prefixed
         # payload. A payload column without its side prefix would
@@ -83,3 +86,39 @@ def join_step(on: Sequence[str], side_col: str = "side"):
         )
 
     return step
+
+
+def side_tagged(
+    a_batches: Sequence[DataFrame],
+    b_batches: Sequence[DataFrame],
+    on: Sequence[str],
+) -> list[DataFrame]:
+    """Pair the i-th ΔA with the i-th ΔB into one tagged slice of the
+    shape ``join_step`` reads: a ``side`` column, the ``on`` keys, and
+    each payload column under its side's ``a_`` / ``b_`` prefix, NULL on
+    the other side's rows."""
+    if len(a_batches) != len(b_batches):
+        raise ValueError(
+            f"batch lists must pair up: {len(a_batches)} != {len(b_batches)}"
+            " (pad the shorter side with empty frames)"
+        )
+    on = list(on)
+
+    def payload(df: DataFrame) -> list[StructField]:
+        return [f for f in df.schema.fields if f.name not in on]
+
+    def tag(df: DataFrame, side: str, other_df: DataFrame, other: str):
+        return df.select(
+            F.lit(side).alias("side"),
+            *on,
+            *[F.col(f.name).alias(f"{side}_{f.name}") for f in payload(df)],
+            *[
+                F.lit(None).cast(f.dataType).alias(f"{other}_{f.name}")
+                for f in payload(other_df)
+            ],
+        )
+
+    return [
+        tag(da, "a", db, "b").unionByName(tag(db, "b", da, "a"))
+        for da, db in zip(a_batches, b_batches)
+    ]

@@ -437,6 +437,20 @@ def _with_event_types(ev):
     )
 
 
+def _time_thirds(ev_typed, n_events: int):
+    """The events in time-ordered thirds by the synthetic clock (id * 47 s
+    spacing) — the batching of every ordered-fold smoke."""
+    base = 1_700_000_000_000_000
+    c1 = base + (n_events * 47_000_000) // 3
+    c2 = base + (2 * n_events * 47_000_000) // 3
+    us = F.unix_micros(F.col("ts"))
+    return [
+        ev_typed.filter(us < c1),
+        ev_typed.filter((us >= c1) & (us < c2)),
+        ev_typed.filter(us >= c2),
+    ]
+
+
 def _typed_events(spark, n_events: int):
     return _with_event_types(synth_events(spark, n_events))
 
@@ -449,13 +463,12 @@ def round6_wave(spark, ev_typed, n_events: int) -> None:
     measures adds a per-match explode, no extra shuffle;
     IVM = O(delta x state) join work per round, never O(history^2);
     Q21 = ONE fact scan + two aggregates + one join (the decorrelation)."""
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches,
-    )
     from etl_pipeline_last_fm_spark.operators.patterns import (
         match_event_pattern,
         match_event_pattern_measures,
     )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.streaming.ivm import join_step, side_tagged
 
     t0 = time.perf_counter()
     n_pat = match_event_pattern(ev_typed, "vc*p").count()
@@ -470,17 +483,18 @@ def round6_wave(spark, ev_typed, n_events: int) -> None:
     n_keys = max(n_events // 10, 1)
     a = spark.range(n_keys).select(
         F.col("id").alias("k"),
-        F.pmod(F.xxhash64("id"), F.lit(2400)).alias("a_v"),
+        F.pmod(F.xxhash64("id"), F.lit(2400)).alias("v"),
     )
     b = spark.range(n_events).select(
         F.pmod(F.xxhash64(F.col("id") + 5), F.lit(n_keys)).alias("k"),
-        F.pmod(F.xxhash64(F.col("id") + 11), F.lit(10_000)).alias("b_v"),
+        F.pmod(F.xxhash64(F.col("id") + 11), F.lit(10_000)).alias("v"),
         F.col("id").alias("rid"),
     )
     a_batches = [a.filter(F.pmod(F.col("k"), F.lit(3)) == i) for i in range(3)]
     b_batches = [b.filter(F.pmod(F.col("rid"), F.lit(3)) == i).drop("rid") for i in range(3)]
     t0 = time.perf_counter()
-    n_ivm = incremental_join_batches(a_batches, b_batches, ["k"]).count()
+    slices = side_tagged(a_batches, b_batches, ["k"])
+    n_ivm = fold_rounds(join_step(["k"]), slices)[-1].count()
     t_ivm = time.perf_counter() - t0
 
     # Q21 decorrelated shape over a synthetic (order, supplier, late) fact:
@@ -577,10 +591,12 @@ def round6c_wave(spark, ev_typed, n_events: int) -> None:
         interval_concurrency,
     )
     from etl_pipeline_last_fm_spark.operators.profile import contingency_chi2
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.text import collocations
     from etl_pipeline_last_fm_spark.operators.timeseries import (
         cusum_alarms,
-        incremental_ema_batches,
+        ema_fold_batch,
+        present_ema_state,
         trend_fit,
     )
 
@@ -600,18 +616,9 @@ def round6c_wave(spark, ev_typed, n_events: int) -> None:
     n_tf = trend_fit(ev_typed).count()
     t_tf = time.perf_counter() - t0
 
-    # time-ordered thirds by the synthetic clock (id * 47s spacing)
-    base = 1_700_000_000_000_000
-    c1 = base + (n_events * 47_000_000) // 3
-    c2 = base + (2 * n_events * 47_000_000) // 3
-    us = F.unix_micros(F.col("ts"))
-    batches = [
-        ev_typed.filter(us < c1),
-        ev_typed.filter((us >= c1) & (us < c2)),
-        ev_typed.filter(us >= c2),
-    ]
+    batches = _time_thirds(ev_typed, n_events)
     t0 = time.perf_counter()
-    n_ef = incremental_ema_batches(batches).count()
+    n_ef = present_ema_state(fold_rounds(ema_fold_batch, batches)).count()
     t_ef = time.perf_counter() - t0
 
     cats = spark.range(n_events).select(
@@ -682,15 +689,7 @@ def round7_wave(spark, ev_typed, n_events: int) -> None:
     from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
     from etl_pipeline_last_fm_spark.streaming.state import fold_batch, read_state
 
-    base = 1_700_000_000_000_000
-    c1 = base + (n_events * 47_000_000) // 3
-    c2 = base + (2 * n_events * 47_000_000) // 3
-    us = F.unix_micros(F.col("ts"))
-    batches = [
-        ev_typed.filter(us < c1),
-        ev_typed.filter((us >= c1) & (us < c2)),
-        ev_typed.filter(us >= c2),
-    ]
+    batches = _time_thirds(ev_typed, n_events)
     with tempfile.TemporaryDirectory(prefix="sgraft_smoke_ema_") as tmp:
         t0 = time.perf_counter()
         for i, b in enumerate(batches):
@@ -698,13 +697,12 @@ def round7_wave(spark, ev_typed, n_events: int) -> None:
         n_se = read_state(spark, f"{tmp}/state").count()
         t_se = time.perf_counter() - t0
 
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        incremental_attribution_batches,
-    )
+    from etl_pipeline_last_fm_spark.operators.attribution import attribution_step
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 
     # ev_typed already carries the shared synthetic event_type column.
     t0 = time.perf_counter()
-    n_af = incremental_attribution_batches(batches).count()
+    n_af = fold_rounds(attribution_step(), batches)[-1].count()
     t_af = time.perf_counter() - t0
 
     print(
@@ -776,21 +774,15 @@ def round7b_wave(spark, ev_typed, n_events: int) -> None:
     t_hhi = time.perf_counter() - t0
 
     # TWAP ordered fold (IVM member #5): 3 time-slice batches.
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.segments import (
-        incremental_twap_batches,
+        present_twap_state,
+        twap_fold_batch,
     )
 
-    base = 1_700_000_000_000_000
-    c1 = base + (n_events * 47_000_000) // 3
-    c2 = base + (2 * n_events * 47_000_000) // 3
-    us = F.unix_micros(F.col("ts"))
     t0 = time.perf_counter()
-    n_tf = incremental_twap_batches(
-        [
-            ev_typed.filter(us < c1),
-            ev_typed.filter((us >= c1) & (us < c2)),
-            ev_typed.filter(us >= c2),
-        ]
+    n_tf = present_twap_state(
+        fold_rounds(twap_fold_batch, _time_thirds(ev_typed, n_events))
     ).count()
     t_tf = time.perf_counter() - t0
 
@@ -853,27 +845,21 @@ def round7c_wave(spark, ev_typed, n_events: int) -> None:
     per-node clustering coefficients (the Σ deg(m)² wedge join — the
     link-prediction bound), and the bucketed 2-D skyline (per-bucket
     windows + a bucket-dim carry — no global row-sized window)."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
         durbin_watson,
+        holt_fold_batch,
         holt_linear,
-        incremental_holt_batches,
+        present_holt_state,
     )
 
     t0 = time.perf_counter()
     n_ho = holt_linear(ev_typed).count()
     t_ho = time.perf_counter() - t0
 
-    base = 1_700_000_000_000_000
-    c1 = base + (n_events * 47_000_000) // 3
-    c2 = base + (2 * n_events * 47_000_000) // 3
-    us = F.unix_micros(F.col("ts"))
     t0 = time.perf_counter()
-    n_hf = incremental_holt_batches(
-        [
-            ev_typed.filter(us < c1),
-            ev_typed.filter((us >= c1) & (us < c2)),
-            ev_typed.filter(us >= c2),
-        ]
+    n_hf = present_holt_state(
+        fold_rounds(holt_fold_batch, _time_thirds(ev_typed, n_events))
     ).count()
     t_hf = time.perf_counter() - t0
 

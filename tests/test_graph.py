@@ -189,6 +189,12 @@ def test_kcore_peels_tail_chain(spark):
         for r in kcore_rounds(e, k=2, n_rounds=4).collect()
     }
     assert got == {1: 2, 2: 2, 3: 2}
+    # zero rounds: the round-0 degrees, as the oracle's e0 gives
+    got0 = {
+        r["node"]: r["core_degree"]
+        for r in kcore_rounds(e, k=2, n_rounds=0).collect()
+    }
+    assert got0 == {1: 2, 2: 2, 3: 3, 4: 2, 5: 1}
 
 
 def _py_weighted_pagerank(edges_w, n_iter):

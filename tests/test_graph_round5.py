@@ -52,6 +52,14 @@ def test_bfs_hops_multi_source_takes_nearest(spark):
     assert got == {1: 0, 2: 1, 3: 2, 4: 1, 5: 0}
 
 
+def test_bfs_hops_zero_rounds_is_the_seed_set(spark):
+    """n_rounds=0 returns the round-0 state: every seed at 0 hops."""
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    seeds = spark.createDataFrame([(1,), (5,), (5,)], "node long")
+    got = {r["node"]: r["hops"] for r in bfs_hops(e, seeds, n_rounds=0).collect()}
+    assert got == {1: 0, 5: 0}
+
+
 def _wedge_count(oriented):
     """sum over src of C(outdeg, 2) — the size of the wedge self-join."""
     return (
@@ -117,3 +125,6 @@ def test_sssp_weighted_path_graph(spark):
     got = {r["node"]: r["dist"] for r in sssp_rounds(e, seeds, 3).collect()}
     # 1->3 direct costs 9, via 2 costs 6; 1->4 via 2,3 costs 7 (3 edges).
     assert got == {1: 0, 2: 5, 3: 6, 4: 7}
+    # zero rounds: the seeds at distance 0, as the oracle's d0 gives
+    got0 = {r["node"]: r["dist"] for r in sssp_rounds(e, seeds, 0).collect()}
+    assert got0 == {1: 0}

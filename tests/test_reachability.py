@@ -107,3 +107,47 @@ def test_only_the_fold_driver_writes_streams_and_commits_state():
             committers.append(name)
     assert not writers, "writeStream/foreachBatch outside the fold driver: " + ", ".join(writers)
     assert not committers, "commit_state outside the fold driver: " + ", ".join(committers)
+
+
+#: The round driver, and the one loop it cannot express: connected
+#: components stops on a value it collects each round.
+ROUND_CUTTERS = {f"{PKG}.operators.rounds"}
+DATA_DEPENDENT_LOOPS = {f"{PKG}.operators.dedup.connected_components"}
+
+
+def _loop_cuts(name: str, path: Path) -> list[str]:
+    """``module.function`` for each top-level function in ``path`` that
+    calls ``.localCheckpoint()`` inside a ``for``/``while`` body."""
+    found: list[str] = []
+
+    def visit(node: ast.AST, fn: str, in_loop: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, fn or f"{name}.{child.name}", False)
+                continue
+            if (
+                in_loop
+                and isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "localCheckpoint"
+                and fn not in found
+            ):
+                found.append(fn)
+            visit(child, fn, in_loop or isinstance(child, (ast.For, ast.While)))
+
+    visit(ast.parse(path.read_text(), filename=str(path)), "", False)
+    return found
+
+
+def test_only_the_round_driver_cuts_lineage_in_a_loop():
+    """A loop that ``localCheckpoint``s its own state every round is a
+    second copy of ``operators/rounds.fold_rounds``' lineage policy: route
+    it through the driver instead."""
+    loops = [
+        fn
+        for name, path in sorted(_package_modules().items())
+        if name not in ROUND_CUTTERS
+        for fn in _loop_cuts(name, path)
+        if fn not in DATA_DEPENDENT_LOOPS
+    ]
+    assert not loops, "per-round localCheckpoint outside the round driver: " + ", ".join(loops)

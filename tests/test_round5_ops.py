@@ -4,6 +4,8 @@ cache release for the PageRank persists."""
 
 from __future__ import annotations
 
+import math
+
 import duckdb
 from pyspark.sql import functions as F
 
@@ -150,6 +152,15 @@ def test_kmeans_lloyd_offset_id_space_trains_k_clusters(spark):
     assert out.cluster_id.nunique() == 8
     assert len(out) == 8 * 64
     assert out.cluster_id.min() == 1000
+    # zero iterations: the seed centroids themselves, as the oracle's c0
+    out0 = kmeans_lloyd_relational(shifted, k=8, n_iters=0).toPandas()
+    seeds = shifted.orderBy("vec_id").limit(8).toPandas()
+    want = {
+        (vid, d, int(math.floor(float(x) * 1_000_000.0 + 0.5)))
+        for vid, vec in zip(seeds.vec_id, seeds.embedding)
+        for d, x in enumerate(vec)
+    }
+    assert set(map(tuple, out0.itertuples(index=False))) == want
 
 
 def test_bpe_train_early_stop_and_empty_tokens_match_oracle(spark):
@@ -184,9 +195,8 @@ def test_incremental_join_delta_rule_all_terms(spark):
     (exercising ΔΔ and A_old⋈ΔB), key 2 has A in batch 1 / B in batch 0
     (ΔA⋈B_old), and key 3 is A-only (must not appear). Duplicate B rows
     for key 1 check multiset semantics."""
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches,
-    )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.streaming.ivm import join_step, side_tagged
 
     A = [[(1, "a1")], [(2, "a2")], [(3, "a3")]]
     B = [[(1, 10), (2, 20)], [], [(1, 11), (1, 11)]]
@@ -194,7 +204,7 @@ def test_incremental_join_delta_rule_all_terms(spark):
            .filter(F.col("k").isNotNull()) for r in A]
     b_b = [spark.createDataFrame(r or [(None, None)], "k long, bv long")
            .filter(F.col("k").isNotNull()) for r in B]
-    m = incremental_join_batches(a_b, b_b, ["k"])
+    m = fold_rounds(join_step(["k"]), side_tagged(a_b, b_b, ["k"]))[-1]
     got = sorted(map(tuple, m.collect()))
     want = sorted([(1, "a1", 10), (1, "a1", 11), (1, "a1", 11), (2, "a2", 20)])
     assert got == want
@@ -204,9 +214,8 @@ def test_incremental_join_equals_one_shot_for_any_split(spark):
     """The maintenance identity on fixture data: 3x3 batching of orders
     (by orderkey) and lineitem (by linenumber — different batching) must
     equal the one-shot join row-for-row."""
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches,
-    )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.streaming.ivm import join_step, side_tagged
     from etl_pipeline_last_fm_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -217,7 +226,8 @@ def test_incremental_join_equals_one_shot_for_any_split(spark):
     a_b = [orders.filter(F.pmod("o_orderkey", F.lit(3)) == i) for i in range(3)]
     b_b = [li.filter(F.pmod("l_linenumber", F.lit(3)) == i).drop("l_linenumber")
            for i in range(3)]
-    m = incremental_join_batches(a_b, b_b, ["o_orderkey"])
+    on = ["o_orderkey"]
+    m = fold_rounds(join_step(on), side_tagged(a_b, b_b, on))[-1]
     one_shot = orders.join(li.drop("l_linenumber"), "o_orderkey")
     assert m.count() == one_shot.count()
     assert (
@@ -289,12 +299,11 @@ def test_event_pattern_backslash_class_cross_engine(spark):
 def test_incremental_join_batches_rejects_bad_inputs(spark):
     import pytest
 
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches,
-    )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.streaming.ivm import join_step, side_tagged
 
     df = spark.createDataFrame([(1, "x")], "k long, a string")
     with pytest.raises(ValueError, match="pair up"):
-        incremental_join_batches([df], [], ["k"])
+        fold_rounds(join_step(["k"]), side_tagged([df], [], ["k"]))
     with pytest.raises(ValueError, match="at least one"):
-        incremental_join_batches([], [], ["k"])
+        fold_rounds(join_step(["k"]), side_tagged([], [], ["k"]))

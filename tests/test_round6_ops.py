@@ -260,9 +260,11 @@ def test_ema_halflife_negative_values_match_duckdb(spark):
 def test_ema_fold_batches_equal_one_shot(spark):
     """Ordered-fold maintenance identity: any time-split batching of the
     stream folds to the same state as the one-shot fold."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        ema_fold_batch,
         ema_halflife,
-        incremental_ema_batches,
+        present_ema_state,
     )
 
     ev = _events(
@@ -280,7 +282,7 @@ def test_ema_fold_batches_equal_one_shot(spark):
     }
     folded = {
         r["user_id"]: (r["n_events"], r["ema_cents"])
-        for r in incremental_ema_batches(batches).collect()
+        for r in present_ema_state(fold_rounds(ema_fold_batch, batches)).collect()
     }
     assert folded == one_shot and len(folded) == 2
 
@@ -288,15 +290,14 @@ def test_ema_fold_batches_equal_one_shot(spark):
 def test_ema_fold_raises_on_out_of_order_batch(spark):
     """A batch at or before a key's fold frontier must FAIL LOUD — the
     non-commutative fold can't absorb late data silently."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        incremental_ema_batches,
-    )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     ev = _events(spark, {1: ["view"] * 4})
     cut = datetime(2024, 1, 1, 0, 1, 30)
     late_then_early = [ev.filter(F.col("ts") >= cut), ev.filter(F.col("ts") < cut)]
     with pytest.raises(Exception, match="out-of-order"):
-        incremental_ema_batches(late_then_early).collect()
+        fold_rounds(ema_fold_batch, late_then_early).collect()
 
 
 def test_trend_fit_recovers_exact_linear_slope(spark):

@@ -1,8 +1,9 @@
 """Property-based laws for the round-6 operators, each checked against an
 independent pure-Python reference (the test_operator_properties.py model):
 
-- ema_halflife == the Python fold; incremental_ema_batches == the
-  one-shot for ANY time-split batching (ordered-fold maintenance law)
+- ema_halflife == the Python fold; ema_fold_batch folded by fold_rounds
+  == the one-shot for ANY time-split batching (ordered-fold maintenance
+  law)
 - match_event_pattern_measures == re.finditer positions on the symbol
   string (leftmost non-overlapping, boundary event ids)
 - last_touch_attribution == a Python credit walk
@@ -18,13 +19,14 @@ from datetime import datetime, timedelta
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from tests.event_streams import event_rows, mk_events, time_slices
+
 SETTINGS = dict(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
-EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
 SYM = {"view": "v", "click": "c", "purchase": "p", "signup": "s", "error": "e"}
 
 # streams: per-user lists of (minute_gap, type_idx, value_cents)
@@ -42,25 +44,6 @@ streams_strategy = st.dictionaries(
     min_size=1,
     max_size=3,
 )
-
-
-def _event_rows(streams):
-    rows, eid = [], 0
-    for uid, evs in sorted(streams.items()):
-        t = datetime(2024, 1, 1)
-        for gap, ti, cents in evs:
-            t = t + timedelta(minutes=1 + gap)
-            rows.append((eid, uid, EVENT_TYPES[ti], t, cents / 100.0))
-            eid += 1
-    return rows
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double",
-    )
 
 
 def _py_ema(rows):
@@ -82,10 +65,10 @@ def _py_ema(rows):
 def test_ema_one_shot_matches_python_reference(spark, streams):
     from etl_pipeline_last_fm_spark.operators.timeseries import ema_halflife
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams, min_gap=1)
     got = {
         r["user_id"]: (r["n_events"], r["ema_cents"])
-        for r in ema_halflife(_mk_events(spark, rows)).collect()
+        for r in ema_halflife(mk_events(spark, rows)).collect()
     }
     assert got == _py_ema(rows)
 
@@ -95,26 +78,19 @@ def test_ema_one_shot_matches_python_reference(spark, streams):
 def test_ema_fold_identity_for_any_time_split(spark, streams, cuts):
     """The ordered-fold maintenance law: ANY ascending time-split
     batching folds to the one-shot result."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        ema_fold_batch,
         ema_halflife,
-        incremental_ema_batches,
+        present_ema_state,
     )
 
-    rows = _event_rows(streams)
-    ev = _mk_events(spark, rows)
-    bounds = [datetime(2024, 1, 1) + timedelta(minutes=m) for m in sorted(cuts)]
-    edges = [datetime(2023, 1, 1)] + bounds + [datetime(2025, 1, 1)]
-    from pyspark.sql import functions as F
-
-    batches = [
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        for lo, hi in zip(edges, edges[1:])
-    ]
-    # drop empty batches (a real scheduler never emits them)
-    batches = [b for b in batches if b.count() > 0]
+    rows = event_rows(streams, min_gap=1)
+    ev = mk_events(spark, rows)
+    batches = time_slices(ev, cuts, drop_empty=True)
     got = {
         r["user_id"]: (r["n_events"], r["ema_cents"])
-        for r in incremental_ema_batches(batches).collect()
+        for r in present_ema_state(fold_rounds(ema_fold_batch, batches)).collect()
     }
     want = {
         r["user_id"]: (r["n_events"], r["ema_cents"])
@@ -130,12 +106,12 @@ def test_measures_match_re_finditer_reference(spark, streams):
         match_event_pattern_measures,
     )
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams, min_gap=1)
     got = sorted(
         (r["user_id"], r["match_no"], r["match_str"],
          r["start_event_id"], r["end_event_id"])
         for r in match_event_pattern_measures(
-            _mk_events(spark, rows), "vc*p"
+            mk_events(spark, rows), "vc*p"
         ).collect()
     )
     want = []
@@ -157,11 +133,11 @@ def test_attribution_matches_python_walk(spark, streams):
     )
 
     window_us = 2 * 60 * 1_000_000  # 2 minutes: both branches reachable
-    rows = _event_rows(streams)
+    rows = event_rows(streams, min_gap=1)
     got = {
         r["channel"]: (r["n_conversions"], r["attributed_cents"])
         for r in last_touch_attribution(
-            _mk_events(spark, rows), window_us=window_us
+            mk_events(spark, rows), window_us=window_us
         ).collect()
     }
     want: dict = {}
@@ -304,11 +280,11 @@ def test_cusum_closed_form_matches_recurrence_fold(spark, streams, k, h):
     threshold."""
     from etl_pipeline_last_fm_spark.operators.timeseries import cusum_alarms
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams, min_gap=1)
     got = {
         r["user_id"]: (r["cusum_final"], r["cusum_max"], r["n_alarms"])
         for r in cusum_alarms(
-            _mk_events(spark, rows), drift_cents=k, threshold_cents=h
+            mk_events(spark, rows), drift_cents=k, threshold_cents=h
         ).collect()
     }
     want = {}

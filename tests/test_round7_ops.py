@@ -1,27 +1,25 @@
 """Property-based laws for the round-7 operators, each checked against an
 independent reference (the test_round6_properties.py model):
 
-- incremental_cusum_batches == the one-shot cusum_alarms for ANY
-  time-split batching (ordered-fold maintenance law, member #2)
+- cusum_fold_batch folded by fold_rounds == the one-shot cusum_alarms
+  for ANY time-split batching (ordered-fold maintenance law, member #2)
 - time_decay_attribution == a pure-Python credit walk (clamped
   power-of-two weights, truncating per-touch division, 'none' fallback)
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from tests.event_streams import event_rows, mk_events, time_slices
 
 SETTINGS = dict(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
 
 # Wide inter-event gaps (minutes, up to ~2.8 days each) so the decay
 # ages 0..6, the clamp bucket, AND the 7-day window edge all occur.
@@ -41,46 +39,24 @@ streams_strategy = st.dictionaries(
 )
 
 
-def _event_rows(streams):
-    rows, eid = [], 0
-    for uid, evs in sorted(streams.items()):
-        t = datetime(2024, 1, 1)
-        for gap, ti, cents in evs:
-            t = t + timedelta(minutes=1 + gap)
-            rows.append((eid, uid, EVENT_TYPES[ti], t, cents / 100.0))
-            eid += 1
-    return rows
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double",
-    )
-
-
 @given(streams=streams_strategy, cuts=st.lists(st.integers(0, 40_000), max_size=3))
 @settings(**SETTINGS)
 def test_cusum_fold_identity_for_any_time_split(spark, streams, cuts):
     """The ordered-fold maintenance law, CUSUM member: ANY ascending
     time-split batching folds to the one-shot detector's output."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
         cusum_alarms,
-        incremental_cusum_batches,
+        cusum_fold_batch,
+        present_cusum_state,
     )
 
-    rows = _event_rows(streams)
-    ev = _mk_events(spark, rows)
-    bounds = [datetime(2024, 1, 1) + timedelta(minutes=m) for m in sorted(cuts)]
-    edges = [datetime(2023, 1, 1)] + bounds + [datetime(2025, 1, 1)]
-    batches = [
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        for lo, hi in zip(edges, edges[1:])
-    ]
-    batches = [b for b in batches if b.count() > 0]
+    rows = event_rows(streams, min_gap=1)
+    ev = mk_events(spark, rows)
+    batches = time_slices(ev, cuts, drop_empty=True)
     kw = dict(drift_cents=10, threshold_cents=300)
-    got = sorted(map(tuple, incremental_cusum_batches(batches, **kw).collect()))
+    step = lambda st, b: cusum_fold_batch(st, b, **kw)  # noqa: E731
+    got = sorted(map(tuple, present_cusum_state(fold_rounds(step, batches)).collect()))
     want = sorted(map(tuple, cusum_alarms(ev, **kw).collect()))
     assert got == want
 
@@ -125,10 +101,10 @@ def test_time_decay_attribution_matches_python_walk(spark, streams):
         time_decay_attribution,
     )
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams, min_gap=1)
     got = {
         r["channel"]: (r["n_credited_touches"], r["credited_cents"])
-        for r in time_decay_attribution(_mk_events(spark, rows)).collect()
+        for r in time_decay_attribution(mk_events(spark, rows)).collect()
     }
     assert got == _py_decay(rows)
 
@@ -140,20 +116,15 @@ def test_attribution_fold_identity_for_any_time_split(spark, streams, cuts):
     per-batch credit deltas of ANY ascending time-split batching equals
     the one-shot attribution."""
     from etl_pipeline_last_fm_spark.operators.attribution import (
-        incremental_attribution_batches,
+        attribution_step,
         last_touch_attribution,
     )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 
-    rows = _event_rows(streams)
-    ev = _mk_events(spark, rows)
-    bounds = [datetime(2024, 1, 1) + timedelta(minutes=m) for m in sorted(cuts)]
-    edges = [datetime(2023, 1, 1)] + bounds + [datetime(2025, 1, 1)]
-    batches = [
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        for lo, hi in zip(edges, edges[1:])
-    ]
-    batches = [b for b in batches if b.count() > 0]
-    got = sorted(map(tuple, incremental_attribution_batches(batches).collect()))
+    rows = event_rows(streams, min_gap=1)
+    ev = mk_events(spark, rows)
+    batches = time_slices(ev, cuts, drop_empty=True)
+    got = sorted(map(tuple, fold_rounds(attribution_step(), batches)[-1].collect()))
     want = sorted(map(tuple, last_touch_attribution(ev).collect()))
     assert got == want
 
@@ -166,23 +137,17 @@ def test_decay_attribution_fold_identity_and_eviction_bound(spark, streams, cuts
     the one-shot walk — AND the carried touch state stays bounded by the
     recency window (watermark eviction)."""
     from etl_pipeline_last_fm_spark.operators.attribution import (
+        attribution_step,
         decay_attribution_fold_batch,
-        incremental_decay_attribution_batches,
         time_decay_attribution,
     )
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 
-    rows = _event_rows(streams)
-    ev = _mk_events(spark, rows)
-    bounds = [datetime(2024, 1, 1) + timedelta(minutes=m) for m in sorted(cuts)]
-    edges = [datetime(2023, 1, 1)] + bounds + [datetime(2025, 1, 1)]
-    batches = [
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        for lo, hi in zip(edges, edges[1:])
-    ]
-    batches = [b for b in batches if b.count() > 0]
-    got = sorted(
-        map(tuple, incremental_decay_attribution_batches(batches).collect())
-    )
+    rows = event_rows(streams, min_gap=1)
+    ev = mk_events(spark, rows)
+    batches = time_slices(ev, cuts, drop_empty=True)
+    step = attribution_step(decay_attribution_fold_batch)
+    got = sorted(map(tuple, fold_rounds(step, batches)[-1].collect()))
     want = sorted(map(tuple, time_decay_attribution(ev).collect()))
     assert got == want
     # eviction bound: every carried touch sits within window of the frontier

@@ -13,10 +13,11 @@ against an independent pure-Python reference:
 from __future__ import annotations
 
 import math
-from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+
+from tests.event_streams import event_rows, mk_events, time_slices
 
 SETTINGS = dict(
     max_examples=16,
@@ -58,25 +59,6 @@ streams_strategy = st.dictionaries(
 )
 
 
-def _event_rows(streams):
-    rows, eid = [], 0
-    for uid, evs in sorted(streams.items()):
-        t = datetime(2024, 1, 1)
-        for gap, cents in evs:
-            t = t + timedelta(minutes=gap)  # gap 0 => exact timestamp tie
-            rows.append((eid, uid, "e", t, cents / 100.0))
-            eid += 1
-    return rows
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double",
-    )
-
-
 def _trunc_div(a: int, b: int) -> int:
     """Truncation toward zero — Spark decimal div == DuckDB // (both
     verified; Python // floors, so it is NOT the reference op)."""
@@ -107,10 +89,10 @@ def test_time_weighted_avg_matches_python_reference(spark, streams):
         time_weighted_avg,
     )
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams)
     got = {
         r["user_id"]: (r["n_events"], r["span_us"], r["twap_cents"])
-        for r in time_weighted_avg(_mk_events(spark, rows)).collect()
+        for r in time_weighted_avg(mk_events(spark, rows)).collect()
     }
     assert got == _py_twap(rows)
 
@@ -177,8 +159,8 @@ def _py_ntile(ordered_ids, k):
 def test_rfm_tiles_match_python_ntile(spark, streams):
     from etl_pipeline_last_fm_spark.operators.segments import rfm_segments
 
-    rows = _event_rows(streams)
-    res = rfm_segments(_mk_events(spark, rows), n_tiles=5).collect()
+    rows = event_rows(streams)
+    res = rfm_segments(mk_events(spark, rows), n_tiles=5).collect()
     by_user = {r["user_id"]: r for r in res}
     # Recompute the three metrics in Python...
     last_us, freq, money = {}, {}, {}
@@ -220,20 +202,16 @@ def test_twap_fold_maintenance_identity_any_split(spark, streams, cut):
     TWAP state presents exactly the one-shot time_weighted_avg (the
     integral telescopes across the batch boundary through the bridge
     segment) — including empty slices and the negative-cents path."""
-    from datetime import datetime, timedelta
-
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.segments import (
-        incremental_twap_batches,
+        present_twap_state,
         time_weighted_avg,
+        twap_fold_batch,
     )
 
-    rows = _event_rows(streams)
-    df = _mk_events(spark, rows)
-    cut_ts = datetime(2024, 1, 1) + timedelta(minutes=cut)
-    batches = [
-        df.filter(df.ts < cut_ts.isoformat(sep=" ")),
-        df.filter(df.ts >= cut_ts.isoformat(sep=" ")),
-    ]
-    got = sorted(map(tuple, incremental_twap_batches(batches).collect()))
+    rows = event_rows(streams)
+    df = mk_events(spark, rows)
+    batches = time_slices(df, [cut])
+    got = sorted(map(tuple, present_twap_state(fold_rounds(twap_fold_batch, batches)).collect()))
     want = sorted(map(tuple, time_weighted_avg(df).collect()))
     assert got == want

@@ -14,12 +14,14 @@
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from tests.event_streams import event_rows, mk_events, time_slices
 
 SETTINGS = dict(
     max_examples=8,
@@ -37,25 +39,6 @@ streams_strategy = st.dictionaries(
     min_size=1,
     max_size=4,
 )
-
-
-def _event_rows(streams):
-    rows, eid = [], 0
-    for uid, evs in sorted(streams.items()):
-        t = datetime(2024, 1, 1)
-        for gap, cents in evs:
-            t = t + timedelta(minutes=gap)
-            rows.append((eid, uid, "e", t, cents / 100.0))
-            eid += 1
-    return rows
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double",
-    )
 
 
 def _trunc_div(a: int, b: int) -> int:
@@ -82,13 +65,13 @@ def _py_holt(rows):
 def test_holt_linear_matches_python_reference(spark, streams):
     from etl_pipeline_last_fm_spark.operators.timeseries import holt_linear
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams)
     got = {
         r["user_id"]: (
             r["n_events"], r["level_cents"], r["trend_cents"],
             r["forecast_cents"],
         )
-        for r in holt_linear(_mk_events(spark, rows)).collect()
+        for r in holt_linear(mk_events(spark, rows)).collect()
     }
     assert got == _py_holt(rows)
 
@@ -99,19 +82,17 @@ def test_holt_fold_maintenance_identity_any_split(spark, streams, cut):
     """Ordered-fold member #6: for ANY ascending time split, the folded
     (level, trend) state presents exactly the one-shot holt_linear —
     including empty slices and the negative-cents path."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        holt_fold_batch,
         holt_linear,
-        incremental_holt_batches,
+        present_holt_state,
     )
 
-    rows = _event_rows(streams)
-    df = _mk_events(spark, rows)
-    cut_ts = datetime(2024, 1, 1) + timedelta(minutes=cut)
-    batches = [
-        df.filter(df.ts < cut_ts.isoformat(sep=" ")),
-        df.filter(df.ts >= cut_ts.isoformat(sep=" ")),
-    ]
-    got = sorted(map(tuple, incremental_holt_batches(batches).collect()))
+    rows = event_rows(streams)
+    df = mk_events(spark, rows)
+    batches = time_slices(df, [cut])
+    got = sorted(map(tuple, present_holt_state(fold_rounds(holt_fold_batch, batches)).collect()))
     want = sorted(map(tuple, holt_linear(df).collect()))
     assert got == want
 
@@ -199,10 +180,10 @@ def _py_dw(rows):
 def test_durbin_watson_matches_python_reference(spark, streams):
     from etl_pipeline_last_fm_spark.operators.timeseries import durbin_watson
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams)
     got = {
         r["user_id"]: (r["n_events"], r["dw_ppm"])
-        for r in durbin_watson(_mk_events(spark, rows)).collect()
+        for r in durbin_watson(mk_events(spark, rows)).collect()
     }
     assert got == _py_dw(rows)
 
@@ -298,11 +279,11 @@ def _py_km(rows, censor_days=7):
 def test_km_survival_matches_python_reference(spark, streams):
     from etl_pipeline_last_fm_spark.operators.survival import km_survival
 
-    rows = _event_rows(streams)
+    rows = event_rows(streams)
     got = {
         r["t_day"]: (r["n_risk"], r["n_churned"], r["n_censored"],
                      r["survival_ppm"])
-        for r in km_survival(_mk_events(spark, rows), censor_days=0).collect()
+        for r in km_survival(mk_events(spark, rows), censor_days=0).collect()
     }
     # censor_days=0: anyone not ending AT the frontier churns — the
     # densest churn pattern the minute-scale streams can produce.
@@ -328,7 +309,7 @@ def test_km_survival_textbook_example(spark):
         (6, 4, "e", datetime(2024, 1, 10), 1.0),
     ]
     got = sorted(
-        map(tuple, km_survival(_mk_events(spark, rows),
+        map(tuple, km_survival(mk_events(spark, rows),
                                censor_days=5).collect())
     )
     # day 0: n=4, d=1 (user1), c=1 (user4) -> s = 1e6*3//4 = 750000
@@ -519,9 +500,10 @@ def test_skyline_fold_identity_any_partition(spark, points, assign, width):
     skyline(skyline(A)∪B): folding ANY 3-way partition of the points,
     in the given order, equals the one-shot skyline — at every bucket
     width (the identity is set-algebraic, no delivery contract)."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
     from etl_pipeline_last_fm_spark.operators.skyline import (
         skyline_2d,
-        skyline_fold_batches,
+        skyline_step,
     )
 
     pts = [(i, c, g) for i, (c, g) in enumerate(points)]
@@ -529,9 +511,9 @@ def test_skyline_fold_identity_any_partition(spark, points, assign, width):
     batches = [
         df.filter(F.pmod(F.col("id"), F.lit(3)) == i) for i in range(3)
     ]
-    got = sorted(map(tuple, skyline_fold_batches(
-        batches, "id", "cost", "gain", bucket_width=width
-    ).collect()))
+    got = sorted(map(tuple, fold_rounds(skyline_step(
+        "id", "cost", "gain", bucket_width=width
+    ), batches).collect()))
     want = sorted(map(tuple, skyline_2d(
         df, "id", "cost", "gain", bucket_width=width
     ).collect()))
@@ -587,7 +569,7 @@ def test_rank_sum_matches_python_reference(spark, a, b):
             for i, v in enumerate(a)]
     rows += [(len(a) + i, 0, "view", datetime(2024, 1, 1), v / 100.0)
              for i, v in enumerate(b)]
-    df = _mk_events(spark, rows)
+    df = mk_events(spark, rows)
     [r] = rank_sum_test(df, "purchase", "view").collect()
     # python reference: sum of doubled midranks of group a
     allv = sorted(a + b)
