@@ -10,6 +10,9 @@ Defaults below are chosen for correctness-at-scale (SURVEY.md §7 step 7):
   to be overridden (or AQE-coalesced) on a real cluster.
 - Arrow enabled so the few pandas-UDF extension operators use vectorized
   batch transfer instead of row-at-a-time pickling.
+- Spark's generated-code cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``), so a plan shape that ran once in this JVM
+  reuses its compiled classes instead of recompiling them with Janino.
 """
 
 from __future__ import annotations
@@ -17,6 +20,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Classes Spark's codegen cache may hold (``spark.sql.codegen.cache.maxEntries``,
+# default 100). Counted with Spark's ``CodegenMetrics`` at ``local[4]``:
+# - a daily schedule (perfbench daily_small) compiles about 250 distinct
+#   classes: the warm-up day 160, the backfill 63–68, each later day or
+#   re-run 0–10;
+# - one pass over the 9 bench headliners compiles about 185.
+# At 100 entries neither fits, so every re-run day recompiled ~130 classes
+# and every headliner pass ~180. 1,000 holds both with room for the
+# registry's other families; an entry is one compiled class of a few KB
+# to a few hundred KB.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -45,6 +60,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # A static conf: it sizes the JVM-wide cache when the first plan
+        # compiles, so it must be set before the session exists.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Self-joins on exploded shingles etc. produce huge intermediate
         # rows; keep broadcast threshold at the default 10MB — dims in this
         # engine are tiny (SURVEY.md §2.4) and get explicit broadcast() hints.

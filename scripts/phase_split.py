@@ -1,5 +1,11 @@
 """Split a query's wall time into build (Python/py4j construction),
-plan (analysis+optimization via explain), and execute (noop write).
+plan (analysis+optimization via explain), and execute (noop write), and
+say how many classes Spark's code generator compiled in each phase and
+for how long (Janino time is otherwise hidden inside execute).
+
+The first run of each query is the cold one: its compile counts show
+what the query costs a session that has not run it yet. The best of the
+next N runs is reported as the query's phase split.
 
 Usage: python scripts/phase_split.py <query> [more...] [--n N]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
@@ -14,6 +20,42 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_last_fm_spark.session import get_spark  # noqa: E402
+
+PHASES = ("build", "plan", "exec")
+
+
+def _compiled(jvm) -> tuple[int, int]:
+    """Classes compiled and compile nanoseconds so far in this JVM, read
+    from Spark's codegen counters (neither read runs a Spark action)."""
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.CodeGenerator.compileTime()
+
+
+def _timed(jvm, step):
+    """Run ``step``; return its result and (wall s, classes compiled,
+    compile ms) for it."""
+    n0, ns0 = _compiled(jvm)
+    t = time.perf_counter()
+    out = step()
+    s = time.perf_counter() - t
+    n1, ns1 = _compiled(jvm)
+    return out, (s, n1 - n0, (ns1 - ns0) / 1e6)
+
+
+def _split(spark, fn, sf_dir):
+    """One cache-cleared run of a query: (wall s, classes, compile ms) per
+    phase."""
+    jvm = spark.sparkContext._jvm
+    spark.catalog.clearCache()
+    df, build = _timed(jvm, lambda: fn(spark, sf_dir))
+    _, plan = _timed(jvm, df._jdf.queryExecution().executedPlan)
+    _, exe = _timed(jvm, lambda: df.write.format("noop").mode("overwrite").save())
+    return build, plan, exe
+
+
+def _compiles(run) -> str:
+    return " ".join(f"{ph}={k}cls/{ms:.0f}ms" for ph, (_, k, ms) in zip(PHASES, run))
 
 
 def main() -> None:
@@ -31,24 +73,18 @@ def main() -> None:
     qs = entrymod.queries()
     spark = get_spark(app_name="phase-split")
     for name in names:
-        fn = qs[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        rows = []
-        for _ in range(n):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df._jdf.queryExecution().executedPlan()  # force analysis+optimization
-            t2 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t3 = time.perf_counter()
-            rows.append((t1 - t0, t2 - t1, t3 - t2))
-        best = min(rows, key=lambda r: sum(r))
+        first = _split(spark, qs[name], sf_dir)
+        rows = [_split(spark, qs[name], sf_dir) for _ in range(n)]
+        best = min(rows, key=lambda r: sum(p[0] for p in r))
         print(
-            f"[phase] {name}: build={best[0]:.3f} plan={best[1]:.3f} "
-            f"exec={best[2]:.3f} total={sum(best):.3f} "
-            f"(all: {[tuple(round(x,3) for x in r) for r in rows]})",
+            f"[phase] {name}: "
+            + " ".join(f"{ph}={p[0]:.3f}" for ph, p in zip(PHASES, best))
+            + f" total={sum(p[0] for p in best):.3f} "
+            f"(all: {[tuple(round(p[0], 3) for p in r) for r in rows]})",
+            flush=True,
+        )
+        print(
+            f"[compile] {name}: first run {_compiles(first)}; best run {_compiles(best)}",
             flush=True,
         )
 

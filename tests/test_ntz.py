@@ -23,8 +23,8 @@ from etl_pipeline_last_fm_spark.operators.funnel import funnel_stages
 from etl_pipeline_last_fm_spark.operators.sessions import sessionize
 
 
-def _write_events(path: str, tz: str | None) -> None:
-    base = dt.datetime(2024, 5, 1, 10, 0, 0)
+def _write_events(path: str, tz: str | None,
+                  base: dt.datetime = dt.datetime(2024, 5, 1, 10, 0, 0)) -> None:
     rows = [
         (i, base + dt.timedelta(minutes=7 * i + (i % 3)), i % 4 + 1,
          ["view", "click", "purchase"][i % 3], float(i))
@@ -119,3 +119,25 @@ def test_lead_lag_query_both_flavors(flavors, spark, tmp_path):
         ev.write.parquet(str(d / "events.parquet"))
         got = entrymod.q_lead_lag(spark, str(d))
         assert got.count() == 60  # must not throw on either flavor
+
+
+def test_date_partition_agg_days_stay_utc_after_a_timezone_switch(spark, tmp_path):
+    """``load_table`` turns an instant ``ts`` into UTC days, as the
+    timezone-naive oracle does. A caller that switches the session
+    timezone after the table's first load must still get UTC days: the
+    events below run from 00:00 to 07:00 UTC, which is the previous
+    evening in Los Angeles."""
+    from etl_pipeline_last_fm_spark.registry.core import q_date_partition_agg
+
+    _write_events(str(tmp_path / "events.parquet"), tz="UTC",
+                  base=dt.datetime(2024, 5, 1, 0, 0, 0))
+    sf_dir = str(tmp_path)
+    first = sorted(map(tuple, q_date_partition_agg(spark, sf_dir).collect()))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        again = sorted(map(tuple, q_date_partition_agg(spark, sf_dir).collect()))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert [r[0] for r in first] == ["2024-05-01"]
+    assert again == first

@@ -315,6 +315,16 @@ def _count_jobs(spark, label, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _count_compiled(spark, fn):
+    """Classes Spark's code generator compiles while ``fn`` runs, read from
+    the JVM's ``CodegenMetrics`` counter (not a Spark action). A plan whose
+    classes are still in the codegen cache compiles none."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    fn()
+    return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+
 def test_daily_job_budget(spark, tmp_path):
     """Spark jobs a new day costs per layer, after one warm-up day. At the
     daily chart's size each job is fixed overhead, so the count is the
@@ -369,6 +379,26 @@ def test_building_dds_frames_launches_no_job(spark, tmp_path):
         build_fact(ods, dims, existing_fact=existing.fact)
 
     assert _count_jobs(spark, "build", build) == 0
+
+
+def test_rerun_day_compiles_no_new_code(spark, tmp_path):
+    """A re-run of a loaded day runs plan shapes the session has already
+    compiled. The session's codegen cache holds the engine's working set
+    (``session.CODEGEN_CACHE_ENTRIES``), so the second re-run finds every
+    class there; at Spark's default of 100 entries a day evicted its own
+    classes and each re-run recompiled ~130. The first re-run may compile
+    a few: AQE plans the empty delta differently from the day's first
+    run."""
+    wh = Warehouse(str(tmp_path / "wh_codegen"))
+    d1, d2 = "2024-06-01", "2024-06-02"
+    for day, date in enumerate((d1, d2)):
+        raw = fetch_charts(spark, date, countries=["XA", "XB", "XC"],
+                           fetch_fn=_budget_fetch(day))
+        write_raw_chart(raw, wh.raw)
+        run_pipeline(spark, wh.root, date)
+    first = _count_compiled(spark, lambda: run_pipeline(spark, wh.root, d2))
+    second = _count_compiled(spark, lambda: run_pipeline(spark, wh.root, d2))
+    assert second <= 10, (first, second)
 
 
 def test_failed_dim_write_leaves_day_uncommitted(spark, warehouse, tmp_path, monkeypatch):
