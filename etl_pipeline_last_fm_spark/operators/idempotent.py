@@ -14,8 +14,7 @@ Spark realization (no Delta required):
 2. cross-batch skip: ``left_anti`` join against the existing keys.
 
 Scale notes: the anti-join shuffles both sides on the conflict key unless the
-existing-keys projection is small enough to broadcast — for dimension tables
-it always is, so ``broadcast_existing=True`` is the default there. For a
+existing-keys projection is small enough for AQE to broadcast. For a
 100 TB fact table, the existing side should first be partition-pruned to the
 date partitions the incoming batch can touch, which turns "anti-join against
 all of history" into "anti-join against today" — the same trick the
@@ -55,7 +54,6 @@ def idempotent_append(
     existing: DataFrame | None,
     keys: list[str],
     tiebreaker: list[str] | None = None,
-    broadcast_existing: bool = False,
     prune_on: list[str] | None = None,
 ) -> DataFrame:
     """Rows of ``batch`` that survive first-writer-wins dedupe and whose
@@ -73,8 +71,6 @@ def idempotent_append(
     if prune_on:
         batch_parts = batch.select(*prune_on).distinct()
         existing_keys = existing_keys.join(F.broadcast(batch_parts), prune_on, "left_semi")
-    if broadcast_existing:
-        existing_keys = F.broadcast(existing_keys)
     # Null-safe key equality: a UNIQUE key containing NULL (e.g. an imputed
     # duration on an all-sentinel day, FIXTURES.md A5.2) must still match its
     # own prior insert, or every re-run would duplicate the row. (Postgres

@@ -9,7 +9,7 @@ max. Assignment *order* within a batch is arbitrary in Postgres; here it is
 pinned to the natural-key sort so results are deterministic and
 oracle-checkable.
 
-Three implementations:
+Two implementations:
 
 - ``assign_surrogate_keys`` — ``row_number() over (order by natural key)``.
   A global window means a single-partition sort of the *new rows only*; for
@@ -20,14 +20,11 @@ Three implementations:
   partition, prefix-sum the counts on the driver (#partitions values, not
   rows), then number within partitions via a partition-local row_number.
   Equivalent output, no single-partition bottleneck.
-- ``assign_surrogate_keys_grouped`` — for batches whose natural key starts
-  with a bounded group (the fact delta's ``(date, country_id)``): the same
-  ids from one plan, numbered by group, with no persist, sample or driver
-  collect, so it can run inside the write that consumes it.
 
-The max-id offset of ``assign_surrogate_keys`` and
-``assign_surrogate_keys_grouped`` is an in-plan 1-row aggregate, so
-building either frame launches no Spark job.
+``assign_surrogate_keys`` takes its max-id offset from ``offset_by_max``,
+an in-plan 1-row aggregate, so building its frame launches no Spark job.
+The fact build numbers each date's rows with its own date-partitioned
+window and the same offset.
 """
 
 from __future__ import annotations
@@ -45,12 +42,12 @@ def assign_surrogate_keys(
     """Number new rows 1..N (deterministically, by natural key) offset by the
     current max id in ``existing``."""
     w = Window.orderBy(*[F.col(c) for c in natural_order])
-    return _offset_by_max(
+    return offset_by_max(
         new_rows.withColumn("__rn", F.row_number().over(w)), key_col, existing
     )
 
 
-def _offset_by_max(
+def offset_by_max(
     numbered: DataFrame, key_col: str, existing: DataFrame | None
 ) -> DataFrame:
     """``key_col`` = ``__rn`` + the max ``key_col`` of ``existing`` (0 when
@@ -131,43 +128,3 @@ def assign_surrogate_keys_distributed(
         .drop("__pid")
     )
 
-
-def assign_surrogate_keys_grouped(
-    new_rows: DataFrame,
-    key_col: str,
-    group_cols: list[str],
-    order_cols: list[str],
-    existing: DataFrame | None = None,
-) -> DataFrame:
-    """Same ids as ``assign_surrogate_keys`` over the natural order
-    ``group_cols + order_cols``, from one plan: no persist, no range
-    sample, no driver collect.
-
-    Count the rows of each group, take an exclusive running sum over that
-    group table (the only unpartitioned window; its rows are groups, not
-    input rows), add ``row_number() over (partition by group_cols order by
-    order_cols)``, then the max-id offset. This is the bucketing device of
-    ``packing.value_ordered_row_number`` with the natural-key prefix as the
-    bucket. One task numbers a whole group, so the group must be bounded:
-    the fact delta's ``(date, country_id)`` group holds at most one row per
-    chart rank."""
-    before_group = Window.orderBy(*[F.col(c) for c in group_cols]).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    group_offsets = (
-        new_rows.groupBy(*group_cols)
-        .agg(F.count(F.lit(1)).alias("__gcnt"))
-        .select(
-            *[F.col(c).alias(f"__g_{c}") for c in group_cols],
-            F.coalesce(F.sum("__gcnt").over(before_group), F.lit(0)).alias("__goff"),
-        )
-    )
-    # Null-safe: a NULL group key is a group of its own, as in the windows.
-    on = [F.col(c).eqNullSafe(F.col(f"__g_{c}")) for c in group_cols]
-    in_group = Window.partitionBy(*group_cols).orderBy(*[F.col(c) for c in order_cols])
-    numbered = (
-        new_rows.join(F.broadcast(group_offsets), on)
-        .withColumn("__rn", F.col("__goff") + F.row_number().over(in_group))
-        .drop("__goff", *[f"__g_{c}" for c in group_cols])
-    )
-    return _offset_by_max(numbered, key_col, existing)

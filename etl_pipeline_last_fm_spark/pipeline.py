@@ -17,9 +17,11 @@ partition):
     <warehouse>/dds/fact_daily_top_100/date=<d>/...
     <warehouse>/dm/<mart>/date=<d>/...
 
-Idempotence: ODS + DDS appends go through ``idempotent_append`` (the
-ON CONFLICT emulation, §2.7); DM marts are overwritten per date partition —
-a deliberate fix of the reference's non-idempotent marts (Appendix A.4).
+Idempotence: ODS and fact appends go through ``idempotent_append`` (the
+ON CONFLICT emulation, §2.7); each dim is merged with the day's keys by
+``merge_dim`` and written whole as a new snapshot; DM marts are overwritten
+per date partition — a deliberate fix of the reference's non-idempotent
+marts (Appendix A.4).
 """
 
 from __future__ import annotations

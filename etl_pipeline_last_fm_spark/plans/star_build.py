@@ -8,9 +8,9 @@ because the fact build looks up the ids the dim loads just created):
 3. dim_song     — DISTINCT song_name + imputed dur, conflict key (song,duration)  (:68-83)
 4. fact         — 3-way star join on natural keys,  conflict key (date,ctry,rank) (:85-104)
 
-Steps 1-3 are ``build_dims`` and step 4 is ``build_fact``; the pipeline
-commits the dims between the two and builds the fact against the
-committed snapshot.
+Steps 1-3 are ``build_dims``, one ``merge_dim`` per dim, and step 4 is
+``build_fact``; the pipeline commits the dims between the two and builds
+the fact against the committed snapshot.
 
 Appendix A.1 (zero-duration fact-row loss): the reference joins the fact on
 the RAW ODS duration while dim_song stores the IMPUTED duration
@@ -25,14 +25,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import date as Date
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.idempotent import idempotent_append
 from etl_pipeline_last_fm_spark.operators.impute import impute_zero_with_partition_mean
 from etl_pipeline_last_fm_spark.operators.surrogate import (
     assign_surrogate_keys,
-    assign_surrogate_keys_grouped,
+    offset_by_max,
 )
 from etl_pipeline_last_fm_spark.operators.star import star_join
 
@@ -59,6 +59,32 @@ def _impute_duration(ods: DataFrame) -> DataFrame:
     )
 
 
+def merge_dim(keys: DataFrame, existing: DataFrame | None, id_col: str) -> DataFrame:
+    """``existing`` (``id_col`` + the key columns of ``keys``) extended by
+    the natural keys of ``keys`` it lacks: ``INSERT … SELECT DISTINCT …
+    ON CONFLICT DO NOTHING`` into a ``serial`` id (reference
+    dags/from_ods_to_dds_pg.py:42-83).
+
+    One aggregate merges the batch into the dim: union ``existing`` with
+    the batch's keys under a NULL id and take ``max(id)`` per key. A key
+    that already has an id keeps it; the NULL-id groups are the new keys,
+    numbered in key order above the max id of ``existing``. ``groupBy``
+    puts NULL keys in one group, so a key holding NULL (an all-sentinel
+    day's imputed duration, FIXTURES.md A5.2) matches its own earlier
+    load instead of being appended again."""
+    key_cols = keys.columns
+    merged = keys.select(F.lit(None).cast("long").alias(id_col), *key_cols)
+    if existing is not None:
+        merged = existing.select(id_col, *key_cols).unionByName(merged)
+    groups = merged.groupBy(*key_cols).agg(F.max(id_col).alias(id_col))
+    known = groups.filter(F.col(id_col).isNotNull()).select(id_col, *key_cols)
+    new = assign_surrogate_keys(
+        groups.filter(F.col(id_col).isNull()).drop(id_col), id_col, key_cols,
+        existing=existing,
+    ).select(id_col, *key_cols)
+    return known.unionByName(new)
+
+
 def build_dims(ods: DataFrame, existing: DdsDims | None = None) -> DdsDims:
     """Extend the three dims with the natural keys of an ODS slice.
 
@@ -70,71 +96,45 @@ def build_dims(ods: DataFrame, existing: DdsDims | None = None) -> DdsDims:
     Returns the *new full* dims (existing ∪ appended delta), ready to be
     written as the next snapshot.
     """
-    ex_country = existing.dim_country if existing else None
-    ex_artist = existing.dim_artist if existing else None
-    ex_song = existing.dim_song if existing else None
-
-    # --- dim_country (A5 DISTINCT + §2.7 U2 + §2.6 serial) ---
-    new_countries = idempotent_append(
-        ods.select(F.col("country").alias("country_name")).distinct(),
-        ex_country,
-        keys=["country_name"],
-        broadcast_existing=True,
-    )
-    new_countries = assign_surrogate_keys(
-        new_countries, "country_id", ["country_name"], existing=ex_country
-    ).select("country_id", "country_name")
-
-    # --- dim_artist (U3) ---
-    new_artists = idempotent_append(
-        ods.select("artist_name").distinct(),
-        ex_artist,
-        keys=["artist_name"],
-        broadcast_existing=True,
-    )
-    new_artists = assign_surrogate_keys(
-        new_artists, "artist_id", ["artist_name"], existing=ex_artist
-    ).select("artist_id", "artist_name")
-
-    # --- dim_song (U4): imputed duration (P8/P9) then DISTINCT ---
-    new_songs = idempotent_append(
-        _impute_duration(ods).select(
-            "song_name", F.col("duration_imputed").alias("duration_sec")
-        ).distinct(),
-        ex_song,
-        keys=["song_name", "duration_sec"],
-        # NOT broadcast_existing: dim_song is corpus-scaled (unlike the
-        # bounded country/artist dims above) — a forced broadcast of its
-        # key projection OOMs at 100 TB. No hint = AQE still broadcasts
-        # at runtime when the side is actually small.
-        broadcast_existing=False,
-    )
-    new_songs = assign_surrogate_keys(
-        new_songs, "song_id", ["song_name", "duration_sec"], existing=ex_song
-    ).select("song_id", "song_name", "duration_sec")
-
     return DdsDims(
-        dim_country=_union(ex_country, new_countries),
-        dim_artist=_union(ex_artist, new_artists),
-        dim_song=_union(ex_song, new_songs),
+        dim_country=merge_dim(
+            ods.select(F.col("country").alias("country_name")),
+            existing.dim_country if existing else None,
+            "country_id",
+        ),
+        dim_artist=merge_dim(
+            ods.select("artist_name"),
+            existing.dim_artist if existing else None,
+            "artist_id",
+        ),
+        # P8/P9: dim_song stores the imputed duration.
+        dim_song=merge_dim(
+            _impute_duration(ods).select(
+                "song_name", F.col("duration_imputed").alias("duration_sec")
+            ),
+            existing.dim_song if existing else None,
+            "song_id",
+        ),
     )
 
 
 def build_fact(
     ods: DataFrame,
     dims: DdsDims,
+    run_date: str | Date,
     existing_fact: DataFrame | None = None,
     replicate_zero_duration_loss: bool = False,
-    run_date: str | Date | None = None,
 ) -> DataFrame:
-    """The fact delta of an ODS slice, looked up against ``dims`` (in the
-    pipeline: the committed snapshot, so it joins exactly the persisted
-    ids) and numbered above the max ``fact_id`` of ``existing_fact``.
+    """The fact delta of the ``run_date`` rows of ``ods``, looked up
+    against ``dims`` (in the pipeline: the committed snapshot, so it joins
+    exactly the persisted ids) and numbered above the max ``fact_id`` of
+    ``existing_fact``.
 
-    ``run_date``: the date of the ``ods`` slice, when it is one date. Only
-    that partition of ``existing_fact`` can then hold a conflicting key,
-    so the conflict check reads it alone, through a literal partition
-    filter. Without it the check reads the whole fact."""
+    Only the ``run_date`` partition of ``existing_fact`` can hold a
+    conflicting key, so the conflict check reads it alone, through a
+    literal partition filter."""
+    day = F.lit(str(run_date))
+    ods = ods.filter(F.col("source_date") == day)
     # --- fact (J1-J3 star join + U5) ---
     if replicate_zero_duration_loss:
         # Reference behavior: join on RAW duration (rows with duration 0
@@ -172,9 +172,6 @@ def build_fact(
         "inner",
     )
 
-    fact_conflicts = existing_fact
-    if existing_fact is not None and run_date is not None:
-        fact_conflicts = existing_fact.filter(F.col("date") == F.lit(str(run_date)))
     new_fact = idempotent_append(
         joined.select(
             F.col("source_date").alias("date"),
@@ -184,27 +181,19 @@ def build_fact(
             "song_rank",
             "listeners_count",
         ),
-        fact_conflicts,
+        existing_fact.filter(F.col("date") == day) if existing_fact is not None else None,
         keys=["date", "country_id", "song_rank"],
         tiebreaker=["song_id", "artist_id"],
     )
-    # Fact ids (VERDICT r10 item 1): build_dims numbers with a global
-    # window because the dim deltas are dim-sized, but the fact delta is
-    # the table that scales to billions of rows/day, so a row_number()
-    # OVER (ORDER BY ...) with no partition list would funnel every fact
-    # row of the day through ONE task. The grouped variant gives the
-    # identical dense natural-key-ordered ids (equivalence-tested,
-    # tests/test_operator_properties.py) inside the write's own plan: each
-    # (date, country_id) group, at most one row per chart rank, is
-    # numbered by its own task, and only the group table's running count
-    # is unpartitioned.
-    return assign_surrogate_keys_grouped(
-        new_fact, "fact_id", ["date", "country_id"], ["song_rank"],
-        existing=existing_fact,
+    # Fact ids: the day's rows in natural-key order above max(fact_id).
+    # Partitioned by the date, the window rides the imputation window's
+    # exchange on source_date; an unpartitioned one would add an exchange
+    # to a single partition.
+    in_day = Window.partitionBy("date").orderBy("country_id", "song_rank")
+    return offset_by_max(
+        new_fact.withColumn("__rn", F.row_number().over(in_day)),
+        "fact_id",
+        existing_fact,
     ).select(
         "fact_id", "date", "country_id", "song_id", "artist_id", "song_rank", "listeners_count"
     )
-
-
-def _union(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
-    return delta if existing is None else existing.unionByName(delta)

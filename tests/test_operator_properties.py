@@ -4,6 +4,8 @@
 - first_writer_wins: deterministic minimum-by-tiebreaker per key group
 - assign_surrogate_keys: dense 1..N ids; incremental loads never renumber
   previously assigned rows
+- merge_dim: existing ids unchanged, new keys numbered above the max in
+  natural-key order, NULL keys matched, a second merge a no-op
 - impute: sentinel never survives when a non-sentinel partner exists in the
   partition; all-sentinel partitions yield NULL
 """
@@ -11,7 +13,7 @@
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -20,8 +22,8 @@ from etl_pipeline_last_fm_spark.operators.impute import impute_zero_with_partiti
 from etl_pipeline_last_fm_spark.operators.surrogate import (
     assign_surrogate_keys,
     assign_surrogate_keys_distributed,
-    assign_surrogate_keys_grouped,
 )
+from etl_pipeline_last_fm_spark.plans.star_build import merge_dim
 
 SETTINGS = dict(
     max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
@@ -93,19 +95,50 @@ def test_surrogate_distributed_matches_window(spark):
         for r in assign_surrogate_keys_distributed(df, "id", ["name"], num_partitions=8).collect()
     }
     assert a == b
-    # The grouped variant, bucketed by a prefix of the natural key (so the
-    # natural order (pfx, name) is the order of name), with and without an
-    # existing offset.
-    pfx = df.withColumn("pfx", F.substring("name", 1, 2))
-    existing = spark.createDataFrame([(41,), (7,)], "id long")
-    for ex, shift in [(None, 0), (existing, 41)]:
-        c = {
-            (r.name, r.id)
-            for r in assign_surrogate_keys_grouped(
-                pfx, "id", ["pfx"], ["name"], existing=ex
-            ).collect()
-        }
-        assert c == {(n, i + shift) for n, i in a}
+
+
+dim_key_strategy = st.tuples(
+    st.one_of(st.none(), st.text(alphabet="abc", min_size=1, max_size=2)),
+    st.one_of(st.none(), st.integers(0, 3)),
+)
+
+
+@given(
+    existing_keys=st.lists(dim_key_strategy, unique=True, max_size=12),
+    batch=st.lists(dim_key_strategy, max_size=25),
+    has_existing=st.booleans(),
+)
+@example(existing_keys=[], batch=[], has_existing=False)
+@example(existing_keys=[("a", None), (None, 2)], batch=[], has_existing=True)
+@settings(**SETTINGS)
+def test_merge_dim_matches_reference(spark, existing_keys, batch, has_existing):
+    """merge_dim against a Python ``INSERT … SELECT DISTINCT … ON CONFLICT
+    DO NOTHING`` into a serial id: existing ids (sparse here) are kept, the
+    batch's new keys, duplicates and NULLs included, get max+1 … max+k in
+    natural-key order (NULLs first, as Spark sorts ascending), and merging
+    the same batch into the result changes nothing."""
+    schema = "name string, dur int"
+    ex: dict = {}
+    existing = None
+    if has_existing:
+        ex = {k: 3 * i + 5 for i, k in enumerate(existing_keys)}
+        existing = spark.createDataFrame(
+            [(i, *k) for k, i in ex.items()], f"id long, {schema}"
+        )
+    keys = spark.createDataFrame(batch, schema)
+    got = merge_dim(keys, existing, "id")
+    assert got.columns == ["id", "name", "dur"]
+    rows = [((r.name, r.dur), r.id) for r in got.collect()]
+
+    new = sorted(set(batch) - set(ex), key=lambda k: [(v is not None, v) for v in k])
+    base = max(ex.values(), default=0)
+    want = ex | {k: base + i for i, k in enumerate(new, start=1)}
+    assert len(rows) == len(want)
+    assert dict(rows) == want
+
+    merged = spark.createDataFrame(got.collect(), got.schema)
+    again = [((r.name, r.dur), r.id) for r in merge_dim(keys, merged, "id").collect()]
+    assert len(again) == len(want) and dict(again) == want
 
 
 @given(
@@ -303,9 +336,4 @@ def test_surrogate_distributed_empty_batch(spark):
     df = spark.createDataFrame([], "name string")
     out = assign_surrogate_keys_distributed(df, "id", ["name"], num_partitions=4)
     assert out.columns == ["name", "id"]
-    assert out.count() == 0
-    # The grouped variant: no groups, so no offsets to join.
-    grouped = df.withColumn("pfx", F.substring("name", 1, 2))
-    out = assign_surrogate_keys_grouped(grouped, "id", ["pfx"], ["name"])
-    assert out.columns == ["name", "pfx", "id"]
     assert out.count() == 0

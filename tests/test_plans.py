@@ -569,11 +569,10 @@ def test_build_dds_fact_window_is_partitioned(spark):
     r10 item 1): prior rounds' plan invariants cover the 205 registry
     queries, not the DDS build — which is how a single-partition global
     window survived ten rounds on the fact path. The fact delta (the
-    table that scales to billions of rows/day) must be numbered by the
-    grouped variant: its row_number window is partitioned by the
-    (date, country_id) prefix of the natural key, and NO unpartitioned
-    window in any DDS output plan sits over a raw scan (the dim builds'
-    global windows and the fact's running count over its group table are
+    table that scales to billions of rows/day) must be numbered by a
+    date-partitioned row_number window ordered by the rest of the natural
+    key (country_id, song_rank), and NO unpartitioned window in any DDS
+    output plan sits over a raw scan (the dim merges' global windows are
     legal — they sit above an Aggregate)."""
     import datetime
 
@@ -587,12 +586,14 @@ def test_build_dds_fact_window_is_partitioned(spark):
     ]
     ods = spark.createDataFrame(rows, ODS_SCHEMA)
     dims = build_dims(ods)
-    new_fact = build_fact(ods, dims)
+    new_fact = build_fact(ods, dims, run_date="2021-04-01")
 
-    # Positive: the fact numbering window is (date, country_id)-partitioned.
+    # Positive: the fact numbering window is date-partitioned, ordered by
+    # (country_id, song_rank).
     fact_plan = new_fact._jdf.queryExecution().optimizedPlan().toString()
     assert re.search(
-        r"windowspecdefinition\(date#\d+, country_id#\d+L?, song_rank#\d+ ASC", fact_plan
+        r"windowspecdefinition\(date#\d+, country_id#\d+L? ASC NULLS FIRST, song_rank#\d+ ASC",
+        fact_plan,
     ), fact_plan
     # Negative: no unpartitioned window anywhere in the DDS outputs sits
     # over a raw scan/relation. Same walk as the registry-wide invariant,
