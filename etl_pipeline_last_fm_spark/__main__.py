@@ -109,14 +109,9 @@ def main(argv: list[str] | None = None) -> int:
         run_pipeline(spark, args.warehouse, args.date)
         print(f"pipeline complete for {args.date} -> {args.warehouse}")
     elif args.cmd == "stream":
-        import os
+        from etl_pipeline_last_fm_spark.pipeline import stream_raw_to_ods_pipeline
 
-        from etl_pipeline_last_fm_spark.streaming.ingest import stream_raw_to_ods
-
-        q = stream_raw_to_ods(
-            spark, wh.raw, wh.ods, os.path.join(args.warehouse, "_checkpoints", "ods")
-        )
-        q.awaitTermination()
+        stream_raw_to_ods_pipeline(spark, wh).awaitTermination()
         print(f"stream merge complete -> {wh.ods}")
     return 0
 

@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, ts_us
+from etl_pipeline_last_fm_spark.operators.timeseries import fold_ordered
+
+#: Type of a credit walk's per-conversion (channel, cents) credits.
+_CREDITS_T = "array<struct<ch: string, cents: long>>"
 
 
 def last_touch_attribution(
@@ -215,61 +219,25 @@ def attribution_fold_batch(
         credit = F.when(
             e["t"] == conversion_type,
             F.array(F.struct(channel.alias("ch"), e["v"].alias("cents"))),
-        ).otherwise(F.array().cast("array<struct<ch: string, cents: long>>"))
+        ).otherwise(F.array().cast(_CREDITS_T))
         return F.struct(
             F.when(is_touch(e), e["us"]).otherwise(acc["lu"]).alias("lu"),
             F.when(is_touch(e), e["t"]).otherwise(acc["lt"]).alias("lt"),
             F.concat(acc["credits"], credit).alias("credits"),
         )
 
-    def acc0(lu, lt):
-        return F.struct(
-            lu.cast("long").alias("lu"),
-            lt.cast("string").alias("lt"),
-            F.array().cast("array<struct<ch: string, cents: long>>")
-            .alias("credits"),
-        )
-
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        frontier_ordered_join,
-        out_of_order_raise,
+    folded = fold_ordered(
+        touch_state,
+        b,
+        "attribution_fold_batch",
+        lambda prev: F.struct(
+            prev("last_us").cast("long").alias("lu"),
+            prev("last_t").cast("string").alias("lt"),
+            F.array().cast(_CREDITS_T).alias("credits"),
+        ),
+        step,
+        lambda acc, prev: [acc.alias("__f")],
     )
-
-    last = F.element_at("__a", F.size("__a"))
-    if touch_state is None:
-        folded = b.select(
-            "key",
-            F.aggregate("__a", acc0(F.lit(None), F.lit(None)), step)
-            .alias("__f"),
-            last["us"].alias("max_us"),
-            last["tb"].alias("max_tb"),
-        )
-    else:
-        s = touch_state.select(
-            "key",
-            F.col("last_us").alias("__slu"),
-            F.col("last_t").alias("__slt"),
-            F.col("max_us").alias("__su"),
-            F.col("max_tb").alias("__st"),
-        )
-        j, in_order = frontier_ordered_join(s, b)
-        folded = j.select(
-            "key",
-            F.when(
-                ~in_order,
-                out_of_order_raise("attribution_fold_batch")
-                .cast("struct<lu: bigint, lt: string,"
-                      " credits: array<struct<ch: string, cents: long>>>"),
-            ).otherwise(
-                F.aggregate(
-                    F.coalesce(F.col("__a"), F.array()),
-                    acc0(F.col("__slu"), F.col("__slt")),
-                    step,
-                )
-            ).alias("__f"),
-            F.coalesce(last["us"], F.col("__su")).alias("max_us"),
-            F.coalesce(last["tb"], F.col("__st")).alias("max_tb"),
-        )
     # folded feeds BOTH outputs (state + credit delta): truncate once so
     # the credit walk runs a single time (the twice-consumed-subtree
     # house rule) — this is also where an out-of-order raise surfaces.
@@ -356,8 +324,6 @@ def decay_attribution_fold_batch(
         batch, touch_types, conversion_type,
         key_col, type_col, ts_col, value_col, tiebreak_col,
     )
-    touches_t = "array<struct<us: bigint, tb: bigint, t: string>>"
-    credits_t = "array<struct<ch: string, cents: long>>"
 
     def w_of(e, t):
         # 2^(6 − min(age, 6)): exact in double for exponents 0..6, cast
@@ -408,51 +374,20 @@ def decay_attribution_fold_batch(
             ).otherwise(acc["credits"]).alias("credits"),
         )
 
-    def acc0(touches):
-        return F.struct(
-            touches.alias("touches"),
-            F.array().cast(credits_t).alias("credits"),
-        )
-
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        frontier_ordered_join,
-        out_of_order_raise,
+    folded = fold_ordered(
+        touch_state,
+        b,
+        "decay_attribution_fold_batch",
+        lambda prev: F.struct(
+            F.coalesce(
+                prev("touches"),
+                F.array().cast("array<struct<us: bigint, tb: bigint, t: string>>"),
+            ).alias("touches"),
+            F.array().cast(_CREDITS_T).alias("credits"),
+        ),
+        step,
+        lambda acc, prev: [acc.alias("__f")],
     )
-
-    last = F.element_at("__a", F.size("__a"))
-    if touch_state is None:
-        folded = b.select(
-            "key",
-            F.aggregate(
-                "__a", acc0(F.array().cast(touches_t)), step
-            ).alias("__f"),
-            last["us"].alias("max_us"),
-            last["tb"].alias("max_tb"),
-        )
-    else:
-        s = touch_state.select(
-            "key",
-            F.col("touches").alias("__stw"),
-            F.col("max_us").alias("__su"),
-            F.col("max_tb").alias("__st"),
-        )
-        j, in_order = frontier_ordered_join(s, b)
-        folded = j.select(
-            "key",
-            F.when(
-                ~in_order,
-                out_of_order_raise("decay_attribution_fold_batch")
-                .cast(f"struct<touches: {touches_t}, credits: {credits_t}>"),
-            ).otherwise(
-                F.aggregate(
-                    F.coalesce(F.col("__a"), F.array()),
-                    acc0(F.coalesce(F.col("__stw"), F.array().cast(touches_t))),
-                    step,
-                )
-            ).alias("__f"),
-            F.coalesce(last["us"], F.col("__su")).alias("max_us"),
-            F.coalesce(last["tb"], F.col("__st")).alias("max_tb"),
-        )
     folded = folded.localCheckpoint()  # twice-consumed + raise surfaces here
     new_state = folded.select(
         "key",

@@ -6,7 +6,8 @@ Two families of operator iterate in rounds:
   the skyline frontier, the incremental join): ``state = step(state,
   batch)`` over a list of batches. Each passes the SAME ``step`` its
   streaming twin hands to ``streaming/state.maintain``, so batch and
-  stream differ only in the driver, never in the fold;
+  stream differ only in the driver, never in the fold. The six ordered
+  folds' bodies are in turn one kernel, ``timeseries.fold_ordered``;
 - fixed-round graph and training loops (k-core, SSSP and BFS, Lloyd
   k-means): ``state = step(state, i)`` over ``range(n)``.
 

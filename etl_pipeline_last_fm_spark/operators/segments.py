@@ -16,6 +16,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, ts_us
+from etl_pipeline_last_fm_spark.operators.timeseries import (
+    _ema_batch_state,
+    _n_events,
+    fold_ordered,
+)
 
 
 def rfm_segments(
@@ -158,7 +163,7 @@ def time_weighted_avg(
     then a partial+final aggregate — no self-join, no global window.
 
     NULL value/key/ts rows are not observations (round-9 hostile nulls
-    sweep; same rule as the ordered-fold scaffold's batch state)."""
+    sweep; same rule as the ordered folds' batch state)."""
     events = events.where(
         F.col(value_col).isNotNull()
         & F.col(key_col).isNotNull()
@@ -228,11 +233,12 @@ def time_weighted_avg_oracle_sql(table: str = "events") -> str:
 # --- TWAP as ordered-fold IVM member #5 ---------------------------------
 # The LOCF integral is order-dependent (each event's cents hold until
 # the NEXT event), so its incremental maintenance rides the ordered-fold
-# scaffold (operators/timeseries.py): carried state = (n, first_us, num,
-# fold frontier + last cents), batches must arrive as time slices, and
-# the maintenance identity  fold(fold(s, A), B) == one-shot(A++B)  is
-# exact because the integral telescopes across the batch boundary
-# through the bridge segment last_cents * (batch_first_us - last_us).
+# kernel (operators/timeseries.fold_ordered): carried state = (n,
+# first_us, num, last cents, fold frontier), batches must arrive as time
+# slices, and the maintenance identity  fold(fold(s, A), B) ==
+# one-shot(A++B)  is exact because the integral telescopes across the
+# batch boundary through the bridge segment
+# last_cents * (batch_first_us - last_us).
 
 _DEC = "decimal(38,0)"
 
@@ -262,67 +268,30 @@ def twap_fold_batch(
     tiebreak_col: str = "event_id",
 ) -> DataFrame:
     """Fold one time-slice batch into per-key TWAP state
-    (key, n_events, first_us, num, last_us, last_tb, last_cents) —
-    ordered-fold member #5 on the shared scaffold
-    (``frontier_ordered_join`` — same delivery contract, same
-    out-of-order raise, same array_sort order recovery as the
-    EMA/CUSUM/attribution members). ``num`` is the running LOCF
+    (key, n_events, first_us, num, last_cents, last_us, last_tb) —
+    ordered-fold member #5 on the shared kernel (``fold_ordered``: same
+    delivery contract, same out-of-order raise, same array_sort order
+    recovery as the EMA/CUSUM/Holt/attribution members), with the
+    frontier kept as (last_us, last_tb). ``num`` is the running LOCF
     integral Σ cents·Δµs in decimal(38,0) (the one-shot operator's
     exact arithmetic)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        _ema_batch_state,
-        frontier_ordered_join,
-        out_of_order_raise,
-    )
-
-    b = _ema_batch_state(batch, key_col, ts_col, value_col, tiebreak_col)
-    last = F.element_at("__a", F.size("__a"))
-    first = F.col("__a")[0]
-    if state is None:
-        init = F.struct(
-            F.lit(0).cast(_DEC).alias("num"),
-            F.lit(None).cast("long").alias("lu"),
-            F.lit(None).cast("long").alias("lv"),
-        )
-        folded = F.aggregate("__a", init, _twap_step)
-        return b.select(
-            "key",
-            F.size("__a").cast("long").alias("n_events"),
-            first["us"].alias("first_us"),
-            folded["num"].alias("num"),
-            last["us"].alias("last_us"),
-            last["tb"].alias("last_tb"),
-            last["v"].alias("last_cents"),
-        )
-    s = state.select(
-        "key",
-        F.col("n_events").alias("__sn"),
-        F.col("first_us").alias("__sf"),
-        F.col("num").alias("__snum"),
-        F.col("last_us").alias("__su"),
-        F.col("last_tb").alias("__st"),
-        F.col("last_cents").alias("__sv"),
-    )
-    j, in_order = frontier_ordered_join(s, b)
-    init = F.struct(
-        F.coalesce(F.col("__snum"), F.lit(0).cast(_DEC)).cast(_DEC).alias("num"),
-        F.col("__su").cast("long").alias("lu"),
-        F.col("__sv").cast("long").alias("lv"),
-    )
-    folded = F.aggregate(F.coalesce(F.col("__a"), F.array()), init, _twap_step)
-    return j.select(
-        "key",
-        (
-            F.coalesce(F.col("__sn"), F.lit(0).cast("long"))
-            + F.coalesce(F.size("__a").cast("long"), F.lit(0).cast("long"))
-        ).alias("n_events"),
-        F.coalesce(F.col("__sf"), first["us"]).alias("first_us"),
-        F.when(
-            ~in_order, out_of_order_raise("twap_fold_batch").cast(_DEC)
-        ).otherwise(folded["num"]).alias("num"),
-        F.coalesce(last["us"], F.col("__su")).alias("last_us"),
-        F.coalesce(last["tb"], F.col("__st")).alias("last_tb"),
-        F.coalesce(last["v"], F.col("__sv")).alias("last_cents"),
+    return fold_ordered(
+        state,
+        _ema_batch_state(batch, key_col, ts_col, value_col, tiebreak_col),
+        "twap_fold_batch",
+        lambda prev: F.struct(
+            F.coalesce(prev("num"), F.lit(0).cast(_DEC)).cast(_DEC).alias("num"),
+            prev("last_us").cast("long").alias("lu"),
+            prev("last_cents").cast("long").alias("lv"),
+        ),
+        _twap_step,
+        lambda acc, prev: [
+            _n_events(prev),
+            F.coalesce(prev("first_us"), F.col("__a")[0]["us"]).alias("first_us"),
+            acc["num"].alias("num"),
+            acc["lv"].alias("last_cents"),
+        ],
+        frontier=("last_us", "last_tb"),
     )
 
 

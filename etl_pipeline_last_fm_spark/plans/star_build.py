@@ -16,8 +16,7 @@ Appendix A.1 (zero-duration fact-row loss): the reference joins the fact on
 the RAW ODS duration while dim_song stores the IMPUTED duration
 (dags/from_ods_to_dds_pg.py:98 vs :74-77), silently dropping zero-duration
 chart rows. This engine FIXES the bug — the fact build joins on the imputed
-duration on both sides — and exposes ``replicate_zero_duration_loss=True``
-for bit-parity with the reference when wanted.
+duration on both sides.
 """
 
 from __future__ import annotations
@@ -123,7 +122,6 @@ def build_fact(
     dims: DdsDims,
     run_date: str | Date,
     existing_fact: DataFrame | None = None,
-    replicate_zero_duration_loss: bool = False,
 ) -> DataFrame:
     """The fact delta of the ``run_date`` rows of ``ods``, looked up
     against ``dims`` (in the pipeline: the committed snapshot, so it joins
@@ -136,22 +134,13 @@ def build_fact(
     day = F.lit(str(run_date))
     ods = ods.filter(F.col("source_date") == day)
     # --- fact (J1-J3 star join + U5) ---
-    if replicate_zero_duration_loss:
-        # Reference behavior: join on RAW duration (rows with duration 0
-        # silently vanish — Appendix A.1).
-        fact_src = ods.withColumn("join_duration", F.col("duration_sec"))
-    else:
-        fact_src = _impute_duration(ods).withColumn(
-            "join_duration", F.col("duration_imputed")
-        )
-
     song_side = dims.dim_song.select(
         "song_id",
         F.col("song_name").alias("__song_name"),
         F.col("duration_sec").alias("__song_duration"),
     )
     joined = star_join(
-        fact_src,
+        _impute_duration(ods),
         [(dims.dim_artist, "artist_name")],
     ).join(
         # J2 composite key; null-safe on duration so an all-sentinel day
@@ -162,7 +151,7 @@ def build_fact(
         # when it actually fits.
         song_side,
         (F.col("song_name") == F.col("__song_name"))
-        & F.col("join_duration").eqNullSafe(F.col("__song_duration")),
+        & F.col("duration_imputed").eqNullSafe(F.col("__song_duration")),
         "inner",
     ).drop("__song_name", "__song_duration").join(
         # J3 has mismatched key names (dc.country_name = dr.country,

@@ -4,9 +4,9 @@ only implements.
 - ``holt_smooth`` / ``holt_fold`` / ``streaming_holt``: Holt linear
   (double-exponential) smoothing — order-dependent IVM member #6, the
   first whose carried numeric state is a 2-vector (level, trend). Exact
-  integer trajectory at α = β = ½; the fold and streaming twins ride the
-  shared scaffold and single-state versioned-commit protocol, and the
-  one-shot is their oracle (the maintenance identity).
+  integer trajectory at α = β = ½; all three are the one Holt fold (the
+  one-shot from no state, the twins over time slices under the round and
+  stream drivers), and the DuckDB recursive CTE is the oracle of each.
 - ``clustering_coefficient``: per-node local clustering coefficient on
   the SAME 1996 co-purchase graph as the link-prediction entries —
   the node-level refinement of the global triangle census.

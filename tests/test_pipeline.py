@@ -245,6 +245,30 @@ def test_streaming_pipeline_rerun_is_noop(spark, warehouse, warehouse_streaming)
         assert _mart_rows(spark, warehouse_streaming, name) == before[name], name
 
 
+def test_cli_stream_shares_the_pipeline_ingest_checkpoint(spark, tmp_path, monkeypatch):
+    """The CLI ``stream`` command and ``run_pipeline_streaming`` run the
+    same raw -> ODS stream, so they share its checkpoint: files the CLI
+    ingested are not read again by the pipeline's stream."""
+    from etl_pipeline_last_fm_spark.__main__ import main
+    from etl_pipeline_last_fm_spark.pipeline import stream_raw_to_ods_pipeline
+
+    # main() fetches the session through get_spark, which re-applies the
+    # engine's shuffle default to this shared test session.
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    root = str(tmp_path / "wh_cli")
+    assert main(["ingest-sample", "--warehouse", root, "--date", D1]) == 0
+    assert main(["stream", "--warehouse", root]) == 0
+    wh = Warehouse(root)
+    ods_rows = spark.read.parquet(wh.ods).count()
+    assert ods_rows > 0
+    q = stream_raw_to_ods_pipeline(spark, wh)
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 0
+    assert spark.read.parquet(wh.ods).count() == ods_rows
+
+
 def test_pipeline_accepts_file_uri_root(spark, warehouse, tmp_path):
     """Every warehouse read probes through the Hadoop FS API, so a
     scheme-qualified root (file://, as s3a:// would be) runs the same

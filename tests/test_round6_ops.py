@@ -287,17 +287,45 @@ def test_ema_fold_batches_equal_one_shot(spark):
     assert folded == one_shot and len(folded) == 2
 
 
-def test_ema_fold_raises_on_out_of_order_batch(spark):
-    """A batch at or before a key's fold frontier must FAIL LOUD — the
-    non-commutative fold can't absorb late data silently."""
-    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
-    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
+def _ordered_fold(name):
+    """(step, present) of one order-dependent fold, as its registry
+    queries pair them."""
+    from etl_pipeline_last_fm_spark.operators import attribution as at
+    from etl_pipeline_last_fm_spark.operators import segments as sg
+    from etl_pipeline_last_fm_spark.operators import timeseries as ts
+    from etl_pipeline_last_fm_spark.registry import round7 as r7
 
+    return {
+        "ema": (ts.ema_fold_batch, ts.present_ema_state),
+        "cusum": (r7._cusum_step, ts.present_cusum_state),
+        "holt": (ts.holt_fold_batch, ts.present_holt_state),
+        "twap": (sg.twap_fold_batch, sg.present_twap_state),
+        "attribution": (
+            at.attribution_step(), lambda parts: r7._present_last_touch(parts[-1])
+        ),
+        "attribution_decay": (
+            at.attribution_step(at.decay_attribution_fold_batch),
+            lambda parts: r7._present_decay(parts[-1]),
+        ),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "fold", ["ema", "cusum", "holt", "twap", "attribution", "attribution_decay"]
+)
+def test_ordered_fold_raises_on_out_of_order_batch(spark, fold):
+    """A batch at or before a key's fold frontier must FAIL LOUD — a
+    non-commutative fold can't absorb late data silently. Each fold runs
+    as its registry queries run it: the round driver, then the
+    presentation of the graded columns."""
+    from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
+
+    step, present = _ordered_fold(fold)
     ev = _events(spark, {1: ["view"] * 4})
     cut = datetime(2024, 1, 1, 0, 1, 30)
     late_then_early = [ev.filter(F.col("ts") >= cut), ev.filter(F.col("ts") < cut)]
     with pytest.raises(Exception, match="out-of-order"):
-        fold_rounds(ema_fold_batch, late_then_early).collect()
+        present(fold_rounds(step, late_then_early)).collect()
 
 
 def test_trend_fit_recovers_exact_linear_slope(spark):

@@ -3,9 +3,10 @@
 - holt_linear == a pure-Python (level, trend) walk with truncating
   division (the recurrence the engines fold in codegen / recursive CTE)
 - holt_fold: the maintenance identity holds for ANY ascending time split
-  (hypothesis), out-of-order batches raise, and the streaming twin rides
-  the single-state versioned-commit protocol (identity, replay no-op,
-  raise without commit)
+  (hypothesis), and the streaming twin rides the single-state
+  versioned-commit protocol (identity, replay no-op, raise without
+  commit); the batch fold's out-of-order raise is one case of
+  test_round6_ops::test_ordered_fold_raises_on_out_of_order_batch
 - durbin_watson == the pure-Python integer closed form
 - clustering_coefficients == hand-computed values on a known graph
 - skyline_2d == the brute-force dominance definition, for EVERY bucket
@@ -119,16 +120,6 @@ def _want_holt(spark, slices):
     for s in slices[1:]:
         union = union.unionByName(s)
     return sorted(map(tuple, holt_linear(union).collect()))
-
-
-def test_holt_fold_out_of_order_raises(spark):
-    from etl_pipeline_last_fm_spark.operators.timeseries import holt_fold_batch
-
-    slices = _holt_slices(spark)
-    state = holt_fold_batch(None, slices[0]).localCheckpoint()
-    stale = _ev(spark, [(1, 9, 1, 99.0)])  # at/before user 1's frontier
-    with pytest.raises(Exception, match="out-of-order"):
-        holt_fold_batch(state, stale).collect()
 
 
 def test_holt_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
