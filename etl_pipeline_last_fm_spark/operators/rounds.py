@@ -17,8 +17,13 @@ or three times (carry + relax, the semi-join source plus both survivor
 branches, the fold join plus the frontier), so an uncut loop builds a
 2^n / 3^n-copy plan — exponential analysis and execution. A tuple state
 (the join's a/b/m, attribution's key state and channel totals) is cut
-part by part. An initial state is cut once, before the first round, so
-``n = 0`` returns the round-0 state, as each oracle's ``x0`` CTE does.
+part by part. A part that only projects or filters a frame the step
+already cut is left as it is: attribution's key state is a projection of
+the folded frame its fold cuts (the frame also feeds the credit delta),
+and cutting it again would cost one job per round (attribution_fold and
+attribution_decay_fold at sf0.01: 17 jobs, not 20). An initial state is cut
+once, before the first round, so ``n = 0`` returns the round-0 state, as
+each oracle's ``x0`` CTE does.
 
 Loops that stay outside on purpose:
 
@@ -39,10 +44,22 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 
+def _is_cut(df) -> bool:
+    """True when ``df`` only projects or filters one checkpointed frame,
+    with no subquery. Its lineage is already short, so cutting it again
+    would be a job that copies rows and shortens nothing."""
+    node = df._jdf.queryExecution().analyzed()
+    if not node.subqueriesAll().isEmpty():
+        return False
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    return node.nodeName() == "LogicalRDD" and node.rdd().isCheckpointed()
+
+
 def _cut(state):
     if isinstance(state, tuple):
-        return tuple(part.localCheckpoint() for part in state)
-    return state.localCheckpoint()
+        return tuple(_cut(part) for part in state)
+    return state if _is_cut(state) else state.localCheckpoint()
 
 
 def fold_rounds(step: Callable, inputs: Iterable, state=None):

@@ -222,13 +222,69 @@ def _mart_rows(spark, wh, name):
 
 def test_streaming_pipeline_equals_batch(spark, warehouse, warehouse_streaming):
     """The streaming DM path must equal the batch rebuild ROW FOR ROW,
-    doubles included: the centi-unit state sum is 100*SUM exactly (integer
-    inputs), and IEEE division of the same true rational rounds identically
-    however it is written (s/(100c) vs S/c) — so no approx() here."""
+    doubles included: both paths present the same additive states with one
+    expression per mart (plans/marts.present_marts), so no approx() here."""
     for name in _MART_COLS:
         assert _mart_rows(spark, warehouse_streaming, name) == _mart_rows(
             spark, warehouse, name
         ), name
+
+
+def test_streaming_dm_state_format_is_pinned(spark, warehouse_streaming):
+    """A warehouse streamed by an earlier version keeps folding, so the
+    committed dm_state format must not move: ``(date, <id>, s, c)`` with
+    longs for the id, ``s`` and ``c``, and the listeners ``s`` in
+    centi-units, 100 × SUM(listeners_count) per (date, artist_id)."""
+    from pyspark.sql.types import DateType, LongType
+
+    from etl_pipeline_last_fm_spark.streaming.state import read_state
+
+    root = os.path.join(warehouse_streaming.root, "dm_state")
+    states = {
+        "listeners_by_date_artist": "artist_id",
+        "duration_by_date_country": "country_id",
+    }
+    for name, key in states.items():
+        fields = read_state(spark, os.path.join(root, name)).schema.fields
+        assert [(f.name, f.dataType) for f in fields] == [
+            ("date", DateType()), (key, LongType()), ("s", LongType()), ("c", LongType())
+        ], name
+    listeners = read_state(spark, os.path.join(root, "listeners_by_date_artist"))
+    expected = (
+        load_dds(spark, warehouse_streaming).fact.groupBy("date", "artist_id")
+        .agg((F.sum("listeners_count") * 100).alias("s"))
+    )
+    assert sorted(map(tuple, listeners.select("date", "artist_id", "s").collect())) == sorted(
+        map(tuple, expected.collect())
+    )
+
+
+def test_null_listeners_give_null_royalties_on_both_dm_paths(spark, tmp_path):
+    """A chart row whose listeners do not parse ("n/a" -> NULL, README
+    deviation 4) still counts as an appearance, and its artist's royalties
+    are NULL, as SQL SUM over only NULLs is. The batch and the streaming DM
+    path agree, row for row."""
+    from etl_pipeline_last_fm_spark.pipeline import run_pipeline_streaming
+
+    chart = [_track("Quiet", "N1", 120, "n/a", 1), _track("Loud", "L1", 180, 900, 2)]
+
+    def fetch(country):
+        return {"tracks": {"track": chart, "@attr": {"country": country}}}
+
+    whs = []
+    for name, run in (("batch", run_pipeline), ("streaming", run_pipeline_streaming)):
+        wh = Warehouse(str(tmp_path / name))
+        write_raw_chart(fetch_charts(spark, D1, countries=["Testland"], fetch_fn=fetch), wh.raw)
+        run(spark, wh.root, D1)
+        whs.append(wh)
+    for wh in whs:
+        app = dict(r[1:] for r in _mart_rows(spark, wh, "artist_appearances_by_date"))
+        roy = dict(r[1:] for r in _mart_rows(spark, wh, "expected_artist_royalties_by_date"))
+        assert app == {"N1": 1, "L1": 1}, wh.root
+        assert roy["N1"] is None, wh.root
+        assert roy["L1"] == pytest.approx(900 * 0.003), wh.root
+    for name in _MART_COLS:
+        assert _mart_rows(spark, whs[1], name) == _mart_rows(spark, whs[0], name), name
 
 
 def test_streaming_pipeline_rerun_is_noop(spark, warehouse, warehouse_streaming):
