@@ -1,16 +1,17 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query smoke check at sf0.001.
-``queries()`` — one entry per implemented operator from SURVEY.md §2 plus the
-extension operators (dedup / similarity / text analysis). Each callable takes
-(spark, sf_dir) and returns a DataFrame.
-``oracle_sql()`` — DuckDB-runnable ANSI SQL equivalent for EVERY query:
-201/201 oracle-paired (same column names; computed columns aliased on both
-sides). The last rows-only entry closed in round 6 — ``sim_ann_ivf`` now
-trains its centroids with the relational Lloyd program, so its oracle
-replays the training itself (``kmeans_lloyd_cte_sql``); minhash-LSH,
-simhash and ANN-LSH are value-checked via portable md5-derived hashes and
-seed-deterministic plane literals.
+``queries()`` — every graded query, name -> callable (spark, sf_dir) ->
+DataFrame: the SURVEY.md §2 operators plus the extension operators (dedup /
+similarity / text analysis / eval metrics).
+``oracle_sql()`` — DuckDB-runnable ANSI SQL for EVERY query: 205/205
+oracle-paired (same column names; computed columns aliased on both sides).
+Minhash-LSH, simhash and ANN-LSH are value-checked via portable md5-derived
+hashes and seed-deterministic plane literals; ``sim_ann_ivf``'s oracle
+replays its relational Lloyd training (``kmeans_lloyd_cte_sql``).
+
+Both maps come from ``grading.SPECS``, one spec per query; only the graded
+order is kept here.
 
 Float-parity strategy (SURVEY.md Appendix A.2/A.3): every derived double is
 rounded with the engine-independent floor trick ``floor(x*10^s + 0.5)/10^s``
@@ -32,60 +33,32 @@ if _REPO_DIR not in sys.path:
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pipeline_last_fm_spark.registry import (
-    core,
-    extras,
-    llm,
-    round5,
-    round6,
-    round7,
-    round7c,
-    round8,
-)
+from grading import SPECS
+from grading.warehouse import q_flagship_royalties
 
 SF001 = "/root/testdata/sf0.001"
-
-# One flat name -> callable map; tier modules own the implementations
-# (registry/{core,llm,extras,round5}.py — split out in round 5 so window
-# rotations stop churning a 3.5k-line file).
-_ALL = {
-    **core.QUERIES,
-    **llm.QUERIES,
-    **extras.QUERIES,
-    **round5.QUERIES,
-    **round6.QUERIES,
-    **round7.QUERIES,
-    **round7c.QUERIES,
-    **round8.QUERIES,
-}
-
-# Back-compat: tests and tooling address queries as module attributes
-# (__spark_entry__.q_<name>); every registered query keeps that name here.
-for _n, _fn in _ALL.items():
-    globals()[f"q_{_n}"] = _fn
-del _n, _fn
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the royalties mart re-expressed over the TPC-H-ish star
     (reference dags/from_dds_to_dm_pg.py:73-79) — 3-way join + groupBy +
     sum*rate + round + order. Exercises every layer of the engine."""
-    return core.q_flagship_royalties(spark, SF001)
+    return q_flagship_royalties(spark, SF001)
 
 
-#: Round-14 graded window (VERDICT r13 item 1 — certify the r13/r14
-#: rewrites through the driver): 9 rotation-invariant headliners; the
-#: complete 9-entry r7-vintage freshness backlog (mixture_sample first,
-#: as the r12 past-cap line pinned); the 7 operators whose r13 rewrites
-#: were outside the r13 window (pagerank, pagerank_weighted,
-#: triangle_count, the seeded PQ/IVF-PQ family) plus
-#: embedding_cosine_dedup (kept in-window — its blocked scorer changed in
-#: r13 and changes again follow the same shared hoists); the 5 operators
-#: this round's optimization targets touch (the dedup mid-tier +
-#: link_prediction, whose r13 wedge clustering re-attests here); and the
-#: 20 oldest r8-vintage entries in line order. After this rotation the
-#: oldest ungraded driver row is r8-vintage.
-GRADED_WINDOW_R14 = [
+#: The pinned head of ``queries()``; every other query follows in spec
+#: order. The first 50 are the round-14 graded window (VERDICT r13 item 1
+#: — certify the r13/r14 rewrites through the driver): 9
+#: rotation-invariant headliners; the complete 9-entry r7-vintage
+#: freshness backlog (mixture_sample first, as the r12 past-cap line
+#: pinned); the 7 operators whose r13 rewrites were outside the r13 window
+#: (pagerank, pagerank_weighted, triangle_count, the seeded PQ/IVF-PQ
+#: family) plus embedding_cosine_dedup (kept in-window — its blocked
+#: scorer changed in r13 and changes again follow the same shared
+#: hoists); the 5 operators this round's optimization targets touch (the
+#: dedup mid-tier + link_prediction, whose r13 wedge clustering re-attests
+#: here); and the 20 oldest r8-vintage entries in line order.
+PINNED = [
     "flagship_royalties",
     "pricing_summary",
     "star_join",
@@ -136,199 +109,25 @@ GRADED_WINDOW_R14 = [
     "rank_sum_test",
     "scd2_history",
     "expectations",
-]
-
-#: Past the 50-entry cap: every entry keeps its green driver row and runs
-#: in tests/test_oracle_parity.py at sf0.001 every pytest run. Line order
-#: for the round-15 rotation: longest-unexercised first — the 4 remaining
-#: r8-vintage entries, the r9 tier, the r10 tier, the round-11 demotions
-#: (each minus the entries promoted into the r14 window above), and LAST
-#: the 38 entries demoted from the round-12 window (graded most
-#: recently, r13).
-PAST_CAP_LINE_R14 = [
+    # Past the 50-entry cap: the 4 r8-vintage entries the r14 window left
+    # out head the round-15 rotation. Everything past the cap keeps its
+    # green driver row and runs in tests/test_oracle_parity.py at sf0.001.
     "hll_vocab",
     "embedding_cosine_pairs",
     "embedding_keep_list",
     "stratified_sample",
-    "roc_auc",
-    "streaming_roc_auc",
-    "calibration_bins",
-    "calibration_ece",
-    "pr_curve",
-    "isotonic_calibration",
-    "label_agreement",
-    "mann_kendall",
-    "lift_deciles",
-    "bpe_pair_counts",
-    "vocab_coverage",
-    "scd2_as_of",
-    "group_split",
-    "curation_funnel",
-    "quantile_buckets",
-    "histogram",
-    "chunk_documents",
-    "repetition",
-    "zorder_key",
-    "weighted_sample",
-    "mart_incremental",
-    "supplier_balance",
-    "lm_score",
-    "sim_ann_ivf_recall",
-    "sim_ann_pq_recall",
-    "grouping_sets",
-    "kmv_quantiles",
-    "bloom_prune_join",
-    "outlier_mad",
-    "kmv_set_ops",
-    "dedup_sorted_neighborhood",
-    "cohort_retention",
-    "regional_revenue",
-    "shipping_priority",
-    "kcore",
-    "disjunctive_predicates",
-    "rank_metrics",
-    "unpivot_metrics",
-    "bpe_train",
-    "mart_daily_avg",
-    "salted_agg",
-    "cube_agg",
-    "pivot_conditional",
-    "rolling_stats",
-    "scalar_subquery",
-    "window_analytic",
-    "date_partition_agg",
-    "rollup_agg",
-    "pivot_native",
-    "shipmode_priority",
-    "ema_decay",
-    "ema_fold",
-    "cusum",
-    "tumbling_window",
-    "streaming_ema",
-    "cusum_fold",
-    "streaming_cusum",
-    "rfm_segments",
-    "time_weighted_avg",
-    "twap_fold",
-    "streaming_twap",
-    "holt_smooth",
-    "holt_fold",
-    "streaming_holt",
-    "skyline_parts",
-    "revenue_gini",
-    "skyline_fold",
-    "streaming_skyline",
-    "profile_columns",
-    "gapfill_locf",
-    "hopping_window",
-    "session_window_native",
-    "table_checksum",
-    "except_all",
-    "mode_per_group",
-    "relational_division",
-    "order_distribution",
-    "small_qty_revenue",
-    "top_volume_orders",
-    "corpus_drift",
-    "inverted_index",
-    "merge_upsert",
-    "set_ops",
-    "session_transitions",
-    "label_centroids",
-    "key_skew_profile",
-    "nation_trade_volume",
-    "market_share",
-    "epoch_shuffle",
-    "render_packs",
-    "market_basket",
-    "label_propagation",
-    "bfs_hops",
-    "kmv_expr",
-    "kmeans_train",
-    "sole_late_supplier",
-    "priority_promises",
-    "important_parts",
-    "supplier_part_counts",
-    "idle_customers",
-    "sssp",
-    "event_pattern",
-    "incremental_join",
-    "streaming_join",
-    "order_limit",
-    "dedup_passages",
-    "cdc_compact",
-    "lang_id",
-    "snapshot_diff",
-    "surrogate_keys_incremental",
-    "percentiles",
-    "semi_join",
-    "surrogate_keys",
-    "outer_join_agg",
-    "token_count",
-    "text_fingerprint",
-    "sim_ann_lsh_multiprobe",
-    "sim_ann_ivf",
-    "dedup_exact",
-    "text_quality",
-    "pii_scrub",
-    "distinct_project",
-    "case_impute",
-    "union_all",
-    "json_extract",
-    "mart_daily_appearances",
-    "explode_tokens",
-    "event_pattern_measures",
-    "forecast_revenue",
-    "top_supplier",
-    "returned_revenue",
-    "promo_revenue",
-    "min_cost_supplier",
-    "product_profit",
-    "dominant_suppliers",
-    "attribution",
-    "trend_fit",
-    "collocations",
-    "session_concurrency",
-    "contingency_chi2",
-    "hashed_features",
-    "lead_lag",
-    "range_join",
-    "funnel",
-    "hll_distinct",
-    "dedup_simhash",
-    "sim_ann_lsh",
-    "tfidf",
-    "top_ngrams",
-    "split_assign",
-    "streaming_mart_fold",
 ]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering contract: the grading driver checks the FIRST 50 entries
     # only, and dict order IS the contract. The graded prefix is PINNED by
-    # tests/test_graded_window.py — edit GRADED_WINDOW_R14 and that list
-    # together, deliberately, once per rotation.
-    # Rotation-invariant set (must stay resolvable by name for bench.py
-    # and stays in-window as the flagship tier): pricing_summary,
-    # flagship_royalties, star_join, windowed_top_k, idempotent_append,
-    # dedup_ngram_jaccard, sim_bruteforce, dedup_minhash_lsh, sessionize.
-    out = {n: _ALL[n] for n in GRADED_WINDOW_R14 + PAST_CAP_LINE_R14}
-    assert len(out) == len(GRADED_WINDOW_R14) + len(PAST_CAP_LINE_R14)
-    assert set(out) == set(_ALL), (
-        sorted(set(out) ^ set(_ALL))  # ordering lists and tier modules agree
-    )
-    return out
+    # tests/test_graded_window.py — edit PINNED and that list together,
+    # deliberately, once per rotation. The 9 rotation-invariant headliners
+    # (bench.HEADLINE) lead it.
+    built = {spec.name: spec.build for spec in SPECS}
+    return {**{name: built[name] for name in PINNED}, **built}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        **core.oracles(),
-        **llm.oracles(),
-        **extras.oracles(),
-        **round5.oracles(),
-        **round6.oracles(),
-        **round7.oracles(),
-        **round7c.oracles(),
-        **round8.oracles(),
-    }
+    return {spec.name: spec.oracle for spec in SPECS}

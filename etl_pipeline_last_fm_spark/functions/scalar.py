@@ -90,15 +90,10 @@ def portable_hash60(col: Column) -> Column:
     This is the cross-engine-verifiable hash family: production paths keep
     ``xxhash64`` (JVM intrinsic, ~10x cheaper than md5), and the
     oracle-paired query entries use this so DuckDB can recompute the exact
-    same signatures (see ``portable_hash60_sql``). Same algorithm, different
+    same signatures (see ``grading.spec.portable_hash60_sql``). Same algorithm, different
     hash constant — the verification covers the operator, not the digest.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def portable_hash60_sql(expr: str) -> str:
-    """DuckDB twin of ``portable_hash60`` for an arbitrary SQL expression."""
-    return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
 
 
 def cosine_similarity_expr(a: Column, b: Column) -> Column:

@@ -138,50 +138,3 @@ def time_range_join(
         .filter((gap >= 0) & (gap <= max_gap_us))
         .select(F.col("k").alias(key_col), "a_id", "b_id", gap.alias("gap_us"))
     )
-
-
-def asof_join_oracle_sql(
-    left_type: str, right_type: str, tolerance_us: int | None = None
-) -> str:
-    """DuckDB twin of the events-table as-of query: native ASOF JOIN (an
-    independent implementation — binary-search per probe — which makes it a
-    strong oracle for the window-LOCF plan). Right side pre-aggregated to
-    unique (user_id, ts) exactly as the Spark entry does."""
-    tol = f"AND us - rus <= {tolerance_us}" if tolerance_us is not None else ""
-    # ASOF JOIN can't also carry a tolerance predicate portably; apply it as
-    # a post-filter that nulls the match (LEFT semantics preserved).
-    return f"""
-        WITH l AS (
-            SELECT event_id, user_id, epoch_us(ts) AS us, value
-            FROM events WHERE event_type = '{left_type}'
-        ),
-        r AS (
-            SELECT user_id, epoch_us(ts) AS us,
-                   FLOOR(MAX(value) * 100.0 + 0.5) / 100.0 AS rv
-            FROM events WHERE event_type = '{right_type}'
-            GROUP BY user_id, epoch_us(ts)
-        ),
-        m AS (
-            SELECT l.event_id, l.user_id, l.us, r.rv, r.us AS rus
-            FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.us >= r.us
-        )
-        SELECT event_id, user_id, us AS click_us,
-               CASE WHEN rus IS NOT NULL {tol} THEN rv END AS matched_rv,
-               CASE WHEN rus IS NOT NULL {tol} THEN rus END AS matched_ts_us
-        FROM m
-    """
-
-
-def time_range_join_oracle_sql(a_type: str, b_type: str, max_gap_us: int) -> str:
-    """DuckDB twin of the events-table range-join query: the plain BETWEEN
-    theta-join (fine at oracle SF; the Spark side is the bucketed form)."""
-    return f"""
-        WITH a AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-                   WHERE event_type = '{a_type}'),
-             b AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-                   WHERE event_type = '{b_type}')
-        SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
-               b.us - a.us AS gap_us
-        FROM a JOIN b ON a.user_id = b.user_id
-                      AND b.us - a.us BETWEEN 0 AND {max_gap_us}
-    """

@@ -409,81 +409,3 @@ def decay_attribution_fold_batch(
         )
     )
     return new_state, delta
-
-
-def time_decay_attribution_oracle_sql(
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    table: str = "events",
-) -> str:
-    """DuckDB twin: identical pair build, clamped power-of-two weights,
-    truncating per-touch division (BIGINT // HUGEINT window sum — cast
-    back to BIGINT at the boundary, house rule)."""
-    in_list = ", ".join(f"'{t}'" for t in touch_types)
-    return f"""
-        WITH conv AS (
-            SELECT user_id, event_id AS cid, epoch_us(ts) AS cus,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
-            FROM {table} WHERE event_type = '{conversion_type}'
-        ), touch AS (
-            SELECT user_id, event_type AS tt, epoch_us(ts) AS tus,
-                   event_id AS ttb
-            FROM {table} WHERE event_type IN ({in_list})
-        ), pairs AS (
-            SELECT c.user_id, c.cid, c.cents, t.tt,
-                   CASE WHEN t.tus IS NOT NULL THEN CAST(
-                       1 << CAST(6 - LEAST((c.cus - t.tus) // 86400000000, 6)
-                                 AS INTEGER) AS BIGINT) END AS w
-            FROM conv c LEFT JOIN touch t
-              ON c.user_id = t.user_id
-             AND (t.tus < c.cus OR (t.tus = c.cus AND t.ttb < c.cid))
-             AND c.cus - t.tus <= {window_us}
-        ), tot AS (
-            SELECT *, SUM(w) OVER (PARTITION BY user_id, cid) AS tw
-            FROM pairs
-        )
-        SELECT COALESCE(tt, 'none') AS channel,
-               CAST(COUNT(*) AS BIGINT) AS n_credited_touches,
-               CAST(SUM(CASE WHEN w IS NULL THEN cents
-                             ELSE CAST((cents * w) // tw AS BIGINT) END)
-                    AS BIGINT) AS credited_cents
-        FROM tot
-        GROUP BY 1
-    """
-
-
-def last_touch_attribution_oracle_sql(
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    table: str = "events",
-) -> str:
-    """DuckDB twin: last_value(... IGNORE NULLS) over the identical
-    frame, same in-window/else-'none' credit rule."""
-    in_list = ", ".join(f"'{t}'" for t in touch_types)
-    return f"""
-        WITH tagged AS (
-            SELECT event_type,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
-                   epoch_us(ts) AS us,
-                   last_value(
-                       CASE WHEN event_type IN ({in_list})
-                            THEN struct_pack(us := epoch_us(ts),
-                                             t := event_type) END
-                       IGNORE NULLS
-                   ) OVER (
-                       PARTITION BY user_id
-                       ORDER BY epoch_us(ts), event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ) AS lt
-            FROM {table}
-        )
-        SELECT CASE WHEN lt IS NOT NULL AND us - lt.us <= {window_us}
-                    THEN lt.t ELSE 'none' END AS channel,
-               CAST(COUNT(*) AS BIGINT) AS n_conversions,
-               CAST(SUM(cents) AS BIGINT) AS attributed_cents
-        FROM tagged
-        WHERE event_type = '{conversion_type}'
-        GROUP BY 1
-    """

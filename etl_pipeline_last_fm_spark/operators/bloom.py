@@ -31,10 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    portable_hash60,
-    portable_hash60_sql,
-)
+from etl_pipeline_last_fm_spark.functions.scalar import portable_hash60
 
 WORD_BITS = 32  # 32-bit lanes in BIGINT words: 1 << bit <= 2^31, no sign play
 
@@ -160,61 +157,3 @@ def bloom_prune_join_stats(
             "n_true_match"
         ),
     )
-
-
-def bloom_positions_sql(key_expr: str, m_bits: int, k: int, salt: str) -> list[str]:
-    out = []
-    for j in range(k):
-        hashed = portable_hash60_sql(
-            f"'{salt}:{j}:' || CAST({key_expr} AS VARCHAR)"
-        )
-        out.append(f"(({hashed}) % {m_bits})")
-    return out
-
-
-def bloom_prune_join_stats_oracle_sql(
-    fact_table: str,
-    fact_key: str,
-    dim_sql: str,
-    dim_key: str,
-    group_col: str,
-    m_bits: int = 4096,
-    k: int = 4,
-    salt: str = "bloom1",
-) -> str:
-    """DuckDB twin: build the identical word array relationally (list() over
-    the bit_or groups), probe with the identical positions. ``dim_sql`` is
-    a SELECT producing the dimension key set."""
-    probe_parts = []
-    for p in bloom_positions_sql(f"f.{fact_key}", m_bits, k, salt):
-        probe_parts.append(
-            f"(COALESCE(w.words[CAST({p} // {WORD_BITS} AS INT) + 1], 0)"
-            f" & (1::BIGINT << CAST({p} % {WORD_BITS} AS INT))) != 0"
-        )
-    probe = " AND ".join(probe_parts)
-    pos_rows = " UNION ALL ".join(
-        f"SELECT {p} AS pos FROM dimkeys"
-        for p in bloom_positions_sql(f"{dim_key}", m_bits, k, salt)
-    )
-    return f"""
-        WITH dimkeys AS ({dim_sql}),
-        bits AS (
-            SELECT CAST(pos // {WORD_BITS} AS INT) AS widx,
-                   bit_or(1::BIGINT << CAST(pos % {WORD_BITS} AS INT)) AS word
-            FROM ({pos_rows}) GROUP BY 1
-        ),
-        -- dense zero-filled word array, exactly like the Spark literal
-        w AS (
-            SELECT list(COALESCE(word, 0) ORDER BY i) AS words
-            FROM range({m_bits // WORD_BITS}) r(i)
-            LEFT JOIN bits ON bits.widx = r.i
-        ),
-        passed AS (
-            SELECT f.* FROM {fact_table} f, w WHERE {probe}
-        )
-        SELECT {group_col},
-               CAST(COUNT(*) AS BIGINT) AS n_bloom_pass,
-               CAST(COUNT(*) FILTER (WHERE {fact_key} IN (SELECT {dim_key} FROM dimkeys))
-                    AS BIGINT) AS n_true_match
-        FROM passed GROUP BY 1
-    """

@@ -51,29 +51,3 @@ def pii_scrub(
         F.md5(red).alias("redacted_md5"),
         F.length(red).cast("long").alias("redacted_len"),
     )
-
-
-def pii_scrub_oracle_sql(source_sql: str, id_col: str = "doc_id") -> str:
-    """DuckDB twin of ``pii_scrub`` over an arbitrary source relation that
-    exposes (``id_col``, text). DuckDB's regexp_replace is first-match by
-    default — the 'g' flag makes it global like Spark's. Standard SQL
-    single-quoted literals pass backslashes through verbatim, so the
-    patterns embed unmodified (only quotes would need doubling)."""
-
-    def esc(p: str) -> str:
-        return p.replace("'", "''")
-
-    red = "text"
-    for pat, tag in ((EMAIL_RE, "<EMAIL>"), (IPV4_RE, "<IP>"), (PHONE_RE, "<PHONE>")):
-        red = f"regexp_replace({red}, '{esc(pat)}', '{tag}', 'g')"
-    counts = ", ".join(
-        f"CAST(len(regexp_extract_all(text, '{esc(pat)}')) AS BIGINT) AS {name}"
-        for pat, name in ((EMAIL_RE, "n_emails"), (IPV4_RE, "n_ipv4"), (PHONE_RE, "n_phones"))
-    )
-    return f"""
-        WITH src AS ({source_sql})
-        SELECT {id_col}, {counts},
-               md5({red}) AS redacted_md5,
-               CAST(length({red}) AS BIGINT) AS redacted_len
-        FROM src
-    """

@@ -57,30 +57,3 @@ def cohort_retention(
         )
         .agg(F.count_distinct("__u").alias("n_users"))
     )
-
-
-def cohort_retention_oracle_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    max_offset: int | None = None,
-) -> str:
-    """DuckDB twin: same integer week buckets (epoch_us // week_us), same
-    offsets, same distinct count."""
-    off_filter = (
-        f"WHERE wk - cohort <= {max_offset}" if max_offset is not None else ""
-    )
-    return f"""
-        WITH ev AS (
-            SELECT {user_col} AS u,
-                   epoch_us({ts_col}) // {WEEK_US} AS wk
-            FROM {table}
-        ),
-        cohorts AS (SELECT u, MIN(wk) AS cohort FROM ev GROUP BY u)
-        SELECT cohort AS cohort_week,
-               wk - cohort AS week_offset,
-               CAST(COUNT(DISTINCT ev.u) AS BIGINT) AS n_users
-        FROM ev JOIN cohorts ON ev.u = cohorts.u
-        {off_filter}
-        GROUP BY 1, 2
-    """

@@ -90,34 +90,3 @@ def benchmark_contamination(
             half_up_round(ratio, 4).alias("contamination_ratio"),
         )
     )
-
-
-def benchmark_contamination_oracle_sql(
-    n: int = 8, bench_pred: str = "doc_id % 25 = 0", min_hits: int = 1
-) -> str:
-    """DuckDB twin for the documents-table query (bench = ``bench_pred``
-    slice, train = the rest). Same tokenization, same distinct-shingle
-    semantics, same rounding."""
-    cols = ", ".join(f"t[i+{j + 1}]" for j in range(n))
-    return f"""
-        WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-             sh AS (
-                 SELECT doc_id,
-                        unnest(list_distinct(list_transform(
-                            range(greatest(len(t) - {n}, 0) + 1),
-                            i -> concat_ws(' ', {cols})))) AS sh
-                 FROM toks
-             ),
-             train_sh AS (SELECT * FROM sh WHERE NOT ({bench_pred})),
-             bench_sh AS (SELECT DISTINCT sh FROM sh WHERE {bench_pred}),
-             totals AS (SELECT doc_id, count(*) AS n_shingles FROM train_sh GROUP BY doc_id),
-             hits AS (
-                 SELECT doc_id, count(*) AS contaminated
-                 FROM train_sh WHERE sh IN (SELECT sh FROM bench_sh)
-                 GROUP BY doc_id HAVING count(*) >= {min_hits}
-             )
-        SELECT h.doc_id, t.n_shingles, h.contaminated,
-               FLOOR(CAST(h.contaminated AS DOUBLE) / t.n_shingles * 10000.0 + 0.5)
-                 / 10000.0 AS contamination_ratio
-        FROM hits h JOIN totals t ON h.doc_id = t.doc_id
-    """

@@ -28,12 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.spread import spread_scan
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    cosine_similarity_expr,
-    half_up_round,
-    portable_hash60,
-    portable_hash60_sql,
-)
+from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, portable_hash60
 
 
 def _distinct_words(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -319,95 +314,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_oracle_sql(shingle_len: int = 3, verify_threshold: float = 0.5) -> str:
-    """DuckDB oracle for minhash_lsh_pairs: the exact shingle-Jaccard TRUTH
-    set (every pair with exact Jaccard >= threshold), computed pairwise.
-
-    This is a legitimate value oracle — not a re-implementation of the hash
-    path — because the operator's *output contract* is "verified pairs at
-    >= threshold" and its only approximation is banded-LSH candidate recall.
-    With r=4 rows/band x 8 bands the miss probability at Jaccard j is
-    (1 - j^4)^8: ~2e-4 at j=0.9, ~2e-6 at j=0.95. Measured on the driver's
-    sf0.01 corpus: NO pair has exact 3-shingle Jaccard in [0.2, 0.9) — all
-    25 true pairs sit at j >= 0.9 — so LSH recall is 1.0 here and Spark
-    output == truth set (tests/test_oracle_parity.py keeps this honest at
-    sf0.001). The oracle is quadratic but only ever runs at correctness SF.
-    """
-    s = shingle_len
-    cols = ", ".join(f"t[i+{j + 1}]" for j in range(s))
-    return f"""
-        WITH sh AS MATERIALIZED (
-                 SELECT doc_id,
-                        list_distinct(list_transform(range(greatest(len(t) - {s}, 0) + 1),
-                                       i -> concat_ws(' ', {cols}))) AS shingles
-                 FROM (SELECT doc_id, string_split(trim(text), ' ') AS t
-                       FROM documents
-                       -- explicit (round-9 nulls sweep): NULL text docs
-                       -- shingle to nothing on both engines
-                       WHERE text IS NOT NULL)),
-             sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
-             rows_ AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-             -- sparse intersection: only doc pairs sharing >=1 shingle ever
-             -- materialize (a pair with no shared shingle has j = 0, below
-             -- any positive threshold) -- same truth set as all-pairs
-             inter AS (
-                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-                 FROM rows_ a JOIN rows_ b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-             pairs AS (
-                 SELECT doc_a, doc_b,
-                        CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS j
-                 FROM inter
-                 JOIN sizes sa ON sa.doc_id = doc_a
-                 JOIN sizes sb ON sb.doc_id = doc_b)
-        SELECT doc_a, doc_b, FLOOR(j * 10000.0 + 0.5) / 10000.0 AS jaccard
-        FROM pairs WHERE j >= {verify_threshold}
-    """
-
-
-def embedding_near_dups_oracle_sql(threshold: float) -> str:
-    """DuckDB twin of the exact pairwise embedding_near_dups (same cosine,
-    same threshold side, same floor-trick rounding as sim_bruteforce)."""
-    return f"""
-        WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             pairs AS (
-                 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                        list_dot_product(a.e, b.e)
-                          / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
-                          AS s
-                 FROM v a JOIN v b ON a.vec_id < b.vec_id)
-        SELECT id_a, id_b, FLOOR(s * 10000.0 + 0.5) / 10000.0 AS sim
-        FROM pairs WHERE s >= {threshold}
-    """
-
-
-def embedding_near_dups_blocked_oracle_sql(
-    threshold: float, n_planes: int = 8, dim: int = 64, seed: int = 42
-) -> str:
-    """DuckDB twin of embedding_near_dups_blocked: identical hyperplane
-    buckets (plane literals from the shared seed — see
-    similarity.lsh_bucket_oracle_expr), same-bucket pairwise cosine."""
-    from etl_pipeline_last_fm_spark.operators.similarity import (
-        hyperplanes,
-        lsh_bucket_oracle_expr,
-    )
-
-    bucket = lsh_bucket_oracle_expr("e", hyperplanes(dim, n_planes, seed))
-    return f"""
-        WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             bk AS (SELECT vec_id, e, {bucket} AS bucket FROM v),
-             pairs AS (
-                 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                        list_dot_product(a.e, b.e)
-                          / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
-                          AS s
-                 FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-        SELECT id_a, id_b, FLOOR(s * 10000.0 + 0.5) / 10000.0 AS sim
-        FROM pairs WHERE s >= {threshold}
-    """
-
-
 def simhash_signature(docs: DataFrame, portable: bool = False) -> DataFrame:
     """SimHash over tokens, as a relational aggregation: one
     (doc_id, token-hash) row per token (token hashed once), then one
@@ -460,34 +366,6 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 12) -> DataFrame:
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-def simhash_near_dups_oracle_sql(max_hamming: int = 3) -> str:
-    """DuckDB twin of simhash_near_dups_blocked(portable=True): the signature
-    is recomputed bit-identically (portable_hash60 token hash, same ±1
-    per-bit balance, same >0 sign rule), and the pair set is the pairwise
-    Hamming truth — valid as an oracle for the blocked form because
-    pigeonhole blocking has recall 1.0 by construction (any pair within
-    max_hamming flips agrees exactly on ≥1 chunk)."""
-    n_bits = 60
-    th = portable_hash60_sql("t")
-    sums = ",\n                        ".join(
-        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}" for j in range(n_bits)
-    )
-    sig = " + ".join(f"(CASE WHEN b{j} > 0 THEN {1 << j}::BIGINT ELSE 0 END)" for j in range(n_bits))
-    return f"""
-        WITH tok AS (
-            SELECT doc_id, unnest(string_split(trim(text), ' ')) AS t FROM documents
-        ),
-        th AS (SELECT doc_id, {th} AS h FROM tok),
-        sums AS (SELECT doc_id, {sums}
-                 FROM th GROUP BY doc_id),
-        sig AS (SELECT doc_id, {sig} AS simhash FROM sums)
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-    """
 
 
 def simhash_near_dups_blocked(
@@ -697,30 +575,6 @@ def dedup_keep_list(
     )
 
 
-def dedup_keep_list_oracle_sql(shingle_len: int = 3, verify_threshold: float = 0.5) -> str:
-    """DuckDB twin of dedup_keep_list: the exact-Jaccard truth pairs (valid
-    for the LSH pair set — see minhash_lsh_pairs_oracle_sql for the recall
-    argument) closed transitively with a RECURSIVE CTE, then min per node.
-    An independent fixpoint implementation checking the iterative Spark
-    label propagation."""
-    pair_sql = minhash_lsh_pairs_oracle_sql(shingle_len, verify_threshold)
-    return f"""
-        WITH RECURSIVE pairs AS MATERIALIZED ({pair_sql}),
-        edges AS MATERIALIZED (
-            SELECT doc_a AS src, doc_b AS dst FROM pairs
-            UNION
-            SELECT doc_b, doc_a FROM pairs
-        ),
-        reach(src, dst) AS (
-            SELECT DISTINCT src, src FROM edges
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        )
-        SELECT src AS doc_id, min(dst) AS keep_id, src <> min(dst) AS is_dup
-        FROM reach GROUP BY src
-    """
-
-
 def embedding_near_dups_blocked(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -843,28 +697,6 @@ def embedding_keep_list(
     )
 
 
-def embedding_keep_list_oracle_sql(threshold: float, n_planes: int = 8) -> str:
-    """DuckDB twin: the blocked-pair SQL (identical plane literals) closed
-    transitively by a RECURSIVE CTE — same independent-fixpoint pattern as
-    dedup_keep_list_oracle_sql."""
-    pair_sql = embedding_near_dups_blocked_oracle_sql(threshold, n_planes)
-    return f"""
-        WITH RECURSIVE pairs AS MATERIALIZED ({pair_sql}),
-        edges AS MATERIALIZED (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION
-            SELECT id_b, id_a FROM pairs
-        ),
-        reach(src, dst) AS (
-            SELECT DISTINCT src, src FROM edges
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        )
-        SELECT src AS vec_id, min(dst) AS keep_id, src <> min(dst) AS is_dup
-        FROM reach GROUP BY src
-    """
-
-
 def shared_passage_stats(
     docs: DataFrame,
     window_tokens: int = 8,
@@ -937,35 +769,3 @@ def shared_passage_stats(
             .alias("shared_frac"),
         )
     )
-
-
-def shared_passage_stats_oracle_sql(window_tokens: int = 8) -> str:
-    """DuckDB twin of shared_passage_stats over the documents table."""
-    w = window_tokens
-    h = portable_hash60_sql(f"array_to_string(list_slice(toks, i * {w} + 1, i * {w} + {w}), ' ')")
-    return f"""
-        WITH d AS (
-            SELECT doc_id, string_split(trim(text), ' ') AS toks,
-                   CAST(floor(len(string_split(trim(text), ' ')) / {w}.0) AS BIGINT) AS nc
-            FROM documents
-        ),
-        c AS (
-            SELECT doc_id, CAST(unnest(range(0, nc)) AS INTEGER) AS i, toks
-            FROM d WHERE nc >= 1
-        ),
-        hh AS (SELECT doc_id, {h} AS h FROM c),
-        g AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM hh GROUP BY h),
-        s AS (
-            SELECT hh.doc_id,
-                   COUNT(*) AS n_chunks,
-                   SUM(CASE WHEN g.nd > 1 THEN 1 ELSE 0 END) AS n_shared
-            FROM hh JOIN g USING (h) GROUP BY hh.doc_id
-        )
-        SELECT d.doc_id,
-               CAST(COALESCE(s.n_chunks, 0) AS BIGINT) AS n_chunks,
-               CAST(COALESCE(s.n_shared, 0) AS BIGINT) AS n_shared,
-               CASE WHEN COALESCE(s.n_chunks, 0) > 0
-                    THEN FLOOR(s.n_shared * 1000000.0 / s.n_chunks + 0.5) / 1000000.0
-                    ELSE 0.0 END AS shared_frac
-        FROM d LEFT JOIN s USING (doc_id)
-    """

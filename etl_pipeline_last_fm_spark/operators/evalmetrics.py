@@ -131,46 +131,6 @@ def roc_auc(
     )
 
 
-def roc_auc_oracle_sql(
-    pos_type: str = "purchase", table: str = "events"
-) -> str:
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        per_v AS (
-            SELECT v,
-                   CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS np,
-                   CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS nn
-            FROM labeled GROUP BY v
-        ),
-        ranked AS (
-            SELECT np, nn,
-                   2 * CAST(COALESCE(SUM(np + nn) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) + np + nn + 1 AS mr2
-            FROM per_v
-        ),
-        s AS (
-            SELECT CAST(SUM(np) AS HUGEINT) AS n_pos,
-                   CAST(SUM(nn) AS HUGEINT) AS n_neg,
-                   CAST(SUM(CAST(np AS HUGEINT) * mr2) AS HUGEINT) AS r2p
-            FROM ranked
-        )
-        SELECT CAST(n_pos AS BIGINT) AS n_pos,
-               CAST(n_neg AS BIGINT) AS n_neg,
-               CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL ELSE
-                    (r2p - n_pos * (n_pos + 1)) * 1000000
-                    // (2 * n_pos * n_neg) END AS BIGINT) AS auc_ppm
-        FROM s
-    """
-
-
 def _bin_census(census: DataFrame, k: int) -> DataFrame:
     """Attach the k-fixed-width bin id to a score census (the shared
     step of the calibration family): per census row,
@@ -254,40 +214,6 @@ def calibration_bins(
     )
 
 
-def calibration_bins_oracle_sql(
-    pos_type: str = "purchase", k: int = 10, table: str = "events"
-) -> str:
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        m AS (SELECT MAX(v) AS vmax FROM labeled),
-        binned AS (
-            SELECT CAST(CAST(v AS HUGEINT) * {k} // (vmax + 1) AS BIGINT)
-                       AS bin,
-                   pos, v, vmax
-            FROM labeled, m
-        )
-        SELECT bin,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_pos,
-               CAST(CASE WHEN MAX(vmax) = 0 THEN NULL ELSE
-                    CAST(SUM(v) AS HUGEINT) * 1000000
-                    // (COUNT(*) * CAST(MAX(vmax) AS HUGEINT))
-                    END AS BIGINT) AS mean_score_ppm,
-               CAST(CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS HUGEINT)
-                    * 1000000 // COUNT(*) AS BIGINT) AS pos_rate_ppm
-        FROM binned
-        GROUP BY bin
-        ORDER BY bin
-    """
-
-
 def cohens_kappa(
     rated: DataFrame,
     rater_a_col: str,
@@ -354,44 +280,6 @@ def cohens_kappa(
             "   END END AS BIGINT)"
         ).alias("kappa_ppm"),
     )
-
-
-def cohens_kappa_oracle_sql(
-    rater_a_sql: str, rater_b_sql: str, table: str = "documents"
-) -> str:
-    """DuckDB twin. ``rater_a_sql`` / ``rater_b_sql`` are boolean SQL
-    expressions over the table's columns."""
-    return f"""
-        WITH rated AS (
-            SELECT ({rater_a_sql}) AS a, ({rater_b_sql}) AS b FROM {table}
-        ),
-        agg AS (
-            SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                   CAST(SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS HUGEINT)
-                       AS agree,
-                   CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS HUGEINT) AS a1,
-                   CAST(SUM(CASE WHEN b THEN 1 ELSE 0 END) AS HUGEINT) AS b1
-            FROM rated
-        )
-        SELECT CAST(n AS BIGINT) AS n,
-               CAST(agree AS BIGINT) AS n_agree,
-               CAST(CASE WHEN n = 0 THEN NULL ELSE
-                    agree * 1000000 // n END AS BIGINT) AS po_ppm,
-               CAST(CASE WHEN n = 0 THEN NULL ELSE
-                    (a1 * b1 + (n - a1) * (n - b1)) * 1000000 // (n * n)
-                    END AS BIGINT) AS pe_ppm,
-               CAST(CASE WHEN n * n - a1 * b1 - (n - a1) * (n - b1) = 0
-                    THEN NULL ELSE
-                      CASE WHEN agree * n - a1 * b1 - (n - a1) * (n - b1) < 0
-                      THEN -(ABS(agree * n - a1 * b1 - (n - a1) * (n - b1))
-                            * 1000000
-                            // (n * n - a1 * b1 - (n - a1) * (n - b1)))
-                      ELSE (agree * n - a1 * b1 - (n - a1) * (n - b1))
-                            * 1000000
-                            // (n * n - a1 * b1 - (n - a1) * (n - b1))
-                      END END AS BIGINT) AS kappa_ppm
-        FROM agg
-    """
 
 
 def mann_kendall(
@@ -482,44 +370,6 @@ def mann_kendall(
     )
 
 
-def mann_kendall_oracle_sql(table: str = "events") -> str:
-    return f"""
-        WITH daily AS (
-            SELECT epoch_us(ts) // 86400000000 AS d,
-                   CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS rev
-            FROM {table} GROUP BY 1
-        ),
-        pairs AS (
-            SELECT CAST(COALESCE(SUM(CASE WHEN j.rev > i.rev
-                                     THEN 1 ELSE 0 END), 0)
-                        AS HUGEINT) AS c,
-                   CAST(COALESCE(SUM(CASE WHEN j.rev < i.rev
-                                     THEN 1 ELSE 0 END), 0)
-                        AS HUGEINT) AS dc
-            FROM daily i JOIN daily j ON i.d < j.d
-        ),
-        ties AS (
-            SELECT CAST(SUM(CAST(t AS HUGEINT) * (t - 1) * (2 * t + 5))
-                        AS HUGEINT) AS tie_term,
-                   CAST(SUM(t) AS HUGEINT) AS n
-            FROM (SELECT COUNT(*) AS t FROM daily GROUP BY rev)
-        )
-        SELECT CAST(n AS BIGINT) AS n_days,
-               CAST(c AS BIGINT) AS n_concordant,
-               CAST(dc AS BIGINT) AS n_discordant,
-               CAST(c - dc AS BIGINT) AS s_stat,
-               CAST(CASE WHEN n < 2 THEN NULL
-                    WHEN c - dc < 0
-                    THEN -(ABS(c - dc) * 2000000 // (n * (n - 1)))
-                    ELSE (c - dc) * 2000000 // (n * (n - 1))
-                    END AS BIGINT) AS tau_a_ppm,
-               CAST(n * (n - 1) * (2 * n + 5) - tie_term AS BIGINT)
-                   AS var_s_x18
-        FROM pairs, ties
-    """
-
-
 def lift_deciles(
     events: DataFrame,
     pos_type: str = "purchase",
@@ -598,43 +448,6 @@ def lift_deciles(
     )
 
 
-def lift_deciles_oracle_sql(
-    pos_type: str = "purchase", k: int = 10, table: str = "events"
-) -> str:
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_id AS tie,
-                   event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        t AS (
-            SELECT pos,
-                   ntile({k}) OVER (ORDER BY v DESC, tie ASC) AS decile
-            FROM labeled
-        ),
-        s AS (
-            SELECT CAST(COUNT(*) AS HUGEINT) AS n_total,
-                   CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS HUGEINT)
-                       AS pos_total
-            FROM labeled
-        )
-        SELECT CAST(decile AS INT) AS decile,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_pos,
-               CAST(CASE WHEN MAX(pos_total) = 0 THEN NULL ELSE
-                    CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS HUGEINT)
-                    * MAX(n_total) * 1000000
-                    // (COUNT(*) * MAX(pos_total)) END AS BIGINT) AS lift_ppm
-        FROM t, s
-        GROUP BY decile
-        ORDER BY decile
-    """
-
-
 def calibration_ece(
     events: DataFrame,
     pos_type: str = "purchase",
@@ -689,40 +502,6 @@ def calibration_ece(
     )
 
 
-def calibration_ece_oracle_sql(
-    pos_type: str = "purchase", k: int = 10, table: str = "events"
-) -> str:
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        m AS (SELECT CAST(MAX(v) AS HUGEINT) AS vmax FROM labeled),
-        per_bin AS (
-            SELECT CAST(CAST(v AS HUGEINT) * {k} // (vmax + 1) AS BIGINT)
-                       AS bin,
-                   CAST(COUNT(*) AS HUGEINT) AS n_b,
-                   CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS HUGEINT)
-                       AS pos_b,
-                   CAST(SUM(v) AS HUGEINT) AS sv_b,
-                   MAX(vmax) AS vmax
-            FROM labeled, m
-            GROUP BY 1
-        )
-        SELECT CAST(SUM(n_b) AS BIGINT) AS n,
-               CAST(CASE WHEN MAX(vmax) = 0 THEN NULL ELSE
-                    SUM(ABS(pos_b * vmax - sv_b)) * 1000000
-                    // (SUM(n_b) * MAX(vmax)) END AS BIGINT) AS ece_ppm,
-               CAST(MAX(CASE WHEN vmax = 0 THEN NULL ELSE
-                    ABS(pos_b * vmax - sv_b) * 1000000
-                    // (n_b * vmax) END) AS BIGINT) AS mce_ppm
-        FROM per_bin
-    """
-
-
 def pr_curve(
     events: DataFrame,
     pos_type: str = "purchase",
@@ -775,49 +554,6 @@ def pr_curve(
         )
         .orderBy(F.col("threshold_cents").desc())
     )
-
-
-def pr_curve_oracle_sql(
-    pos_type: str = "purchase", table: str = "events"
-) -> str:
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        census AS (
-            SELECT v,
-                   CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT)
-                       AS np,
-                   CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT)
-                       AS nn
-            FROM labeled GROUP BY v
-        ),
-        t AS (SELECT CAST(SUM(np) AS HUGEINT) AS total_pos FROM census),
-        cum AS (
-            SELECT v AS threshold_cents,
-                   CAST(SUM(np + nn) OVER (
-                       ORDER BY v DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS BIGINT) AS n_pred,
-                   CAST(SUM(np) OVER (
-                       ORDER BY v DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS BIGINT) AS n_tp
-            FROM census
-        )
-        SELECT threshold_cents, n_pred, n_tp,
-               CAST(CAST(n_tp AS HUGEINT) * 1000000 // n_pred AS BIGINT)
-                   AS precision_ppm,
-               CAST(CASE WHEN total_pos = 0 THEN NULL ELSE
-                    CAST(n_tp AS HUGEINT) * 1000000 // total_pos
-                    END AS BIGINT) AS recall_ppm
-        FROM cum, t
-        ORDER BY threshold_cents DESC
-    """
 
 
 def isotonic_calibration(
@@ -941,70 +677,3 @@ def isotonic_calibration(
         )
         .orderBy("bin")
     )
-
-
-def isotonic_calibration_oracle_sql(
-    pos_type: str = "purchase", k: int = 20, table: str = "events"
-) -> str:
-    """DuckDB twin via the minimax characterization (see operator
-    docstring): iso(k) = max_{i<=k} min_{j>=k} pooled(i, j), every
-    comparison an exact HUGEINT cross-multiply with deterministic
-    tie-breaks (smallest j, then smallest i — ties are value-equal so
-    the emitted ppm is unaffected either way)."""
-    pos_type = pos_type.replace("'", "''")
-    return f"""
-        WITH labeled AS (
-            SELECT event_type = '{pos_type}' AS pos,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE value IS NOT NULL AND event_type IS NOT NULL
-        ),
-        m AS (SELECT CAST(MAX(v) AS HUGEINT) AS vmax FROM labeled),
-        nb AS (
-            SELECT row_number() OVER (ORDER BY bin) AS r, bin, n_b, p_b
-            FROM (
-                SELECT CAST(CAST(v AS HUGEINT) * {k} // (vmax + 1)
-                            AS BIGINT) AS bin,
-                       CAST(COUNT(*) AS HUGEINT) AS n_b,
-                       CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END)
-                            AS HUGEINT) AS p_b
-                FROM labeled, m
-                GROUP BY 1
-            )
-        ),
-        pooled AS (
-            SELECT i.r AS i, j.r AS j,
-                   SUM(t.n_b) AS den, SUM(t.p_b) AS num
-            FROM nb i JOIN nb j ON i.r <= j.r
-                      JOIN nb t ON t.r BETWEEN i.r AND j.r
-            GROUP BY 1, 2
-        ),
-        mn AS (
-            SELECT kk.r AS k, p.i, p.j, p.num, p.den
-            FROM pooled p JOIN nb kk ON p.i <= kk.r AND p.j >= kk.r
-            WHERE NOT EXISTS (
-                SELECT 1 FROM pooled q
-                WHERE q.i = p.i AND q.j >= kk.r
-                  AND (q.num * p.den < p.num * q.den
-                       OR (q.num * p.den = p.num * q.den AND q.j < p.j))
-            )
-        ),
-        iso AS (
-            SELECT mm.k, mm.num, mm.den
-            FROM mn mm
-            WHERE NOT EXISTS (
-                SELECT 1 FROM mn m2
-                WHERE m2.k = mm.k
-                  AND (m2.num * mm.den > mm.num * m2.den
-                       OR (m2.num * mm.den = mm.num * m2.den
-                           AND m2.i < mm.i))
-            )
-        )
-        SELECT nb.bin,
-               CAST(nb.n_b AS BIGINT) AS n,
-               CAST(nb.p_b AS BIGINT) AS n_pos,
-               CAST(nb.p_b * 1000000 // nb.n_b AS BIGINT) AS raw_rate_ppm,
-               CAST(iso.num * 1000000 // iso.den AS BIGINT) AS iso_rate_ppm
-        FROM nb JOIN iso ON iso.k = nb.r
-        ORDER BY nb.bin
-    """

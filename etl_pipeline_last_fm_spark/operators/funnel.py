@@ -83,44 +83,3 @@ def funnel_summary(
         .groupBy("stage_depth", "stage")
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
-
-
-def funnel_stages_oracle_sql(
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    table: str = "events",
-) -> str:
-    """DuckDB twin: the same conditional-min cascade written as explicit
-    per-user scalar steps (a deliberately different — join-per-stage —
-    plan computing the same strict-sequence answer)."""
-    s1, s2, s3 = stages
-    return f"""
-        WITH u1 AS (
-            SELECT user_id,
-                   MIN(CASE WHEN event_type = '{s1}' THEN epoch_us(ts) END) AS t1
-            FROM {table} GROUP BY user_id
-        ),
-        u2 AS (
-            SELECT u1.user_id, u1.t1,
-                   MIN(CASE WHEN e.event_type = '{s2}' AND epoch_us(e.ts) > u1.t1
-                            THEN epoch_us(e.ts) END) AS t2
-            FROM u1 LEFT JOIN {table} e ON e.user_id = u1.user_id
-            GROUP BY u1.user_id, u1.t1
-        ),
-        u3 AS (
-            SELECT u2.user_id, u2.t1, u2.t2,
-                   MIN(CASE WHEN e.event_type = '{s3}' AND epoch_us(e.ts) > u2.t2
-                            THEN epoch_us(e.ts) END) AS t3
-            FROM u2 LEFT JOIN {table} e ON e.user_id = u2.user_id
-            GROUP BY u2.user_id, u2.t1, u2.t2
-        )
-        SELECT user_id,
-               CAST(CASE WHEN t3 IS NOT NULL THEN 3
-                         WHEN t2 IS NOT NULL THEN 2
-                         WHEN t1 IS NOT NULL THEN 1
-                         ELSE 0 END AS INTEGER) AS stage_depth,
-               CASE WHEN t3 IS NOT NULL THEN '{s1}_{s2}_{s3}'
-                    WHEN t2 IS NOT NULL THEN '{s1}_{s2}'
-                    WHEN t1 IS NOT NULL THEN '{s1}'
-                    ELSE 'none' END AS stage
-        FROM u3
-    """

@@ -64,43 +64,3 @@ def fuzzy_name_pairs(
         .filter(F.col("dist") >= 0)
         .select("id_a", "id_b", "name_a", "name_b", F.col("dist").cast("int").alias("dist"))
     )
-
-
-def fuzzy_name_pairs_oracle_sql(
-    table: str,
-    id_col: str,
-    name_col: str,
-    max_dist: int = 2,
-    max_block_size: int | None = None,
-) -> str:
-    """DuckDB twin (head-token blocking form): DuckDB's levenshtein has no
-    threshold parameter, so the full distance is computed and filtered —
-    same result set, the banded early-exit is a Spark-side cost optimization
-    only. ``max_block_size`` must MATCH the Spark call's guard: if only one
-    side drops hot blocks, parity silently becomes scale-dependent (fine at
-    a SF where no block exceeds the cap, a mismatch at the first SF where
-    one does)."""
-    cap = (
-        f"""
-        , sizes AS (
-            SELECT blk FROM n GROUP BY blk HAVING COUNT(*) <= {max_block_size}
-        ), nc AS (SELECT n.* FROM n JOIN sizes USING (blk))
-        """
-        if max_block_size is not None
-        else ", nc AS (SELECT * FROM n)"
-    )
-    return f"""
-        WITH n AS (
-            SELECT {id_col} AS id,
-                   lower(trim({name_col})) AS nm,
-                   split_part(lower(trim({name_col})), ' ', 1) AS blk
-            FROM {table}
-        ){cap}
-        SELECT a.id AS id_a, b.id AS id_b, a.nm AS name_a, b.nm AS name_b,
-               CAST(levenshtein(a.nm, b.nm) AS INTEGER) AS dist
-        FROM nc a JOIN nc b
-          ON a.blk = b.blk
-         AND a.id < b.id
-         AND abs(length(a.nm) - length(b.nm)) <= {max_dist}
-         AND levenshtein(a.nm, b.nm) <= {max_dist}
-    """

@@ -46,7 +46,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds, unroll_ctes
+from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 
 SUPPLIER_NODE_OFFSET = 1_000_000_000  # disjoint node id spaces (cust vs supp)
 PR_INIT_MICRO = 1_000_000
@@ -173,46 +173,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         "degree",
         F.coalesce(F.col("__t"), F.lit(0)).cast("long").alias("triangles"),
     )
-
-
-#: Canonical co-supplier edge derivation shared by every oracle over
-#: this graph (triangles, k-core, LPA, BFS) — one definition to keep in
-#: sync with ``cosupplier_edges``.
-_COSUPP_EDGE_SQL = """
-            SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-            FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) l1
-            JOIN (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) l2
-              ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey < l2.l_suppkey
-"""
-
-
-def triangle_counts_oracle_sql() -> str:
-    """DuckDB twin over the same co-supplier graph, but via the NAIVE
-    id-ordered 3-way join (a < b edges chain a<b<c directly) — an
-    independent derivation of the identical per-node counts."""
-    return f"""
-        WITH e AS ({_COSUPP_EDGE_SQL}),
-        deg AS (
-            SELECT node, COUNT(*) AS degree FROM (
-                SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e
-            ) GROUP BY node
-        ),
-        tri AS (
-            SELECT e1.a AS u, e1.b AS v, e2.b AS w
-            FROM e e1
-            JOIN e e2 ON e2.a = e1.b
-            JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-        ),
-        credit AS (
-            SELECT node, COUNT(*) AS t FROM (
-                SELECT u AS node FROM tri
-                UNION ALL SELECT v AS node FROM tri
-                UNION ALL SELECT w AS node FROM tri
-            ) GROUP BY node
-        )
-        SELECT d.node, d.degree, CAST(COALESCE(c.t, 0) AS BIGINT) AS triangles
-        FROM deg d LEFT JOIN credit c ON d.node = c.node
-    """
 
 
 def customer_supplier_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -370,45 +330,6 @@ def _final_ranks(
     ).select("node", rank.alias("rank_micro"))
 
 
-# Shared oracle edge derivation (weighted base; the unweighted graph is
-# its projection — mirrors the Spark-side sharing above).
-_CUSTSUPP_W_EDGE_SQL = f"""
-            SELECT src, dst, COUNT(*) AS w FROM (
-                SELECT DISTINCT CAST(o_custkey AS BIGINT) AS src,
-                       CAST(l_suppkey AS BIGINT) + {SUPPLIER_NODE_OFFSET} AS dst,
-                       o_orderkey
-                FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-            ) GROUP BY src, dst
-"""
-
-
-def pagerank_oracle_sql(n_iter: int = 4) -> str:
-    """Programmatically unrolled k-iteration twin: r0, c1, r1, ..., rk as
-    chained CTEs running the same integer recurrence. Exact parity by
-    construction — every operation is int64 floor division / sum."""
-    head = f"""
-        WITH ed AS (
-            SELECT src, dst FROM ({_CUSTSUPP_W_EDGE_SQL})
-        ),
-        nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
-        od AS (SELECT src, COUNT(*) AS d FROM ed GROUP BY src),
-        r0 AS (SELECT node, CAST({PR_INIT_MICRO} AS BIGINT) AS r FROM nodes)
-        """
-    return unroll_ctes(head, lambda i: f""",
-        c{i} AS (
-            SELECT ed.dst AS node, CAST(SUM(r{i-1}.r // od.d) AS BIGINT) AS s
-            FROM ed JOIN r{i-1} ON ed.src = r{i-1}.node
-                    JOIN od ON ed.src = od.src
-            GROUP BY ed.dst
-        ),
-        r{i} AS (
-            SELECT n.node,
-                   CAST({PR_BASE_MICRO} + (85 * COALESCE(c{i}.s, 0)) // 100 AS BIGINT) AS r
-            FROM nodes n LEFT JOIN c{i} ON n.node = c{i}.node
-        )
-        """, n_iter) + f"SELECT node, r AS rank_micro FROM r{n_iter}"
-
-
 def kcore_rounds(edges: DataFrame, k: int = 3, n_rounds: int = 4) -> DataFrame:
     """Fixed-round k-core peeling: ``n_rounds`` iterations of "drop every
     node with degree < k, recompute degrees" over the undirected graph —
@@ -451,37 +372,6 @@ def kcore_rounds(edges: DataFrame, k: int = 3, n_rounds: int = 4) -> DataFrame:
     # the way out — every node still on an edge survived, and a node with
     # zero in-core edges cannot meet k >= 1 anyway.
     return degrees(cur_edges, "core_degree")
-
-
-def kcore_rounds_oracle_sql(k: int = 3, n_rounds: int = 4) -> str:
-    """DuckDB twin over the co-supplier graph: the same ``n_rounds``
-    peeling recurrence, unrolled as CTE pairs (deg_i -> surv_i ->
-    edges_i)."""
-    # Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and e_{i+1}
-    # references e_i three times (source + both survivor branches) — the
-    # same 3^n blowup the Spark side breaks with localCheckpoint
-    # (measured: 234 s inlined vs sub-second materialized at sf0.001).
-    head = f"""
-        WITH e0 AS MATERIALIZED ({_COSUPP_EDGE_SQL})
-        """
-    return unroll_ctes(head, lambda i: f""",
-        deg{i - 1} AS MATERIALIZED (
-            SELECT node, COUNT(*) AS degree FROM (
-                SELECT a AS node FROM e{i - 1} UNION ALL SELECT b AS node FROM e{i - 1}
-            ) GROUP BY node
-        ),
-        surv{i - 1} AS MATERIALIZED (SELECT node FROM deg{i - 1} WHERE degree >= {k}),
-        e{i} AS MATERIALIZED (
-            SELECT a, b FROM e{i - 1}
-            WHERE a IN (SELECT node FROM surv{i - 1})
-              AND b IN (SELECT node FROM surv{i - 1})
-        )
-        """, n_rounds) + f"""
-        SELECT node, COUNT(*) AS core_degree FROM (
-            SELECT a AS node FROM e{n_rounds} UNION ALL SELECT b AS node FROM e{n_rounds}
-        )
-        GROUP BY node
-        """
 
 
 def customer_supplier_weighted_edges(
@@ -591,33 +481,6 @@ def pagerank_weighted_micro(
     return _final_ranks(nodes, contrib, _rank)
 
 
-def pagerank_weighted_oracle_sql(n_iter: int = 4) -> str:
-    """Unrolled-CTE twin of ``pagerank_weighted_micro`` over the
-    order-count-weighted customer->supplier graph."""
-    head = f"""
-        WITH ed AS (
-            {_CUSTSUPP_W_EDGE_SQL}
-        ),
-        nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
-        ow AS (SELECT src, CAST(SUM(w) AS BIGINT) AS W FROM ed GROUP BY src),
-        r0 AS (SELECT node, CAST({PR_INIT_MICRO} AS BIGINT) AS r FROM nodes)
-        """
-    return unroll_ctes(head, lambda i: f""",
-        c{i} AS (
-            SELECT ed.dst AS node,
-                   CAST(SUM((r{i-1}.r * ed.w) // ow.W) AS BIGINT) AS s
-            FROM ed JOIN r{i-1} ON ed.src = r{i-1}.node
-                    JOIN ow ON ed.src = ow.src
-            GROUP BY ed.dst
-        ),
-        r{i} AS (
-            SELECT n.node,
-                   CAST({PR_BASE_MICRO} + (85 * COALESCE(c{i}.s, 0)) // 100 AS BIGINT) AS r
-            FROM nodes n LEFT JOIN c{i} ON n.node = c{i}.node
-        )
-        """, n_iter) + f"SELECT node, r AS rank_micro FROM r{n_iter}"
-
-
 # ---------------------------------------------------------------------------
 # Round-5 additions: deterministic label propagation + multi-source BFS
 # ---------------------------------------------------------------------------
@@ -676,38 +539,6 @@ def label_propagation_rounds(edges: DataFrame, n_rounds: int = 3) -> DataFrame:
     return labels
 
 
-def label_propagation_oracle_sql(n_rounds: int = 3) -> str:
-    """Unrolled-CTE twin over the co-supplier graph: votes_i (GROUP BY) +
-    l_i (ROW_NUMBER argmax, count DESC / label ASC) per round. Every CTE
-    MATERIALIZED — same blowup note as the k-core oracle."""
-    head = f"""
-        WITH e AS MATERIALIZED ({_COSUPP_EDGE_SQL}),
-        und AS MATERIALIZED (
-            SELECT a AS src, b AS dst FROM e
-            UNION ALL SELECT b AS src, a AS dst FROM e
-        ),
-        l0 AS MATERIALIZED (
-            SELECT DISTINCT src AS node, src AS label FROM und
-        )
-        """
-    return unroll_ctes(head, lambda i: f""",
-        v{i} AS MATERIALIZED (
-            SELECT und.dst AS node, l{i-1}.label, COUNT(*) AS c
-            FROM und JOIN l{i-1} ON und.src = l{i-1}.node
-            GROUP BY 1, 2
-        ),
-        l{i} AS MATERIALIZED (
-            SELECT node, label FROM (
-                SELECT node, label,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY node ORDER BY c DESC, label ASC
-                       ) AS rn
-                FROM v{i}
-            ) WHERE rn = 1
-        )
-        """, n_rounds) + f"SELECT node, CAST(label AS BIGINT) AS label FROM l{n_rounds}"
-
-
 def cosupplier_weighted_edges(lineitem: DataFrame) -> DataFrame:
     """Canonical co-supplier edges with an integer strength weight: the
     number of distinct orders the pair shared. The unweighted
@@ -726,17 +557,6 @@ def cosupplier_weighted_edges(lineitem: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-
-
-#: Oracle twin of ``cosupplier_weighted_edges``.
-_COSUPP_W_EDGE_SQL = """
-            SELECT l1.l_suppkey AS a, l2.l_suppkey AS b,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) l1
-            JOIN (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem) l2
-              ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey < l2.l_suppkey
-            GROUP BY 1, 2
-"""
 
 
 def sssp_rounds(
@@ -789,37 +609,6 @@ def sssp_rounds(
     return fold_rounds(relax, range(n_rounds), state=d0)
 
 
-def sssp_rounds_oracle_sql(
-    seed_sql: str, n_rounds: int = 3, edge_sql: str = _COSUPP_W_EDGE_SQL
-) -> str:
-    """Unrolled-CTE twin of ``sssp_rounds`` over ``edge_sql``'s (a, b, w)
-    edges — the weighted co-supplier graph by default (min over carry
-    UNION ALL weighted relax, per round). MATERIALIZED for the 2^n
-    reason."""
-    head = f"""
-        WITH e AS MATERIALIZED ({edge_sql}),
-        und AS MATERIALIZED (
-            SELECT a AS src, b AS dst, w FROM e
-            UNION ALL SELECT b AS src, a AS dst, w FROM e
-        ),
-        d0 AS MATERIALIZED (
-            SELECT DISTINCT CAST(node AS BIGINT) AS node,
-                   CAST(0 AS BIGINT) AS dist
-            FROM ({seed_sql})
-        )
-        """
-    return unroll_ctes(head, lambda i: f""",
-        d{i} AS MATERIALIZED (
-            SELECT node, CAST(MIN(dist) AS BIGINT) AS dist FROM (
-                SELECT node, dist FROM d{i-1}
-                UNION ALL
-                SELECT und.dst AS node, d{i-1}.dist + und.w AS dist
-                FROM und JOIN d{i-1} ON und.src = d{i-1}.node
-            ) GROUP BY node
-        )
-        """, n_rounds) + f"SELECT node, dist FROM d{n_rounds}"
-
-
 def bfs_hops(edges: DataFrame, seeds: DataFrame, n_rounds: int = 3) -> DataFrame:
     """Multi-source BFS over the undirected graph: hop distance from the
     nearest seed, bounded by ``n_rounds`` relaxations — ``sssp_rounds``
@@ -830,13 +619,6 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, n_rounds: int = 3) -> DataFrame
     one-column (node) DataFrame."""
     unit = edges.select("a", "b", F.lit(1).cast("long").alias("w"))
     return sssp_rounds(unit, seeds, n_rounds).withColumnRenamed("dist", "hops")
-
-
-def bfs_hops_oracle_sql(seed_sql: str, n_rounds: int = 3) -> str:
-    """The SSSP oracle over the unweighted co-supplier edges at w = 1."""
-    unit = f"SELECT a, b, CAST(1 AS BIGINT) AS w FROM ({_COSUPP_EDGE_SQL})"
-    sssp = sssp_rounds_oracle_sql(seed_sql, n_rounds, edge_sql=unit)
-    return f"SELECT node, dist AS hops FROM ({sssp})"
 
 
 # --- Link prediction: common-neighbor / Jaccard scores (round 6) -------
@@ -940,46 +722,6 @@ def link_prediction_scores(
     )
 
 
-def link_prediction_oracle_sql(
-    edge_sql: str, top_k: int = 100, max_middle_degree: int | None = None
-) -> str:
-    """DuckDB twin: identical wedge/anti-join/inclusion-exclusion
-    derivation over the caller's canonical (a, b) edge SQL."""
-    mid_cap = (
-        f"AND w1.dst IN (SELECT src FROM deg WHERE deg <= {max_middle_degree})"
-        if max_middle_degree is not None
-        else ""
-    )
-    return f"""
-        WITH e AS MATERIALIZED ({edge_sql}),
-        und AS MATERIALIZED (
-            SELECT a AS src, b AS dst FROM e
-            UNION ALL SELECT b AS src, a AS dst FROM e
-        ),
-        deg AS MATERIALIZED (
-            SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM und GROUP BY 1
-        ),
-        wedge AS (
-            SELECT w1.src AS u, w2.dst AS v, CAST(COUNT(*) AS BIGINT) AS cn
-            FROM und w1 JOIN und w2
-              ON w1.dst = w2.src AND w1.src < w2.dst
-            WHERE TRUE {mid_cap}
-            GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT u, v, cn FROM wedge w
-            WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = w.u AND e.b = w.v)
-        )
-        SELECT u, v, cn,
-               (cn * 1000000) // (du.deg + dv.deg - cn) AS jaccard_ppm
-        FROM cand
-        JOIN deg du ON du.src = cand.u
-        JOIN deg dv ON dv.src = cand.v
-        ORDER BY jaccard_ppm DESC, u, v
-        LIMIT {top_k}
-    """
-
-
 def negative_edges(edges: DataFrame, k: int = 4, salt: str = "negedge") -> DataFrame:
     """Deterministic NEGATIVE sampling over an undirected canonical
     (a < b) edge list — the training-data complement of the link
@@ -1044,43 +786,6 @@ def negative_edges(edges: DataFrame, k: int = 4, salt: str = "negedge") -> DataF
     return paired.join(edges, ["a", "b"], "left_anti")
 
 
-def negative_edges_oracle_sql(edge_sql: str, k: int = 4, salt: str = "negedge") -> str:
-    """DuckDB twin of ``negative_edges``: identical portable-hash
-    candidate derivation, dense index, and anti-join."""
-    from etl_pipeline_last_fm_spark.functions.scalar import portable_hash60_sql
-
-    h = portable_hash60_sql(
-        f"concat_ws(':', '{salt}', CAST(node AS VARCHAR), CAST(t AS VARCHAR))"
-    )
-    return f"""
-        WITH e AS MATERIALIZED ({edge_sql}),
-        nodes AS (
-            SELECT a AS node FROM e UNION SELECT b AS node FROM e
-        ),
-        idx AS (
-            SELECT node,
-                   CAST(ROW_NUMBER() OVER (ORDER BY node) - 1 AS BIGINT)
-                       AS i
-            FROM nodes
-        ),
-        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM idx),
-        cand AS (
-            SELECT idx.node, {h} % n AS ci
-            FROM idx, nn, unnest(generate_series(1, {k})) AS s(t)
-        ),
-        paired AS (
-            SELECT DISTINCT LEAST(c.node, v.node) AS a,
-                            GREATEST(c.node, v.node) AS b
-            FROM cand c JOIN idx v ON v.i = c.ci
-            WHERE c.node <> v.node
-        )
-        SELECT a, b FROM paired
-        WHERE NOT EXISTS (
-            SELECT 1 FROM e WHERE e.a = paired.a AND e.b = paired.b
-        )
-    """
-
-
 def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Per-node LOCAL clustering coefficient over an undirected canonical
     (a < b) edge set: lcc(v) = 2·t(v) / (deg(v)·(deg(v)−1)) where t(v)
@@ -1125,35 +830,3 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
             ).alias("lcc_ppm"),
         )
     )
-
-
-def clustering_coefficients_oracle_sql(edge_sql: str) -> str:
-    """DuckDB twin: identical wedge/closure/degree derivation over the
-    caller's canonical (a, b) edge SQL, HUGEINT for the cross-multiply."""
-    return f"""
-        WITH e AS MATERIALIZED ({edge_sql}),
-        und AS MATERIALIZED (
-            SELECT a AS src, b AS dst FROM e
-            UNION ALL SELECT b AS src, a AS dst FROM e
-        ),
-        deg AS (
-            SELECT src, CAST(COUNT(*) AS BIGINT) AS degree
-            FROM und GROUP BY 1
-        ),
-        tri AS (
-            SELECT n1.src AS c, CAST(COUNT(*) AS BIGINT) AS triangles
-            FROM und n1 JOIN und n2
-              ON n1.src = n2.src AND n1.dst < n2.dst
-            WHERE EXISTS (SELECT 1 FROM e
-                          WHERE e.a = n1.dst AND e.b = n2.dst)
-            GROUP BY 1
-        )
-        SELECT deg.src AS node,
-               degree,
-               CAST(COALESCE(triangles, 0) AS BIGINT) AS triangles,
-               CAST(CAST(COALESCE(triangles, 0) AS HUGEINT) * 2000000
-                    // (CAST(degree AS HUGEINT) * (degree - 1))
-                    AS BIGINT) AS lcc_ppm
-        FROM deg LEFT JOIN tri ON deg.src = tri.c
-        WHERE degree >= 2
-    """

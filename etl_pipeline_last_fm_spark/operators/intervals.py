@@ -101,34 +101,3 @@ def interval_concurrency(
             F.max("__n").over(w_us).cast("long").alias("n_concurrent"),
         )
     )
-
-
-def interval_concurrency_oracle_sql(
-    intervals_sql: str,
-    key_cols: list[str],
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-) -> str:
-    """DuckDB twin: the SAME sweep as ONE global window (fine on the
-    oracle's single node) — an independent derivation of the identical
-    running sums."""
-    kc = ", ".join(key_cols)
-    return f"""
-        WITH iv AS ({intervals_sql}),
-        pts AS (
-            SELECT {kc}, epoch_us({start_col}) AS us, 0 AS kind, 1 AS delta
-            FROM iv
-            UNION ALL
-            SELECT {kc}, epoch_us({end_col}) AS us, 1 AS kind, -1 AS delta
-            FROM iv
-        ),
-        swept AS (
-            SELECT *, SUM(delta) OVER (ORDER BY us, kind, {kc}
-                                       ROWS UNBOUNDED PRECEDING) AS run
-            FROM pts
-        )
-        SELECT {kc}, us AS start_us,
-               CAST(MAX(run) OVER (PARTITION BY us) AS BIGINT)
-                   AS n_concurrent
-        FROM swept WHERE kind = 0
-    """

@@ -100,50 +100,3 @@ def mad_outliers(
         half_up_round(F.col("med"), 4).alias("med"),
         half_up_round(F.col("mad"), 4).alias("mad"),
     )
-
-
-def mad_outliers_oracle_sql(
-    table: str = "events",
-    value_col: str = "value",
-    group_col: str = "event_type",
-    id_col: str = "event_id",
-    cutoff: int = 3,
-) -> str:
-    """DuckDB twin: same rank-based lower medians, same integer cutoff.
-    (Not PERCENTILE_DISC spelled literally, so the rank arithmetic itself
-    is cross-checked — but it IS that function's semantics.)"""
-    return f"""
-        WITH src AS (
-            SELECT * FROM {table} WHERE {value_col} IS NOT NULL
-        ),
-        st AS (
-            SELECT {group_col} AS g, {value_col} AS v,
-                   ROW_NUMBER() OVER (PARTITION BY {group_col} ORDER BY {value_col}) AS rk,
-                   COUNT(*) OVER (PARTITION BY {group_col}) AS n
-            FROM src
-        ),
-        med AS (
-            SELECT g, MAX(CASE WHEN rk = (n + 1) // 2 THEN v END) AS med
-            FROM st GROUP BY g
-        ),
-        dev AS (
-            SELECT e.{id_col}, e.{group_col}, e.{value_col},
-                   m.med, abs(e.{value_col} - m.med) AS dv
-            FROM src e JOIN med m ON e.{group_col} = m.g
-        ),
-        st2 AS (
-            SELECT {group_col} AS g, dv,
-                   ROW_NUMBER() OVER (PARTITION BY {group_col} ORDER BY dv) AS rk,
-                   COUNT(*) OVER (PARTITION BY {group_col}) AS n
-            FROM dev
-        ),
-        mad AS (
-            SELECT g, MAX(CASE WHEN rk = (n + 1) // 2 THEN dv END) AS mad
-            FROM st2 GROUP BY g
-        )
-        SELECT d.{id_col}, d.{group_col}, d.{value_col},
-               FLOOR(d.med * 10000.0 + 0.5) / 10000.0 AS med,
-               FLOOR(m.mad * 10000.0 + 0.5) / 10000.0 AS mad
-        FROM dev d JOIN mad m ON d.{group_col} = m.g
-        WHERE d.dv > {cutoff} * m.mad
-    """

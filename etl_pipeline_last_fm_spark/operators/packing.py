@@ -107,33 +107,6 @@ def pack_sequences(
     )
 
 
-def pack_sequences_oracle_sql(budget: int = 512, table: str = "documents") -> str:
-    """DuckDB twin: the plain global-window prefix sum the two-phase Spark
-    plan must equal exactly."""
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
-            FROM {table}
-        ),
-        c AS (
-            SELECT doc_id, n_tokens,
-                   -- CAST: windowed SUM(BIGINT) is HUGEINT in DuckDB ->
-                   -- float64 in pandas -> driver value-hash mismatch vs
-                   -- Spark's BIGINT.
-                   CAST(COALESCE(SUM(n_tokens) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS tok_offset
-            FROM t
-        )
-        SELECT doc_id, n_tokens, tok_offset,
-               CAST(FLOOR(tok_offset / {budget}) AS BIGINT) AS seq_id,
-               CAST(tok_offset % {budget} AS BIGINT) AS pos_in_seq
-        FROM c
-    """
-
-
 def value_ordered_cumsum(
     df: DataFrame,
     value_col: str,
@@ -303,34 +276,6 @@ def pair_counts(docs: DataFrame, top_k: int = 20) -> DataFrame:
     return topk.withColumn("rnk", F.row_number().over(wrank).cast("int"))
 
 
-def pair_counts_oracle_sql(top_k: int = 20, table: str = "documents") -> str:
-    """DuckDB twin of pair_counts: zipped unnest gives (pos, tok), the same
-    per-doc lead window forms pairs, same deterministic rank."""
-    return f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(string_split(trim(text), ' ')) AS tok,
-                   generate_subscripts(string_split(trim(text), ' '), 1) AS pos
-            FROM {table}
-        ),
-        p AS (
-            SELECT doc_id, tok,
-                   lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-            FROM toks
-        ),
-        counted AS (
-            SELECT tok || ' ' || nxt AS pair, COUNT(*) AS n
-            FROM p WHERE nxt IS NOT NULL
-            GROUP BY 1
-        )
-        SELECT pair, n, rnk FROM (
-            SELECT pair, n,
-                   CAST(row_number() OVER (ORDER BY n DESC, pair ASC) AS INTEGER) AS rnk
-            FROM counted
-        ) WHERE rnk <= {top_k}
-    """
-
-
 def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 64,
@@ -388,38 +333,6 @@ def chunk_documents(
     )
 
 
-def chunk_documents_oracle_sql(
-    chunk_tokens: int = 64, overlap: int = 16, table: str = "documents"
-) -> str:
-    """DuckDB twin of chunk_documents (list_slice is 1-based and
-    end-inclusive like Spark's slice-by-length minus one)."""
-    stride = chunk_tokens - overlap
-    return f"""
-        WITH t AS (
-            SELECT doc_id, string_split(trim(text), ' ') AS toks,
-                   len(string_split(trim(text), ' ')) AS n
-            FROM {table}
-            WHERE text IS NOT NULL
-        ),
-        idx AS (
-            SELECT doc_id, toks,
-                   unnest(range(CAST(CEIL(GREATEST(n - {overlap}, {stride})
-                                          / {stride}.0) AS BIGINT))) AS chunk_idx
-            FROM t
-        )
-        SELECT doc_id,
-               CAST(chunk_idx AS INTEGER) AS chunk_idx,
-               chunk_idx * {stride} AS chunk_start,
-               CAST(len(list_slice(toks, chunk_idx * {stride} + 1,
-                                   chunk_idx * {stride} + {chunk_tokens})) AS BIGINT)
-                   AS n_chunk_tokens,
-               array_to_string(list_slice(toks, chunk_idx * {stride} + 1,
-                                          chunk_idx * {stride} + {chunk_tokens}), ' ')
-                   AS chunk_text
-        FROM idx
-    """
-
-
 def vocab_coverage(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Tokenizer-vocabulary candidates: top-k unigrams by corpus frequency
     with each prefix's cumulative share of all tokens — the "how big must
@@ -455,26 +368,6 @@ def vocab_coverage(docs: DataFrame, top_k: int = 20) -> DataFrame:
         )
         .select("tok", "n", "rnk", "cum_pct")
     )
-
-
-def vocab_coverage_oracle_sql(top_k: int = 20, table: str = "documents") -> str:
-    """DuckDB twin of vocab_coverage."""
-    return f"""
-        WITH toks AS (
-            SELECT unnest(string_split(trim(text), ' ')) AS tok FROM {table}
-        ),
-        total AS (SELECT COUNT(*) AS total FROM toks),
-        topk AS (
-            SELECT tok, COUNT(*) AS n FROM toks GROUP BY tok
-            ORDER BY n DESC, tok ASC LIMIT {top_k}
-        )
-        SELECT tok, n,
-               CAST(row_number() OVER (ORDER BY n DESC, tok ASC) AS INTEGER) AS rnk,
-               FLOOR(CAST(SUM(n) OVER (ORDER BY n DESC, tok ASC
-                                       ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-                     / total * 100.0 * 10000.0 + 0.5) / 10000.0 AS cum_pct
-        FROM topk, total
-    """
 
 
 def bpe_train(
@@ -618,99 +511,3 @@ def apply_bpe(
     # when the non-cheap expression is referenced from a CHILD projection)
     encoded = docs.select(F.col(id_col).alias("doc_id"), F.expr(expr).alias("toks"))
     return encoded.select("doc_id", "toks", F.size("toks").alias("n_toks"))
-
-
-def bpe_train_oracle_sql(n_merges: int = 6, doc_pred: str = "doc_id < 500") -> str:
-    """Unrolled-CTE DuckDB twin of ``bpe_train`` — the k-core/PageRank
-    trick applied to BPE training (VERDICT r4 item 8), refuting this
-    module's earlier "no single SQL statement can express it" at FIXED
-    n_merges: each iteration is (pair count self-join) -> (argmax with
-    the same count-desc/left-asc/right-asc tie-break) -> (greedy
-    left-to-right rewrite).
-
-    The greedy fold is replayed RELATIONALLY by run parity: a merge
-    candidate at position p conflicts only with one at p-1, and
-    consecutive matches occur only when left == right (t[p+1] cannot be
-    both the pair's right and its left otherwise), so greedy
-    left-to-right == "keep even offsets within each maximal run of
-    consecutive match positions". That independent derivation agreeing
-    with the fold's accumulator semantics step for step IS the
-    cross-check; rebuilt sequences renumber by row_number.
-
-    MATERIALIZED everywhere: t_{i} feeds the pair join (twice), the match
-    join (twice) and the rebuild — inlined, the usual exponential-plan
-    blowup."""
-    parts = [
-        f"""
-        WITH t0 AS MATERIALIZED (
-            SELECT doc_id, unnest(t) AS tok,
-                   unnest(range(1, len(t) + 1)) AS pos
-            FROM (SELECT doc_id,
-                         list_filter(string_split(trim(text), ' '),
-                                     x -> x <> '') AS t
-                  FROM documents WHERE ({doc_pred}) AND text IS NOT NULL)
-        )
-        """
-    ]
-    for i in range(1, n_merges + 1):
-        p = i - 1
-        parts.append(
-            f""",
-        pc{i} AS MATERIALIZED (
-            SELECT a.tok AS l, b.tok AS r, COUNT(*) AS n
-            FROM t{p} a JOIN t{p} b
-              ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-            GROUP BY 1, 2
-        ),
-        p{i} AS MATERIALIZED (
-            -- n >= 2 encodes the operator's early stop: once no pair
-            -- repeats, p is empty, t carries forward unchanged, and all
-            -- remaining trace steps emit zero rows — exactly the break.
-            SELECT l, r, CAST(n AS BIGINT) AS n FROM pc{i}
-            WHERE n >= 2
-            ORDER BY n DESC, l ASC, r ASC LIMIT 1
-        ),
-        m{i} AS MATERIALIZED (
-            SELECT a.doc_id, a.pos
-            FROM t{p} a
-            JOIN t{p} b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1, p{i}
-            WHERE a.tok = p{i}.l AND b.tok = p{i}.r
-        ),
-        k{i} AS MATERIALIZED (
-            SELECT doc_id, pos FROM (
-                SELECT doc_id, pos,
-                       pos - MIN(pos) OVER (PARTITION BY doc_id, grp) AS off
-                FROM (
-                    SELECT doc_id, pos,
-                           pos - ROW_NUMBER() OVER (
-                               PARTITION BY doc_id ORDER BY pos) AS grp
-                    FROM m{i}
-                )
-            ) WHERE off % 2 = 0
-        ),
-        t{i} AS MATERIALIZED (
-            SELECT doc_id,
-                   CASE WHEN taken THEN (SELECT l || r FROM p{i})
-                        ELSE tok END AS tok,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id
-                                      ORDER BY pos) AS pos
-            FROM (
-                SELECT t.doc_id, t.pos, t.tok,
-                       EXISTS (SELECT 1 FROM k{i} x
-                               WHERE x.doc_id = t.doc_id
-                                 AND x.pos = t.pos) AS taken
-                FROM t{p} t
-                WHERE NOT EXISTS (SELECT 1 FROM k{i} x
-                                  WHERE x.doc_id = t.doc_id
-                                    AND x.pos = t.pos - 1)
-            )
-        )
-        """
-        )
-    selects = [
-        f"""SELECT CAST({i} AS INTEGER) AS step, l AS "left", r AS "right",
-                   l || r AS merged, n AS pair_count FROM p{i}"""
-        for i in range(1, n_merges + 1)
-    ]
-    parts.append("\n        UNION ALL\n        ".join(selects))
-    return "".join(parts)

@@ -221,86 +221,3 @@ def match_event_pattern_measures(
     return base.select(
         "user_id", F.explode(F.transform(idxs, _match_struct)).alias("__m")
     ).select("user_id", "__m.*")
-
-
-def match_event_pattern_measures_oracle_sql(
-    pattern: str, alphabet: dict[str, str] | None = None
-) -> str:
-    """DuckDB twin of ``match_event_pattern_measures``: the same
-    gap/match prefix-sum position recovery over string_split_regex +
-    regexp_extract_all, with the sorted struct list built by
-    ``array_agg(... ORDER BY)`` and indexed 1-based."""
-    alphabet = alphabet or DEFAULT_ALPHABET
-    case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in sorted(alphabet.items())
-    )
-    pattern = pattern.replace("'", "''")
-    return f"""
-        WITH enc AS (
-            SELECT user_id,
-                   string_agg(CASE event_type {case} ELSE '?' END, ''
-                              ORDER BY epoch_us(ts), event_id) AS s,
-                   array_agg(struct_pack(us := epoch_us(ts),
-                                         eid := event_id)
-                             ORDER BY epoch_us(ts), event_id) AS arr
-            FROM events
-            GROUP BY user_id
-        ), ex AS (
-            SELECT user_id, arr,
-                   regexp_extract_all(s, '{pattern}') AS ms,
-                   list_transform(regexp_extract_all(s, '{pattern}'),
-                                  x -> length(x)) AS lm,
-                   list_transform(string_split_regex(s, '{pattern}'),
-                                  x -> length(x)) AS lg
-            FROM enc
-        ), mrows AS (
-            SELECT user_id, arr, lm, lg,
-                   unnest(ms) AS match_str,
-                   generate_subscripts(ms, 1) AS i
-            FROM ex
-        ), pos AS (
-            SELECT user_id, arr, match_str, i,
-                   1 + COALESCE(list_sum(lg[1:i]), 0)
-                     + COALESCE(list_sum(lm[1:i-1]), 0) AS st
-            FROM mrows
-        )
-        SELECT user_id,
-               CAST(i AS BIGINT) AS match_no,
-               match_str,
-               arr[CAST(st AS BIGINT)].eid AS start_event_id,
-               arr[CAST(st AS BIGINT)].us AS start_us,
-               arr[CAST(st + length(match_str) - 1 AS BIGINT)].eid
-                 AS end_event_id,
-               arr[CAST(st + length(match_str) - 1 AS BIGINT)].us
-                 AS end_us
-        FROM pos
-    """
-
-
-def match_event_pattern_oracle_sql(
-    pattern: str, alphabet: dict[str, str] | None = None
-) -> str:
-    """DuckDB twin over the events table: string_agg with the same total
-    order, regexp_extract_all for the leftmost non-overlapping count."""
-    alphabet = alphabet or DEFAULT_ALPHABET
-    case = " ".join(
-        f"WHEN '{k}' THEN '{v}'" for k, v in sorted(alphabet.items())
-    )
-    # DuckDB standard string literals do not process backslashes, so only
-    # single quotes need escaping for a safe SQL literal.
-    pattern = pattern.replace("'", "''")
-    return f"""
-        WITH enc AS (
-            SELECT user_id,
-                   string_agg(CASE event_type {case} ELSE '?' END, ''
-                              ORDER BY epoch_us(ts), event_id) AS s
-            FROM events
-            GROUP BY user_id
-        )
-        SELECT user_id,
-               CAST(length(s) AS BIGINT) AS n_events,
-               CAST(len(regexp_extract_all(s, '{pattern}')) AS BIGINT)
-                 AS n_matches,
-               COALESCE(regexp_extract(s, '{pattern}', 0), '') AS first_match
-        FROM enc
-    """

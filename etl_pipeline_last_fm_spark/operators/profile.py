@@ -81,30 +81,6 @@ def profile_columns(
     ).select("col_name", "n_rows", "n_nonnull", "n_distinct", "min_val", "max_val", "avg_val")
 
 
-def profile_columns_oracle_sql(cols: list[str], table: str = "lineitem") -> str:
-    """DuckDB twin: per-column UNION ALL of the same aggregates, with the
-    shared floor-trick rounding on the mean."""
-    parts = [
-        f"""
-        SELECT '{c}' AS col_name,
-               COUNT(*) AS n_rows,
-               COUNT({c}) AS n_nonnull,
-               COUNT(DISTINCT {c}) AS n_distinct,
-               CAST(MIN({c}) AS DOUBLE) AS min_val,
-               CAST(MAX({c}) AS DOUBLE) AS max_val,
-               CAST(sign(CAST(SUM(CAST(FLOOR({c} * 10000 + 0.5) AS BIGINT))
-                              AS BIGINT))
-                    * ((2 * abs(CAST(SUM(CAST(FLOOR({c} * 10000 + 0.5) AS BIGINT))
-                                     AS HUGEINT)) + COUNT({c}))
-                       // NULLIF(2 * COUNT({c}), 0)) AS DOUBLE) / 10000.0
-                   AS avg_val
-        FROM {table}
-        """
-        for c in cols
-    ]
-    return " UNION ALL ".join(parts)
-
-
 def quantile_buckets(
     docs: DataFrame,
     n_buckets: int = 10,
@@ -157,30 +133,6 @@ def quantile_buckets(
     )
 
 
-def quantile_buckets_oracle_sql(n_buckets: int = 10, table: str = "documents") -> str:
-    """DuckDB twin: quantile_cont edges (same interpolation as Spark
-    percentile()), same rounding, same #edges-below bucket id."""
-    edge_cols = ", ".join(
-        f"FLOOR(quantile_cont(n_tokens, {i / n_buckets}) * 10000.0 + 0.5) / 10000.0"
-        f" AS e{i}"
-        for i in range(1, n_buckets)
-    )
-    bucket = " + ".join(
-        f"CASE WHEN n_tokens >= e{i} THEN 1 ELSE 0 END" for i in range(1, n_buckets)
-    )
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
-            FROM {table}
-            WHERE text IS NOT NULL
-        ),
-        e AS (SELECT {edge_cols} FROM t)
-        SELECT doc_id, n_tokens, CAST({bucket} AS INTEGER) AS bucket
-        FROM t, e
-    """
-
-
 def fixed_width_histogram(
     df: DataFrame,
     col: str,
@@ -226,34 +178,6 @@ def fixed_width_histogram(
             half_up_round(F.col("__lo") + (F.col("bin") + 1) * w, 4).alias("bin_hi"),
         )
     )
-
-
-def fixed_width_histogram_oracle_sql(
-    col: str, n_bins: int = 50, table: str = "lineitem"
-) -> str:
-    """DuckDB twin of fixed_width_histogram (identical expression shape)."""
-    return f"""
-        WITH b AS (
-            SELECT CAST(MIN({col}) AS DOUBLE) AS lo, CAST(MAX({col}) AS DOUBLE) AS hi
-            FROM {table}
-        ),
-        binned AS (
-            SELECT CAST(CASE WHEN hi = lo THEN 0 ELSE
-                       LEAST({n_bins - 1},
-                       FLOOR((CAST({col} AS DOUBLE) - lo) * {n_bins}.0 / (hi - lo)))
-                   END AS INTEGER) AS bin,
-                   lo, hi
-            FROM {table}, b
-        )
-        -- bin * ((hi-lo)/n): parenthesized so the divide happens FIRST,
-        -- matching Spark's w = (hi-lo)/n op order bit-for-bit
-        SELECT bin, COUNT(*) AS n_rows,
-               FLOOR((lo + bin * ((hi - lo) / {n_bins}.0))
-                     * 10000.0 + 0.5) / 10000.0 AS bin_lo,
-               FLOOR((lo + (bin + 1) * ((hi - lo) / {n_bins}.0))
-                     * 10000.0 + 0.5) / 10000.0 AS bin_hi
-        FROM binned GROUP BY bin, lo, hi
-    """
 
 
 def merge_histograms(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -379,30 +303,3 @@ def contingency_chi2(
             ).alias("cell_chi2_ppm"),
         )
     )
-
-
-def contingency_chi2_oracle_sql(
-    row_col: str = "lang", col_col: str = "source", table: str = "documents"
-) -> str:
-    """DuckDB twin: identical HUGEINT divide-first arithmetic."""
-    return f"""
-        WITH o AS (
-            SELECT {row_col}, {col_col}, CAST(COUNT(*) AS BIGINT) AS o
-            FROM {table} GROUP BY 1, 2
-        ),
-        r AS (SELECT {row_col}, CAST(COUNT(*) AS HUGEINT) AS r
-              FROM {table} GROUP BY 1),
-        c AS (SELECT {col_col}, CAST(COUNT(*) AS HUGEINT) AS c
-              FROM {table} GROUP BY 1),
-        n AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM {table})
-        SELECT r.{row_col}, c.{col_col},
-               CAST(COALESCE(o.o, 0) AS BIGINT) AS observed,
-               CAST(r.r * c.c * 1000000 // n.n AS BIGINT) AS expected_micro,
-               CAST((CAST(COALESCE(o.o, 0) AS HUGEINT) * n.n - r.r * c.c)
-                    * (CAST(COALESCE(o.o, 0) AS HUGEINT) * n.n - r.r * c.c)
-                    // (r.r * c.c) * 1000000 // n.n AS BIGINT)
-                   AS cell_chi2_ppm
-        FROM r CROSS JOIN c
-        LEFT JOIN o ON o.{row_col} = r.{row_col} AND o.{col_col} = c.{col_col}
-        CROSS JOIN n
-    """

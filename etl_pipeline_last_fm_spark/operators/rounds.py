@@ -35,8 +35,9 @@ Loops that stay outside on purpose:
   value they collect each round (no label changed, no pair left), which
   a fixed-input driver cannot express.
 
-``unroll_ctes`` is the oracle side of the same loop: the DuckDB twins
-unroll their rounds as chained CTEs.
+The oracle side of the same loop, ``grading.spec.unroll_ctes``, lives
+with the graded queries: their DuckDB twins unroll the rounds as chained
+CTEs.
 """
 
 from __future__ import annotations
@@ -75,9 +76,3 @@ def fold_rounds(step: Callable, inputs: Iterable, state=None):
     if state is None:
         raise ValueError("fold_rounds needs an initial state or at least one input")
     return state
-
-
-def unroll_ctes(head: str, round_sql: Callable[[int], str], n: int) -> str:
-    """``head`` followed by ``round_sql(i)`` for i = 1..n: round i's CTEs
-    read round i-1's."""
-    return head + "".join(round_sql(i) for i in range(1, n + 1))

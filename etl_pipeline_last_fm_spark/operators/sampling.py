@@ -17,10 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    portable_hash60,
-    portable_hash60_sql,
-)
+from etl_pipeline_last_fm_spark.functions.scalar import portable_hash60
 
 
 _DEFAULT_WEIGHTS = {"train": 80, "val": 10, "test": 10}
@@ -55,14 +52,6 @@ def _split_case(bucket, weights: dict[str, int]):
     return expr
 
 
-def _split_case_sql(bucket_sql: str, weights: dict[str, int]) -> str:
-    arms = " ".join(
-        f"WHEN {bucket_sql} < {hi} THEN '{name}'"
-        for name, hi in _bucket_edges(weights)
-    )
-    return f"CASE {arms} END"
-
-
 def split_assign(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -83,25 +72,6 @@ def split_assign(
     return df.withColumn("bucket", bucket.cast("int")).withColumn(
         "split", _split_case(bucket, weights)
     )
-
-
-def split_assign_oracle_sql(
-    id_col: str = "doc_id",
-    table: str = "documents",
-    weights: dict[str, int] | None = None,
-    salt: str = "v1",
-    select_cols: str = "doc_id",
-) -> str:
-    """DuckDB twin of split_assign (same salt, same hash, same edges)."""
-    weights = weights or _DEFAULT_WEIGHTS
-    h = portable_hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
-    return f"""
-        WITH b AS (
-            SELECT {select_cols}, CAST(({h}) % 100 AS INTEGER) AS bucket
-            FROM {table}
-        )
-        SELECT {select_cols}, bucket, {_split_case_sql("bucket", weights)} AS split FROM b
-    """
 
 
 def stratified_sample(
@@ -130,27 +100,6 @@ def stratified_sample(
     )
 
 
-def stratified_sample_oracle_sql(
-    strata_col: str,
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    table: str = "documents",
-    salt: str = "v1",
-) -> str:
-    h = portable_hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
-    return f"""
-        WITH ranked AS (
-            SELECT {id_col}, {strata_col},
-                   CAST(row_number() OVER (PARTITION BY {strata_col}
-                                           ORDER BY ({h}) ASC, {id_col} ASC)
-                        AS INTEGER) AS sample_rank
-            FROM {table}
-        )
-        SELECT {id_col}, {strata_col}, sample_rank
-        FROM ranked WHERE sample_rank <= {n_per_stratum}
-    """
-
-
 def group_split_assign(
     df: DataFrame,
     group_col: str = "user_id",
@@ -170,22 +119,6 @@ def group_split_assign(
     weights = weights or _DEFAULT_WEIGHTS
     bucket = _bucket_expr(salt, group_col)
     return df.withColumn("split", _split_case(bucket, weights))
-
-
-def group_split_assign_oracle_sql(
-    group_col: str = "user_id",
-    table: str = "events",
-    weights: dict[str, int] | None = None,
-    salt: str = "gs1",
-    select_cols: str = "event_id, user_id",
-) -> str:
-    """DuckDB twin of group_split_assign."""
-    weights = weights or _DEFAULT_WEIGHTS
-    h = portable_hash60_sql(f"'{salt}:' || CAST({group_col} AS VARCHAR)")
-    return f"""
-        SELECT {select_cols}, {_split_case_sql(f"({h}) % 100", weights)} AS split
-        FROM {table}
-    """
 
 
 def mixture_sample(
@@ -215,27 +148,6 @@ def mixture_sample(
     for value, bps in rates_bps.items():
         rate = F.when(F.col(stratum_col) == value, F.lit(bps)).otherwise(rate)
     return df.filter(bucket < rate)
-
-
-def mixture_sample_oracle_sql(
-    rates_bps: dict[str, int],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    table: str = "documents",
-    default_bps: int = 10_000,
-    salt: str = "mix1",
-    select_cols: str = "doc_id, lang, source",
-) -> str:
-    """DuckDB twin of mixture_sample."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST({id_col} AS VARCHAR)")
-    arms = " ".join(
-        f"WHEN {stratum_col} = '{v}' THEN {bps}" for v, bps in rates_bps.items()
-    )
-    return f"""
-        SELECT {select_cols}
-        FROM {table}
-        WHERE ({h}) % 10000 < CASE {arms} ELSE {default_bps} END
-    """
 
 
 def token_budget_sample(
@@ -357,67 +269,3 @@ def weighted_sample(
             (F.floor(F.col("__wkey") * 1e12 + F.lit(0.5)) / 1e12).alias("wkey"),
         )
     )
-
-
-def weighted_sample_oracle_sql(
-    k: int = 50,
-    table: str = "documents",
-    salt: str = "ws1",
-) -> str:
-    """DuckDB twin of weighted_sample — same hash-derived u and pow key.
-    pow() ulp divergence between engines could in principle flip an
-    ordering of two keys closer than ~1e-16 relative; with distinct
-    md5-derived u values that is vanishingly improbable (and would fail
-    loudly in the hash check, not silently)."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST(doc_id AS VARCHAR)")
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   CAST(len(string_split(trim(text), ' ')) AS BIGINT)
-                       AS n_tokens,
-                   pow(({h} + 1) / {float(1 << 60)!r},
-                       1.0 / len(string_split(trim(text), ' '))) AS wk
-            FROM {table}
-        )
-        SELECT doc_id, n_tokens,
-               FLOOR(wk * 1e12 + 0.5) / 1e12 AS wkey
-        FROM t
-        ORDER BY wk DESC, doc_id ASC
-        LIMIT {k}
-    """
-
-
-def token_budget_sample_oracle_sql(
-    budgets: dict[str, int],
-    source_col: str = "source",
-    table: str = "documents",
-    salt: str = "v1",
-) -> str:
-    """DuckDB twin of token_budget_sample (same portable hash + exclusive
-    window frame)."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST(doc_id AS VARCHAR)")
-    budget = "CASE " + " ".join(
-        f"WHEN {source_col} = '{s}' THEN {b}" for s, b in sorted(budgets.items())
-    ) + " ELSE NULL END"
-    return f"""
-        WITH t AS (
-            SELECT doc_id, {source_col} AS source,
-                   CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens,
-                   {h} AS h
-            FROM {table}
-        ),
-        c AS (
-            SELECT doc_id, source, n_tokens,
-                   -- CAST: DuckDB windowed SUM(BIGINT) yields HUGEINT, which
-                   -- pandas renders as float64 ('52.0') and the driver's
-                   -- value-hash then disagrees with Spark's BIGINT ('52').
-                   CAST(COALESCE(SUM(n_tokens) OVER (
-                       PARTITION BY source ORDER BY h ASC, doc_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS cum_before,
-                   {budget} AS budget
-            FROM t
-        )
-        SELECT doc_id, source, n_tokens, cum_before
-        FROM c WHERE cum_before < budget
-    """

@@ -140,47 +140,6 @@ def scd2_apply(
     return closed.unionByName(shifted)
 
 
-def scd2_history_oracle_sql(
-    key: str = "o_custkey",
-    attr: str = "o_orderpriority",
-    ts: str = "o_orderdate",
-    tiebreak: str = "o_orderkey",
-    table: str = "orders",
-) -> str:
-    """DuckDB twin of scd2_history: identical windows, identical date
-    formatting, version pinned to INTEGER."""
-    return f"""
-        WITH obs AS (
-            SELECT {key}, {attr},
-                   strftime({ts}, '%Y-%m-%d') AS d,
-                   {tiebreak} AS tb
-            FROM {table}
-        ),
-        flagged AS (
-            SELECT *, CASE WHEN lag({attr}) OVER w IS NOT DISTINCT FROM {attr}
-                           THEN 0 ELSE 1 END AS chg
-            FROM obs
-            WINDOW w AS (PARTITION BY {key} ORDER BY d, tb)
-        ),
-        islands AS (
-            SELECT *, SUM(chg) OVER (PARTITION BY {key} ORDER BY d, tb
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ver
-            FROM flagged
-        ),
-        runs AS (
-            SELECT {key}, ver, MIN({attr}) AS {attr}, MIN(d) AS valid_from
-            FROM islands GROUP BY {key}, ver
-        )
-        SELECT {key}, {attr},
-               CAST(ver AS INTEGER) AS version,
-               valid_from,
-               lead(valid_from) OVER (PARTITION BY {key} ORDER BY ver) AS valid_to,
-               lead(valid_from) OVER (PARTITION BY {key} ORDER BY ver) IS NULL
-                   AS is_current
-        FROM runs
-    """
-
-
 def scd2_as_of(
     history: DataFrame,
     as_of: str,
@@ -198,24 +157,6 @@ def scd2_as_of(
         (F.col("valid_from") <= d)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > d))
     ).select(key, attr, "version", "valid_from")
-
-
-def scd2_as_of_oracle_sql(
-    as_of: str,
-    key: str = "o_custkey",
-    attr: str = "o_orderpriority",
-    ts: str = "o_orderdate",
-    tiebreak: str = "o_orderkey",
-    table: str = "orders",
-) -> str:
-    """DuckDB twin: the same filter over the scd2_history oracle."""
-    hist = scd2_history_oracle_sql(key, attr, ts, tiebreak, table)
-    return f"""
-        SELECT {key}, {attr}, version, valid_from
-        FROM ({hist})
-        WHERE valid_from <= '{as_of}'
-          AND (valid_to IS NULL OR valid_to > '{as_of}')
-    """
 
 
 def snapshot_diff(
@@ -279,34 +220,6 @@ def snapshot_diff(
             *[F.col(f"new_{c}") for c in compare_cols],
         )
     )
-
-
-def snapshot_diff_oracle_sql(
-    old_sql: str,
-    new_sql: str,
-    key_cols: list[str],
-    compare_cols: list[str],
-) -> str:
-    """DuckDB twin of snapshot_diff (FULL OUTER + IS DISTINCT FROM)."""
-    on = " AND ".join(f"o.{k} = n.{k}" for k in key_cols)
-    keys = ", ".join(f"COALESCE(o.{k}, n.{k}) AS {k}" for k in key_cols)
-    olds = ", ".join(f"o.{c} AS old_{c}" for c in compare_cols)
-    news = ", ".join(f"n.{c} AS new_{c}" for c in compare_cols)
-    differs = " OR ".join(f"(o.{c} IS DISTINCT FROM n.{c})" for c in compare_cols)
-    k0 = key_cols[0]
-    return f"""
-        WITH o AS ({old_sql}), n AS ({new_sql}),
-        j AS (
-            SELECT {keys},
-                   CASE WHEN o.{k0} IS NULL THEN 'added'
-                        WHEN n.{k0} IS NULL THEN 'removed'
-                        WHEN {differs} THEN 'changed'
-                        ELSE 'unchanged' END AS change,
-                   {olds}, {news}
-            FROM o FULL OUTER JOIN n ON {on}
-        )
-        SELECT * FROM j WHERE change <> 'unchanged'
-    """
 
 
 MERGE_CUTOFF_US = 1705363200000000  # 2024-01-16T00:00:00Z
@@ -390,41 +303,3 @@ def merge_upsert(
             F.coalesce(F.col("s_us"), F.col("t_us")).alias("updated_us"),
         )
     )
-
-
-def merge_upsert_oracle_sql(
-    cutoff_us: int = MERGE_CUTOFF_US,
-    delete_type: str = "error",
-    table: str = "events",
-) -> str:
-    """DuckDB twin: same two compactions, same full-outer CASE merge."""
-    return f"""
-        WITH ev AS (
-            SELECT user_id, event_id, event_type, value,
-                   epoch_us(ts) AS us
-            FROM {table}
-        ),
-        t AS (
-            SELECT user_id AS t_uid, value AS t_value, us AS t_us
-            FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY user_id ORDER BY us DESC, event_id DESC) AS rn
-                FROM ev WHERE us < {cutoff_us}
-            ) WHERE rn = 1
-        ),
-        s AS (
-            SELECT user_id AS s_uid,
-                   event_type = '{delete_type}' AS s_del,
-                   value AS s_value, us AS s_us
-            FROM (
-                SELECT *, ROW_NUMBER() OVER (
-                    PARTITION BY user_id ORDER BY us DESC, event_id DESC) AS rn
-                FROM ev WHERE us >= {cutoff_us}
-            ) WHERE rn = 1
-        )
-        SELECT COALESCE(t_uid, s_uid) AS user_id,
-               CASE WHEN s_uid IS NOT NULL THEN s_value ELSE t_value END AS value,
-               COALESCE(s_us, t_us) AS updated_us
-        FROM t FULL OUTER JOIN s ON t_uid = s_uid
-        WHERE NOT COALESCE(s_del, FALSE)
-    """

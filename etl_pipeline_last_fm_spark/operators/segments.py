@@ -102,44 +102,6 @@ def rfm_segments(
     )
 
 
-def rfm_segments_oracle_sql(n_tiles: int = 5, table: str = "events") -> str:
-    """DuckDB twin of ``rfm_segments``: same aggregate, same corpus
-    frontier, same tie-pinned ntile windows (ntile semantics — equal-
-    sized groups, earlier groups take the remainder — match Spark's)."""
-    return f"""
-        WITH per_user AS (
-            SELECT user_id,
-                   MAX(epoch_us(ts)) AS last_us,
-                   CAST(COUNT(*) AS BIGINT) AS frequency,
-                   CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS monetary_cents
-            FROM {table} GROUP BY 1
-        ),
-        c AS (SELECT MAX(last_us) AS corpus_us FROM per_user),
-        base AS (
-            SELECT user_id,
-                   (corpus_us - last_us) // 86400000000 AS recency_days,
-                   frequency, monetary_cents
-            FROM per_user, c
-        ),
-        tiled AS (
-            SELECT user_id, recency_days, frequency, monetary_cents,
-                   CAST(ntile({n_tiles}) OVER (
-                       ORDER BY recency_days, user_id) AS INT) AS r_tile,
-                   CAST(ntile({n_tiles}) OVER (
-                       ORDER BY frequency DESC, user_id) AS INT) AS f_tile,
-                   CAST(ntile({n_tiles}) OVER (
-                       ORDER BY monetary_cents DESC, user_id) AS INT)
-                       AS m_tile
-            FROM base
-        )
-        SELECT user_id, recency_days, frequency, monetary_cents,
-               r_tile, f_tile, m_tile,
-               CAST(r_tile * 100 + f_tile * 10 + m_tile AS INT) AS rfm_code
-        FROM tiled
-    """
-
-
 def time_weighted_avg(
     events: DataFrame,
     key_col: str = "user_id",
@@ -200,34 +162,6 @@ def time_weighted_avg(
             F.expr("CAST(__num div span_us AS BIGINT)").alias("twap_cents"),
         )
     )
-
-
-def time_weighted_avg_oracle_sql(table: str = "events") -> str:
-    """DuckDB twin of ``time_weighted_avg``: same lead() segments, same
-    HUGEINT cross-multiply and truncating division."""
-    return f"""
-        WITH seg AS (
-            SELECT user_id,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
-                   epoch_us(ts) AS us,
-                   lead(epoch_us(ts)) OVER (
-                       PARTITION BY user_id
-                       ORDER BY epoch_us(ts), event_id
-                   ) AS next_us
-            FROM {table}
-            WHERE value IS NOT NULL AND user_id IS NOT NULL
-              AND ts IS NOT NULL
-        )
-        SELECT user_id,
-               CAST(COUNT(*) + 1 AS BIGINT) AS n_events,
-               CAST(SUM(next_us - us) AS BIGINT) AS span_us,
-               CAST(SUM(CAST(cents AS HUGEINT) * (next_us - us))
-                    // SUM(next_us - us) AS BIGINT) AS twap_cents
-        FROM seg
-        WHERE next_us IS NOT NULL
-        GROUP BY 1
-        HAVING SUM(next_us - us) > 0
-    """
 
 
 # --- TWAP as ordered-fold IVM member #5 ---------------------------------

@@ -52,28 +52,3 @@ def sessionize(
             ),
         )
     )
-
-
-def sessionize_oracle_sql(gap_minutes: int = 30) -> str:
-    gap_us = gap_minutes * 60_000_000
-    return f"""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, value,
-                   CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                             OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {gap_us}
-                        THEN 1 ELSE 0 END AS new_session
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-            SELECT *, SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                             ROWS UNBOUNDED PRECEDING) AS session_seq
-            FROM flagged
-        )
-        SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-               MIN(ts) AS session_start, MAX(ts) AS session_end,
-               COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                    AS DOUBLE) / 100.0 AS session_value
-        FROM numbered
-        GROUP BY user_id, session_seq
-    """

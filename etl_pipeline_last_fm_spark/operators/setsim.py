@@ -194,40 +194,6 @@ def prefix_filter_pairs(
     return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
 
 
-def prefix_filter_pairs_oracle_sql(
-    threshold_num: int = 1, threshold_den: int = 2, shingle_len: int = 3
-) -> str:
-    """DuckDB oracle: the all-pairs shingle-Jaccard truth set with the SAME
-    integer threshold comparison. Unlike the minhash oracle (where equality
-    holds only because LSH recall is 1.0 on this corpus), here equality is
-    a THEOREM — prefix filtering is lossless — so this oracle checks the
-    operator on any corpus, at any threshold."""
-    s = shingle_len
-    cols = ", ".join(f"t[i+{j + 1}]" for j in range(s))
-    return f"""
-        WITH sh AS MATERIALIZED (
-                 SELECT doc_id,
-                        list_distinct(list_transform(range(greatest(len(t) - {s}, 0) + 1),
-                                       i -> concat_ws(' ', {cols}))) AS shingles
-                 FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)),
-             sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
-             rows_ AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-             inter AS (
-                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-                 FROM rows_ a JOIN rows_ b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-             pairs AS (
-                 SELECT doc_a, doc_b, c, sa.n + sb.n - c AS u
-                 FROM inter
-                 JOIN sizes sa ON sa.doc_id = doc_a
-                 JOIN sizes sb ON sb.doc_id = doc_b)
-        SELECT doc_a, doc_b,
-               FLOOR(CAST(c AS DOUBLE) / u * 10000.0 + 0.5) / 10000.0 AS jaccard
-        FROM pairs WHERE c * {threshold_den} >= {threshold_num} * u
-    """
-
-
 def prefix_filter_pairs_incremental(
     new_docs: DataFrame,
     corpus: DataFrame,
@@ -446,61 +412,3 @@ def sorted_neighborhood_pairs_multipass(
     rev = _snm_candidates(docs, F.reverse(F.trim(F.col("text"))), window)
     cands = fwd.unionByName(rev).distinct().persist()
     return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
-
-
-def sorted_neighborhood_pairs_oracle_sql(
-    window: int = 10,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-    shingle_len: int = 3,
-    multipass: bool = False,
-) -> str:
-    """DuckDB twin: identical rank (ROW_NUMBER ORDER BY trim(text),
-    doc_id), identical window, identical verification; with
-    ``multipass`` the reversed-key pass's candidates union in."""
-    s = shingle_len
-    cols = ", ".join(f"t[i+{j + 1}]" for j in range(s))
-    rev_cte = f"""
-        ranked2 AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY reverse(trim(text)), doc_id) AS r
-            FROM documents
-        ),"""
-    rev_union = f"""
-            UNION
-            SELECT least(a.doc_id, b.doc_id), greatest(a.doc_id, b.doc_id)
-            FROM ranked2 a JOIN ranked2 b
-              ON b.r > a.r AND b.r <= a.r + {window - 1}"""
-    return f"""
-        WITH ranked AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY trim(text), doc_id) AS r
-            FROM documents
-        ),{rev_cte if multipass else ""}
-        cands AS (
-            SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
-                            greatest(a.doc_id, b.doc_id) AS doc_b
-            FROM ranked a JOIN ranked b
-              ON b.r > a.r AND b.r <= a.r + {window - 1}
-            {rev_union if multipass else ""}
-        ),
-        sh AS MATERIALIZED (
-            SELECT doc_id,
-                   list_distinct(list_transform(range(greatest(len(t) - {s}, 0) + 1),
-                                  i -> concat_ws(' ', {cols}))) AS shingles
-            FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-            WHERE doc_id IN (SELECT doc_a FROM cands UNION SELECT doc_b FROM cands)
-        ),
-        verified AS (
-            SELECT doc_a, doc_b,
-                   len(list_intersect(sa.shingles, sb.shingles)) AS c,
-                   len(sa.shingles) + len(sb.shingles)
-                     - len(list_intersect(sa.shingles, sb.shingles)) AS u
-            FROM cands
-            JOIN sh sa ON sa.doc_id = doc_a
-            JOIN sh sb ON sb.doc_id = doc_b
-        )
-        SELECT doc_a, doc_b,
-               FLOOR(CAST(c AS DOUBLE) / u * 10000.0 + 0.5) / 10000.0 AS jaccard
-        FROM verified WHERE c * {threshold_den} >= {threshold_num} * u
-    """

@@ -24,8 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.functions.scalar import cosine_similarity_expr, half_up_round
-from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds, unroll_ctes
+from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
+from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 
 
 def _as_double(vec: Column) -> Column:
@@ -177,64 +177,6 @@ def _dot_literal(vec: Column, plane: list[float]) -> Column:
     )
 
 
-def lsh_bucket_oracle_expr(vec_expr: str, planes: list[list[float]]) -> str:
-    """DuckDB SQL expression computing the SAME bucket id as lsh_bucket_expr,
-    with the hyperplanes baked in as float literals (repr round-trips the
-    exact double bits). This is what makes the LSH-bucketed operators fully
-    oracle-checkable: the 'non-portable' part is just a deterministic seed.
-    Sign decisions are FP-robust — plane dots are O(1) magnitude, so a
-    cross-engine summation-order delta (~1e-15) cannot flip them."""
-    terms = []
-    for i, plane in enumerate(planes):
-        lits = ", ".join(repr(float(p)) for p in plane)
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}, [{lits}]) > 0 THEN {1 << i} ELSE 0 END)"
-        )
-    return "(" + "\n + ".join(terms) + ")"
-
-
-def lsh_ann_topk_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_planes: int = 12,
-    probe_flips: int = 0,
-    dim: int = 64,
-    seed: int = 42,
-) -> str:
-    """DuckDB twin of lsh_ann_topk (same planes via the shared seed). The
-    multi-probe bucket expansion collapses to a Hamming-ball join predicate:
-    candidate buckets within ``probe_flips`` sign flips of the query's."""
-    bucket = lsh_bucket_oracle_expr("e", hyperplanes(dim, n_planes, seed))
-    join_cond = (
-        "q.bucket = bk.bucket"
-        if not probe_flips
-        else f"bit_count(xor(q.bucket, bk.bucket)) <= {probe_flips}"
-    )
-    return f"""
-        WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             bk AS (SELECT vec_id, e, {bucket} AS bucket FROM v),
-             q AS (SELECT vec_id AS q_id, e AS qe, bucket FROM bk WHERE vec_id < {n_queries}),
-             scored AS (
-                 SELECT q.q_id, bk.vec_id AS cand_id,
-                        list_dot_product(q.qe, bk.e)
-                          / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(bk.e, bk.e)))
-                          AS sim
-                 FROM q JOIN bk ON {join_cond} AND bk.vec_id <> q.q_id
-             ),
-             ranked AS (
-                 SELECT q_id, cand_id,
-                        FLOOR(sim * 1000000.0 + 0.5) / 1000000.0 AS sim_r,
-                        ROW_NUMBER() OVER (
-                            PARTITION BY q_id
-                            ORDER BY FLOOR(sim * 1000000.0 + 0.5) DESC, cand_id
-                        ) AS rn
-                 FROM scored
-             )
-        SELECT q_id, cand_id, sim_r AS sim, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
-
-
 def ivf_ann_topk_trained(
     emb: DataFrame,
     n_queries: int = 10,
@@ -334,69 +276,6 @@ def ivf_ann_topk_trained(
     )
 
 
-def ivf_ann_topk_trained_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_iters: int = 2,
-) -> str:
-    """DuckDB twin of ``ivf_ann_topk_trained``: replays the k-means
-    training via ``kmeans_lloyd_cte_sql``, then routes with the same
-    integer squared-L2 argmin and ranks candidates on the same rounded
-    cosine — training, assignment, probe choice and final ranking all
-    match Spark decision-for-decision."""
-    body = kmeans_lloyd_cte_sql(k=n_centroids, n_iters=n_iters)
-    return f"""
-        WITH {body},
-        dd AS MATERIALIZED (
-            SELECT x.id, c.cid,
-                   CAST(SUM((x.xv - c.cv) * (x.xv - c.cv)) AS BIGINT) AS dist
-            FROM x JOIN c{n_iters} c ON x.dim = c.dim
-            GROUP BY 1, 2
-        ),
-        assign AS (
-            SELECT id, cid AS cluster FROM (
-                SELECT id, cid,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY id ORDER BY dist ASC, cid ASC
-                       ) AS rn
-                FROM dd
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT id AS q_id, cid AS cluster FROM (
-                SELECT id, cid,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY id ORDER BY dist ASC, cid ASC
-                       ) AS rn
-                FROM dd WHERE id < {n_queries}
-            ) WHERE rn <= {nprobe}
-        ),
-        v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        corpus AS (SELECT v.id, v.e, a.cluster FROM v JOIN assign a ON v.id = a.id),
-        qp AS (SELECT p.q_id, v.e AS qe, p.cluster FROM probes p JOIN v ON v.id = p.q_id),
-        scored AS (
-            SELECT qp.q_id, corpus.id AS cand_id,
-                   list_dot_product(qp.qe, corpus.e)
-                     / (sqrt(list_dot_product(qp.qe, qp.qe)) * sqrt(list_dot_product(corpus.e, corpus.e)))
-                     AS sim
-            FROM qp JOIN corpus ON qp.cluster = corpus.cluster AND corpus.id <> qp.q_id
-        ),
-        ranked AS (
-            SELECT q_id, cand_id,
-                   FLOOR(sim * 1000000.0 + 0.5) / 1000000.0 AS sim_r,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q_id
-                       ORDER BY FLOOR(sim * 1000000.0 + 0.5) DESC, cand_id
-                   ) AS rn
-            FROM scored
-        )
-        SELECT q_id, cand_id, sim_r AS sim, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
-
-
 def _packed_assign_score_sql(sim_sql: str, cid: int) -> str:
     """Pack (1e-6-rounded similarity, centroid id) into one BIGINT whose
     natural MAX order is (similarity desc, centroid id asc):
@@ -459,18 +338,6 @@ def _l2_from_vv_sql(vv_sql: str, sv_sql: str, ce: list[float]) -> str:
     vv - 2*dot(sv, ce) + cc — fixed evaluation order on both engines."""
     cc = sum(x * x for x in ce)
     return f"({vv_sql} - 2.0D * ({_dot_literal_sql(sv_sql, ce)}) + {_sql_double(cc)})"
-
-
-# DuckDB twins of the same two building blocks (format with {v} / {a},{b}).
-_PACKED_CENT_SQL = (
-    "(CAST(FLOOR(list_dot_product({v}, c.ce)"
-    " / (sqrt(list_dot_product({v}, {v})) * sqrt(list_dot_product(c.ce, c.ce)))"
-    " * 1000000.0 + 0.5) AS BIGINT) + 2000000) * 1024 + (1023 - c.cid)"
-)
-_L2_SQL = (
-    "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
-    " + list_dot_product({b}, {b}))"
-)
 
 
 def seeded_centroids(
@@ -563,54 +430,6 @@ def ivf_ann_topk_seeded(
         .filter(F.col("rnk") <= k)
         .select("q_id", "cand_id", "sim", "rnk")
     )
-
-
-def ivf_ann_topk_seeded_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> str:
-    """DuckDB twin of ``ivf_ann_topk_seeded``: rebuilds the seed-centroid
-    index relationally (centroids = rows with id < n_centroids) and takes
-    every argmax on the same packed BIGINT, so assignment, probe choice and
-    final ranking match Spark decision-for-decision."""
-    packed = _PACKED_CENT_SQL
-    return f"""
-        WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-             c AS (SELECT id AS cid, e AS ce FROM v WHERE id < {n_centroids}),
-             assign AS (
-                 SELECT v.id, v.e, MAX({packed.format(v="v.e")}) AS best
-                 FROM v CROSS JOIN c GROUP BY v.id, v.e
-             ),
-             corpus AS (SELECT id, e, CAST(1023 - (best % 1024) AS INTEGER) AS cluster FROM assign),
-             qs AS (
-                 SELECT v.id AS q_id, v.e AS qe, c.cid,
-                        ROW_NUMBER() OVER (
-                            PARTITION BY v.id ORDER BY {packed.format(v="v.e")} DESC
-                        ) AS prn
-                 FROM v CROSS JOIN c WHERE v.id < {n_queries}
-             ),
-             qp AS (SELECT q_id, qe, CAST(cid AS INTEGER) AS cluster FROM qs WHERE prn <= {nprobe}),
-             scored AS (
-                 SELECT qp.q_id, corpus.id AS cand_id,
-                        list_dot_product(qp.qe, corpus.e)
-                          / (sqrt(list_dot_product(qp.qe, qp.qe)) * sqrt(list_dot_product(corpus.e, corpus.e)))
-                          AS sim
-                 FROM qp JOIN corpus ON qp.cluster = corpus.cluster AND corpus.id <> qp.q_id
-             ),
-             ranked AS (
-                 SELECT q_id, cand_id,
-                        FLOOR(sim * 1000000.0 + 0.5) / 1000000.0 AS sim_r,
-                        ROW_NUMBER() OVER (
-                            PARTITION BY q_id
-                            ORDER BY FLOOR(sim * 1000000.0 + 0.5) DESC, cand_id
-                        ) AS rn
-                 FROM scored
-             )
-        SELECT q_id, cand_id, sim_r AS sim, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
 
 
 def lsh_ann_topk(
@@ -831,71 +650,6 @@ def pq_ann_topk_seeded(
     )
 
 
-def pq_ann_topk_seeded_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of ``pq_ann_topk_seeded``: rebuilds the seed codebooks
-    relationally, re-encodes the corpus with the same packed argmin, and
-    re-ranks on the same rounded ADC sums."""
-    sub = dim // n_subspaces
-    l2 = _L2_SQL
-
-    def subv(expr: str, m: int) -> str:
-        return f"list_slice({expr}, {m * sub + 1}, {(m + 1) * sub})"
-
-    enc_selects = []
-    for m in range(n_subspaces):
-        d = l2.format(a=subv("v.e", m), b=f"b.sv{m}")
-        enc_selects.append(
-            f"CAST(MIN(CAST(FLOOR({d} * 1000000.0 + 0.5) AS BIGINT) * 1024"
-            f" + b.cid) % 1024 AS INTEGER) AS c{m}"
-        )
-    adc_terms = " + ".join(
-        l2.format(a=subv("q.qe", m), b=f"b{m}.sv{m}") for m in range(n_subspaces)
-    )
-    joins = " ".join(
-        f"JOIN books b{m} ON b{m}.cid = corpus.c{m}" for m in range(n_subspaces)
-    )
-    return f"""
-        WITH v AS (
-            SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        ),
-        books AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS cid,
-                   {", ".join(f"list_slice(e, {m * sub + 1}, {(m + 1) * sub}) AS sv{m}" for m in range(n_subspaces))}
-            FROM v WHERE id < {n_codes}
-        ),
-        b AS (SELECT * FROM books),
-        corpus AS (
-            SELECT v.id, {", ".join(enc_selects)}
-            FROM v CROSS JOIN b GROUP BY v.id
-        ),
-        q AS (SELECT id AS q_id, e AS qe FROM v WHERE id < {n_queries}),
-        scored AS (
-            SELECT q.q_id, corpus.id AS cand_id,
-                   ({adc_terms}) AS d
-            FROM corpus {joins} CROSS JOIN q
-            WHERE corpus.id <> q.q_id
-        ),
-        ranked AS (
-            SELECT q_id, cand_id,
-                   FLOOR(d * 1000000.0 + 0.5) / 1000000.0 AS d_r,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q_id
-                       ORDER BY CAST(FLOOR(d * 1000000.0 + 0.5) AS BIGINT) ASC,
-                                cand_id ASC
-                   ) AS rn
-            FROM scored
-        )
-        SELECT q_id, cand_id, d_r AS approx_d, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
-
-
 def ann_recall_gate(
     truth_topk: DataFrame,
     ann_topk: DataFrame,
@@ -1072,90 +826,6 @@ def ivfpq_ann_topk_seeded(
             "rnk",
         )
     )
-
-
-def ivfpq_ann_topk_seeded_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of ``ivfpq_ann_topk_seeded``: the IVF oracle's cluster
-    assignment/probe CTEs composed with the PQ oracle's codebook/encode/
-    ADC CTEs — candidates restricted to probed lists, scored from codes."""
-    sub = dim // n_subspaces
-    packed = _PACKED_CENT_SQL
-    l2 = _L2_SQL
-
-    def subv(expr: str, m: int) -> str:
-        return f"list_slice({expr}, {m * sub + 1}, {(m + 1) * sub})"
-
-    enc_selects = []
-    for m in range(n_subspaces):
-        d = l2.format(a=subv("v.e", m), b=f"b.sv{m}")
-        enc_selects.append(
-            f"CAST(MIN(CAST(FLOOR({d} * 1000000.0 + 0.5) AS BIGINT) * 1024"
-            f" + b.cid) % 1024 AS INTEGER) AS c{m}"
-        )
-    adc_terms = " + ".join(
-        l2.format(a=subv("qp.qe", m), b=f"b{m}.sv{m}") for m in range(n_subspaces)
-    )
-    joins = " ".join(
-        f"JOIN books b{m} ON b{m}.cid = cp.c{m}" for m in range(n_subspaces)
-    )
-    return f"""
-        WITH v AS (
-            SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        ),
-        c AS (SELECT id AS cid, e AS ce FROM v WHERE id < {n_centroids}),
-        assign AS (
-            SELECT v.id, MAX({packed.format(v="v.e")}) AS best
-            FROM v CROSS JOIN c GROUP BY v.id
-        ),
-        cl AS (SELECT id, CAST(1023 - (best % 1024) AS INTEGER) AS cluster FROM assign),
-        books AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS cid,
-                   {", ".join(f"list_slice(e, {m * sub + 1}, {(m + 1) * sub}) AS sv{m}" for m in range(n_subspaces))}
-            FROM v WHERE id < {n_codes}
-        ),
-        b AS (SELECT * FROM books),
-        codes AS (
-            SELECT v.id, {", ".join(enc_selects)}
-            FROM v CROSS JOIN b GROUP BY v.id
-        ),
-        cp AS (
-            SELECT cl.id, cl.cluster, {", ".join(f"codes.c{m}" for m in range(n_subspaces))}
-            FROM cl JOIN codes ON cl.id = codes.id
-        ),
-        qs AS (
-            SELECT v.id AS q_id, v.e AS qe, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY v.id ORDER BY {packed.format(v="v.e")} DESC
-                   ) AS prn
-            FROM v CROSS JOIN c WHERE v.id < {n_queries}
-        ),
-        qp AS (SELECT q_id, qe, CAST(cid AS INTEGER) AS cluster FROM qs WHERE prn <= {nprobe}),
-        scored AS (
-            SELECT qp.q_id, cp.id AS cand_id, ({adc_terms}) AS d
-            FROM qp JOIN cp ON qp.cluster = cp.cluster AND cp.id <> qp.q_id
-            {joins}
-        ),
-        ranked AS (
-            SELECT q_id, cand_id,
-                   FLOOR(d * 1000000.0 + 0.5) / 1000000.0 AS d_r,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q_id
-                       ORDER BY CAST(FLOOR(d * 1000000.0 + 0.5) AS BIGINT) ASC,
-                                cand_id ASC
-                   ) AS rn
-            FROM scored
-        )
-        SELECT q_id, cand_id, d_r AS approx_d, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
 
 
 def ivfpq_residual_ann_topk_seeded(
@@ -1342,107 +1012,6 @@ def ivfpq_residual_ann_topk_seeded(
     )
 
 
-def ivfpq_residual_ann_topk_seeded_oracle_sql(
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-) -> str:
-    """DuckDB twin of ``ivfpq_residual_ann_topk_seeded``: rebuilds the
-    residual codebooks RELATIONALLY (residual subvectors of the seed
-    rows, same element-wise list_zip subtraction), re-encodes, re-probes
-    and re-ranks on the same packed integers."""
-    sub = dim // n_subspaces
-    packed = _PACKED_CENT_SQL
-
-    def subv(expr: str, m: int) -> str:
-        return f"list_slice({expr}, {m * sub + 1}, {(m + 1) * sub})"
-
-    def res(vec_expr: str, cent_expr: str, m: int) -> str:
-        return (
-            f"list_transform(list_zip({subv(vec_expr, m)}, {subv(cent_expr, m)}),"
-            f" x -> x[1] - x[2])"
-        )
-
-    l2 = _L2_SQL
-    rsv_cols = ", ".join(
-        f"{res('v.e', 'cc.ce', m)} AS rsv{m}" for m in range(n_subspaces)
-    )
-    enc_selects = []
-    for m in range(n_subspaces):
-        d = l2.format(a=f"rx.rsv{m}", b=f"b.bk{m}")
-        enc_selects.append(
-            f"CAST(MIN(CAST(FLOOR({d} * 1000000.0 + 0.5) AS BIGINT) * 1024"
-            f" + b.cid) % 1024 AS INTEGER) AS c{m}"
-        )
-    book_cols = ", ".join(f"rsv{m} AS bk{m}" for m in range(n_subspaces))
-    adc_terms = " + ".join(
-        l2.format(a=f"{res('qp.qe', 'qc.ce', m)}", b=f"b{m}.bk{m}")
-        for m in range(n_subspaces)
-    )
-    joins = " ".join(
-        f"JOIN books b{m} ON b{m}.cid = cp.c{m}" for m in range(n_subspaces)
-    )
-    return f"""
-        WITH v AS (
-            SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-        ),
-        c AS (SELECT id AS cid, e AS ce FROM v WHERE id < {n_centroids}),
-        assign AS (
-            SELECT v.id, MAX({packed.format(v="v.e")}) AS best
-            FROM v CROSS JOIN c GROUP BY v.id
-        ),
-        cl AS (SELECT id, CAST(1023 - (best % 1024) AS INTEGER) AS cluster FROM assign),
-        rx AS (
-            SELECT v.id, cl.cluster, {rsv_cols}
-            FROM v JOIN cl ON v.id = cl.id
-                   JOIN c cc ON cc.cid = cl.cluster
-        ),
-        books AS (
-            SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS cid, {book_cols}
-            FROM rx WHERE id < {n_codes}
-        ),
-        b AS (SELECT * FROM books),
-        cp AS (
-            SELECT rx.id, rx.cluster, {", ".join(enc_selects)}
-            FROM rx CROSS JOIN b GROUP BY rx.id, rx.cluster
-        ),
-        qs AS (
-            SELECT v.id AS q_id, v.e AS qe, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY v.id ORDER BY {packed.format(v="v.e")} DESC
-                   ) AS prn
-            FROM v CROSS JOIN c WHERE v.id < {n_queries}
-        ),
-        qp AS (
-            SELECT q_id, qe, CAST(cid AS INTEGER) AS cluster
-            FROM qs WHERE prn <= {nprobe}
-        ),
-        scored AS (
-            SELECT qp.q_id, cp.id AS cand_id, ({adc_terms}) AS d
-            FROM qp
-            JOIN c qc ON qc.cid = qp.cluster
-            JOIN cp ON qp.cluster = cp.cluster AND cp.id <> qp.q_id
-            {joins}
-        ),
-        ranked AS (
-            SELECT q_id, cand_id,
-                   FLOOR(d * 1000000.0 + 0.5) / 1000000.0 AS d_r,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q_id
-                       ORDER BY CAST(FLOOR(d * 1000000.0 + 0.5) AS BIGINT) ASC,
-                                cand_id ASC
-                   ) AS rn
-            FROM scored
-        )
-        SELECT q_id, cand_id, d_r AS approx_d, CAST(rn AS INTEGER) AS rnk
-        FROM ranked WHERE rn <= {k}
-    """
-
-
 # ---------------------------------------------------------------------------
 # Round-5: fully-relational, exact-integer Lloyd's k-means (trained
 # centroids as a VALUE-CHECKED distributed program, VERDICT r4 item 8)
@@ -1536,66 +1105,3 @@ def kmeans_lloyd_relational(
         F.col("cid").alias("cluster_id"), "dim",
         F.col("cv").alias("centroid_micro"),
     )
-
-
-def kmeans_lloyd_cte_sql(k: int = 8, n_iters: int = 2) -> str:
-    """WITH-body (no ``WITH`` keyword, no final SELECT) of the unrolled
-    Lloyd recurrence: CTEs ``x`` (the micro-unit encoding) and
-    ``c0 .. c{n_iters}`` (the centroid states). Shared by the plain
-    ``kmeans_lloyd_oracle_sql`` readout and the trained-IVF oracle.
-
-    Dimensionality is DERIVED FROM THE DATA (parallel-unnest zip of the
-    index range with the values — ADVICE r5 item 2), exactly like the
-    Spark side's posexplode: a fixture width change diverges loudly in
-    the compare instead of silently truncating the oracle."""
-    head = f"""x AS MATERIALIZED (
-            SELECT vec_id AS id,
-                   UNNEST(range(len(embedding))) AS dim,
-                   CAST(FLOOR(CAST(UNNEST(embedding) AS DOUBLE) * 1000000
-                              + 0.5) AS BIGINT) AS xv
-            FROM embeddings
-        ),
-        c0 AS MATERIALIZED (
-            SELECT id AS cid, dim, xv AS cv FROM x
-            WHERE id IN (SELECT DISTINCT id FROM x ORDER BY id LIMIT {k})
-        )
-        """
-    return unroll_ctes(head, lambda i: f""",
-        d{i} AS MATERIALIZED (
-            SELECT x.id, c.cid,
-                   CAST(SUM((x.xv - c.cv) * (x.xv - c.cv)) AS BIGINT) AS dist
-            FROM x JOIN c{i-1} c ON x.dim = c.dim
-            GROUP BY 1, 2
-        ),
-        a{i} AS MATERIALIZED (
-            SELECT id, cid FROM (
-                SELECT id, cid,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY id ORDER BY dist ASC, cid ASC
-                       ) AS rn
-                FROM d{i}
-            ) WHERE rn = 1
-        ),
-        s{i} AS MATERIALIZED (
-            SELECT a.cid, x.dim,
-                   CAST(SUM(x.xv) AS BIGINT) // COUNT(*) AS nv
-            FROM x JOIN a{i} a ON x.id = a.id
-            GROUP BY 1, 2
-        ),
-        c{i} AS MATERIALIZED (
-            SELECT c.cid, c.dim, COALESCE(s.nv, c.cv) AS cv
-            FROM c{i-1} c LEFT JOIN s{i} s
-              ON c.cid = s.cid AND c.dim = s.dim
-        )
-        """, n_iters)
-
-
-def kmeans_lloyd_oracle_sql(k: int = 8, n_iters: int = 2) -> str:
-    """Unrolled-CTE twin of ``kmeans_lloyd_relational`` over the
-    embeddings table. MATERIALIZED CTEs (x and each c_i feed multiple
-    consumers — the usual inlining blowup guard)."""
-    return f"""
-        WITH {kmeans_lloyd_cte_sql(k=k, n_iters=n_iters)}
-        SELECT cid AS cluster_id, dim, CAST(cv AS BIGINT) AS centroid_micro
-        FROM c{n_iters}
-    """

@@ -39,11 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    half_up_round,
-    portable_hash60,
-    portable_hash60_sql,
-)
+from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, portable_hash60
 from etl_pipeline_last_fm_spark.operators.incremental import additive_step
 
 # Standard HLL bias-correction constants (Flajolet et al. 2007).
@@ -171,70 +167,6 @@ def hll_estimate_from_registers(
     return g.select(*group_cols, half_up_round(estimate, 4).alias("n_approx"))
 
 
-def hll_distinct_oracle_sql(
-    table: str,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    b: int = 6,
-    salt: str = "hll1",
-) -> str:
-    """DuckDB twin of hll_distinct — same hash, same integer-scaled register
-    sum, same estimator branches."""
-    group_cols = group_cols or []
-    m = 1 << b
-    width = 60 - b
-    alpha = _alpha(m)
-    h = portable_hash60_sql(f"'{salt}:' || CAST({value_col} AS VARCHAR)")
-    gsel = "".join(f"{c}, " for c in group_cols)
-    gby = f"GROUP BY {', '.join(group_cols)}" if group_cols else ""
-    gjoin = (
-        " AND ".join(f"e.{c} = a.{c}" for c in group_cols)
-        if group_cols
-        else "TRUE"
-    )
-    return f"""
-        WITH hashed AS (
-            SELECT {gsel}
-                   ({h}) & {m - 1} AS bkt,
-                   ({h}) >> {b} AS rest
-            FROM {table}
-        ),
-        per_bucket AS (
-            SELECT {gsel} bkt,
-                   MAX(CASE WHEN rest = 0 THEN {width + 1}
-                            ELSE {width + 1} - length(bin(rest)) END) AS mj
-            FROM hashed GROUP BY {gsel} bkt
-        ),
-        g AS (
-            SELECT {gsel}
-                   COALESCE(CAST(SUM(1::BIGINT << ({width + 1} - mj))
-                       AS BIGINT), 0) AS s_present,
-                   COUNT(*) AS filled
-            FROM per_bucket {gby if group_cols else "GROUP BY ()"}
-        ),
-        est AS (
-            SELECT {gsel}
-                   CASE WHEN ({alpha!r} * {m} * {m} * {float(1 << (width + 1))!r})
-                             / (s_present + ({m} - filled) * (1::BIGINT << {width + 1}))
-                             <= {2.5 * m}
-                         AND ({m} - filled) > 0
-                        THEN {float(m)!r} * ln({float(m)!r} / ({m} - filled))
-                        ELSE ({alpha!r} * {m} * {m} * {float(1 << (width + 1))!r})
-                             / (s_present + ({m} - filled) * (1::BIGINT << {width + 1}))
-                   END AS e
-            FROM g
-        ),
-        exact AS (
-            SELECT {gsel} COUNT(DISTINCT {value_col}) AS n_exact
-            FROM {table} {gby if group_cols else "GROUP BY ()"}
-        )
-        SELECT {"".join(f"e.{c}, " for c in group_cols)}
-               e.n_exact,
-               FLOOR(a.e * 10000.0 + 0.5) / 10000.0 AS n_approx
-        FROM exact e JOIN est a ON {gjoin}
-    """
-
-
 def cms_counters(
     tokens: DataFrame,
     token_col: str = "tok",
@@ -356,52 +288,6 @@ def cms_heavy_hitters(
 
     w = Window.orderBy(F.col("n_exact").desc(), F.col("tok").asc())
     return est.withColumn("rnk", F.row_number().over(w).cast("int"))
-
-
-def cms_heavy_hitters_oracle_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    top_k: int = 20,
-    depth: int = 4,
-    width: int = 1024,
-    salt: str = "cms1",
-) -> str:
-    """DuckDB twin — same salted hashes, same grid, same min-over-rows."""
-    cell = portable_hash60_sql(f"'{salt}' || CAST(d AS VARCHAR) || ':' || tok")
-    return f"""
-        WITH toks AS (
-            SELECT unnest(string_split(trim({text_col}), ' ')) AS tok
-            FROM {table}
-        ),
-        toks_f AS (SELECT tok FROM toks WHERE tok <> ''),
-        with_d AS (
-            SELECT tok, d
-            FROM toks_f, unnest(range(0, {depth})) AS t(d)
-        ),
-        grid AS (
-            SELECT d, ({cell}) & {width - 1} AS cell, COUNT(*) AS cnt
-            FROM with_d GROUP BY d, ({cell}) & {width - 1}
-        ),
-        exact_top AS (
-            SELECT tok, COUNT(*) AS n_exact
-            FROM toks_f GROUP BY tok
-            ORDER BY n_exact DESC, tok ASC LIMIT {top_k}
-        ),
-        probes AS (
-            SELECT e.tok, e.n_exact, t.d,
-                   ({portable_hash60_sql("'" + salt + "' || CAST(t.d AS VARCHAR) || ':' || e.tok")}) & {width - 1} AS cell
-            FROM exact_top e, unnest(range(0, {depth})) AS t(d)
-        ),
-        est AS (
-            SELECT p.tok, p.n_exact, MIN(g.cnt) AS n_cms
-            FROM probes p JOIN grid g ON p.d = g.d AND p.cell = g.cell
-            GROUP BY p.tok, p.n_exact
-        )
-        SELECT tok, n_exact, n_cms,
-               CAST(ROW_NUMBER() OVER (ORDER BY n_exact DESC, tok ASC) AS INTEGER)
-                   AS rnk
-        FROM est
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -527,55 +413,6 @@ def kmv_summary(
     )
 
 
-def kmv_quantiles_oracle_sql(
-    table: str,
-    value_expr: str,
-    group_col: str,
-    k: int = 64,
-    quantiles: tuple[float, ...] = (0.5, 0.9),
-    salt: str = "kmv1",
-) -> str:
-    """DuckDB twin of kmv_state |> kmv_summary over ``value_expr`` grouped
-    by ``group_col`` — same hash, same bottom-k, same estimator branches,
-    same quantile ranks."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST(v AS VARCHAR)")
-    qsel = ",\n               ".join(
-        f"MAX(CASE WHEN vrk = CAST(FLOOR({q!r} * (n - 1) + 0.5) AS BIGINT) + 1"
-        f" THEN v END) AS p{int(q * 100)}_est"
-        for q in quantiles
-    )
-    return f"""
-        WITH d AS (
-            SELECT DISTINCT {group_col} AS g, {value_expr} AS v FROM {table}
-        ),
-        hashed AS (SELECT g, v, {h} AS h FROM d),
-        st AS (
-            SELECT g, v, h,
-                   ROW_NUMBER() OVER (PARTITION BY g ORDER BY h, v) AS rk
-            FROM hashed
-        ),
-        kept AS (SELECT g, v, h FROM st WHERE rk <= {k}),
-        stats AS (
-            SELECT g, CAST(COUNT(*) AS BIGINT) AS n, MAX(h) AS hk
-            FROM kept GROUP BY g
-        ),
-        vr AS (
-            SELECT g, v,
-                   ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS vrk
-            FROM kept
-        )
-        SELECT vr.g AS {group_col},
-               stats.n AS n_sample,
-               CAST(CASE WHEN stats.n < {k} THEN stats.n
-                    ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r}
-                               / CAST(hk + 1 AS DOUBLE) + 0.5)
-               END AS BIGINT) AS n_distinct_est,
-               {qsel}
-        FROM vr JOIN stats ON vr.g = stats.g
-        GROUP BY vr.g, stats.n, stats.hk
-    """
-
-
 def kmv_set_ops(
     state_a: DataFrame, state_b: DataFrame, k: int = 256
 ) -> DataFrame:
@@ -654,68 +491,6 @@ def kmv_set_ops(
     )
 
 
-def kmv_set_ops_oracle_sql(
-    sql_a: str, sql_b: str, k: int = 256, salt: str = "kmvset"
-) -> str:
-    """DuckDB twin of kmv_state(x2, shared salt) |> kmv_set_ops. ``sql_a``
-    and ``sql_b`` each SELECT one column ``v``."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST(v AS VARCHAR)")
-    return f"""
-        WITH
-        sta AS (
-            SELECT v, h FROM (
-                SELECT v, {h} AS h,
-                       ROW_NUMBER() OVER (ORDER BY {h}, v) AS rk
-                FROM (SELECT DISTINCT v FROM ({sql_a}))
-            ) WHERE rk <= {k}
-        ),
-        stb AS (
-            SELECT v, h FROM (
-                SELECT v, {h} AS h,
-                       ROW_NUMBER() OVER (ORDER BY {h}, v) AS rk
-                FROM (SELECT DISTINCT v FROM ({sql_b}))
-            ) WHERE rk <= {k}
-        ),
-        merged AS (
-            SELECT v, h FROM (
-                SELECT v, h, ROW_NUMBER() OVER (ORDER BY h, v) AS rk
-                FROM (SELECT DISTINCT v, h FROM (SELECT * FROM sta UNION ALL SELECT * FROM stb))
-            ) WHERE rk <= {k}
-        ),
-        ms AS (SELECT COUNT(*) AS n_m, MAX(h) AS hk FROM merged),
-        cb AS (
-            SELECT COUNT(*) AS c FROM merged m
-            WHERE EXISTS (SELECT 1 FROM sta WHERE sta.v = m.v)
-              AND EXISTS (SELECT 1 FROM stb WHERE stb.v = m.v)
-        ),
-        sa AS (SELECT COUNT(*) AS n_a, MAX(h) AS hk_a FROM sta),
-        sb AS (SELECT COUNT(*) AS n_b, MAX(h) AS hk_b FROM stb)
-        SELECT
-            CAST(CASE WHEN n_a < {k} THEN n_a
-                 ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r} / CAST(hk_a + 1 AS DOUBLE) + 0.5)
-            END AS BIGINT) AS n_a_est,
-            CAST(CASE WHEN n_b < {k} THEN n_b
-                 ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r} / CAST(hk_b + 1 AS DOUBLE) + 0.5)
-            END AS BIGINT) AS n_b_est,
-            CAST(CASE WHEN n_m < {k} THEN n_m
-                 ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r} / CAST(hk + 1 AS DOUBLE) + 0.5)
-            END AS BIGINT) AS n_union_est,
-            CAST(CASE WHEN n_m < {k} THEN c
-                 ELSE FLOOR(CAST(c AS DOUBLE)
-                            * CAST(CASE WHEN n_m < {k} THEN n_m
-                                   ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r}
-                                              / CAST(hk + 1 AS DOUBLE) + 0.5)
-                              END AS DOUBLE)
-                            / CAST(n_m AS DOUBLE) + 0.5)
-            END AS BIGINT) AS n_inter_est,
-            CASE WHEN n_m = 0 THEN 0.0
-                 ELSE FLOOR(CAST(c AS DOUBLE) / CAST(n_m AS DOUBLE) * 10000.0 + 0.5)
-                      / 10000.0
-            END AS jaccard_est
-        FROM ms, cb, sa, sb
-    """
-
-
 def kmv_expr(
     state_a: DataFrame,
     state_b: DataFrame,
@@ -785,60 +560,3 @@ def kmv_expr(
         F.col("n_m").cast("long").alias("n_sample"),
         (F.col("n_m") < k).cast("int").alias("is_exact"),
     )
-
-
-def kmv_expr_oracle_sql(
-    sql_a: str, sql_b: str, sql_c: str, k: int = 256, salt: str = "kmvset"
-) -> str:
-    """DuckDB twin of kmv_state(x3, shared salt) |> kmv_expr. Each input
-    SELECTs one column ``v``."""
-    h = portable_hash60_sql(f"'{salt}:' || CAST(v AS VARCHAR)")
-
-    def bk(name: str, sql: str) -> str:
-        return f"""
-        {name} AS (
-            SELECT v, h FROM (
-                SELECT v, {h} AS h,
-                       ROW_NUMBER() OVER (ORDER BY {h}, v) AS rk
-                FROM (SELECT DISTINCT v FROM ({sql}))
-            ) WHERE rk <= {k}
-        )"""
-
-    u_sql = f"""CASE WHEN n_m < {k} THEN n_m
-                 ELSE FLOOR({float(k - 1)!r} * {_KMV_M!r}
-                            / CAST(hk + 1 AS DOUBLE) + 0.5)
-            END"""
-    return f"""
-        WITH
-        {bk("sta", sql_a)},
-        {bk("stb", sql_b)},
-        {bk("stc", sql_c)},
-        merged AS (
-            SELECT v, h FROM (
-                SELECT v, h, ROW_NUMBER() OVER (ORDER BY h, v) AS rk
-                FROM (SELECT DISTINCT v, h FROM (
-                    SELECT * FROM sta UNION ALL
-                    SELECT * FROM stb UNION ALL
-                    SELECT * FROM stc))
-            ) WHERE rk <= {k}
-        ),
-        ms AS (
-            SELECT COUNT(*) AS n_m, MAX(h) AS hk,
-                   COUNT(*) FILTER (
-                       WHERE (EXISTS (SELECT 1 FROM sta WHERE sta.v = merged.v)
-                           OR EXISTS (SELECT 1 FROM stb WHERE stb.v = merged.v))
-                         AND NOT EXISTS (SELECT 1 FROM stc WHERE stc.v = merged.v)
-                   ) AS c
-            FROM merged
-        )
-        SELECT
-            CAST(CASE WHEN n_m < {k} THEN c
-                 ELSE FLOOR(CAST(c AS DOUBLE)
-                            * CAST({u_sql} AS DOUBLE)
-                            / CAST(n_m AS DOUBLE) + 0.5)
-            END AS BIGINT) AS n_expr_est,
-            CAST({u_sql} AS BIGINT) AS n_union_est,
-            CAST(n_m AS BIGINT) AS n_sample,
-            CAST(CASE WHEN n_m < {k} THEN 1 ELSE 0 END AS INT) AS is_exact
-        FROM ms
-    """

@@ -100,29 +100,6 @@ def skyline_2d(
     )
 
 
-def skyline_2d_oracle_sql(
-    points_sql: str, id_col: str, cost_col: str, gain_col: str
-) -> str:
-    """DuckDB twin: the dominance DEFINITION as a NOT EXISTS anti-join —
-    quadratic, which is exactly why it is the oracle and not the plan."""
-    return f"""
-        WITH pts0 AS MATERIALIZED ({points_sql}),
-        pts AS (
-            SELECT * FROM pts0
-            WHERE {cost_col} IS NOT NULL AND {gain_col} IS NOT NULL
-        )
-        SELECT {id_col}, {cost_col}, {gain_col}
-        FROM pts p
-        WHERE NOT EXISTS (
-            SELECT 1 FROM pts q
-            WHERE q.{cost_col} <= p.{cost_col}
-              AND q.{gain_col} >= p.{gain_col}
-              AND (q.{cost_col} < p.{cost_col}
-                   OR q.{gain_col} > p.{gain_col})
-        )
-    """
-
-
 def skyline_step(
     id_col: str, cost_col: str, gain_col: str, bucket_width: int = 1000
 ):

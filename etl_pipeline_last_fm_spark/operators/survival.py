@@ -151,63 +151,3 @@ def km_survival(
         F.col("x.c").alias("n_censored"),
         F.col("x.s").alias("survival_ppm"),
     )
-
-
-def km_survival_oracle_sql(
-    table: str = "events",
-    key_col: str = "user_id",
-    censor_days: int = DEFAULT_CENSOR_DAYS,
-) -> str:
-    """DuckDB twin: identical lifetimes/risk table, the KM product as a
-    RECURSIVE CTE over the day-ordered risk rows (the Holt-oracle device
-    — scalar steps carried atomically), identical truncating ``//``."""
-    day_us = 86_400_000_000
-    return f"""
-        WITH RECURSIVE per_key AS (
-            SELECT {key_col},
-                   min(epoch_us(ts)) AS f,
-                   max(epoch_us(ts)) AS l
-            FROM {table} GROUP BY {key_col}
-        ),
-        fr AS (SELECT max(l) AS frontier FROM per_key),
-        lifet AS (
-            SELECT (l - f) // {day_us} AS t_day,
-                   (frontier - l) > {censor_days} * {day_us} AS churned
-            FROM per_key, fr
-        ),
-        risk0 AS (
-            SELECT t_day,
-                   CAST(SUM(CASE WHEN churned THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_churned,
-                   CAST(SUM(CASE WHEN churned THEN 0 ELSE 1 END) AS BIGINT)
-                       AS n_censored
-            FROM lifet GROUP BY t_day
-        ),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM lifet),
-        risk AS (
-            SELECT row_number() OVER (ORDER BY t_day) AS rn,
-                   t_day,
-                   total - CAST(COALESCE(SUM(n_churned + n_censored) OVER (
-                       ORDER BY t_day
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS n_risk,
-                   n_churned, n_censored
-            FROM risk0, tot
-        ),
-        steps AS (
-            SELECT rn, t_day, n_risk, n_churned, n_censored,
-                   CAST(1000000 AS BIGINT) * (n_risk - n_churned)
-                       // n_risk AS s
-            FROM risk WHERE rn = 1
-            UNION ALL
-            SELECT r.rn, r.t_day, r.n_risk, r.n_churned, r.n_censored,
-                   steps.s * (r.n_risk - r.n_churned) // r.n_risk
-            FROM risk r JOIN steps ON r.rn = steps.rn + 1
-        )
-        SELECT t_day,
-               n_risk,
-               n_churned,
-               n_censored,
-               CAST(s AS BIGINT) AS survival_ppm
-        FROM steps
-    """

@@ -17,11 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.spread import spread_scan
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    half_up_round,
-    portable_hash60,
-    portable_hash60_sql,
-)
+from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, portable_hash60
 
 EN_STOPWORDS = ["the", "a", "an", "and", "of", "to", "in", "is", "it", "for"]
 LANG_STOPWORDS = {
@@ -137,40 +133,6 @@ def fingerprint_overlap_pairs(
     )
 
 
-def fingerprint_overlap_oracle_sql(min_shared: int = 5, k: int = 16, window: int = 8) -> str:
-    """DuckDB twin of fingerprint_overlap_pairs(portable=True): identical
-    gram positions (1-based substring), identical portable_hash60 gram hash,
-    identical full-window filter (max(G - w + 1, 1) windows), then the same
-    fingerprint equi-join."""
-    gh = portable_hash60_sql(f"substring(text, pos, {k})")
-    return f"""
-        WITH g AS (
-            SELECT doc_id, text,
-                   CAST(unnest(range(1, greatest(length(text) - {k} + 1, 1) + 1)) AS INTEGER) AS pos
-            FROM documents
-        ),
-        gh AS (
-            SELECT doc_id, pos, {gh} AS gh,
-                   greatest(length(text) - {k - 1}, 1) AS ng
-            FROM g
-        ),
-        wm AS (
-            SELECT doc_id, pos, ng,
-                   min(gh) OVER (PARTITION BY doc_id ORDER BY pos
-                                 ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS fp
-            FROM gh
-        ),
-        fps AS (
-            SELECT DISTINCT doc_id, fp FROM wm
-            WHERE pos <= greatest(ng - {window - 1}, 1)
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared_fps
-        FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-        HAVING count(*) >= {min_shared}
-    """
-
-
 def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality: stopword ratio (fluent text has some) and
     distinct-token ratio (degenerate repetition has few). Score = mean of the
@@ -248,30 +210,6 @@ def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     )
 
 
-def tfidf_oracle_sql(top_k: int = 3) -> str:
-    return f"""
-        WITH toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
-                      FROM documents),
-             tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             n AS (SELECT count(*) AS n_docs FROM documents),
-             scored AS (
-                 SELECT doc_id, term,
-                        FLOOR(tf * ln(1.0 + n_docs / CAST(df AS DOUBLE)) * 10000.0 + 0.5)
-                          / 10000.0 AS score
-                 FROM tf JOIN dfreq USING (term) CROSS JOIN n
-             ),
-             ranked AS (
-                 SELECT doc_id, term, score,
-                        CAST(row_number() OVER (PARTITION BY doc_id
-                                                ORDER BY score DESC, term ASC)
-                             AS INTEGER) AS term_rank
-                 FROM scored
-             )
-        SELECT doc_id, term, term_rank, score FROM ranked WHERE term_rank <= {top_k}
-    """
-
-
 def binary_meta(docs: DataFrame) -> DataFrame:
     """Opaque-content metadata: byte length + sha256 — the multimodal-column
     pattern (content treated as bytes, typed metadata alongside)."""
@@ -285,58 +223,6 @@ def binary_meta(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DuckDB oracle twins (built from the same constants)
 # ---------------------------------------------------------------------------
-
-
-def _sql_list(words: list[str]) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-
-def quality_oracle_sql() -> str:
-    en = _sql_list(EN_STOPWORDS)
-    return f"""
-        WITH t AS (
-            SELECT doc_id,
-                   string_split(trim(text), ' ') AS toks,
-                   list_distinct(string_split(trim(text), ' ')) AS dtoks
-            FROM documents
-        ), r AS (
-            SELECT doc_id,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   FLOOR(CAST(len(list_intersect(dtoks, {en})) AS DOUBLE)
-                         / len(dtoks) * 10000.0 + 0.5) / 10000.0 AS stop_ratio,
-                   FLOOR(CAST(len(dtoks) AS DOUBLE) / len(toks) * 10000.0 + 0.5) / 10000.0
-                       AS uniq_ratio
-            FROM t
-        )
-        SELECT doc_id, n_tokens, stop_ratio, uniq_ratio,
-               FLOOR((stop_ratio + uniq_ratio) / 2.0 * 10000.0 + 0.5) / 10000.0 AS quality
-        FROM r
-    """
-
-
-def lang_id_oracle_sql() -> str:
-    hit_exprs = ",\n".join(
-        f"CAST(len(list_intersect(dtoks, {_sql_list(LANG_STOPWORDS[lang])})) AS INTEGER)"
-        f" AS {lang}_hits"
-        for lang in LANG_PRIORITY
-    )
-    best = "GREATEST(" + ", ".join(f"{lang}_hits" for lang in LANG_PRIORITY) + ")"
-    case_arms = "\n".join(
-        f"WHEN {lang}_hits = {best} THEN '{lang}'" for lang in LANG_PRIORITY
-    )
-    return f"""
-        WITH t AS (
-            SELECT doc_id, list_distinct(string_split(trim(text), ' ')) AS dtoks
-            FROM documents
-        ), h AS (
-            SELECT doc_id, {hit_exprs} FROM t
-        )
-        SELECT doc_id, en_hits, de_hits, es_hits, fr_hits,
-               CASE WHEN {best} <= 0 THEN 'und'
-                    {case_arms}
-               END AS lang_pred
-        FROM h
-    """
 
 
 def lm_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -476,78 +362,6 @@ def lm_score_bigram(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lm_score_bigram_oracle_sql(table: str = "documents") -> str:
-    """DuckDB twin of lm_score_bigram — same censuses, same micro-nat
-    quantization, same truncating mean (HUGEINT sums pinned back)."""
-    return f"""
-        WITH t AS (
-            SELECT doc_id, string_split(trim(text), ' ') AS toks
-            FROM {table}
-        ),
-        bi AS (
-            SELECT doc_id, toks[i] AS a, toks[i + 1] AS b
-            FROM t, unnest(generate_series(1, len(toks) - 1)) AS s(i)
-        ),
-        cab AS (
-            SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-            FROM bi GROUP BY 1, 2
-        ),
-        ctx AS (
-            SELECT a, CAST(SUM(c_ab) AS BIGINT) AS c_ctx FROM cab GROUP BY 1
-        ),
-        v AS (
-            SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS v
-            FROM (SELECT unnest(toks) AS tok FROM t)
-        ),
-        lp AS (
-            SELECT cab.a, cab.b,
-                   CAST(FLOOR(ln(CAST(c_ab + 1 AS DOUBLE)
-                                 / CAST(c_ctx + v.v AS DOUBLE))
-                              * 1000000) AS BIGINT) AS lp_micro
-            FROM cab JOIN ctx ON cab.a = ctx.a CROSS JOIN v
-        )
-        SELECT bi.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(CAST(SUM(lp_micro) AS HUGEINT) // COUNT(*) AS BIGINT)
-                   AS mean_logprob_micro
-        FROM bi JOIN lp ON bi.a = lp.a AND bi.b = lp.b
-        GROUP BY bi.doc_id
-    """
-
-
-def lm_score_oracle_sql(table: str = "documents") -> str:
-    """DuckDB twin of lm_score — same census, same micro-nat quantization,
-    same integer mean."""
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, tok
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split(trim(text), ' ')) AS tok
-                FROM {table}
-            ) WHERE tok <> ''
-        ),
-        census AS (
-            SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok
-        ),
-        totals AS (
-            SELECT CAST(SUM(c) AS BIGINT) AS n_total, COUNT(*) AS v
-            FROM census
-        ),
-        lp AS (
-            SELECT tok,
-                   CAST(FLOOR(ln((c + 1) * 1.0 / (n_total + v)) * 1000000.0)
-                        AS BIGINT) AS lp_micro
-            FROM census, totals
-        )
-        SELECT t.doc_id,
-               COUNT(*) AS n_tokens,
-               CAST(SUM(lp_micro) AS BIGINT) // COUNT(*) AS mean_logprob_micro
-        FROM toks t JOIN lp ON t.tok = lp.tok
-        GROUP BY t.doc_id
-    """
-
-
 def repetition_scores(docs: DataFrame, n: int = 3) -> DataFrame:
     """Within-document repetition metrics (the Gopher/MassiveText boilerplate
     heuristics): fraction of duplicated n-grams and the coverage of the
@@ -598,39 +412,6 @@ def repetition_scores(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def repetition_scores_oracle_sql(n: int = 3, table: str = "documents") -> str:
-    """DuckDB twin of repetition_scores (same 1-based gram positions, same
-    zero-fill for sub-n docs)."""
-    cols = ", ".join(f"t[pos + {j}]" for j in range(n))
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(trim(text), ' ') AS t FROM {table}
-        ),
-        grams AS (
-            SELECT doc_id, concat_ws(' ', {cols}) AS gram
-            FROM toks, unnest(range(1, greatest(len(t) - {n - 1}, 0) + 1)) AS u(pos)
-        ),
-        per_gram AS (
-            SELECT doc_id, gram, COUNT(*) AS c FROM grams GROUP BY doc_id, gram
-        ),
-        per_doc AS (
-            SELECT doc_id, SUM(c) AS total,
-                   SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup,
-                   MAX(c) AS top
-            FROM per_gram GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               -- CAST: SUM() is HUGEINT in DuckDB -> float64 in pandas ->
-               -- driver value-hash '30.0' vs Spark BIGINT '30'.
-               CAST(COALESCE(total, 0) AS BIGINT) AS n_ngrams,
-               COALESCE(FLOOR(CAST(dup AS DOUBLE) / total * 10000.0 + 0.5) / 10000.0,
-                        0.0) AS dup_ngram_frac,
-               COALESCE(FLOOR(CAST(top AS DOUBLE) / total * 10000.0 + 0.5) / 10000.0,
-                        0.0) AS top_ngram_frac
-        FROM {table} d LEFT JOIN per_doc USING (doc_id)
-    """
-
-
 def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     """Corpus-wide top-k word n-grams with counts — the vocabulary/phrase
     census a tokenizer-training or contamination pass starts from.
@@ -656,28 +437,6 @@ def top_ngrams(docs: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     )
     w = Window.orderBy(F.col("cnt").desc(), F.col("gram"))
     return top.withColumn("rnk", F.row_number().over(w)).select("gram", "cnt", "rnk")
-
-
-def top_ngrams_oracle_sql(n: int = 2, k: int = 20, table: str = "documents") -> str:
-    """DuckDB twin of top_ngrams."""
-    return f"""
-        WITH t AS (
-            SELECT string_split(trim(text), ' ') AS toks FROM {table}
-            WHERE len(string_split(trim(text), ' ')) >= {n}
-        ),
-        p AS (
-            SELECT CAST(unnest(range(1, len(toks) - {n} + 2)) AS INTEGER) AS pos, toks
-            FROM t
-        ),
-        g AS (
-            SELECT array_to_string(list_slice(toks, pos, pos + {n} - 1), ' ') AS gram
-            FROM p
-        ),
-        c AS (SELECT gram, COUNT(*) AS cnt FROM g GROUP BY gram)
-        SELECT gram, cnt,
-               CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, gram) AS INTEGER) AS rnk
-        FROM c ORDER BY cnt DESC, gram LIMIT {k}
-    """
 
 
 def corpus_drift(docs: DataFrame) -> DataFrame:
@@ -774,39 +533,6 @@ def tv_from_census(census: DataFrame) -> DataFrame:
     )
 
 
-def corpus_drift_oracle_sql(table: str = "documents") -> str:
-    """DuckDB twin: identical census, identical shared-vocabulary
-    collapse, identical integer floor division."""
-    return f"""
-        WITH census AS (
-            SELECT source, unnest(string_split(trim(text), ' ')) AS tok
-            FROM {table}
-        ),
-        c AS (
-            SELECT source, tok, COUNT(*) AS cnt FROM census GROUP BY 1, 2
-        ),
-        tot AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS t FROM c GROUP BY 1),
-        shared AS (
-            SELECT a.source AS src_a, b.source AS src_b,
-                   CAST(SUM(ABS(a.cnt * tb.t - b.cnt * ta.t)
-                            - a.cnt * tb.t - b.cnt * ta.t) AS BIGINT) AS s
-            FROM c a
-            JOIN c b ON a.tok = b.tok AND a.source < b.source
-            JOIN tot ta ON ta.source = a.source
-            JOIN tot tb ON tb.source = b.source
-            GROUP BY 1, 2
-        )
-        SELECT ta.source AS src_a, tb.source AS src_b,
-               ta.t AS tok_a, tb.t AS tok_b,
-               CAST((1000000 * (2 * CAST(ta.t AS HUGEINT) * tb.t + COALESCE(s, 0)))
-                    // (2 * CAST(ta.t AS HUGEINT) * tb.t) AS BIGINT)
-                   AS tv_micro
-        FROM tot ta
-        JOIN tot tb ON ta.source < tb.source
-        LEFT JOIN shared ON src_a = ta.source AND src_b = tb.source
-    """
-
-
 def inverted_index(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """Posting lists: per term, its document frequency, total term
     frequency, and the sorted doc-id posting list (rendered as a
@@ -850,22 +576,6 @@ def render_inverted_index(census: DataFrame, min_df: int = 2) -> DataFrame:
         )
         .filter(F.col("df") >= min_df)
     )
-
-
-def inverted_index_oracle_sql(min_df: int = 2, table: str = "documents") -> str:
-    """DuckDB twin of inverted_index."""
-    return f"""
-        WITH tk AS (
-            SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
-            FROM {table}
-        ),
-        p AS (
-            SELECT term, doc_id, COUNT(*) AS tf FROM tk GROUP BY 1, 2
-        )
-        SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS ttf,
-               string_agg(doc_id, ',' ORDER BY doc_id) AS postings
-        FROM p GROUP BY term HAVING COUNT(*) >= {min_df}
-    """
 
 
 def collocations(
@@ -928,43 +638,6 @@ def collocations(
     )
 
 
-def collocations_oracle_sql(
-    min_count: int = 10, top_k: int = 100, table: str = "documents"
-) -> str:
-    """DuckDB twin: identical counts and HUGEINT cross-multiplied lift."""
-    return f"""
-        WITH t AS (
-            SELECT string_split(trim(text), ' ') AS toks FROM {table}
-        ),
-        uni AS (
-            SELECT unnest(toks) AS a FROM t
-        ),
-        cu AS (
-            SELECT a, CAST(COUNT(*) AS BIGINT) AS ca FROM uni GROUP BY 1
-        ),
-        n AS (SELECT CAST(SUM(ca) AS HUGEINT) AS n FROM cu),
-        bi AS (
-            SELECT toks[i] AS a, toks[i + 1] AS b
-            FROM t, unnest(generate_series(1, len(toks) - 1)) AS s(i)
-        ),
-        cb AS (
-            SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-            FROM bi GROUP BY 1, 2
-            HAVING COUNT(*) >= {min_count}
-        )
-        SELECT cb.a, cb.b, c_ab,
-               CAST(CAST(c_ab AS HUGEINT) * n.n * 1000000
-                    // (CAST(x.ca AS HUGEINT) * y.ca) AS BIGINT)
-                   AS lift_ppm
-        FROM cb
-        JOIN cu x ON cb.a = x.a
-        JOIN cu y ON cb.b = y.a
-        CROSS JOIN n
-        ORDER BY lift_ppm DESC, cb.a, cb.b
-        LIMIT {top_k}
-    """
-
-
 def hashed_features(
     docs: DataFrame, n_buckets: int = 64, salt: str = "feathash"
 ) -> DataFrame:
@@ -993,22 +666,6 @@ def hashed_features(
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def hashed_features_oracle_sql(
-    n_buckets: int = 64, salt: str = "feathash", table: str = "documents"
-) -> str:
-    """DuckDB twin: identical md5-prefix portable hash and bucketing."""
-    h = portable_hash60_sql(f"'{salt}:' || t")
-    return f"""
-        SELECT doc_id, CAST({h} % {n_buckets} AS INTEGER) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (
-            SELECT doc_id, unnest(string_split(trim(text), ' ')) AS t
-            FROM {table}
-        )
-        GROUP BY 1, 2
-    """
 
 
 def token_entropy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1057,35 +714,6 @@ def token_entropy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ).alias("entropy_micronats"),
         )
     )
-
-
-def token_entropy_oracle_sql(table: str = "documents") -> str:
-    """DuckDB twin of ``token_entropy`` — same census, same per-type
-    micro-nat quantization, same exact integer doc arithmetic."""
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, tok
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split(trim(text), ' ')) AS tok
-                FROM {table}
-            ) WHERE tok <> ''
-        ),
-        census AS (
-            SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
-            FROM toks GROUP BY 1, 2
-        )
-        SELECT doc_id,
-               CAST(SUM(c) AS BIGINT) AS n_tokens,
-               CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(FLOOR(ln(CAST(SUM(c) AS DOUBLE)) * 1000000.0) AS BIGINT)
-                   - CAST(SUM(c * CAST(FLOOR(ln(CAST(c AS DOUBLE))
-                                             * 1000000.0) AS BIGINT))
-                          AS BIGINT) // CAST(SUM(c) AS BIGINT)
-                   AS entropy_micronats
-        FROM census
-        GROUP BY doc_id
-    """
 
 
 def zipf_fit(docs: DataFrame) -> DataFrame:
@@ -1139,47 +767,6 @@ def zipf_fit(docs: DataFrame) -> DataFrame:
             " div NULLIF(__n * __sxx - __sx * __sx, 0) AS BIGINT)"
         ).alias("zipf_slope_ppm"),
     )
-
-
-def zipf_fit_oracle_sql(table: str = "documents") -> str:
-    """DuckDB twin: identical census/rank/quantize/closed form, HUGEINT
-    for every cross-multiply."""
-    return f"""
-        WITH toks AS (
-            SELECT tok FROM (
-                SELECT unnest(string_split(trim(text), ' ')) AS tok
-                FROM {table}
-            ) WHERE tok <> ''
-        ),
-        census AS (
-            SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
-            FROM toks GROUP BY 1
-        ),
-        pts AS (
-            SELECT c,
-                   CAST(FLOOR(ln(CAST(row_number() OVER (
-                       ORDER BY c DESC, tok
-                   ) AS DOUBLE)) * 1000000.0) AS BIGINT) AS x,
-                   CAST(FLOOR(ln(CAST(c AS DOUBLE)) * 1000000.0)
-                        AS BIGINT) AS y
-            FROM census
-        ),
-        s AS (
-            SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                   CAST(SUM(c) AS BIGINT) AS n_tokens,
-                   CAST(SUM(x) AS HUGEINT) AS sx,
-                   CAST(SUM(y) AS HUGEINT) AS sy,
-                   CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-                   CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-            FROM pts
-        )
-        SELECT CAST(n AS BIGINT) AS n_types,
-               n_tokens,
-               CAST((n * sxy - sx * sy) * 1000000
-                    // NULLIF(n * sxx - sx * sx, 0) AS BIGINT)
-                   AS zipf_slope_ppm
-        FROM s
-    """
 
 
 def bm25_topk(
@@ -1253,63 +840,3 @@ def bm25_topk(
         .orderBy(F.col("bm25_micro").desc(), F.col("doc_id").asc())
         .limit(k)
     )
-
-
-def bm25_topk_oracle_sql(
-    query_terms: tuple[str, ...], k: int = 20, table: str = "documents"
-) -> str:
-    """DuckDB twin: identical census/idf-quantize/cleared-denominator
-    arithmetic in HUGEINT."""
-    # ADVICE r7: escape quotes so a term like "rock'n'roll" still builds
-    # valid oracle SQL (test-only threat model — no untrusted input).
-    terms = ", ".join(
-        "'" + t.replace("'", "''") + "'" for t in dict.fromkeys(query_terms)
-    )
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, tok FROM (
-                SELECT doc_id,
-                       unnest(string_split(trim(text), ' ')) AS tok
-                FROM {table}
-            ) WHERE tok <> ''
-        ),
-        dl AS (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
-            FROM toks GROUP BY 1
-        ),
-        sc AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(dl) AS BIGINT) AS total
-            FROM dl
-        ),
-        tf AS (
-            SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM toks WHERE tok IN ({terms}) GROUP BY 1, 2
-        ),
-        dft AS (
-            SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1
-        ),
-        idf AS (
-            SELECT tok,
-                   CAST(FLOOR(ln((n - df + 0.5) / (df + 0.5) + 1.0)
-                              * 1000000.0) AS BIGINT) AS idf
-            FROM dft, sc
-        ),
-        scored AS (
-            SELECT tf.doc_id,
-                   CAST(CAST(idf AS HUGEINT) * 44 * tf * total
-                        // (CAST(20 AS HUGEINT) * total * tf
-                            + 6 * total + 18 * dl.dl * n)
-                        AS BIGINT) AS s
-            FROM tf
-            JOIN idf USING (tok)
-            JOIN dl USING (doc_id), sc
-        )
-        SELECT doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_terms_matched,
-               CAST(SUM(s) AS BIGINT) AS bm25_micro
-        FROM scored
-        GROUP BY doc_id
-        ORDER BY bm25_micro DESC, doc_id
-        LIMIT {k}
-    """

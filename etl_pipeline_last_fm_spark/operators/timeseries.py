@@ -66,44 +66,6 @@ def gapfill_daily(
     return joined.select(*out_cols)
 
 
-def gapfill_daily_oracle_sql(
-    obs_sql: str,
-    key_col: str,
-    date_col: str,
-    zero_cols: list[str] | None = None,
-    locf_cols: list[str] | None = None,
-) -> str:
-    """DuckDB twin: generate_series calendar per key, LEFT JOIN back, zero
-    via COALESCE, LOCF via last_value(... IGNORE NULLS)."""
-    zero_cols = zero_cols or []
-    locf_cols = locf_cols or []
-    zero_sel = "".join(
-        f",\n               COALESCE(o.{c}, 0) AS {c}" for c in zero_cols
-    )
-    locf_sel = "".join(
-        f""",\n               last_value(o.{c} IGNORE NULLS) OVER (
-                   PARTITION BY cal.{key_col} ORDER BY cal.{date_col}
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS {c}"""
-        for c in locf_cols
-    )
-    return f"""
-        WITH obs AS ({obs_sql}),
-        bounds AS (
-            SELECT {key_col}, min({date_col}) AS lo, max({date_col}) AS hi
-            FROM obs GROUP BY {key_col}
-        ),
-        cal AS (
-            SELECT {key_col},
-                   unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS {date_col}
-            FROM bounds
-        )
-        SELECT cal.{key_col}, cal.{date_col}{zero_sel}{locf_sel},
-               (o.{date_col} IS NOT NULL) AS was_observed
-        FROM cal LEFT JOIN obs o
-          ON cal.{key_col} = o.{key_col} AND cal.{date_col} = o.{date_col}
-    """
-
-
 # --- Exponential decay fold (round 6) ----------------------------------
 
 
@@ -134,28 +96,6 @@ def ema_halflife(
         ema_fold_batch(None, events, key_col, ts_col, value_col, tiebreak_col),
         key_col,
     )
-
-
-def ema_halflife_oracle_sql(table: str = "events") -> str:
-    """DuckDB twin of ``ema_halflife``: the same zero-init ½-decay fold
-    via list_reduce over the (ts, tiebreak)-ordered value list."""
-    return f"""
-        SELECT user_id,
-               CAST(LEN(l) AS BIGINT) AS n_events,
-               CAST(list_reduce(
-                   list_prepend(CAST(0 AS BIGINT), l),
-                   (acc, x) -> (acc + x) // 2
-               ) AS BIGINT) AS ema_cents
-        FROM (
-            SELECT user_id,
-                   list(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                        ORDER BY epoch_us(ts), event_id) AS l
-            FROM {table}
-            WHERE value IS NOT NULL AND user_id IS NOT NULL
-              AND ts IS NOT NULL
-            GROUP BY user_id
-        )
-    """
 
 
 def _halve(acc, s):
@@ -353,37 +293,6 @@ def trend_fit(
     )
 
 
-def trend_fit_oracle_sql(
-    group_cols: list[str] | None = None, table: str = "events"
-) -> str:
-    """DuckDB twin: identical integer closed form in HUGEINT (whose //
-    matches decimal div — house rule)."""
-    gc = ", ".join(group_cols or ["event_type"])
-    return f"""
-        WITH s AS (
-            SELECT {gc},
-                   CAST(COUNT(*) AS HUGEINT) AS n,
-                   CAST(SUM(x) AS HUGEINT) AS sx,
-                   CAST(SUM(y) AS HUGEINT) AS sy,
-                   CAST(SUM(x * y) AS HUGEINT) AS sxy,
-                   CAST(SUM(x * x) AS HUGEINT) AS sxx
-            FROM (
-                SELECT {gc},
-                       epoch_us(ts) // 86400000000 AS x,
-                       CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS y
-                FROM {table}
-            )
-            GROUP BY {gc}
-        )
-        SELECT {gc},
-               CAST(n AS BIGINT) AS n,
-               CAST((n * sxy - sx * sy) * 1000000
-                    // NULLIF(n * sxx - sx * sx, 0) AS BIGINT)
-                   AS slope_ppm_cents_per_day
-        FROM s
-    """
-
-
 def cusum_alarms(
     events: DataFrame,
     drift_cents: int = 0,
@@ -549,55 +458,6 @@ def present_cusum_state(state: DataFrame) -> DataFrame:
     )
 
 
-def cusum_alarms_oracle_sql(
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    table: str = "events",
-) -> str:
-    """DuckDB twin: identical closed-form windows; final value via
-    arg_max on the row number."""
-    return f"""
-        WITH prefixed AS (
-            SELECT user_id,
-                   row_number() OVER w_row AS rn,
-                   CAST(SUM(dev) OVER w_run AS BIGINT) AS p
-            FROM (
-                SELECT user_id, event_id, epoch_us(ts) AS us,
-                       CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                         - {drift_cents} AS dev
-                FROM {table}
-                WHERE value IS NOT NULL AND user_id IS NOT NULL
-                  AND ts IS NOT NULL
-            )
-            WINDOW w_row AS (PARTITION BY user_id ORDER BY us, event_id),
-                   w_run AS (PARTITION BY user_id ORDER BY us, event_id
-                             ROWS UNBOUNDED PRECEDING)
-        ), stepped AS (
-            -- window SUM(BIGINT) is HUGEINT in DuckDB: pin s back to
-            -- BIGINT or every downstream aggregate renders as float.
-            SELECT user_id, rn,
-                   CAST(p - LEAST(CAST(0 AS BIGINT),
-                             MIN(p) OVER (PARTITION BY user_id ORDER BY rn
-                                          ROWS UNBOUNDED PRECEDING))
-                        AS BIGINT) AS s
-            FROM prefixed
-        ), lagged AS (
-            SELECT *, COALESCE(lag(s) OVER (PARTITION BY user_id
-                                            ORDER BY rn), 0) AS prev
-            FROM stepped
-        )
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(arg_max(s, rn) AS BIGINT) AS cusum_final,
-               CAST(MAX(s) AS BIGINT) AS cusum_max,
-               CAST(SUM(CASE WHEN s >= {threshold_cents}
-                              AND prev < {threshold_cents}
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms
-        FROM lagged
-        GROUP BY user_id
-    """
-
-
 # --- Holt linear (double-exponential) smoothing fold (round 7c) ---------
 
 
@@ -639,47 +499,6 @@ def holt_linear(
         holt_fold_batch(None, events, key_col, ts_col, value_col, tiebreak_col),
         key_col,
     )
-
-
-def holt_linear_oracle_sql(table: str = "events") -> str:
-    """DuckDB twin of ``holt_linear``: the same zero-init (level, trend)
-    recurrence as a RECURSIVE CTE stepping through each key's ordered
-    value list. NOT list_reduce: DuckDB's list_reduce evaluates a struct
-    accumulator's fields sequentially IN PLACE, so a field computed
-    earlier in the literal clobbers the acc value a later field reads —
-    the trend update would see the NEW level where the recurrence needs
-    the old one (verified divergence; the CTE carries both fields of a
-    step atomically instead)."""
-    return f"""
-        WITH RECURSIVE lists AS (
-            SELECT user_id,
-                   list(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)
-                        ORDER BY epoch_us(ts), event_id) AS l
-            FROM {table}
-            WHERE value IS NOT NULL AND user_id IS NOT NULL
-              AND ts IS NOT NULL
-            GROUP BY user_id
-        ),
-        steps AS (
-            SELECT user_id, 0 AS i,
-                   CAST(0 AS BIGINT) AS lvl, CAST(0 AS BIGINT) AS trd, l
-            FROM lists
-            UNION ALL
-            SELECT user_id, i + 1,
-                   (lvl + trd + l[i + 1]) // 2,
-                   (((lvl + trd + l[i + 1]) // 2) - lvl + trd) // 2,
-                   l
-            FROM steps
-            WHERE i < LEN(l)
-        )
-        SELECT user_id,
-               CAST(LEN(l) AS BIGINT) AS n_events,
-               CAST(lvl AS BIGINT) AS level_cents,
-               CAST(trd AS BIGINT) AS trend_cents,
-               CAST(lvl + trd AS BIGINT) AS forecast_cents
-        FROM steps
-        WHERE i = LEN(l)
-    """
 
 
 def holt_fold_batch(
@@ -795,39 +614,6 @@ def durbin_watson(
     )
 
 
-def durbin_watson_oracle_sql(table: str = "events") -> str:
-    """DuckDB twin: identical integer closed form in HUGEINT (whose //
-    matches decimal div — house rule); the lag runs in the same
-    (epoch-µs, tiebreak) window order."""
-    return f"""
-        WITH lagged AS (
-            SELECT user_id, y,
-                   lag(y) OVER (PARTITION BY user_id
-                                ORDER BY us, event_id) AS prev
-            FROM (
-                SELECT user_id, event_id, epoch_us(ts) AS us,
-                       CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS y
-                FROM {table}
-            )
-        ),
-        s AS (
-            SELECT user_id,
-                   CAST(COUNT(*) AS HUGEINT) AS n,
-                   CAST(SUM(y) AS HUGEINT) AS sy,
-                   CAST(SUM(y * y) AS HUGEINT) AS syy,
-                   CAST(COALESCE(SUM((y - prev) * (y - prev)), 0)
-                        AS HUGEINT) AS sd2
-            FROM lagged
-            GROUP BY user_id
-        )
-        SELECT user_id,
-               CAST(n AS BIGINT) AS n_events,
-               CAST(n * sd2 * 1000000
-                    // NULLIF(n * syy - sy * sy, 0) AS BIGINT) AS dw_ppm
-        FROM s
-    """
-
-
 # --- Mann–Whitney rank-sum test (round 7c) -------------------------------
 
 
@@ -899,51 +685,3 @@ def rank_sum_test(
             " AS BIGINT)"
         ).alias("u2_b"),
     )
-
-
-def rank_sum_test_oracle_sql(
-    group_a: str,
-    group_b: str,
-    table: str = "events",
-) -> str:
-    """DuckDB twin: identical value-dim midrank derivation in HUGEINT."""
-    # ADVICE r7: escape quotes so a group name containing ' still builds
-    # valid oracle SQL (test-only threat model — no untrusted input).
-    group_a = group_a.replace("'", "''")
-    group_b = group_b.replace("'", "''")
-    return f"""
-        WITH two AS (
-            SELECT event_type = '{group_a}' AS is_a,
-                   CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
-            FROM {table}
-            WHERE event_type IN ('{group_a}', '{group_b}')
-        ),
-        per_v AS (
-            SELECT v,
-                   CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT)
-                       AS na,
-                   CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT)
-                       AS nb
-            FROM two GROUP BY v
-        ),
-        ranked AS (
-            SELECT na, nb,
-                   2 * CAST(COALESCE(SUM(na + nb) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) + na + nb + 1 AS mr2
-            FROM per_v
-        ),
-        s AS (
-            SELECT CAST(SUM(na) AS HUGEINT) AS n_a,
-                   CAST(SUM(nb) AS HUGEINT) AS n_b,
-                   CAST(SUM(CAST(na AS HUGEINT) * mr2) AS HUGEINT) AS r2a
-            FROM ranked
-        )
-        SELECT CAST(n_a AS BIGINT) AS n_a,
-               CAST(n_b AS BIGINT) AS n_b,
-               CAST(r2a - n_a * (n_a + 1) AS BIGINT) AS u2_a,
-               CAST(2 * n_a * n_b - (r2a - n_a * (n_a + 1)) AS BIGINT)
-                   AS u2_b
-        FROM s
-    """

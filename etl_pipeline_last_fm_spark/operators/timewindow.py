@@ -54,28 +54,6 @@ def tumbling_window_agg(
     )
 
 
-def tumbling_window_oracle_sql(
-    window_minutes: int = 60,
-    key_col: str = "event_type",
-    table: str = "events",
-) -> str:
-    w_us = window_minutes * 60_000_000
-    # ((e % W) + W) % W = floor-mod: DuckDB's % truncates toward zero, so a
-    # pre-1970 (negative-epoch) timestamp would bucket differently from
-    # Spark's pmod without the wrap.
-    return f"""
-        SELECT {key_col},
-               CAST(epoch_us(ts)
-                    - ((epoch_us(ts) % {w_us}) + {w_us}) % {w_us}
-                    AS BIGINT) AS win_start_us,
-               COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                    AS DOUBLE) / 100.0 AS value_sum
-        FROM {table}
-        GROUP BY {key_col}, win_start_us
-    """
-
-
 def hopping_window_agg(
     events: DataFrame,
     window_minutes: int = 60,
@@ -114,36 +92,6 @@ def hopping_window_agg(
             ),
         )
     )
-
-
-def hopping_window_oracle_sql(
-    window_minutes: int = 60,
-    hop_minutes: int = 15,
-    key_col: str = "event_type",
-    table: str = "events",
-) -> str:
-    w_us = window_minutes * 60_000_000
-    h_us = hop_minutes * 60_000_000
-    n = w_us // h_us
-    # Same floor-mod wrap as the tumbling oracle (negative-epoch safety).
-    return f"""
-        WITH e AS (
-            SELECT {key_col}, value,
-                   epoch_us(ts)
-                   - ((epoch_us(ts) % {h_us}) + {h_us}) % {h_us} AS last_start
-            FROM {table}
-        ),
-        expanded AS (
-            SELECT {key_col}, value,
-                   CAST(last_start - s.j * {h_us} AS BIGINT) AS win_start_us
-            FROM e, unnest(range(0, {n})) AS s(j)
-        )
-        SELECT {key_col}, win_start_us, COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                    AS DOUBLE) / 100.0 AS value_sum
-        FROM expanded
-        GROUP BY {key_col}, win_start_us
-    """
 
 
 def streaming_hopping_window(

@@ -67,28 +67,6 @@ def scaled_to_bits(
     ).cast("long")
 
 
-def scaled_to_bits_sql(
-    expr: str, lo: int | str, hi: int | str, bits: int
-) -> str:
-    """DuckDB twin of ``scaled_to_bits``. Bounds may be integer literals or
-    SQL expressions (e.g. columns from a bounds CTE)."""
-    return (
-        f"CAST(FLOOR((CAST({expr} AS BIGINT) - ({lo})) * {1 << bits}"
-        f" / (({hi}) - ({lo}) + 1)) AS BIGINT)"
-    )
-
-
-def zorder_key_sql(x_expr: str, y_expr: str, bits: int = 20) -> str:
-    """DuckDB twin of ``zorder_key`` — same unrolled interleave."""
-    terms = []
-    # Each term fully parenthesized: '+' binds tighter than '<<' in SQL, so
-    # an unparenthesized 'a << 2 + b << 3' is 'a << (2 + (b << 3))'.
-    for i in range(bits):
-        terms.append(f"(((({x_expr}) >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((({y_expr}) >> {i}) & 1) << {2 * i + 1})")
-    return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
-
 def write_zordered(
     df: DataFrame,
     path: str,

@@ -118,7 +118,7 @@ def test_shipmode_null_priority_counts_as_low(spark, tmp_path):
     benign testdata has no NULL priorities, so this builds its own tiny
     tables with one — the counter assertions must actually exercise the
     COALESCE (ADVICE r9)."""
-    from etl_pipeline_last_fm_spark.registry.round6 import q_shipmode_priority
+    from grading.warehouse import q_shipmode_priority
 
     t_order = datetime(1996, 1, 1)
     t_late = datetime(1996, 6, 1)  # > 60 days after the order date

@@ -58,13 +58,13 @@ def test_filter_and_projection_reach_parquet_scan(spark, sf_dir):
 
 
 def test_star_join_has_no_sort_merge_join(spark, sf_dir):
-    plan = formatted_plan(entrymod.q_flagship_royalties(spark, sf_dir))
+    plan = formatted_plan(entrymod.queries()["flagship_royalties"](spark, sf_dir))
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
 
 
 def test_aggregate_is_partial_then_final(spark, sf_dir):
-    plan = formatted_plan(entrymod.q_pricing_summary(spark, sf_dir))
+    plan = formatted_plan(entrymod.queries()["pricing_summary"](spark, sf_dir))
     assert "HashAggregate" in plan
     assert "partial_sum" in plan or "Functions: [partial" in plan or "partial" in plan.lower()
 
@@ -73,12 +73,12 @@ def test_windowed_top_k_uses_rank_limit_pushdown(spark, sf_dir):
     """row_number + filter(<=k) must trigger WindowGroupLimit so each
     shuffle partition keeps only k rows per group before the final window —
     the property that makes the chart operator viable on billion-row groups."""
-    plan = formatted_plan(entrymod.q_windowed_top_k(spark, sf_dir))
+    plan = formatted_plan(entrymod.queries()["windowed_top_k"](spark, sf_dir))
     assert "WindowGroupLimit" in plan
 
 
 def test_global_topn_avoids_full_sort(spark, sf_dir):
-    plan = formatted_plan(entrymod.q_order_limit(spark, sf_dir))
+    plan = formatted_plan(entrymod.queries()["order_limit"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -231,9 +231,9 @@ def test_priority_promises_pushes_h1_filter_into_exists(spark, sf_dir):
     lineitem-join build inside `late`) carries the 1996-H1 bound, i.e. the
     date filter sits BELOW the lineitem join, keeping ~12x of the fact rows
     out of the EXISTS-side shuffle at scale."""
-    from etl_pipeline_last_fm_spark.registry.extras import _US_1996
+    from grading.warehouse import _US_1996
 
-    df = entrymod.q_priority_promises(spark, sf_dir)
+    df = entrymod.queries()["priority_promises"](spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     n_orders_scans = sum(
         1 for l in plan.splitlines() if "Relation" in l and "o_orderpriority" in l
@@ -247,7 +247,7 @@ def test_forecast_revenue_filters_reach_the_scan(spark, sf_dir):
     100 TB), and the scan must read exactly the 4 referenced columns.
     Guards the round-6 switch from ts_us() range predicates (wrapped in
     unix_micros(cast(...)) — unpushable) to raw-column comparisons."""
-    from etl_pipeline_last_fm_spark.registry.round6 import q_forecast_revenue
+    from grading.timeseries import q_forecast_revenue
 
     plan = formatted_plan(q_forecast_revenue(spark, sf_dir))
     pushed = next(l for l in plan.splitlines() if "PushedFilters" in l)

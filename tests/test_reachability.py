@@ -1,10 +1,12 @@
-"""Every engine module is reachable from a query, the pipeline or the CLI.
+"""Every engine and grading module is reachable from a query, the pipeline
+or the CLI.
 
 Walks the import graph from the three entry points -- ``__spark_entry__.py``
-(the query registry), ``pipeline.py`` (the daily batch) and ``__main__.py``
+(the graded queries), ``pipeline.py`` (the daily batch) and ``__main__.py``
 (the CLI) -- by parsing source, so it needs no Spark. Imports inside
-function bodies count. A module under ``etl_pipeline_last_fm_spark/`` that
-no walk reaches is dead code: wire it into one of the roots or delete it.
+function bodies count. A module under ``etl_pipeline_last_fm_spark/`` or
+``grading/`` that no walk reaches is dead code: wire it into one of the
+roots or delete it. The engine never imports ``grading``.
 
 The same source walk pins one structural rule: streaming state is folded
 only through the replay-guarded driver in ``streaming/state.py``.
@@ -17,6 +19,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "etl_pipeline_last_fm_spark"
+GRADING = "grading"
 ROOTS = (
     REPO / "__spark_entry__.py",
     REPO / PKG / "pipeline.py",
@@ -32,7 +35,9 @@ def _module_name(path: Path) -> str:
 
 
 def _package_modules() -> dict[str, Path]:
-    return {_module_name(p): p for p in (REPO / PKG).rglob("*.py")}
+    return {
+        _module_name(p): p for pkg in (PKG, GRADING) for p in (REPO / pkg).rglob("*.py")
+    }
 
 
 def _imported_names(path: Path) -> set[str]:
@@ -71,6 +76,18 @@ def test_every_engine_module_is_reached_from_an_entry_point():
         "modules no query, pipeline stage or CLI command imports: "
         + ", ".join(unreached)
     )
+
+
+def test_no_engine_module_imports_grading():
+    """Grading depends on the engine, never the reverse: the pipeline, the
+    CLI and the streaming paths load no oracle SQL."""
+    offenders = sorted(
+        name
+        for name, path in _package_modules().items()
+        if name.startswith(PKG)
+        and any(n.split(".")[0] == GRADING for n in _imported_names(path))
+    )
+    assert not offenders, "engine modules importing grading: " + ", ".join(offenders)
 
 
 #: The fold driver, and the raw -> ODS merge, which is a sink, not a state.

@@ -166,7 +166,7 @@ def test_market_basket_vs_python(spark, sf_dir):
 
     got = {
         (r["part_a"], r["part_b"]): (r["support"], r["lift_ppm"])
-        for r in entry.q_market_basket(spark, sf_dir).collect()
+        for r in entry.queries()["market_basket"](spark, sf_dir).collect()
     }
 
     import duckdb

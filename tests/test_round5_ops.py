@@ -93,11 +93,8 @@ def test_kmv_expr_exact_branch_truth_and_parity(spark):
     import duckdb
     import hashlib
 
-    from etl_pipeline_last_fm_spark.operators.sketch import (
-        kmv_expr,
-        kmv_expr_oracle_sql,
-        kmv_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.sketch import kmv_expr, kmv_state
+    from grading.similarity import kmv_expr_oracle_sql
 
     a_vals = list(range(1, 31))          # 1..30
     b_vals = list(range(20, 51))         # 20..50
@@ -170,10 +167,8 @@ def test_bpe_train_early_stop_and_empty_tokens_match_oracle(spark):
     tokenization, preserving the run-parity precondition merged != left)."""
     import duckdb
 
-    from etl_pipeline_last_fm_spark.operators.packing import (
-        bpe_train,
-        bpe_train_oracle_sql,
-    )
+    from etl_pipeline_last_fm_spark.operators.packing import bpe_train
+    from grading.text import bpe_train_oracle_sql
 
     rows = [(1, "a b c"), (2, "a b d"), (3, "x  y")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -270,10 +265,8 @@ def test_event_pattern_backslash_class_cross_engine(spark):
     import duckdb
     from datetime import datetime
 
-    from etl_pipeline_last_fm_spark.operators.patterns import (
-        match_event_pattern,
-        match_event_pattern_oracle_sql,
-    )
+    from etl_pipeline_last_fm_spark.operators.patterns import match_event_pattern
+    from grading.timeseries import match_event_pattern_oracle_sql
 
     alphabet = {"view": "v", "click": "1", "purchase": "p",
                 "signup": "s", "error": "e"}

@@ -293,19 +293,19 @@ def _ordered_fold(name):
     from etl_pipeline_last_fm_spark.operators import attribution as at
     from etl_pipeline_last_fm_spark.operators import segments as sg
     from etl_pipeline_last_fm_spark.operators import timeseries as ts
-    from etl_pipeline_last_fm_spark.registry import round7 as r7
+    from grading import timeseries as gts
 
     return {
         "ema": (ts.ema_fold_batch, ts.present_ema_state),
-        "cusum": (r7._cusum_step, ts.present_cusum_state),
+        "cusum": (gts._cusum_step, ts.present_cusum_state),
         "holt": (ts.holt_fold_batch, ts.present_holt_state),
         "twap": (sg.twap_fold_batch, sg.present_twap_state),
         "attribution": (
-            at.attribution_step(), lambda parts: r7._present_last_touch(parts[-1])
+            at.attribution_step(), lambda parts: gts._present_last_touch(parts[-1])
         ),
         "attribution_decay": (
             at.attribution_step(at.decay_attribution_fold_batch),
-            lambda parts: r7._present_decay(parts[-1]),
+            lambda parts: gts._present_decay(parts[-1]),
         ),
     }[name]
 

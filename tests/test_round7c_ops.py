@@ -316,10 +316,8 @@ def test_oracle_builders_escape_quoted_terms():
     without executing against real tables)."""
     import duckdb
 
-    from etl_pipeline_last_fm_spark.operators.text import bm25_topk_oracle_sql
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        rank_sum_test_oracle_sql,
-    )
+    from grading.evalmetrics import rank_sum_test_oracle_sql
+    from grading.text import bm25_topk_oracle_sql
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")

@@ -461,16 +461,18 @@ def test_degenerate_inputs_yield_nulls_on_both_engines(spark):
 
     from etl_pipeline_last_fm_spark.operators.evalmetrics import (
         calibration_bins,
-        calibration_bins_oracle_sql,
         calibration_ece,
-        calibration_ece_oracle_sql,
         cohens_kappa,
-        cohens_kappa_oracle_sql,
         lift_deciles,
-        lift_deciles_oracle_sql,
         mann_kendall,
-        mann_kendall_oracle_sql,
         roc_auc,
+    )
+    from grading.evalmetrics import (
+        calibration_bins_oracle_sql,
+        calibration_ece_oracle_sql,
+        cohens_kappa_oracle_sql,
+        lift_deciles_oracle_sql,
+        mann_kendall_oracle_sql,
         roc_auc_oracle_sql,
     )
 
@@ -501,10 +503,8 @@ def test_degenerate_inputs_yield_nulls_on_both_engines(spark):
     got = both(zeros, calibration_ece, calibration_ece_oracle_sql())
     assert got[0][1] is None and got[0][2] is None
     # all-negative corpus -> precision defined, recall NULL
-    from etl_pipeline_last_fm_spark.operators.evalmetrics import (
-        pr_curve,
-        pr_curve_oracle_sql,
-    )
+    from etl_pipeline_last_fm_spark.operators.evalmetrics import pr_curve
+    from grading.evalmetrics import pr_curve_oracle_sql
 
     got = both(all_neg, pr_curve, pr_curve_oracle_sql())
     assert all(r[3] == 0 and r[4] is None for r in got)

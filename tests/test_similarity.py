@@ -187,10 +187,8 @@ def test_ivfpq_candidate_restriction_vs_oracle_nprobe1(spark, sf_dir):
     check. Also differs from the default-nprobe parity entry, which could
     mask a symmetric restriction bug only if BOTH engines dropped the
     join the same way; here the oracle's join is spelled literally."""
-    from etl_pipeline_last_fm_spark.operators.similarity import (
-        ivfpq_ann_topk_seeded,
-        ivfpq_ann_topk_seeded_oracle_sql,
-    )
+    from etl_pipeline_last_fm_spark.operators.similarity import ivfpq_ann_topk_seeded
+    from grading.similarity import ivfpq_ann_topk_seeded_oracle_sql
     from etl_pipeline_last_fm_spark.sources.tables import load_table
     from tests.oracle_utils import assert_matches_oracle
 

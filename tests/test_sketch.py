@@ -239,7 +239,7 @@ def test_streaming_session_window_sandwich(spark, sf_dir, tmp_path):
 
     got = set(map(tuple, spark.sql("SELECT * FROM sess_stream").collect()))
     batch = set(
-        map(tuple, entry.q_session_window_native(spark, sf_dir).collect())
+        map(tuple, entry.queries()["session_window_native"](spark, sf_dir).collect())
     )
     assert got <= batch, "streamed a session the batch operator disagrees with"
     from etl_pipeline_last_fm_spark.functions.scalar import ts_us as _ts_us
