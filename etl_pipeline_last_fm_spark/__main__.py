@@ -2,14 +2,16 @@
 one date parameter end-to-end (SURVEY.md Appendix A.8).
 
     python -m etl_pipeline_last_fm_spark ingest-sample --warehouse W --date 2024-03-01
-    python -m etl_pipeline_last_fm_spark run           --warehouse W --date 2024-03-01
+    python -m etl_pipeline_last_fm_spark run           --warehouse W --date 2024-03-01 [--bi-url URL]
     python -m etl_pipeline_last_fm_spark ingest-live   --warehouse W --date D --api-key K
     python -m etl_pipeline_last_fm_spark stream        --warehouse W
 
 ``ingest-sample`` lands a deterministic synthetic chart (no network);
 ``ingest-live`` hits the real Last.fm API (requires the ``requests``
 package and an API key, like the reference's Variable.get("api_key") at
-dags/raw_from_api_to_s3.py:25).
+dags/raw_from_api_to_s3.py:25). ``run --bi-url`` also publishes the day's
+marts to a BI database over JDBC (the reference's Metabase handoff); the
+JDBC driver jar must be on Spark's classpath.
 """
 
 from __future__ import annotations
@@ -58,7 +60,11 @@ def main(argv: list[str] | None = None) -> int:
     live = sub.add_parser("ingest-live", help="land a real chart from the Last.fm API")
     add_common(live)
     live.add_argument("--api-key", required=True)
-    add_common(sub.add_parser("run", help="run raw -> ODS -> DDS -> DM for one date"))
+    run = sub.add_parser("run", help="run raw -> ODS -> DDS -> DM for one date")
+    add_common(run)
+    run.add_argument(
+        "--bi-url", help="JDBC URL of a BI database to publish the day's marts to"
+    )
     st = sub.add_parser("stream", help="streaming raw -> ODS merge (availableNow)")
     st.add_argument("--warehouse", required=True)
     dd = sub.add_parser(
@@ -87,7 +93,11 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"lastfm-{args.cmd}")
 
-    from etl_pipeline_last_fm_spark.pipeline import Warehouse, run_pipeline
+    from etl_pipeline_last_fm_spark.pipeline import (
+        Warehouse,
+        publish_dm_to_bi,
+        run_pipeline,
+    )
 
     wh = Warehouse(args.warehouse)
 
@@ -108,6 +118,9 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "run":
         run_pipeline(spark, args.warehouse, args.date)
         print(f"pipeline complete for {args.date} -> {args.warehouse}")
+        if args.bi_url:
+            publish_dm_to_bi(spark, wh, args.bi_url, run_date=args.date)
+            print(f"published the marts for {args.date} to the BI database")
     elif args.cmd == "stream":
         from etl_pipeline_last_fm_spark.pipeline import stream_raw_to_ods_pipeline
 

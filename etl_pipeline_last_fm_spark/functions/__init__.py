@@ -3,12 +3,3 @@
 Everything here is a *Column expression* (JVM-side, codegen-able) — never a
 Python UDF. See SURVEY.md §2.3 for the reference's full scalar surface.
 """
-
-from etl_pipeline_last_fm_spark.functions.scalar import (
-    cosine_similarity_expr,
-    half_up_round,
-    pg_avg_int,
-    round2,
-)
-
-__all__ = ["cosine_similarity_expr", "half_up_round", "pg_avg_int", "round2"]

@@ -53,12 +53,6 @@ def cents(col: Column | str) -> Column:
     return F.floor(c * F.lit(100.0) + F.lit(0.5)).cast("long")
 
 
-def pg_avg_int(col: Column) -> Column:
-    """``AVG(x)::INT`` with Postgres semantics (round, don't truncate) —
-    reference dags/from_ods_to_dds_pg.py:75; SURVEY.md Appendix A.2."""
-    return half_up_round(F.avg(col)).cast("int")
-
-
 def round2(col: Column) -> Column:
     """``ROUND(x, 2)`` as used by the royalties mart (reference
     dags/from_dds_to_dm_pg.py:74, scripts/ddl_dm.sql:19), tie-pinned."""
@@ -94,17 +88,3 @@ def portable_hash60(col: Column) -> Column:
     hash constant — the verification covers the operator, not the digest.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def cosine_similarity_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity of two ``array<float/double>`` columns as a pure
-    higher-order-function expression — JVM-side, no UDF, no data movement to
-    Python. dot = sum(zip_with(a,b,*)); norms likewise.
-
-    At 100 TB this is the expression you want inlined in codegen rather than
-    an Arrow round-trip (see operators.similarity on very wide vectors).
-    """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    norm_a = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    norm_b = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (norm_a * norm_b)

@@ -71,15 +71,3 @@ def funnel_stages(
         )
         .distinct()
     )
-
-
-def funnel_summary(
-    events: DataFrame,
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-) -> DataFrame:
-    """Stage-depth histogram: (stage_depth, stage, n_users)."""
-    return (
-        funnel_stages(events, stages)
-        .groupBy("stage_depth", "stage")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )

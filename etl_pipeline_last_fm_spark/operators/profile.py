@@ -14,7 +14,7 @@ aggregates — a deliberately different plan computing the same answer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
@@ -178,71 +178,6 @@ def fixed_width_histogram(
             half_up_round(F.col("__lo") + (F.col("bin") + 1) * w, 4).alias("bin_hi"),
         )
     )
-
-
-def merge_histograms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bin-wise sum of two fixed-width histograms built with the SAME bin
-    edges (same source bounds): the mergeable-profiling-state property —
-    daily histograms roll up without re-reading history, exactly like the
-    CMS/HLL sketch states in operators/sketch.py."""
-    return (
-        a.unionByName(b)
-        .groupBy("bin", "bin_lo", "bin_hi")
-        .agg(F.sum("n_rows").alias("n_rows"))
-        .select("bin", "n_rows", "bin_lo", "bin_hi")
-    )
-
-
-def quantiles_from_histogram(
-    hist: DataFrame, quantiles: list[float]
-) -> DataFrame:
-    """Approximate quantiles read off a fixed-width histogram state by
-    linear interpolation within the covering bin — error bounded by one
-    bin width. This is the read-side of incremental profiling: histogram
-    states merge additively (``merge_histograms``); quantiles are derived
-    on demand, never stored.
-
-    The histogram is bins-sized (tiny), so the cumulative window here
-    runs on n_bins rows — an unpartitioned window over kilobytes, the
-    same deliberate driver-scale reduction as pack_sequences' block pass.
-    Returns (q, estimate)."""
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.select(
-        "bin",
-        "n_rows",
-        "bin_lo",
-        "bin_hi",
-        F.coalesce(F.sum("n_rows").over(w), F.lit(0)).alias("cum_before"),
-    ).crossJoin(
-        F.broadcast(hist.agg(F.sum("n_rows").alias("__total")))
-    )
-    out = None
-    for q in quantiles:
-        target = F.lit(float(q)) * F.col("__total")
-        # Covering bin: first non-empty bin whose cumulative range contains
-        # the target. Bounds inclusive on BOTH sides so the edge quantiles
-        # exist: q=0 (target 0, needs cum_before <= 0) and q=1 (target =
-        # total, needs cum_before + n >= total on the last bin).
-        covering = (
-            cum.filter(
-                (F.col("cum_before") <= target)
-                & (F.col("cum_before") + F.col("n_rows") >= target)
-                & (F.col("n_rows") > 0)
-            )
-            .orderBy("bin")
-            .limit(1)
-        )
-        est = covering.select(
-            F.lit(float(q)).alias("q"),
-            (
-                F.col("bin_lo")
-                + (target - F.col("cum_before"))
-                / F.col("n_rows")
-                * (F.col("bin_hi") - F.col("bin_lo"))
-            ).alias("estimate"),
-        )
-        out = est if out is None else out.unionByName(est)
-    return out
 
 
 def contingency_chi2(

@@ -82,64 +82,6 @@ def _scd2_from_obs(obs: DataFrame, key: str, attr: str) -> DataFrame:
     )
 
 
-# Sorts before any real tiebreak id on an equal date: the synthetic
-# carry-forward observation must anchor each entity's history.
-_SYNTH_TB = -(2**62)
-
-
-def scd2_apply(
-    existing: DataFrame,
-    new_log: DataFrame,
-    key: str = "o_custkey",
-    attr: str = "o_orderpriority",
-    ts: str = "o_orderdate",
-    tiebreak: str = "o_orderkey",
-) -> DataFrame:
-    """Incrementally apply a new observation batch to an existing SCD2
-    table — equal, row for row, to rebuilding from the full log
-    (property-tested), while touching only CURRENT rows + the new batch.
-
-    At 100 TB this is the difference between a daily job proportional to
-    the DAY and one proportional to ALL HISTORY: closed versions pass
-    through untouched (no window visits them); the per-key work is the
-    islands computation over (1 synthetic row + the new batch).
-
-    Mechanism: each current row is replayed as a synthetic observation at
-    its own valid_from (tiebreak -2^62, sorting before any real event of
-    that date), unioned with the new batch, and re-islanded. If the batch
-    opens with the same attribute, the synthetic absorbs it (current row
-    extends — same valid_from); if it differs, the synthetic island closes
-    at the first change exactly as a full rebuild would. Versions shift by
-    the entity's last version - 1. Requires batch observations dated on or
-    after each entity's valid_from (the append contract of a daily feed).
-    """
-    current = existing.filter(F.col("is_current"))
-    closed = existing.filter(~F.col("is_current"))
-    synth = current.select(
-        key,
-        attr,
-        F.col("valid_from").alias("__d"),
-        F.lit(_SYNTH_TB).cast("long").alias("__tb"),
-    )
-    batch = new_log.select(
-        key,
-        attr,
-        F.date_format(ts, "yyyy-MM-dd").alias("__d"),
-        F.col(tiebreak).cast("long").alias("__tb"),
-    )
-    replayed = _scd2_from_obs(synth.unionByName(batch), key, attr)
-    offsets = current.select(key, (F.col("version") - F.lit(1)).alias("__off"))
-    shifted = (
-        replayed.join(offsets, key, "left")
-        .withColumn(
-            "version",
-            (F.col("version") + F.coalesce(F.col("__off"), F.lit(0))).cast("int"),
-        )
-        .drop("__off")
-    )
-    return closed.unionByName(shifted)
-
-
 def scd2_as_of(
     history: DataFrame,
     as_of: str,

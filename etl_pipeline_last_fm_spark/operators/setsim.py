@@ -95,13 +95,9 @@ def _prefixed(
 ) -> DataFrame:
     """Per-doc prefix rows under the (df asc, shingle asc) order: rank and
     size from one window pair, prefix length p = sz - ceil(t*sz) + 1 with
-    ceil in integer arithmetic. ``df_counts`` may omit tokens (the
-    incremental variant orders by the CORPUS's dfs only) — unseen tokens
-    coalesce to df 0, i.e. rarest-first. Shared by the symmetric and the
-    incremental operator so the order/length logic cannot diverge."""
-    ranked = rows.join(df_counts, "shingle", "left").withColumn(
-        "__df", F.coalesce("__df", F.lit(0))
-    )
+    ceil in integer arithmetic. ``df_counts`` holds every token of
+    ``rows``."""
+    ranked = rows.join(df_counts, "shingle")
     w = Window.partitionBy("doc_id").orderBy("__df", "shingle")
     ranked = ranked.select(
         "doc_id",
@@ -192,92 +188,6 @@ def prefix_filter_pairs(
     # Exact verification on candidate docs only (semi-join first), integer
     # threshold comparison — mirrors minhash_lsh_pairs' verification stage.
     return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
-
-
-def prefix_filter_pairs_incremental(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-    shingle_len: int = 3,
-) -> DataFrame:
-    """Asymmetric (R-S) prefix-filter join: every (new_id, corpus_id) pair
-    with shingle Jaccard >= num/den — the DAILY-pipeline shape, where a
-    small ingest batch is checked against the accumulated corpus without
-    re-pairing the corpus against itself.
-
-    The token order comes from the CORPUS's document frequencies only
-    (tokens unseen in the corpus order first: (0, token) — they are the
-    rarest by definition). The prefix-filter lemma only needs a total
-    order CONSISTENT across both sides, not any particular one, so the
-    corpus-df order is valid — and it is stable day over day, which means
-    a production deployment can persist the corpus's prefix rows once and
-    reuse them for every batch: per-day cost is O(batch) prefix
-    computation + the candidate join, never O(corpus) recompute.
-
-    In-batch (new x new) duplicates are deliberately out of scope — run
-    the symmetric ``prefix_filter_pairs`` on the batch alone (it is
-    small); keeping the two concerns separate keeps both joins honest.
-
-    Output: (new_id, corpus_id, jaccard) — the same verified-pairs
-    contract, lossless by the same lemma (tested against the symmetric
-    operator's cross-pairs on the union).
-    """
-    rows_n = _distinct_shingle_rows(new_docs, shingle_len)
-    # persist(): corpus rows feed both the df groupBy and the corpus-side
-    # prefix join — same double-execution note as the symmetric operator.
-    rows_c = _distinct_shingle_rows(corpus, shingle_len).persist()
-    df_counts = rows_c.groupBy("shingle").agg(
-        F.count(F.lit(1)).alias("__df")
-    )
-
-    pn = _prefixed(rows_n, df_counts, threshold_num, threshold_den).select(
-        F.col("doc_id").alias("new_id"), "shingle", F.col("__sz").alias("sz_n")
-    )
-    pc = _prefixed(rows_c, df_counts, threshold_num, threshold_den).select(
-        F.col("doc_id").alias("corpus_id"), "shingle", F.col("__sz").alias("sz_c")
-    )
-    cands = (
-        pn.join(pc, "shingle")
-        .filter(
-            F.least("sz_n", "sz_c") * F.lit(threshold_den)
-            >= F.greatest("sz_n", "sz_c") * F.lit(threshold_num)
-        )
-        .select("new_id", "corpus_id")
-        .distinct()
-        .persist()
-    )
-
-    def cand_shingles(docs: DataFrame, ids: DataFrame, out: str) -> DataFrame:
-        return (
-            docs.join(ids, "doc_id", "left_semi")
-            .select("doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks"))
-            .select(
-                F.col("doc_id").alias(out),
-                _shingles("__toks", shingle_len).alias(f"sh_{out}"),
-            )
-        )
-
-    sh_n = cand_shingles(
-        new_docs, cands.select(F.col("new_id").alias("doc_id")).distinct(), "new_id"
-    )
-    sh_c = cand_shingles(
-        corpus,
-        cands.select(F.col("corpus_id").alias("doc_id")).distinct(),
-        "corpus_id",
-    )
-    shared = F.size(F.array_intersect("sh_new_id", "sh_corpus_id"))
-    union = F.size("sh_new_id") + F.size("sh_corpus_id") - shared
-    return (
-        cands.join(sh_n, "new_id")
-        .join(sh_c, "corpus_id")
-        .filter(shared * F.lit(threshold_den) >= F.lit(threshold_num) * union)
-        .select(
-            "new_id",
-            "corpus_id",
-            half_up_round(shared.cast("double") / union, 4).alias("jaccard"),
-        )
-    )
 
 
 def _verify_pairs(

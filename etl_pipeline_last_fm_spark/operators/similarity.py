@@ -109,8 +109,14 @@ def _sql_double_array(vals: list[float]) -> str:
 
 
 def _dot_literal_sql(vec_sql: str, lit_vec: list[float]) -> str:
-    """SQL-text twin of ``_dot_literal`` — same zip_with/aggregate fold,
-    built in O(1) py4j calls instead of O(dim)."""
+    """Dot product against a literal vector as a zip_with/aggregate fold,
+    built as SQL text in O(1) py4j calls instead of O(dim). An unrolled
+    element_at form was tried and is SLOWER: 64 dims x 16 codebook
+    literals per subspace make thousand-node expression trees that cost
+    more in analysis/codegen than the interpreted fold costs at runtime
+    (measured 2x worse on sim_ann_pq). The effective optimization for
+    repeated literal dots is hoisting the shared self-dot subexpression
+    (see pq_ann_topk_seeded), not unrolling."""
     return (
         f"aggregate(zip_with({vec_sql}, {_sql_double_array(lit_vec)}, "
         f"(x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
@@ -122,9 +128,9 @@ def _self_dot_sql(vec_sql: str) -> str:
 
 
 def _dot_pair_expr(a_sql: str, b_sql: str) -> Column:
-    """Dot product of two vector COLUMNS — the zip_with/aggregate fold of
-    ``cosine_similarity_expr`` as one parsed expression. Used with hoisted
-    norm columns so the per-pair work is one fold, not three."""
+    """Dot product of two vector COLUMNS — one zip_with/aggregate fold as
+    one parsed expression. Used with hoisted norm columns so the per-pair
+    work is one fold, not three."""
     return F.expr(
         f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y),"
         f" 0.0D, (acc, v) -> acc + v)"
@@ -160,21 +166,6 @@ def lsh_buckets(
     planes = hyperplanes(dim, n_planes, seed)
     v = emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("e"))
     return v.withColumn("bucket", lsh_bucket_expr("e", planes))
-
-
-def _dot_literal(vec: Column, plane: list[float]) -> Column:
-    """Dot product against a literal vector as a zip_with/aggregate fold.
-    Note: an unrolled element_at form was tried and is SLOWER — 64 dims x
-    16 codebook literals per subspace produces thousand-node expression
-    trees that cost more in analysis/codegen than the interpreted fold
-    costs at runtime (measured 2x worse on sim_ann_pq). The effective
-    optimization for repeated literal dots is hoisting the shared self-dot
-    subexpression (see pq_ann_topk_seeded), not unrolling."""
-    return F.aggregate(
-        F.zip_with(vec, F.array(*[F.lit(p) for p in plane]), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def ivf_ann_topk_trained(
@@ -536,16 +527,6 @@ def pq_seed_codebooks(
             [(pos, list(r["e"][m * sub : (m + 1) * sub])) for pos, r in enumerate(rows)]
         )
     return books
-
-
-def _l2sq_literal(vec: Column, lit_vec: list[float]) -> Column:
-    """Squared L2 distance of a vector Column slice to a literal, as the
-    expanded dot form (fixed evaluation order on both engines):
-    dot(v,v) - 2*dot(v,c) + dot(c,c)."""
-    dot_vv = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)
-    dot_vc = _dot_literal(vec, lit_vec)
-    cc = sum(x * x for x in lit_vec)
-    return dot_vv - F.lit(2.0) * dot_vc + F.lit(cc)
 
 
 def pq_ann_topk_seeded(

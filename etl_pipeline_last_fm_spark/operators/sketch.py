@@ -40,7 +40,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, portable_hash60
-from etl_pipeline_last_fm_spark.operators.incremental import additive_step
 
 # Standard HLL bias-correction constants (Flajolet et al. 2007).
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
@@ -114,32 +113,11 @@ def hll_registers(
     )
 
 
-def hll_step(
-    value_col: str, group_cols: list[str], b: int = 6, salt: str = "hll1"
-):
-    """Fold step of stream-maintained HLL registers: each batch's
-    registers merge into the state by register-wise MAX — associative,
-    commutative and idempotent. The state stays |groups| * 2^b rows
-    forever; ``hll_estimate_from_registers`` turns it into counts."""
-
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy(*group_cols, "__bkt")
-            .agg(F.max("__mj").alias("__mj"))
-        )
-
-    return additive_step(
-        lambda batch: hll_registers(batch, value_col, group_cols, b, salt), merge
-    )
-
-
 def hll_estimate_from_registers(
     registers: DataFrame, group_cols: list[str], b: int
 ) -> DataFrame:
-    """Estimator over a register table (group_cols, __bkt, __mj) — the
-    read-side of a persisted/stream-maintained sketch state (see
-    ``hll_step``). Returns group cols + n_approx."""
+    """Estimator over a register table (group_cols, __bkt, __mj), the
+    state ``hll_registers`` builds. Returns group cols + n_approx."""
     group_cols = group_cols or []
     m = 1 << b
     width = 60 - b
@@ -167,61 +145,15 @@ def hll_estimate_from_registers(
     return g.select(*group_cols, half_up_round(estimate, 4).alias("n_approx"))
 
 
-def cms_counters(
-    tokens: DataFrame,
-    token_col: str = "tok",
-    depth: int = 4,
-    width: int = 1024,
-    salt: str = "cms1",
-) -> DataFrame:
-    """Count-Min counter grid over a token stream: one row per non-empty
-    (row, cell) with its hit count. ``depth`` independent hash rows (salted
-    portable hashes), ``width`` cells each — the whole sketch is at most
-    depth*width rows regardless of input size, and grids from different
-    partitions/days merge by summing cells (associative).
-
-    Two-level aggregation: a token census first (partial+final count over
-    the raw stream — the only pass that touches every row), then the
-    depth-fold explode and cell hashing run on the VOCAB-sized census, not
-    the stream. The naive formulation (explode the stream by depth, then
-    count) multiplies pre-shuffle rows by depth; measured at sf0.1 this
-    rewrite cut the graded query 2.5 s -> ~0.9 s."""
-    counts = tokens.groupBy(F.col(token_col).alias("__tok")).agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    return _grid_from_census(counts, depth=depth, width=width, salt=salt)
-
-
-def merge_cms_grids(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cellwise sum of two CMS counter grids (associative, commutative)."""
-    return (
-        a.unionByName(b)
-        .groupBy("__d", "__cell")
-        .agg(F.sum("__cnt").alias("__cnt"))
-    )
-
-
-def cms_step(
-    token_col: str = "tok",
-    depth: int = 4,
-    width: int = 1024,
-    salt: str = "cms1",
-):
-    """Fold step of a stream-maintained CMS grid: each batch's grid sums
-    into the state cell by cell. A sum folded twice inflates, so this
-    step relies on the fold driver's replay guard (unlike HLL maxima)."""
-    return additive_step(
-        lambda batch: cms_counters(batch, token_col, depth, width, salt),
-        merge_cms_grids,
-    )
-
-
 def _grid_from_census(
     census: DataFrame, depth: int, width: int, salt: str
 ) -> DataFrame:
-    """Counter grid from a (__tok, __n) census — the vocab-sized half of
-    cms_counters, shared with cms_heavy_hitters so one census serves both
-    the grid and the exact top-k."""
+    """Count-Min counter grid from a (__tok, __n) token census: one row per
+    non-empty (row, cell) with its hit count, at most depth*width rows
+    regardless of input size. ``cms_heavy_hitters`` builds the census
+    once, so it serves both the grid and the exact top-k; the depth-fold
+    explode and cell hashing then run on the VOCAB-sized census, not the
+    stream (measured at sf0.1, this cut the graded query 2.5 s -> ~0.9 s)."""
     with_d = census.select(
         "__tok",
         "__n",

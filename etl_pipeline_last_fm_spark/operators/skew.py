@@ -1,24 +1,19 @@
-"""Skew-mitigation operators: salting for hot keys (SURVEY.md §7.7).
+"""Skew mitigation: salting for hot keys (SURVEY.md §7.7).
 
-AQE's skew-join splitting handles most runtime skew; these explicit forms
-are for the cases AQE can't see — e.g. a hot grouping key whose partial
-aggregate state itself is the bottleneck, or a broadcast-ineligible join
-with a handful of pathological keys.
+AQE's skew-join splitting handles most runtime skew; this explicit form
+is for a case AQE can't see: a hot grouping key whose partial aggregate
+state itself is the bottleneck.
 
 - ``salted_aggregate``: two-phase aggregation. Phase 1 groups on
   (key, salt) — the hot key's rows spread over ``buckets`` reducers — then
   phase 2 combines the per-salt partials. Supported aggregates are the
   algebraic ones whose partials compose (sum/count/min/max + avg via
   sum/count).
-- ``salted_join``: replicate the small side ``buckets`` times (one copy per
-  salt value); give each big-side row a deterministic salt; join on
-  (key, salt). The hot key's rows now land on ``buckets`` different
-  reducers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PHASE1 = {
@@ -65,24 +60,3 @@ def salted_aggregate(
     partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*phase1_cols)
     combined = partial.groupBy(*keys).agg(*phase2_cols)
     return combined.select(*[F.col(k) for k in keys], *final_cols)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the small side replicated per salt bucket.
-
-    Output equals ``big.join(small, on, how)`` for inner/left joins; the
-    shuffle key becomes (on..., salt) so a single hot key spreads over
-    ``buckets`` partitions."""
-    salt_values = F.explode(F.array(*[F.lit(i) for i in range(buckets)])).alias("__salt")
-    small_rep = small.select("*", salt_values)
-    big_salted = big.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(buckets)).cast("int"),
-    )
-    return big_salted.join(small_rep, [*on, "__salt"], how).drop("__salt")

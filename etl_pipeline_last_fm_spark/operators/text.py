@@ -475,8 +475,7 @@ def corpus_drift(docs: DataFrame) -> DataFrame:
 
 def token_census(docs: DataFrame) -> DataFrame:
     """Per-(source, token) counts — the ADDITIVE state behind corpus_drift:
-    censuses of disjoint batches merge by cnt-sum (order-free), which is
-    what streaming/drift.py folds incrementally."""
+    censuses of disjoint batches merge by cnt-sum (order-free)."""
     return (
         docs.select(F.col("source"), F.explode(_tokens()).alias("tok"))
         .groupBy("source", "tok")
@@ -485,8 +484,8 @@ def token_census(docs: DataFrame) -> DataFrame:
 
 
 def tv_from_census(census: DataFrame) -> DataFrame:
-    """Read-time TV computation from a (source, tok, cnt) census — shared
-    by the batch operator (corpus_drift) and the streaming state reader."""
+    """Read-time TV computation from a (source, tok, cnt) census — the
+    read side of corpus_drift."""
     totals = census.groupBy("source").agg(F.sum("cnt").alias("tot"))
     ca = (
         census.join(totals, "source")
@@ -555,8 +554,7 @@ def inverted_index(docs: DataFrame, min_df: int = 2) -> DataFrame:
 def postings_census(docs: DataFrame) -> DataFrame:
     """Per-(term, doc_id) term frequencies — the ADDITIVE state behind
     inverted_index: disjoint batches' censuses merge by union (one row
-    per key under an append-only corpus), which is what
-    streaming/drift.py folds incrementally."""
+    per key under an append-only corpus)."""
     return (
         docs.select(F.col("doc_id"), F.explode(_tokens()).alias("term"))
         .groupBy("term", "doc_id")
@@ -565,8 +563,8 @@ def postings_census(docs: DataFrame) -> DataFrame:
 
 
 def render_inverted_index(census: DataFrame, min_df: int = 2) -> DataFrame:
-    """Read-time index rendering from a (term, doc_id, tf) census —
-    shared by the batch operator and the streaming state reader."""
+    """Read-time index rendering from a (term, doc_id, tf) census — the
+    read side of inverted_index."""
     return (
         census.groupBy("term")
         .agg(

@@ -94,57 +94,6 @@ def hopping_window_agg(
     )
 
 
-def streaming_hopping_window(
-    events_stream: DataFrame,
-    window_minutes: int = 60,
-    hop_minutes: int = 15,
-    watermark_minutes: int = 120,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of ``hopping_window_agg``: the same bounded explode
-    into the W/H containing window starts, then a watermarked grouped
-    aggregate on the bucket timestamp. The explode happens BEFORE the
-    stateful aggregation, so each window bucket is ordinary keyed state
-    with watermark-bounded lifetime — no custom stateful operator needed.
-    In-order availableNow replay equals the batch operator exactly
-    (tested)."""
-    if window_minutes % hop_minutes:
-        raise ValueError("window_minutes must be a multiple of hop_minutes")
-    w_us = window_minutes * 60_000_000
-    h_us = hop_minutes * 60_000_000
-    n = w_us // h_us
-    us = ts_us(ts_col)
-    last_start = us - F.pmod(us, F.lit(h_us))
-    starts = F.sequence(
-        last_start - F.lit((n - 1) * h_us), last_start, F.lit(h_us)
-    )
-    return (
-        events_stream.select(
-            F.col(key_col),
-            F.explode(starts).alias("__start_us"),
-            F.col(value_col),
-        )
-        .withColumn("__win", F.timestamp_micros(F.col("__start_us")))
-        .withWatermark("__win", f"{watermark_minutes} minutes")
-        .groupBy(key_col, "__win")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact cent sum (order-insensitive; round-9 float-sum audit)
-            (F.sum(cents(value_col)).cast("double") / F.lit(100.0)).alias(
-                "value_sum"
-            ),
-        )
-        .select(
-            key_col,
-            F.unix_micros(F.col("__win")).alias("win_start_us"),
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
 def streaming_tumbling_window(
     events_stream: DataFrame,
     window_minutes: int = 60,
@@ -188,51 +137,5 @@ def streaming_tumbling_window(
             F.unix_micros(F.col("__win")).alias("win_start_us"),
             "n_events",
             "value_sum",
-        )
-    )
-
-
-def streaming_session_window(
-    events_stream: DataFrame,
-    gap_minutes: int = 30,
-    watermark_minutes: int = 120,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of the native session_window aggregation
-    (__spark_entry__.q_session_window_native): dynamic gap-merged session
-    state keyed by (user, session), finalized and emitted in APPEND mode
-    once the watermark passes a session's end.
-
-    Append-mode caveat (inherent to session windows, not this code):
-    sessions still inside the watermark horizon when an availableNow
-    replay ends remain in state and are NOT emitted — so "stream equals
-    batch" holds as a sandwich: every emitted row IS a batch row, and
-    every batch session that provably finalized (end < max event time -
-    watermark) IS emitted (tested exactly that way). A continuous
-    deployment flushes them as the watermark advances.
-    """
-    cents = F.floor(
-        F.coalesce(F.col(value_col), F.lit(0.0)) * 100 + F.lit(0.5)
-    ).cast("long")
-    ev = events_stream.select(
-        F.col(key_col),
-        F.col(ts_col).cast("timestamp").alias("__ts"),
-        cents.alias("__cents"),
-    )
-    return (
-        ev.withWatermark("__ts", f"{watermark_minutes} minutes")
-        .groupBy(key_col, F.session_window("__ts", f"{gap_minutes} minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("__cents").alias("sum_cents"),
-        )
-        .select(
-            key_col,
-            F.unix_micros(F.col("session_window.start")).alias("start_us"),
-            F.unix_micros(F.col("session_window.end")).alias("end_us"),
-            "n_events",
-            "sum_cents",
         )
     )

@@ -1,8 +1,8 @@
 """Z-order (Morton) interleaved sort keys for multi-dimension data skipping.
 
-``write_sorted`` (sources/layout.py) clusters on ONE key: parquet min/max
-stats prune scans filtered on that key, but a filter on a second column
-still reads everything. Z-ordering interleaves the bits of two columns so
+A range-sorted write clusters on ONE key: parquet min/max stats prune
+scans filtered on that key, but a filter on a second column still reads
+everything. Z-ordering interleaves the bits of two columns so
 files are simultaneously clustered on both — the standard lakehouse layout
 trick (Delta/Iceberg `OPTIMIZE ZORDER BY`), here as a plain Column
 expression any `repartitionByRange(zkey) + sortWithinPartitions(zkey)`

@@ -26,7 +26,9 @@ marts (Appendix A.4).
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date as Date
@@ -75,6 +77,10 @@ from etl_pipeline_last_fm_spark.sources.raw_json import read_raw_chart
 #: invariant test can shrink it and observe the parallelism on a
 #: fixture-sized day (tests/test_layout.py::test_pipeline_write_sites_follow_file_count_policy).
 TARGET_ROWS_PER_FILE = 1_000_000
+
+#: Committed dim snapshots ``run_dds`` keeps besides the one it commits,
+#: for readers that started before the commit.
+KEEP_SNAPSHOTS = 2
 
 
 @dataclass
@@ -144,7 +150,7 @@ def run_ods(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
     write_compacted_partitioned(
         delta, wh.ods, partition_cols=["source_date"],
         target_rows_per_file=TARGET_ROWS_PER_FILE,
-        mode="append", dynamic_overwrite=False,
+        mode="append",
     )
 
 
@@ -173,9 +179,7 @@ def _snapshot_dir(wh: Warehouse, version: int) -> str:
     return os.path.join(_snapshot_root(wh), f"v={version:06d}")
 
 
-def run_dds(
-    spark: SparkSession, wh: Warehouse, run_date: str | Date, keep_snapshots: int = 2
-) -> None:
+def run_dds(spark: SparkSession, wh: Warehouse, run_date: str | Date) -> None:
     """ODS date slice -> dims -> NEW committed dim snapshot -> fact delta
     built against that snapshot and appended.
 
@@ -249,11 +253,11 @@ def run_dds(
     write_compacted_partitioned(
         new_fact, wh.dds("fact_daily_top_100"), partition_cols=["date"],
         target_rows_per_file=TARGET_ROWS_PER_FILE,
-        mode="append", dynamic_overwrite=False,
+        mode="append",
     )
 
     # Retire old snapshots (keep a short history for readers mid-flight).
-    for v in versions[:-keep_snapshots] if keep_snapshots else versions:
+    for v in versions[:-KEEP_SNAPSHOTS]:
         fs.delete_recursive(spark, _snapshot_dir(wh, v))
 
 
@@ -294,13 +298,11 @@ def load_dds(spark: SparkSession, wh: Warehouse) -> DdsTables | None:
     # days that produced fact rows, so populated dims + no fact path means
     # external deletion far likelier than a string of empty days, and a
     # silent empty fact would let the next mart run overwrite real data
-    # with nothing. (Keyed on dim content, not snapshot count — snapshot
-    # retention (keep_snapshots) can legitimately be 1.)
+    # with nothing. (Keyed on dim content, not snapshot count: a warehouse
+    # with one committed snapshot is the normal state after day one.)
     fact = _read_or_empty(spark, wh.dds("fact_daily_top_100"), FACT_SCHEMA)
     if fact is None:
         if dims.dim_country.limit(1).count() > 0:
-            import logging
-
             logging.getLogger(__name__).warning(
                 "DDS at %s: committed dim snapshot v=%d is populated but no "
                 "fact files exist at %s — external deletion is likelier than "
@@ -392,9 +394,7 @@ def publish_dm_to_bi(
         day = str(run_date)
         # The date is interpolated into server-side SQL — pin the shape so
         # a malformed caller value cannot smuggle SQL into the BI database.
-        import re as _re
-
-        if not _re.fullmatch(r"\d{4}-\d{2}-\d{2}", day):
+        if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", day):
             raise ValueError(f"run_date must be ISO yyyy-mm-dd, got {day!r}")
         delta = mart.filter(F.col("date") == F.lit(day))
         if _jdbc_table_exists(spark, url, name, driver):

@@ -119,7 +119,6 @@ FACT_SCHEMA = StructType(
         StructField("listeners_count", IntegerType()),
     ]
 )
-FACT_CONFLICT_KEY = ["date", "country_id", "song_rank"]  # ddl_dds.sql:31
 
 # Each dim's directory name in a snapshot (dim_snapshots/v=N/<name>).
 DIM_SCHEMAS = {

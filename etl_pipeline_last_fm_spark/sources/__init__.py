@@ -1,6 +1,1 @@
 """Sources & sinks: raw-zone JSON, parquet table catalog, HTTP ingest."""
-
-from etl_pipeline_last_fm_spark.sources.tables import load_table, register_testdata
-from etl_pipeline_last_fm_spark.sources.raw_json import read_raw_chart, write_raw_chart
-
-__all__ = ["load_table", "register_testdata", "read_raw_chart", "write_raw_chart"]

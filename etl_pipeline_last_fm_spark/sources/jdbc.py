@@ -69,38 +69,6 @@ def write_jdbc(
     writer.save()
 
 
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    driver: str | None = None,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """Read a JDBC table (the ingest direction, for completeness).
-
-    Without ``partition_column`` the read is ONE task — fine for dims,
-    wrong for facts; with it, Spark issues ``num_partitions`` range
-    predicates so the scan parallelizes (the JDBC analogue of partition
-    pruning)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if driver:
-        reader = reader.option("driver", driver)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def _jdbc_execute(
     spark: SparkSession,
     url: str,

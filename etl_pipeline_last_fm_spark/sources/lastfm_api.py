@@ -1,11 +1,8 @@
 """HTTP ingest source: Last.fm ``geo.getTopTracks`` -> raw-zone DataFrame.
 
 The reference fetches 3 countries x 100 tracks on the driver (reference
-dags/raw_from_api_to_s3.py:21-30, call loop :37-44) — fine at 300 rows/day.
-The engine keeps a driver-side path for parity but also provides a
-distributed fetch (`fetch_charts_distributed`) where the *countries list*
-is parallelized and each partition performs its own HTTP calls — the shape
-you want when "3 countries" becomes "10k API shards".
+dags/raw_from_api_to_s3.py:21-30, call loop :37-44) — fine at 300 rows/day,
+and the engine keeps that driver-side shape.
 
 Network access and the ``requests`` dependency are optional: tests inject a
 ``fetch_fn`` fixture instead (SURVEY.md §2.1 S1: "test fixtures replace it").
@@ -13,8 +10,7 @@ Network access and the ``requests`` dependency are optional: tests inject a
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 from datetime import date as Date
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -75,30 +71,6 @@ def fetch_charts(
     return spark.createDataFrame(rows, _raw_plus_partition_schema())
 
 
-def fetch_charts_distributed(
-    spark: SparkSession,
-    ingest_date: str | Date,
-    countries: list[str],
-    fetch_fn: FetchFn,
-    slices: int | None = None,
-) -> DataFrame:
-    """Distributed fetch: parallelize the shard list, fetch per-partition.
-
-    Each executor partition owns a slice of countries and performs its own
-    HTTP round-trips — the scan parallelism scales with the shard count, and
-    the driver never materializes payloads. ``fetch_fn`` must be picklable.
-    """
-    date_s = str(ingest_date)
-
-    def fetch_partition(it: Iterator[str]) -> Iterator[tuple]:
-        for country in it:
-            doc = fetch_fn(country)
-            yield (_tracks_struct(doc), date_s, country)
-
-    rdd = spark.sparkContext.parallelize(countries, slices or min(len(countries), 64))
-    return spark.createDataFrame(rdd.mapPartitions(fetch_partition), _raw_plus_partition_schema())
-
-
 def _raw_plus_partition_schema():
     """RAW_SCHEMA + (ingest_date, country), built as a COPY — StructType.add
     mutates in place, so extending the shared constant would corrupt it for
@@ -148,8 +120,3 @@ def _tracks_struct(doc: dict):
 
 def _as_str(v) -> str | None:
     return None if v is None else str(v)
-
-
-def doc_to_pretty_json(doc: dict) -> str:
-    """Reference-parity serialization (indent=4, raw_from_api_to_s3.py:50)."""
-    return json.dumps(doc, indent=4)

@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.sql.utils import AnalysisException
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _catalog_view_name(sf_dir: str, name: str) -> str:
     """Deterministic per-(dir, table) temp-view name — the session-scoped
@@ -108,14 +106,3 @@ def table_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     call costs a handful of py4j round trips instead of hundreds of
     Column-op round trips; the analyzed plan is the same)."""
     return _ensure_view(spark, sf_dir, name)
-
-
-def register_testdata(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register each testdata parquet as a temp view so SQL-form queries can
-    name tables the way the DuckDB oracle does."""
-    from etl_pipeline_last_fm_spark.schemas import TESTDATA_TABLES
-
-    for name in tables or TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

@@ -78,8 +78,7 @@ def stream_raw_to_ods(
         )
 
         write_compacted_partitioned(
-            delta, ods_path, partition_cols=["source_date"],
-            mode="append", dynamic_overwrite=False,
+            delta, ods_path, partition_cols=["source_date"], mode="append"
         )
 
     writer = (
@@ -90,37 +89,3 @@ def stream_raw_to_ods(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_event_stats(
-    events: DataFrame,
-    window_duration: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Event-time tumbling-window aggregate with late-data handling — the
-    streaming analogue of the daily marts (works on batch DataFrames too;
-    in streaming append mode, windows emit once the watermark passes).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact cent sum (order-insensitive; round-9 float-sum audit):
-            # with float partials the STREAMING STATE MERGE ORDER (batch
-            # arrival order) could perturb the emitted total vs a batch
-            # backfill — exactly the lambda-equivalence this operator
-            # promises. Cent partials compose exactly for any merge order.
-            (
-                F.sum(F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long"))
-                .cast("double")
-                / F.lit(100.0)
-            ).alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )

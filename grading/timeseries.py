@@ -1226,9 +1226,9 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linestatus"),
     )
     h = portable_hash60(row_str)
-    # ONE definition of the bucket/checksum aggregation, shared with the
-    # streaming fold (streaming/drift.checksum_state) so the incremental
-    # 64-row summary can never drift from the batch/oracle layout.
+    # ONE definition of the bucket/checksum aggregation
+    # (streaming/drift.checksum_state), an additive 64-row summary that
+    # disjoint batches fold into in any order.
 
     return checksum_state(li.select(h.alias("__h")))
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from etl_pipeline_last_fm_spark.operators.funnel import funnel_stages, funnel_summary
+from etl_pipeline_last_fm_spark.operators.funnel import funnel_stages
 
 
 def _ev(spark, rows):
@@ -48,12 +48,6 @@ def test_equal_timestamp_is_not_after(spark):
     ev = _ev(spark, [(1, 5, "view"), (1, 5, "click")])
     out = funnel_stages(ev).collect()
     assert out[0]["stage_depth"] == 1
-
-
-def test_summary_counts(spark):
-    ev = _ev(spark, [(1, 0, "view"), (2, 0, "view"), (2, 1, "click")])
-    got = {(r["stage_depth"], r["n_users"]) for r in funnel_summary(ev).collect()}
-    assert got == {(1, 1), (2, 1)}
 
 
 def test_single_exchange_plan(spark, sf_dir):

@@ -3,7 +3,7 @@ Metabase-on-Postgres BI handoff, reference docker-compose.yaml:66-68).
 
 Runs against embedded Derby (in-JVM, ships with Spark) so the test is
 hermetic: write a mart-shaped frame through the parallel JDBC sink, read
-it back through the JDBC source, assert row equality; then exercise the
+it back through Spark's JDBC source, assert row equality; then exercise the
 overwrite mode the BI refresh path uses."""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.sources.jdbc import read_jdbc, write_jdbc
+from etl_pipeline_last_fm_spark.sources.jdbc import write_jdbc
 
 DERBY = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -35,6 +35,16 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _read(spark, url, table):
+    return (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", table)
+        .option("driver", DERBY)
+        .load()
+    )
+
+
 def test_jdbc_round_trip(spark, derby_url):
     mart = spark.createDataFrame(
         [("2021-04-01", "artist a", 3), ("2021-04-01", "artist b", 1),
@@ -42,7 +52,7 @@ def test_jdbc_round_trip(spark, derby_url):
         "date string, artist_name string, cnt_appearance int",
     )
     write_jdbc(mart, derby_url, "appearances", mode="overwrite", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "appearances", driver=DERBY)
+    back = _read(spark, derby_url, "appearances")
     assert sorted(back.columns) == sorted(mart.columns)
     assert _rows(back.select(*mart.columns)) == _rows(mart)
 
@@ -52,7 +62,7 @@ def test_jdbc_overwrite_replaces(spark, derby_url):
     df2 = spark.createDataFrame([(2, "y"), (3, "z")], "id int, v string")
     write_jdbc(df1, derby_url, "ow", mode="overwrite", driver=DERBY)
     write_jdbc(df2, derby_url, "ow", mode="overwrite", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "ow", driver=DERBY)
+    back = _read(spark, derby_url, "ow")
     assert _rows(back.select("id", "v")) == [(2, "y"), (3, "z")]
 
 
@@ -64,14 +74,8 @@ def test_jdbc_append_and_connection_cap(spark, derby_url):
                num_partitions=4)
     write_jdbc(df, derby_url, "caps", mode="append", driver=DERBY,
                num_partitions=4)
-    back = read_jdbc(spark, derby_url, "caps", driver=DERBY)
+    back = _read(spark, derby_url, "caps")
     assert back.count() == 200
-    # partitioned read: range predicates parallelize the scan
-    part = read_jdbc(spark, derby_url, "caps", driver=DERBY,
-                     partition_column="id", lower_bound=0, upper_bound=100,
-                     num_partitions=4)
-    assert part.rdd.getNumPartitions() == 4
-    assert part.count() == 200
 
 
 def test_jdbc_staged_swap_round_trip(spark, derby_url):
@@ -86,11 +90,11 @@ def test_jdbc_staged_swap_round_trip(spark, derby_url):
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
     v2 = spark.createDataFrame([(3, "c"), (4, "d"), (5, "e")], "id int, v string")
     write_jdbc_staged(v1, derby_url, "bi_mart", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "bi_mart", driver=DERBY)
+    back = _read(spark, derby_url, "bi_mart")
     assert _rows(back.select("id", "v")) == [(1, "a"), (2, "b")]
     # refresh: target existed — drop + rename happen in one transaction
     write_jdbc_staged(v2, derby_url, "bi_mart", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "bi_mart", driver=DERBY)
+    back = _read(spark, derby_url, "bi_mart")
     assert _rows(back.select("id", "v")) == [(3, "c"), (4, "d"), (5, "e")]
     assert not _jdbc_table_exists(spark, derby_url, "bi_mart__stage", DERBY)
 
@@ -114,12 +118,12 @@ def test_jdbc_staged_mid_write_failure_never_corrupts_target(spark, derby_url):
     )
     with pytest.raises(Exception, match="mid-write failure"):
         write_jdbc_staged(poison, derby_url, "bi_guard", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "bi_guard", driver=DERBY)
+    back = _read(spark, derby_url, "bi_guard")
     assert _rows(back.select("id", "v")) == [(1, "keep"), (2, "keep")]
     # and the next successful refresh replaces the leftover stage cleanly
     v2 = spark.createDataFrame([(9, "new")], "id int, v string")
     write_jdbc_staged(v2, derby_url, "bi_guard", driver=DERBY)
-    back = read_jdbc(spark, derby_url, "bi_guard", driver=DERBY)
+    back = _read(spark, derby_url, "bi_guard")
     assert _rows(back.select("id", "v")) == [(9, "new")]
 
 
@@ -159,17 +163,48 @@ def test_publish_dm_to_bi_daily_and_full(spark, derby_url, tmp_path):
     mart = "artist_appearances_by_date"
     # full mirror: staged swap, atomic
     publish_dm_to_bi(spark, wh, derby_url, driver=DERBY)
-    bi = read_jdbc(spark, derby_url, mart, driver=DERBY)
+    bi = _read(spark, derby_url, mart)
     pq = spark.read.parquet(wh.dm(mart))
     assert _rows(bi.select(*sorted(pq.columns))) == _rows(pq.select(*sorted(pq.columns)))
 
     # daily refresh of ONE date: re-publishing is idempotent (delete+append)
     # and the other date is untouched
     publish_dm_to_bi(spark, wh, derby_url, run_date="2024-06-02", driver=DERBY)
-    bi2 = read_jdbc(spark, derby_url, mart, driver=DERBY)
+    bi2 = _read(spark, derby_url, mart)
     assert _rows(bi2.select(*sorted(pq.columns))) == _rows(pq.select(*sorted(pq.columns)))
 
     # malformed date cannot reach the server-side SQL
     with pytest.raises(ValueError, match="ISO"):
         publish_dm_to_bi(spark, wh, derby_url,
                          run_date="2024-06-02' OR '1'='1", driver=DERBY)
+
+
+def test_cli_run_publishes_the_days_marts_to_bi(spark, derby_url, tmp_path, monkeypatch):
+    """``run --bi-url`` publishes the day's marts after the DM write, with
+    no driver class given: it is resolved from the URL. Each BI table
+    equals its parquet mart for that date."""
+    from etl_pipeline_last_fm_spark.__main__ import main
+    from etl_pipeline_last_fm_spark.pipeline import Warehouse
+    from etl_pipeline_last_fm_spark.schemas import DM_SCHEMAS
+
+    # main() fetches the session through get_spark, which re-applies the
+    # engine's shuffle default to this shared test session.
+    monkeypatch.setenv(
+        "SPARK_GRAFT_SHUFFLE", spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    root, day = str(tmp_path / "wh_cli_bi"), "2024-07-01"
+    url = "jdbc:derby:memory:etl_bi_cli;create=true"
+    common = ["--warehouse", root, "--date", day, "--countries", "X", "Y"]
+    assert main(["ingest-sample", *common]) == 0
+    assert main(["run", *common, "--bi-url", url]) == 0
+
+    wh = Warehouse(root)
+    for name, schema in DM_SCHEMAS.items():
+        pq = spark.read.schema(schema).parquet(wh.dm(name)).filter(
+            F.col("date") == day
+        )
+        cols = sorted(pq.columns)
+        bi = _read(spark, url, name)
+        assert sorted(bi.columns) == cols, name
+        assert pq.count() > 0, name
+        assert _rows(bi.select(*cols)) == _rows(pq.select(*cols)), name

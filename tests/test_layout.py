@@ -1,4 +1,4 @@
-"""Output-layout writers: global order across files, bounded file counts."""
+"""Output-layout writers: bounded file counts."""
 
 from __future__ import annotations
 
@@ -7,43 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.sources.layout import write_compacted, write_sorted
-
-
-def test_write_sorted_is_globally_ordered(spark, sf_dir, tmp_path):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    path = str(tmp_path / "sorted")
-    write_sorted(li, path, ["l_orderkey", "l_linenumber"], n_files=4)
-
-    files = sorted(glob.glob(f"{path}/part-*.parquet"))
-    assert 1 < len(files) <= 4
-    # each file internally sorted, and file ranges are disjoint & ascending
-    prev_max = None
-    ranges = []
-    for f in files:
-        rows = spark.read.parquet(f).select("l_orderkey", "l_linenumber").collect()
-        keys = [(r[0], r[1]) for r in rows]
-        assert keys == sorted(keys), f
-        ranges.append((keys[0], keys[-1]))
-    for (lo, hi), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi <= lo2, (hi, lo2)
-
-    # content preserved
-    out = spark.read.parquet(path)
-    assert out.count() == li.count()
-    assert out.exceptAll(li).count() == 0
-
-
-def test_write_sorted_plan_has_rangepartitioning(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    plan = (
-        li.repartitionByRange(4, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "rangepartitioning" in plan.lower()
+from etl_pipeline_last_fm_spark.sources.layout import write_compacted
 
 
 def _rows_per_file(spark, files):
@@ -132,19 +96,19 @@ def test_write_compacted_partitioned_append_and_dynamic_overwrite(spark, tmp_pat
 
     # append two days
     write_compacted_partitioned(day("d1", 0, 10), path, ["date"],
-                                mode="append", dynamic_overwrite=False)
+                                mode="append")
     write_compacted_partitioned(day("d2", 10, 30), path, ["date"],
-                                mode="append", dynamic_overwrite=False)
+                                mode="append")
     assert spark.read.parquet(path).count() == 30
     # dynamic overwrite of ONE date leaves the other intact
     write_compacted_partitioned(day("d2", 100, 105), path, ["date"],
-                                mode="overwrite", dynamic_overwrite=True)
+                                mode="overwrite")
     out = spark.read.parquet(path)
     assert out.filter(F.col("date") == "d1").count() == 10
     assert out.filter(F.col("date") == "d2").count() == 5
     # empty delta: no-op append, no crash
     write_compacted_partitioned(day("d3", 0, 0), path, ["date"],
-                                mode="append", dynamic_overwrite=False)
+                                mode="append")
     assert spark.read.parquet(path).count() == 15
 
 

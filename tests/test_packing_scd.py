@@ -198,31 +198,6 @@ def test_group_split_no_leakage(spark, sf_dir):
     assert splits == {"train", "val", "test"}
 
 
-def test_scd2_apply_equals_full_rebuild(spark, sf_dir):
-    """Incremental apply (current rows + new batch) must reproduce the
-    full-log rebuild exactly, across several split points."""
-    from etl_pipeline_last_fm_spark.operators.scd import scd2_apply
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    full = scd2_history(orders)
-    for pivot in ("1995-01-01", "1997-06-15", "1998-01-01"):
-        old = orders.filter(F.date_format("o_orderdate", "yyyy-MM-dd") < pivot)
-        new = orders.filter(F.date_format("o_orderdate", "yyyy-MM-dd") >= pivot)
-        applied = scd2_apply(scd2_history(old), new)
-        assert applied.exceptAll(full).count() == 0, pivot
-        assert full.exceptAll(applied).count() == 0, pivot
-
-
-def test_scd2_apply_empty_batch_is_identity(spark, sf_dir):
-    from etl_pipeline_last_fm_spark.operators.scd import scd2_apply
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    hist = scd2_history(orders)
-    applied = scd2_apply(hist, orders.limit(0))
-    assert applied.exceptAll(hist).count() == 0
-    assert hist.exceptAll(applied).count() == 0
-
-
 def test_chunks_reconstruct_document(spark):
     """Non-overlap parts of consecutive chunks concatenate back to the doc;
     overlap region of chunk i+1 equals the tail of chunk i."""

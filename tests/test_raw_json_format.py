@@ -8,7 +8,6 @@ import json
 import os
 
 from etl_pipeline_last_fm_spark.operators.flatten import flatten_raw_chart
-from etl_pipeline_last_fm_spark.sources.lastfm_api import doc_to_pretty_json
 from etl_pipeline_last_fm_spark.sources.raw_json import read_raw_chart
 
 
@@ -36,7 +35,7 @@ def test_read_reference_style_pretty_json(spark, tmp_path):
     }
     part = tmp_path / "raw" / "ingest_date=2024-06-01" / "country=Testland"
     os.makedirs(part)
-    payload = doc_to_pretty_json(doc)
+    payload = json.dumps(doc, indent=4)
     assert "\n    " in payload  # really pretty-printed (indent=4)
     (part / "Testland_2024-06-01.json").write_text(payload)
 

@@ -8,6 +8,10 @@ function bodies count. A module under ``etl_pipeline_last_fm_spark/`` or
 ``grading/`` that no walk reaches is dead code: wire it into one of the
 roots or delete it. The engine never imports ``grading``.
 
+Below the module level, the engine's package ``__init__`` files import
+nothing (a re-export would count as a reader of every name it lists),
+and every top-level engine name has a reader somewhere in the repo.
+
 The same source walk pins one structural rule: streaming state is folded
 only through the replay-guarded driver in ``streaming/state.py``.
 """
@@ -168,3 +172,75 @@ def test_only_the_round_driver_cuts_lineage_in_a_loop():
         if fn not in DATA_DEPENDENT_LOOPS
     ]
     assert not loops, "per-round localCheckpoint outside the round driver: " + ", ".join(loops)
+
+
+def test_engine_package_inits_import_nothing():
+    """Importers name the submodule; an ``__init__`` that re-exports
+    names is a second path to them that also hides which are unread."""
+    offenders = sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / PKG).rglob("__init__.py")
+        if any(
+            isinstance(n, (ast.Import, ast.ImportFrom))
+            for n in ast.walk(ast.parse(p.read_text(), filename=str(p)))
+        )
+    )
+    assert not offenders, "package __init__ files that import: " + ", ".join(offenders)
+
+
+def _repo_sources() -> list[Path]:
+    return [
+        p
+        for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+
+
+def _top_level_names(node: ast.stmt) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = (
+        node.targets if isinstance(node, ast.Assign)
+        else [node.target] if isinstance(node, ast.AnnAssign)
+        else []
+    )
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def _references(tree: ast.Module) -> dict[str, set[int]]:
+    """Name -> indices of the top-level statements that mention it as a
+    ``Name``, an ``Attribute`` or an imported name (docstrings and other
+    strings do not count)."""
+    refs: dict[str, set[int]] = {}
+    for i, stmt in enumerate(tree.body):
+        for n in ast.walk(stmt):
+            if isinstance(n, ast.Name):
+                names = [n.id]
+            elif isinstance(n, ast.Attribute):
+                names = [n.attr]
+            elif isinstance(n, ast.ImportFrom):
+                names = [a.name for a in n.names]
+            else:
+                continue
+            for name in names:
+                refs.setdefault(name, set()).add(i)
+    return refs
+
+
+def test_every_engine_name_has_a_reader():
+    """A top-level engine function, class or constant that no other
+    statement in the repo mentions is dead: wire it in or delete it."""
+    trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in _repo_sources()}
+    refs = {p: _references(t) for p, t in trees.items()}
+    unread = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        for i, stmt in enumerate(trees[path].body):
+            for name in _top_level_names(stmt):
+                if name.startswith("__") and name.endswith("__"):
+                    continue
+                if not any(
+                    refs[p].get(name, set()) - ({i} if p == path else set())
+                    for p in refs
+                ):
+                    unread.append(f"{path.relative_to(REPO)}:{name}")
+    assert not unread, "engine names nothing references: " + ", ".join(unread)

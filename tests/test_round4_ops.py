@@ -188,31 +188,6 @@ def test_bloom_same_key_name_join(spark):
     assert out[0].n_true_match == sum(1 for i in range(50) if i % 7 in (1, 2, 3))
 
 
-def test_prefix_filter_incremental_equals_symmetric_cross_pairs(spark, sf_dir):
-    # The R-S (new-batch vs corpus) variant must produce exactly the
-    # symmetric operator's cross pairs on the union — both are lossless,
-    # so the ORDER choice (corpus-df vs union-df) cannot change the
-    # verified output, only the candidate volume.
-    from etl_pipeline_last_fm_spark.operators.setsim import (
-        prefix_filter_pairs_incremental,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") < 100)
-    corpus = docs.filter(F.col("doc_id") >= 100)
-    inc = {
-        (min(r.new_id, r.corpus_id), max(r.new_id, r.corpus_id), r.jaccard)
-        for r in prefix_filter_pairs_incremental(new, corpus, 1, 2).collect()
-    }
-    sym = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in prefix_filter_pairs(docs, 1, 2).collect()
-        if (r.doc_a < 100) != (r.doc_b < 100)
-    }
-    assert inc == sym
-    assert inc  # non-vacuous: the fixture has cross near-dups
-
-
 def test_sorted_neighborhood_finds_adjacent_dups(spark):
     # SNM's contract: pairs whose sort keys are adjacent ARE found; a pair
     # separated by > window rows is legitimately missed (documented recall

@@ -310,9 +310,12 @@ def test_streaming_auc_census_fold(spark, tmp_path):
     batching — including replayed batches (guard no-ops) and
     SCRAMBLED batch order (the census is additive and order-free,
     unlike the ordered-fold IVM tier)."""
-    from etl_pipeline_last_fm_spark.operators.evalmetrics import roc_auc
-    from etl_pipeline_last_fm_spark.streaming.drift import auc_step, read_auc
-    from etl_pipeline_last_fm_spark.streaming.state import fold_batch
+    from etl_pipeline_last_fm_spark.operators.evalmetrics import (
+        auc_from_census,
+        roc_auc,
+    )
+    from etl_pipeline_last_fm_spark.streaming.drift import auc_step
+    from etl_pipeline_last_fm_spark.streaming.state import fold_batch, read_state
 
     rows = [(i % 3 == 0, (i * 17) % 40) for i in range(30)]
     df = _scored(spark, rows)
@@ -328,7 +331,7 @@ def test_streaming_auc_census_fold(spark, tmp_path):
     fold_batch(slices[0], 1, path, auc_step())
     fold_batch(slices[1], 2, path, auc_step())
     fold_batch(slices[1], 2, path, auc_step())  # replay no-ops
-    assert tuple(read_auc(spark, path).first()) == want
+    assert tuple(auc_from_census(read_state(spark, path)).first()) == want
 
 
 def test_calibration_ece_pinned_and_reference(spark):

@@ -1,20 +1,10 @@
-"""Schema evolution and the streaming hopping twin.
-
-Schema evolution: a long-lived lake table gains columns over time;
+"""Schema evolution: a long-lived lake table gains columns over time;
 ``mergeSchema`` reads must surface the superset with NULLs for
 pre-evolution files, and declared-schema reads must keep working against
 newer files (column pruning ignores the additions).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from etl_pipeline_last_fm_spark.operators.timewindow import (
-    hopping_window_agg,
-    streaming_hopping_window,
-)
-from etl_pipeline_last_fm_spark.sources.tables import load_table
 
 
 def test_merge_schema_superset_with_nulls(spark, tmp_path):
@@ -34,32 +24,3 @@ def test_merge_schema_superset_with_nulls(spark, tmp_path):
     # Declared old schema still reads post-evolution files (pruned).
     old = spark.read.schema("id long, name string").parquet(path)
     assert old.count() == 3 and set(old.columns) == {"id", "name"}
-
-
-def test_streaming_hopping_matches_batch(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "ev_src")
-    ev.write.parquet(src)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q = (
-        streaming_hopping_window(stream, window_minutes=60, hop_minutes=15)
-        .writeStream.format("memory")
-        .queryName("hop_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = sorted(map(tuple, spark.sql("SELECT * FROM hop_stream").collect()))
-    want = sorted(
-        map(
-            tuple,
-            hopping_window_agg(ev, window_minutes=60, hop_minutes=15)
-            .select("event_type", "win_start_us", "n_events", "value_sum")
-            .collect(),
-        )
-    )
-    assert got == want

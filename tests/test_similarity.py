@@ -109,11 +109,14 @@ def test_pq_encodes_codewords_to_themselves(spark, sf_dir):
     sub-vectors are exact codebook entries, so the packed argmin must pick
     its own id in every subspace (distance 0 beats everything; ties break
     to the smaller cid, and an exact duplicate would have dist 0 too but
-    the fixture vectors are distinct)."""
+    the fixture vectors are distinct). The argmin is built from the
+    encoder's own distance SQL (hoisted self-dot, literal code dot)."""
     from pyspark.sql import functions as F
 
     from etl_pipeline_last_fm_spark.operators.similarity import (
-        _l2sq_literal,
+        _l2_from_vv_sql,
+        _self_dot_sql,
+        _sub_vec_sql,
         pq_seed_codebooks,
     )
     from etl_pipeline_last_fm_spark.sources.tables import load_table
@@ -125,15 +128,16 @@ def test_pq_encodes_codewords_to_themselves(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     for m, book in enumerate(books):
+        sv = v.select("vec_id", F.expr(_sub_vec_sql("e", m, sub)).alias("sv"))
+        sv = sv.withColumn("vv", F.expr(_self_dot_sql("sv")))
         packed = [
-            F.floor(
-                _l2sq_literal(F.slice(F.col("e"), m * sub + 1, sub), ce) * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long") * F.lit(1024) + F.lit(cid)
+            f"CAST(FLOOR(({_l2_from_vv_sql('vv', 'sv', ce)})"
+            f" * 1000000.0D + 0.5D) AS BIGINT) * 1024 + {cid}"
             for cid, ce in book
         ]
-        got = v.select(
-            "vec_id", (F.least(*packed) % F.lit(1024)).cast("int").alias("code")
+        got = sv.select(
+            "vec_id",
+            F.expr(f"CAST(least({', '.join(packed)}) % 1024 AS INT)").alias("code"),
         ).collect()
         assert all(r["vec_id"] == r["code"] for r in got), (m, got[:4])
 

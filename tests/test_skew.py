@@ -1,10 +1,10 @@
-"""Salted aggregate/join must be result-identical to their plain forms."""
+"""Salted aggregation must be result-identical to its plain form."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.operators.skew import salted_aggregate, salted_join
+from etl_pipeline_last_fm_spark.operators.skew import salted_aggregate
 from etl_pipeline_last_fm_spark.sources.tables import load_table
 
 
@@ -37,19 +37,4 @@ def test_salted_aggregate_matches_plain(spark, sf_dir):
         )
         .collect()
     }
-    assert got == want
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_name"
-    )
-    got = sorted(
-        (r.o_orderkey, r.c_name)
-        for r in salted_join(orders, customer, ["o_custkey"], buckets=8).collect()
-    )
-    want = sorted(
-        (r.o_orderkey, r.c_name) for r in orders.join(customer, "o_custkey").collect()
-    )
     assert got == want

@@ -1,5 +1,5 @@
 """Streaming ingest: availableNow runs, checkpoint-based file dedupe,
-row-level idempotence, late-arriving partition pickup, watermarked windows."""
+row-level idempotence, late-arriving partition pickup."""
 
 from __future__ import annotations
 
@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.sources.lastfm_api import fetch_charts
 from etl_pipeline_last_fm_spark.sources.raw_json import write_raw_chart
-from etl_pipeline_last_fm_spark.sources.tables import load_table
-from etl_pipeline_last_fm_spark.streaming.ingest import stream_raw_to_ods, windowed_event_stats
+from etl_pipeline_last_fm_spark.streaming.ingest import stream_raw_to_ods
 from tests.test_pipeline import CHARTS, D1, D2, fetch_for
 
 
@@ -47,30 +46,3 @@ def test_stream_ingest_idempotent_and_incremental(spark, tmp_path):
     )
     _run_stream(spark, raw, ods, ckpt1)
     assert spark.read.parquet(ods).count() == 7
-
-
-def test_windowed_event_stats_batch_parity(spark, sf_dir):
-    """The streaming aggregation is a pure transformation — on a batch frame
-    it must equal the plain groupBy."""
-    ev = load_table(spark, sf_dir, "events")
-    got = {
-        (str(r.window_start), r.event_type): (r.n_events, round(r.total_value, 6))
-        for r in windowed_event_stats(ev).collect()
-    }
-    want = {
-        (str(r.day), r.event_type): (r.n, round(r.tv, 6))
-        for r in ev.groupBy(
-            F.date_trunc("day", "ts").alias("day"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # mirror the operator's exact cent sum (round-9 float-sum audit)
-            (
-                F.sum(F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long"))
-                .cast("double")
-                / F.lit(100.0)
-            ).alias("tv"),
-        )
-        .collect()
-    }
-    assert got == want

@@ -1,4 +1,4 @@
-"""Z-order layout keys, weighted sampling, streaming CMS maintenance."""
+"""Z-order layout keys, weighted sampling, stream-maintained state."""
 
 from __future__ import annotations
 
@@ -15,7 +15,8 @@ from etl_pipeline_last_fm_spark.operators.zorder import (
     zorder_key,
 )
 from etl_pipeline_last_fm_spark.sources.tables import load_table
-from etl_pipeline_last_fm_spark.operators.sketch import cms_step, merge_cms_grids
+from etl_pipeline_last_fm_spark.operators.evalmetrics import score_census
+from etl_pipeline_last_fm_spark.streaming.drift import auc_step
 from etl_pipeline_last_fm_spark.streaming.state import maintain, read_state
 
 
@@ -98,107 +99,28 @@ def test_weighted_sample_deterministic_and_partition_invariant(spark, sf_dir):
     assert a == b
 
 
-def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
-    """foreachBatch-maintained CMS state after an availableNow replay over
-    3 files equals the batch grid over the full token stream."""
-    from etl_pipeline_last_fm_spark.operators.sketch import cms_counters
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-
-    src = str(tmp_path / "tok_files")
-    toks.repartition(3).write.parquet(src)
-
-    state = str(tmp_path / "cms_state")
-    stream = (
-        spark.readStream.schema("tok string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        maintain(
-            stream, state, cms_step(depth=2, width=64),
-            checkpoint=str(tmp_path / "ck"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["__d"], r["__cell"]): r["__cnt"]
-        for r in read_state(spark, state).collect()
-    }
-    want = {
-        (r["__d"], r["__cell"]): r["__cnt"]
-        for r in cms_counters(toks, depth=2, width=64).collect()
-    }
-    assert got == want
-
-
-def test_merge_cms_grids_is_associative(spark):
-    a = spark.createDataFrame([("a",), ("b",)], "tok string")
-    b = spark.createDataFrame([("b",), ("c",)], "tok string")
-    c = spark.createDataFrame([("c",), ("a",)], "tok string")
-    from etl_pipeline_last_fm_spark.operators.sketch import cms_counters
-
-    g = lambda df: cms_counters(df, depth=2, width=8)
-    left = merge_cms_grids(merge_cms_grids(g(a), g(b)), g(c))
-    right = merge_cms_grids(g(a), merge_cms_grids(g(b), g(c)))
-    as_map = lambda df: {
-        (r["__d"], r["__cell"]): r["__cnt"] for r in df.collect()
-    }
-    assert as_map(left) == as_map(right)
-
-
-def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
-    """Stream-maintained HLL registers (register-wise max folds across 3
-    micro-batches) estimate exactly what the batch operator computes."""
-    from etl_pipeline_last_fm_spark.operators.sketch import (
-        hll_distinct,
-        hll_estimate_from_registers,
-        hll_step,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+def test_streaming_auc_census_equals_batch(spark, sf_dir, tmp_path):
+    """foreachBatch-maintained AUC score census after an availableNow
+    replay over 3 files equals the batch census over all events."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     src = str(tmp_path / "ev_files")
     ev.repartition(3).write.parquet(src)
 
-    state = str(tmp_path / "hll_state")
+    state = str(tmp_path / "auc_state")
     stream = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
     q = (
-        maintain(
-            stream, state,
-            hll_step(value_col="user_id", group_cols=["event_type"], b=6),
-            checkpoint=str(tmp_path / "ck"),
-        )
+        maintain(stream, state, auc_step(), checkpoint=str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(180)
 
-    got = sorted(
-        map(
-            tuple,
-            hll_estimate_from_registers(
-                read_state(spark, state), ["event_type"], b=6
-            ).collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            hll_distinct(ev, "user_id", ["event_type"], b=6)
-            .select("event_type", "n_approx")
-            .collect(),
-        )
-    )
+    got = sorted(map(tuple, read_state(spark, state).collect()))
+    want = sorted(map(tuple, score_census(ev).collect()))
     assert got == want
 
 
