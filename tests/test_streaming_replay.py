@@ -1,6 +1,6 @@
 """foreachBatch is AT-LEAST-ONCE: a failed micro-batch re-runs with the
-SAME batch_id. A non-idempotent fold (a mart's count/sum state) would
-silently double that batch's contribution. These tests drive the fold
+SAME batch_id. Non-idempotent folds (CMS cell sums, mart count/sum states)
+would silently double that batch's contribution. These tests drive the fold
 driver (streaming/state.fold_batch) directly with each state's step —
 once, replayed, then advanced — and assert the replay is a no-op while
 genuinely new batches still land."""
@@ -12,7 +12,13 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.operators.incremental import mart_step, present
+from etl_pipeline_last_fm_spark.operators.incremental import (
+    additive_step,
+    mart_step,
+    present,
+    sum_by,
+)
+from etl_pipeline_last_fm_spark.operators.sketch import _grid_from_census
 from etl_pipeline_last_fm_spark.streaming.state import (
     fold_batch,
     list_state_versions,
@@ -29,6 +35,47 @@ def _marts(spark, rows):
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _toks(spark, words):
+    return spark.createDataFrame([(w,) for w in words], "tok string")
+
+
+def _cms_grid(toks, depth=2, width=16):
+    """Count-Min counter grid of a token batch, built the way
+    cms_heavy_hitters builds it: one census, then the (row, cell) sums."""
+    census = toks.groupBy(F.col("tok").alias("__tok")).agg(
+        F.count(F.lit(1)).alias("__n")
+    )
+    return _grid_from_census(census, depth=depth, width=width, salt="cms1")
+
+
+#: CMS grid cells are additive per (row, cell): a non-idempotent fold.
+CMS_STEP = additive_step(_cms_grid, sum_by(["__d", "__cell"]))
+
+
+def test_cms_fold_replay_is_noop(spark, tmp_path):
+    state = str(tmp_path / "cms_state")
+    b0 = _toks(spark, ["a", "b", "a"])
+    b1 = _toks(spark, ["b", "c"])
+
+    fold_batch(b0, 0, state, CMS_STEP)
+    after_b0 = _rows(read_state(spark, state))
+
+    # Replay of batch 0 (same batch_id) must not inflate any cell.
+    fold_batch(b0, 0, state, CMS_STEP)
+    assert _rows(read_state(spark, state)) == after_b0
+
+    # A genuinely new batch still folds in: the state equals the grid of
+    # both batches at once...
+    fold_batch(b1, 1, state, CMS_STEP)
+    want = _rows(_cms_grid(b0.unionByName(b1)))
+    assert _rows(read_state(spark, state)) == want
+
+    # ...and replaying IT is again a no-op.
+    fold_batch(b1, 1, state, CMS_STEP)
+    assert _rows(read_state(spark, state)) == want
+    assert list_state_versions(spark, state)[-1][0] == 1
 
 
 def test_mart_fold_replay_is_noop(spark, tmp_path):
