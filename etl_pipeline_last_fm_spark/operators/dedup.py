@@ -579,9 +579,6 @@ def embedding_near_dups_blocked(
     emb: DataFrame,
     threshold: float = 0.95,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Scale path for embedding near-dups: hyperplane-LSH blocking.
 
@@ -603,9 +600,7 @@ def embedding_near_dups_blocked(
     # interleaved at sf0.1). Applied HERE on the raw scan, not inside
     # lsh_buckets: the ANN queries that share lsh_buckets are
     # collect/checkpoint-bound and measured slower with it.
-    bucketed = lsh_buckets(
-        spread_scan(emb, id_col), n_planes, id_col, vec_col, seed=seed
-    ).withColumn("n", norm)
+    bucketed = lsh_buckets(spread_scan(emb, "vec_id"), n_planes).withColumn("n", norm)
     a = bucketed.select(
         F.col("id").alias("id_a"), F.col("e").alias("e_a"),
         F.col("n").alias("n_a"), "bucket",
@@ -632,8 +627,6 @@ def embedding_near_dups_blocked(
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine similarity (exact pairwise —
     bounded corpora / candidate verification; embedding_near_dups_blocked is
@@ -650,9 +643,9 @@ def embedding_near_dups(
     # scan's partitioning — one task on a single-row-group corpus file, so
     # the O(n^2) interpreted dot folds ran serially. No-op on
     # already-parallel input; per-pair values unchanged.
-    v = spread_scan(emb, id_col).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("e"),
+    v = spread_scan(emb, "vec_id").select(
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
     ).withColumn("n", norm)
     a = v.select(F.col("id").alias("id_a"), F.col("e").alias("e_a"), F.col("n").alias("n_a"))
     b = v.select(F.col("id").alias("id_b"), F.col("e").alias("e_b"), F.col("n").alias("n_b"))
@@ -674,9 +667,6 @@ def embedding_keep_list(
     emb: DataFrame,
     threshold: float = 0.95,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Semantic dedup resolution: hyperplane-LSH blocked cosine pairs ->
     connected components -> (vec_id, keep_id, is_dup). The embedding twin
@@ -685,13 +675,10 @@ def embedding_keep_list(
     LSH. Semantic near-duplication chains exactly like textual (A≈B≈C with
     sim(A,C) below threshold), so the per-CLUSTER resolution matters here
     too."""
-    pairs = embedding_near_dups_blocked(
-        emb, threshold=threshold, n_planes=n_planes,
-        id_col=id_col, vec_col=vec_col, seed=seed,
-    )
+    pairs = embedding_near_dups_blocked(emb, threshold=threshold, n_planes=n_planes)
     comps = connected_components(pairs, a_col="id_a", b_col="id_b")
     return comps.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("vec_id"),
         F.col("label").alias("keep_id"),
         (F.col("node") != F.col("label")).alias("is_dup"),
     )

@@ -82,6 +82,9 @@ TARGET_ROWS_PER_FILE = 1_000_000
 #: for readers that started before the commit.
 KEEP_SNAPSHOTS = 2
 
+#: Parallel JDBC connections ``publish_dm_to_bi`` writes each mart with.
+BI_PUBLISH_PARTITIONS = 8
+
 
 @dataclass
 class Warehouse:
@@ -356,7 +359,6 @@ def publish_dm_to_bi(
     url: str,
     run_date: str | Date | None = None,
     driver: str | None = None,
-    num_partitions: int | None = 8,
 ) -> None:
     """Publish the DM marts to a BI database over JDBC — the reference's
     Metabase handoff (its DM DAG loads Postgres and Metabase reads those
@@ -388,7 +390,7 @@ def publish_dm_to_bi(
         mart = spark.read.schema(schema).parquet(wh.dm(name))
         if run_date is None:
             write_jdbc_staged(
-                mart, url, name, driver=driver, num_partitions=num_partitions
+                mart, url, name, driver=driver, num_partitions=BI_PUBLISH_PARTITIONS
             )
             continue
         day = str(run_date)
@@ -406,7 +408,7 @@ def publish_dm_to_bi(
             )
         write_jdbc(
             delta, url, name, mode="append", driver=driver,
-            num_partitions=num_partitions,
+            num_partitions=BI_PUBLISH_PARTITIONS,
         )
 
 

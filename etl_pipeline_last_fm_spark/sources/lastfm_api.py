@@ -88,9 +88,10 @@ def _raw_plus_partition_schema():
 def _tracks_struct(doc: dict):
     """Normalize a parsed API document into the RAW_SCHEMA 'tracks' value.
 
-    Round-trips through JSON text so string-encoded numerics stay strings
-    exactly as the API ships them (casting happens in operators.flatten,
-    mirroring reference dags/transformed_from_s3_to_pg.py:38-40)."""
+    Builds the ``Row``s directly from the dict. Every numeric field goes
+    through ``_as_str``, so numerics stay strings exactly as the API ships
+    them (casting happens in operators.flatten, mirroring reference
+    dags/transformed_from_s3_to_pg.py:38-40)."""
     tracks = doc.get("tracks", {})
     track_rows = []
     for t in tracks.get("track", []) or []:

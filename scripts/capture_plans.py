@@ -1,19 +1,34 @@
-"""Dump .explain("formatted") for named queries into plans/<tag>/<q>_<suffix>.txt.
+"""Dump the optimized logical and physical plans of named queries into
+plans/<tag>/<q>_<suffix>.txt.
 
 Usage:
     python scripts/capture_plans.py --tag r13 --suffix before [query ...]
 Defaults to the bench HEADLINE + EXTENDED set when no query names are given.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+
+Expression ids (``#123``, ``#123L``) and ``plan_id=`` values are stripped:
+they count up per session, so without this two captures of the same plan
+differ. Two captures of one tree then ``diff -r`` clean, which makes a
+parent/change plan comparison a plain directory diff.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_last_fm_spark.session import get_spark  # noqa: E402
+
+_NOISE = [(re.compile(r"#\d+L?"), "#"), (re.compile(r"plan_id=\d+"), "plan_id=")]
+
+
+def normalize(txt: str) -> str:
+    for pat, repl in _NOISE:
+        txt = pat.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -43,8 +58,11 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        qe = df._jdf.queryExecution()
+        physical = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        txt = normalize(
+            "== Optimized Logical Plan ==\n"
+            f"{qe.optimizedPlan().toString()}\n\n{physical}"
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

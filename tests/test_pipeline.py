@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_last_fm_spark.pipeline import Warehouse, load_dds, run_pipeline
 from etl_pipeline_last_fm_spark.sources.lastfm_api import fetch_charts
 from etl_pipeline_last_fm_spark.sources.raw_json import write_raw_chart
+from tests.spark_jobs import count_jobs
 
 D1, D2 = "2024-03-01", "2024-03-02"
 
@@ -379,22 +380,6 @@ def _budget_fetch(day):
     return fetch
 
 
-def _count_jobs(spark, label, fn):
-    """Spark jobs ``fn`` launches, counted through a job group and the
-    status tracker (neither is a Spark action)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{label}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _count_compiled(spark, fn):
     """Classes Spark's code generator compiles while ``fn`` runs, read from
     the JVM's ``CodegenMetrics`` counter (not a Spark action). A plan whose
@@ -415,7 +400,7 @@ def test_daily_job_budget(spark, tmp_path):
     upper bounds leave headroom for AQE. The lower bounds catch concurrent
     sink writes whose threads lose the caller's job group: DM would count
     0 and DDS would lose the dim writes' ~17 jobs, leaving about 9.
-    Counted with ``_count_jobs``."""
+    Counted with ``count_jobs``."""
     from etl_pipeline_last_fm_spark.pipeline import run_dds, run_dm, run_ods
 
     wh = Warehouse(str(tmp_path / "wh_budget"))
@@ -425,9 +410,9 @@ def test_daily_job_budget(spark, tmp_path):
                            fetch_fn=_budget_fetch(day))
         write_raw_chart(raw, wh.raw)
         counts = {
-            "ods": _count_jobs(spark, "ods", lambda: run_ods(spark, wh, date)),
-            "dds": _count_jobs(spark, "dds", lambda: run_dds(spark, wh, date)),
-            "dm": _count_jobs(spark, "dm", lambda: run_dm(spark, wh, date)),
+            "ods": count_jobs(spark, lambda: run_ods(spark, wh, date)),
+            "dds": count_jobs(spark, lambda: run_dds(spark, wh, date)),
+            "dm": count_jobs(spark, lambda: run_dm(spark, wh, date)),
         }
     budget = {"ods": 5, "dds": 30, "dm": 16}
     assert all(counts[k] <= budget[k] for k in budget), (counts, budget)
@@ -459,7 +444,7 @@ def test_building_dds_frames_launches_no_job(spark, tmp_path):
         dims = build_dims(ods, existing=existing)
         build_fact(ods, dims, run_date=d2, existing_fact=existing.fact)
 
-    assert _count_jobs(spark, "build", build) == 0
+    assert count_jobs(spark, build) == 0
 
 
 def test_any_day_order_converges_to_date_order(spark, tmp_path):

@@ -239,3 +239,27 @@ def test_ivfpq_residual_codes_differ_from_raw_codes(spark, sf_dir):
     raw = sorted(map(tuple, ivfpq_ann_topk_seeded(emb, n_queries=8, k=5).collect()))
     res = sorted(map(tuple, ivfpq_residual_ann_topk_seeded(emb, n_queries=8, k=5).collect()))
     assert raw != res
+
+
+def test_ann_family_driver_side_jobs(spark, sf_dir):
+    """Building a top-k plan launches only its seed collects: brute force
+    none; seeded PQ, IVF and IVF-PQ one each — IVF-PQ's centroids and
+    codebooks share one bounded collect — and residual IVF-PQ two, the
+    seeds plus its residual codebooks. The relations are pinned, not the
+    jobs per collect, which AQE may change."""
+    from etl_pipeline_last_fm_spark.operators.similarity import (
+        ivfpq_ann_topk_seeded,
+        ivfpq_residual_ann_topk_seeded,
+        pq_ann_topk_seeded,
+    )
+    from tests.spark_jobs import count_jobs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    assert count_jobs(spark, lambda: brute_force_topk(emb)) == 0
+    one_collect = {
+        op.__name__: count_jobs(spark, lambda: op(emb))
+        for op in (pq_ann_topk_seeded, ivf_ann_topk_seeded, ivfpq_ann_topk_seeded)
+    }
+    per_collect = one_collect["pq_ann_topk_seeded"]
+    assert per_collect > 0 and set(one_collect.values()) == {per_collect}, one_collect
+    assert count_jobs(spark, lambda: ivfpq_residual_ann_topk_seeded(emb)) == 2 * per_collect

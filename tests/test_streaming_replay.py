@@ -7,8 +7,6 @@ genuinely new batches still land."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +22,7 @@ from etl_pipeline_last_fm_spark.streaming.state import (
     list_state_versions,
     read_state,
 )
+from tests.spark_jobs import count_jobs
 
 #: The mart fold every test here drives: (value_sum, n_rows) per event_type.
 STEP = mart_step(["event_type"], "value")
@@ -178,20 +177,6 @@ def test_legacy_flat_state_layout_raises(spark, tmp_path):
     assert [b for b, _ in list_state_versions(spark, root2)] == [0]
 
 
-def _count_jobs(spark, fn):
-    """Spark jobs ``fn`` launches, counted through a job group and the
-    status tracker (neither is a Spark action)."""
-    sc = spark.sparkContext
-    group = f"replay-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _replay_case(spark, case):
     """(batch, step, parts) for one fold shape of the driver."""
     from etl_pipeline_last_fm_spark.operators.attribution import (
@@ -243,7 +228,7 @@ def test_replayed_batch_launches_no_spark_job(spark, tmp_path, case):
     guard = root if parts is None else f"{root}/{parts[-1]}"
     before = sorted(map(tuple, read_state(spark, guard).collect()))
 
-    assert _count_jobs(
+    assert count_jobs(
         spark, lambda: fold_batch(batch, 0, root, step, parts)
     ) == 0
     assert [v for v, _ in list_state_versions(spark, guard)] == [0]
