@@ -34,7 +34,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key_col: str,
-    ts_col: str = "ts",
     right_value_cols: list[str] | None = None,
     tolerance_us: int | None = None,
 ) -> DataFrame:
@@ -51,15 +50,15 @@ def asof_join(
     window, mirroring pandas ``merge_asof(tolerance=...)``.
     """
     right_value_cols = right_value_cols or [
-        c for c in right.columns if c not in (key_col, ts_col)
+        c for c in right.columns if c not in (key_col, "ts")
     ]
-    us = ts_us(ts_col)
+    us = ts_us("ts")
     # __side: right rows sort before left rows at identical ts, so an exact
     # ts tie is a match (>= semantics, like DuckDB ASOF's t >= t).
     lhs = left.withColumn("__side", F.lit(1))
     rhs = right.select(
         key_col,
-        ts_col,
+        "ts",
         *[F.col(c).alias(f"__rv_{c}") for c in right_value_cols],
     ).withColumn("__side", F.lit(0))
     unioned = lhs.unionByName(rhs, allowMissingColumns=True).withColumn("__us", us)
@@ -103,9 +102,6 @@ def time_range_join(
     b: DataFrame,
     key_col: str,
     max_gap_us: int,
-    ts_col: str = "ts",
-    a_id: str = "event_id",
-    b_id: str = "event_id",
 ) -> DataFrame:
     """All (a, b) pairs of the same key with 0 <= t_b - t_a <= max_gap_us
     (directed: b follows a within the window — the attribution-join shape).
@@ -115,22 +111,22 @@ def time_range_join(
     set to 2, not 3). The join is equi- on (key, bucket); each true pair is
     produced exactly once because b's bucket is a function of b.
     """
-    a_us = ts_us(ts_col)
+    a_us = ts_us("ts")
     probes = F.array(
         F.floor(a_us / max_gap_us).cast("long"),
         (F.floor(a_us / max_gap_us) + 1).cast("long"),
     )
     lhs = a.select(
         F.col(key_col).alias("k"),
-        F.col(a_id).alias("a_id"),
+        F.col("event_id").alias("a_id"),
         a_us.alias("a_us"),
         F.explode(probes).alias("bucket"),
     )
     rhs = b.select(
         F.col(key_col).alias("k"),
-        F.col(b_id).alias("b_id"),
-        ts_us(ts_col).alias("b_us"),
-        F.floor(ts_us(ts_col) / max_gap_us).cast("long").alias("bucket"),
+        F.col("event_id").alias("b_id"),
+        ts_us("ts").alias("b_us"),
+        F.floor(ts_us("ts") / max_gap_us).cast("long").alias("bucket"),
     )
     gap = F.col("b_us") - F.col("a_us")
     return (

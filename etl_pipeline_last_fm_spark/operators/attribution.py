@@ -31,30 +31,26 @@ from etl_pipeline_last_fm_spark.operators.timeseries import fold_ordered
 #: Type of a credit walk's per-conversion (channel, cents) credits.
 _CREDITS_T = "array<struct<ch: string, cents: long>>"
 
+#: Event types that take credit, the type that converts, and how far back
+#: (in epoch µs: 7 days) a touch may precede its conversion.
+TOUCH_TYPES = ("view", "click")
+CONVERSION = "purchase"
+WINDOW_US = 7 * 86_400_000_000
 
-def last_touch_attribution(
-    events: DataFrame,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+
+def last_touch_attribution(events: DataFrame, window_us: int = WINDOW_US) -> DataFrame:
     """(channel, n_conversions, attributed_cents): conversions credited
     to the type of the last in-window preceding touch, else 'none'."""
-    us = ts_us(F.col(ts_col))
-    cents = half_up_round(F.col(value_col) * 100).cast("long")
+    us = ts_us(F.col("ts"))
+    cents = half_up_round(F.col("value") * 100).cast("long")
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(us.asc(), F.col(tiebreak_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(us.asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     touch = F.when(
-        F.col(type_col).isin(*touch_types),
-        F.struct(us.alias("us"), F.col(type_col).alias("t")),
+        F.col("event_type").isin(*TOUCH_TYPES),
+        F.struct(us.alias("us"), F.col("event_type").alias("t")),
     )
     last_touch = F.last(touch, ignorenulls=True).over(w)
     channel = F.when(
@@ -63,11 +59,11 @@ def last_touch_attribution(
     ).otherwise(F.lit("none"))
     return (
         events.select(
-            F.col(type_col),
+            F.col("event_type"),
             channel.alias("channel"),
             cents.alias("__cents"),
         )
-        .filter(F.col(type_col) == conversion_type)
+        .filter(F.col("event_type") == CONVERSION)
         .groupBy("channel")
         .agg(
             F.count(F.lit(1)).alias("n_conversions"),
@@ -76,17 +72,7 @@ def last_touch_attribution(
     )
 
 
-def time_decay_attribution(
-    events: DataFrame,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def time_decay_attribution(events: DataFrame) -> DataFrame:
     """MULTI-touch sibling of last_touch_attribution: every in-window
     preceding touch shares a conversion's credit, weighted by recency
     with a ½-per-day decay kept EXACT in integers — weight 2^(6 − age)
@@ -102,24 +88,24 @@ def time_decay_attribution(
     as-of/range-join family — per-user pair count is bounded by the
     window, never the corpus); Σw is one window partitioned by
     conversion; then a low-cardinality channel groupBy."""
-    us = ts_us(F.col(ts_col))
-    cents = half_up_round(F.col(value_col) * 100).cast("long")
-    conv = events.filter(F.col(type_col) == conversion_type).select(
-        F.col(key_col).alias("__k"),
-        F.col(tiebreak_col).alias("__cid"),
+    us = ts_us(F.col("ts"))
+    cents = half_up_round(F.col("value") * 100).cast("long")
+    conv = events.filter(F.col("event_type") == CONVERSION).select(
+        F.col("user_id").alias("__k"),
+        F.col("event_id").alias("__cid"),
         us.alias("__cus"),
         cents.alias("__cents"),
     )
-    touch = events.filter(F.col(type_col).isin(*touch_types)).select(
-        F.col(key_col).alias("__tk"),
-        F.col(type_col).alias("__tt"),
+    touch = events.filter(F.col("event_type").isin(*TOUCH_TYPES)).select(
+        F.col("user_id").alias("__tk"),
+        F.col("event_type").alias("__tt"),
         us.alias("__tus"),
-        F.col(tiebreak_col).alias("__ttb"),
+        F.col("event_id").alias("__ttb"),
     )
     before = (F.col("__tus") < F.col("__cus")) | (
         (F.col("__tus") == F.col("__cus")) & (F.col("__ttb") < F.col("__cid"))
     )
-    in_window = F.col("__cus") - F.col("__tus") <= F.lit(window_us)
+    in_window = F.col("__cus") - F.col("__tus") <= F.lit(WINDOW_US)
     pairs = conv.join(
         touch, (F.col("__k") == F.col("__tk")) & before & in_window, "left"
     )
@@ -146,16 +132,7 @@ def time_decay_attribution(
     )
 
 
-def _attr_batch_state(
-    events: DataFrame,
-    touch_types: tuple[str, ...],
-    conversion_type: str,
-    key_col: str,
-    type_col: str,
-    ts_col: str,
-    value_col: str,
-    tiebreak_col: str,
-) -> DataFrame:
+def _attr_batch_state(events: DataFrame) -> DataFrame:
     """Per-key sorted (us, tb, type, cents) array for one batch — the
     attribution sibling of timeseries._ema_batch_state, carrying the
     event type and value the credit walk needs. Rows of other types are
@@ -163,18 +140,18 @@ def _attr_batch_state(
     arr = F.array_sort(
         F.collect_list(
             F.struct(
-                ts_us(F.col(ts_col)).alias("us"),
-                F.col(tiebreak_col).alias("tb"),
-                F.col(type_col).alias("t"),
-                half_up_round(F.col(value_col) * 100).cast("long").alias("v"),
+                ts_us(F.col("ts")).alias("us"),
+                F.col("event_id").alias("tb"),
+                F.col("event_type").alias("t"),
+                half_up_round(F.col("value") * 100).cast("long").alias("v"),
             )
         )
     )
     return (
         events.filter(
-            F.col(type_col).isin(*touch_types, conversion_type)
+            F.col("event_type").isin(*TOUCH_TYPES, CONVERSION)
         )
-        .groupBy(F.col(key_col).alias("key"))
+        .groupBy(F.col("user_id").alias("key"))
         .agg(arr.alias("__a"))
     )
 
@@ -182,14 +159,6 @@ def _attr_batch_state(
 def attribution_fold_batch(
     touch_state: DataFrame | None,
     batch: DataFrame,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Fold one time-slice batch of events through the LAST-TOUCH credit
     walk — order-dependent IVM member #3, with a TWO-part result: the
@@ -205,19 +174,16 @@ def attribution_fold_batch(
     a key's frontier RAISES. Composition identity: summing the credit
     deltas of any time-split batching equals the one-shot
     last_touch_attribution — which IS the oracle."""
-    b = _attr_batch_state(
-        batch, touch_types, conversion_type,
-        key_col, type_col, ts_col, value_col, tiebreak_col,
-    )
-    is_touch = lambda e: e["t"].isin(*touch_types)  # noqa: E731
+    b = _attr_batch_state(batch)
+    is_touch = lambda e: e["t"].isin(*TOUCH_TYPES)  # noqa: E731
 
     def step(acc, e):
         channel = F.when(
-            acc["lu"].isNotNull() & (e["us"] - acc["lu"] <= F.lit(window_us)),
+            acc["lu"].isNotNull() & (e["us"] - acc["lu"] <= F.lit(WINDOW_US)),
             acc["lt"],
         ).otherwise(F.lit("none"))
         credit = F.when(
-            e["t"] == conversion_type,
+            e["t"] == CONVERSION,
             F.array(F.struct(channel.alias("ch"), e["v"].alias("cents"))),
         ).otherwise(F.array().cast(_CREDITS_T))
         return F.struct(
@@ -295,14 +261,6 @@ def attribution_step(fold=attribution_fold_batch):
 def decay_attribution_fold_batch(
     touch_state: DataFrame | None,
     batch: DataFrame,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Fold one time-slice batch through the TIME-DECAY multi-touch
     credit walk — order-dependent IVM member #4, and the first whose
@@ -320,10 +278,7 @@ def decay_attribution_fold_batch(
     (key state, additive per-channel credit delta).
 
     State schema: (key, touches array<(us, tb, t)>, max_us, max_tb)."""
-    b = _attr_batch_state(
-        batch, touch_types, conversion_type,
-        key_col, type_col, ts_col, value_col, tiebreak_col,
-    )
+    b = _attr_batch_state(batch)
 
     def w_of(e, t):
         # 2^(6 − min(age, 6)): exact in double for exponents 0..6, cast
@@ -336,10 +291,10 @@ def decay_attribution_fold_batch(
         ).cast("long")
 
     def step(acc, e):
-        is_touch = e["t"].isin(*touch_types)
+        is_touch = e["t"].isin(*TOUCH_TYPES)
         tws = F.filter(
             acc["touches"],
-            lambda t: e["us"] - t["us"] <= F.lit(window_us),
+            lambda t: e["us"] - t["us"] <= F.lit(WINDOW_US),
         )
         tot = F.aggregate(
             tws, F.lit(0).cast("long"), lambda a, t: a + w_of(e, t)
@@ -369,7 +324,7 @@ def decay_attribution_fold_batch(
                 ),
             ).otherwise(acc["touches"]).alias("touches"),
             F.when(
-                e["t"] == conversion_type,
+                e["t"] == CONVERSION,
                 F.concat(acc["credits"], conv_credits),
             ).otherwise(acc["credits"]).alias("credits"),
         )
@@ -395,7 +350,7 @@ def decay_attribution_fold_batch(
         # dead for every possible future event — the per-key state bound.
         F.filter(
             F.col("__f")["touches"],
-            lambda t: t["us"] >= F.col("max_us") - F.lit(window_us),
+            lambda t: t["us"] >= F.col("max_us") - F.lit(WINDOW_US),
         ).alias("touches"),
         "max_us",
         "max_tb",

@@ -36,11 +36,11 @@ from etl_pipeline_last_fm_spark.functions.scalar import portable_hash60
 WORD_BITS = 32  # 32-bit lanes in BIGINT words: 1 << bit <= 2^31, no sign play
 
 
-def _positions(key: Column, m_bits: int, k: int, salt: str) -> list[Column]:
+def _positions(key: Column, m_bits: int, k: int) -> list[Column]:
     return [
         F.pmod(
             portable_hash60(
-                F.concat(F.lit(f"{salt}:{j}:"), key.cast("string"))
+                F.concat(F.lit(f"bloom1:{j}:"), key.cast("string"))
             ),
             F.lit(m_bits),
         )
@@ -53,7 +53,6 @@ def build_bloom_words(
     key_col: str,
     m_bits: int = 4096,
     k: int = 4,
-    salt: str = "bloom1",
 ) -> list[int]:
     """Aggregate the key set into the filter's word array (length m/32,
     dense, zero-filled). One explode (k rows per key) + one groupBy on
@@ -62,7 +61,7 @@ def build_bloom_words(
     if m_bits % WORD_BITS != 0:
         raise ValueError(f"m_bits must be a multiple of {WORD_BITS}: {m_bits}")
     pos = F.explode(
-        F.array(*_positions(F.col(key_col), m_bits, k, salt))
+        F.array(*_positions(F.col(key_col), m_bits, k))
     ).alias("pos")
     words = (
         # NULL keys hash to NULL positions (dense[None] would crash the
@@ -88,7 +87,7 @@ def build_bloom_words(
 
 
 def bloom_might_contain(
-    key: Column, words: list[int], m_bits: int, k: int = 4, salt: str = "bloom1"
+    key: Column, words: list[int], m_bits: int, k: int = 4
 ) -> Column:
     """Membership test as a pure Column expression over the word-array
     literal: k AND-ed bit probes, no join, no shuffle — evaluates inside
@@ -108,7 +107,7 @@ def bloom_might_contain(
     # classic shiftleft() does not accept as a Column).
     masks = F.lit([1 << b for b in range(WORD_BITS)]).cast("array<long>")
     cond = F.lit(True)
-    for p in _positions(key, m_bits, k, salt):
+    for p in _positions(key, m_bits, k):
         word = F.element_at(arr, (p / WORD_BITS).cast("int") + 1)
         mask = F.element_at(masks, (p % WORD_BITS).cast("int") + 1)
         cond = cond & (word.bitwiseAND(mask) != 0)
@@ -122,8 +121,6 @@ def bloom_prune_join_stats(
     dim_key: str,
     group_col: str,
     m_bits: int = 4096,
-    k: int = 4,
-    salt: str = "bloom1",
 ) -> DataFrame:
     """Per ``group_col``: how many fact rows pass the Bloom filter vs how
     many truly join — the filter's selectivity ledger, and (because the
@@ -133,9 +130,9 @@ def bloom_prune_join_stats(
     filter): no false negatives is a property of the structure, asserted
     in tests, so pruning first loses nothing — which is the whole point.
     """
-    words = build_bloom_words(dim_keys, dim_key, m_bits, k, salt)
+    words = build_bloom_words(dim_keys, dim_key, m_bits)
     passed = fact.filter(
-        bloom_might_contain(F.col(fact_key), words, m_bits, k, salt)
+        bloom_might_contain(F.col(fact_key), words, m_bits)
     )
     # Alias the dim key before the semi-join: when fact_key and dim_key
     # share a name (self-referential dims), the raw equality predicate is

@@ -30,21 +30,19 @@ IPV4_RE = r"\b\d{1,3}(\.\d{1,3}){3}\b"
 PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
 
 
-def pii_scrub(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Per-document PII counts plus the fully redacted text (as md5 + length
     — the scrubbed corpus itself would be written next to it in a real run;
     the digest keeps the verification output compact).
 
     Counts are taken on the ORIGINAL text, before any replacement, so the
     three counters are independent of redaction order."""
-    t = F.col(text_col)
+    t = F.col("text")
     red = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
     red = F.regexp_replace(red, IPV4_RE, "<IP>")
     red = F.regexp_replace(red, PHONE_RE, "<PHONE>")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(t, F.lit(IPV4_RE)).cast("long").alias("n_ipv4"),
         F.regexp_count(t, F.lit(PHONE_RE)).cast("long").alias("n_phones"),

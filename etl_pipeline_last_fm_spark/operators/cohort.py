@@ -31,25 +31,18 @@ from etl_pipeline_last_fm_spark.functions.scalar import ts_us
 WEEK_US = 7 * 24 * 3600 * 1_000_000
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    max_offset: int | None = None,
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """(cohort_week, week_offset, n_users): distinct users from the
     cohort_week cohort active week_offset weeks later. week 0 row is the
     cohort size (every user is active in their own first week)."""
-    wk = (ts_us(F.col(ts_col)) / F.lit(WEEK_US)).cast("long")
-    ev = events.select(F.col(user_col).alias("__u"), wk.alias("__wk"))
+    wk = (ts_us(F.col("ts")) / F.lit(WEEK_US)).cast("long")
+    ev = events.select(F.col("user_id").alias("__u"), wk.alias("__wk"))
     cohorts = ev.groupBy("__u").agg(F.min("__wk").alias("__cohort"))
     joined = ev.join(cohorts, "__u").select(
         "__u",
         "__cohort",
         (F.col("__wk") - F.col("__cohort")).alias("__off"),
     )
-    if max_offset is not None:
-        joined = joined.filter(F.col("__off") <= max_offset)
     return (
         joined.groupBy(
             F.col("__cohort").alias("cohort_week"),

@@ -23,15 +23,15 @@ from pyspark.sql import functions as F
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
 
 
-def _shingle_rows(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+def _shingle_rows(docs: DataFrame, n: int) -> DataFrame:
     """Distinct (doc_id, shingle-string) rows; integer-sequence generator
     AND a pre-split token array (the post-explode projection runs per
     shingle row, so a `split(text)` there would be O(words^2) per doc —
     cf. dedup.minhash_signature's pre-split)."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.trim(F.col(text_col)), " ").alias("__toks"),
+            "doc_id",
+            F.split(F.trim(F.col("text")), " ").alias("__toks"),
         )
         .select(
             "doc_id",
@@ -50,8 +50,6 @@ def benchmark_contamination(
     train: DataFrame,
     bench: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_hits: int = 1,
 ) -> DataFrame:
     """Per contaminated training doc: how many of its distinct n-gram
@@ -67,9 +65,9 @@ def benchmark_contamination(
     # groupBy(doc_id) produces totals and hit counts together. (The
     # two-consumer form — separate semi-join for hits and groupBy for
     # totals — scans and re-shingles the 100 TB side twice.)
-    train_sh = _shingle_rows(train, n, id_col, text_col)
+    train_sh = _shingle_rows(train, n)
     bench_sh = (
-        _shingle_rows(bench, n, id_col, text_col)
+        _shingle_rows(bench, n)
         .select("sh")
         .distinct()
         .withColumn("__hit", F.lit(1))

@@ -5,15 +5,15 @@ Scale design notes (these run over *documents*, the table that is 100 TB in
 production):
 
 - exact: one hash-groupBy shuffle on the fingerprint — optimal.
-- word/ngram Jaccard: explode -> self-join on the token. The join key's
-  document frequency drives the blow-up, so ``max_doc_freq`` drops
-  ultra-common tokens (stop-shingles) before the join — the standard trick
-  that keeps the candidate set near-linear. AQE skew-join splitting handles
-  residual hot shingles.
+- word Jaccard: explode -> self-join on the token, exact over every pair
+  sharing a token. The join key's document frequency drives the blow-up;
+  AQE skew-join splitting handles hot tokens. Corpora with stop-word-heavy
+  text belong on the MinHash path below.
 - MinHash+LSH: the scale path for pairwise similarity — candidate pairs come
   from banded signature buckets (shuffle on (band, band_hash), output
   proportional to true-duplicate density), then only candidates pay the
-  exact-Jaccard verification.
+  exact-Jaccard verification (``verify_pairs``, shared with the prefix
+  filter and sorted-neighborhood blocking in setsim.py).
 - SimHash: one 64-bit signature per doc, near-dup = small Hamming distance.
 - embedding cosine: thresholded pairwise over an (optionally LSH-bucketed)
   candidate set.
@@ -24,6 +24,8 @@ functions) — no Python UDFs in any hot path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,35 +33,36 @@ from etl_pipeline_last_fm_spark.operators.spread import spread_scan
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, portable_hash60
 
 
-def _distinct_words(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+#: Largest LSH / chunk bucket that expands into candidate pairs: a bucket
+#: of m ids yields m(m-1)/2 of them.
+MAX_BUCKET_SIZE = 10_000
+
+
+def _distinct_words(docs: DataFrame) -> DataFrame:
     # explode-then-distinct, NOT explode(array_distinct(...)): a computed
     # array as generator input gets re-evaluated per emitted row under
     # whole-stage codegen — keep generator inputs cheap and dedupe
     # relationally (the distinct is a shuffle that scales; the re-evaluation
     # doesn't).
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("w"),
+        "doc_id",
+        F.explode(F.split(F.trim(F.col("text")), " ")).alias("w"),
     ).distinct()
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup via content-hash groupBy: each group keeps its minimum id
     (deterministic first-writer, cf. the ON CONFLICT arbiter §2.7)."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("fp"))
+        docs.groupBy(F.md5(F.col("text")).alias("fp"))
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def word_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
+def word_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact word-set Jaccard similarity for all pairs sharing >= 1 token.
 
     n=1 member of the n-gram-Jaccard family, chosen for the oracle pair
@@ -67,14 +70,6 @@ def word_jaccard_pairs(
     n=3 + approximate scale path.
     """
     words = _distinct_words(docs)
-    if max_doc_freq is not None:
-        rare = (
-            words.groupBy("w")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("w")
-        )
-        words = words.join(F.broadcast(rare), "w", "left_semi")
     sizes = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
     a = words.alias("a")
@@ -120,14 +115,14 @@ def _shingles(toks_col: str, shingle_len: int) -> Column:
 _MERSENNE_P = 2147483647  # 2^31 - 1
 
 
-def _cw_params(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]:
+def _cw_params(num_hashes: int) -> tuple[list[int], list[int]]:
     """Deterministic Carter-Wegman permutation coefficients a_j, b_j in
     [1, p) / [0, p). Products a*h stay < 2^62 — no long overflow, so the
     expressions are safe under ANSI mode (the driver's session may have it
     on; overflow would raise there)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     a = (rng.integers(1, _MERSENNE_P, num_hashes)).tolist()
     b = (rng.integers(0, _MERSENNE_P, num_hashes)).tolist()
     return a, b
@@ -180,7 +175,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     verify_threshold: float = 0.5,
-    max_bucket_size: int = 10_000,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation + exact-Jaccard verification.
 
@@ -198,17 +192,15 @@ def minhash_lsh_pairs(
     array (generator inputs stay trivial — computed-array generator inputs
     get re-evaluated per output row under whole-stage codegen).
 
-    ``max_bucket_size`` drops degenerate buckets (the LSH analogue of the
-    stop-shingle filter): a bucket of m ids yields m(m-1)/2 candidates, so a
-    single hot bucket — near-constant docs, a pathological band hash — can
-    dominate the whole job at scale. CAVEAT: for docs with IDENTICAL
-    signatures (exact/near-exact content duplicated past the cap) every
-    band's bucket is the same over-cap set, so the cap silently drops the
-    whole cluster — "left to the other bands" does not apply. That class
-    must be removed before LSH by an exact-fingerprint pre-pass, which is
-    exactly what ``dedup_keep_list`` does; call this operator directly only
-    on content-distinct corpora or with the cap sized above the largest
-    expected exact-dup cluster.
+    Buckets over ``MAX_BUCKET_SIZE`` ids are dropped: a bucket of m ids
+    yields m(m-1)/2 candidates, so a single hot bucket — near-constant docs,
+    a pathological band hash — can dominate the whole job at scale. CAVEAT:
+    for docs with IDENTICAL signatures (exact/near-exact content duplicated
+    past the cap) every band's bucket is the same over-cap set, so the cap
+    silently drops the whole cluster — "left to the other bands" does not
+    apply. That class must be removed before LSH by an exact-fingerprint
+    pre-pass, which is exactly what ``dedup_keep_list`` does; call this
+    operator directly only on content-distinct corpora.
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
@@ -250,67 +242,95 @@ def minhash_lsh_pairs(
     buckets = (
         band_rows.groupBy("band", "bkey")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket_size))
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= MAX_BUCKET_SIZE))
     )
-    # ids is a materialized aggregation result; both generators are integer
-    # sequences. ids sorted ascending => doc_a < doc_b by construction.
-    #
-    # persist(): cands feeds THREE consumers (doc_a ids, doc_b ids, the final
-    # pair assembly) — unpersisted, each re-executes the whole signature
-    # subtree, the job's dominant cost. Measured at sf0.1 (warm, local[32]):
-    # 3.2s -> 1.3s. The cached set is candidate pairs only — proportional to
-    # duplicate density, not corpus size — and the default storage level
-    # spills to disk, so this stays safe at 100 TB where the signature
-    # recompute it avoids costs hours, not seconds. A lazy persist (not a
-    # checkpoint) deliberately: lineage survives executor loss, and the
-    # operator keeps Spark's construction-is-free contract. CACHE OWNERSHIP:
-    # the cache lives until session eviction — callers looping over many
-    # corpora in one session should spark.catalog.clearCache() between
-    # corpora (bench.py does; the dedup-corpus CLI run ends its session).
-    cands = (
-        buckets.select("ids", F.explode(F.expr("sequence(0, size(ids) - 2)")).alias("i"))
-        .select("ids", "i", F.explode(F.expr("sequence(i + 1, size(ids) - 1)")).alias("j"))
-        .select(
-            F.element_at("ids", F.col("i") + 1).alias("doc_a"),
-            F.element_at("ids", F.col("j") + 1).alias("doc_b"),
-        )
-        .distinct()
-        .persist()
+    # ids sorted ascending => doc_a < doc_b by construction.
+    cands = _bucket_pairs(buckets, "ids").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
+    ).distinct()
+    return verify_pairs(
+        docs,
+        cands,
+        lambda shared, union: shared.cast("double") / union.cast("double")
+        >= F.lit(verify_threshold),
+        shingle_len,
     )
 
-    # Exact verification only re-tokenizes CANDIDATE docs (semi-join first):
-    # verification cost scales with duplicate density, not corpus size.
-    # cand_shingles is persisted for the same reason as cands: it feeds
-    # BOTH sides of the pair join, and unpersisted each side re-runs the
-    # tokenize+shingle pass over every candidate doc (the round-10 10x
-    # phase attribution measured the verify stage at ~10 s of the ~23 s
-    # job on a 100%-duplicate-density corpus, the worst case — re-shingling
-    # twice is the avoidable half of its setup). Footprint = candidate
-    # docs' shingle arrays (duplicate-density-proportional, spills to
-    # disk); same cache-ownership note as cands above.
+
+def _bucket_pairs(buckets: DataFrame, ids: str) -> DataFrame:
+    """(a, b) for every i < j pair of elements of the array column ``ids``:
+    the in-bucket expansion of every blocking strategy that groups ids
+    into buckets instead of self-joining (a self-join executes the bucket
+    key's whole subtree twice). ``ids`` is a materialized aggregation
+    result and both generators are integer sequences — a computed array as
+    generator input is re-evaluated per emitted row under whole-stage
+    codegen. A sorted ``ids`` gives a < b."""
+    return (
+        buckets.select(ids, F.explode(F.expr(f"sequence(0, size({ids}) - 2)")).alias("i"))
+        .select(ids, "i", F.explode(F.expr(f"sequence(i + 1, size({ids}) - 1)")).alias("j"))
+        .select(
+            F.element_at(ids, F.col("i") + 1).alias("a"),
+            F.element_at(ids, F.col("j") + 1).alias("b"),
+        )
+    )
+
+
+def verify_pairs(
+    docs: DataFrame,
+    cands: DataFrame,
+    keep: Callable[[Column, Column], Column],
+    shingle_len: int,
+) -> DataFrame:
+    """Exact shingle-Jaccard verification of (doc_a, doc_b) candidates:
+    (doc_a, doc_b, jaccard) for the pairs where ``keep(shared, union)``
+    holds, ``shared`` and ``union`` being the pair's shingle-set
+    intersection and union sizes. The shared tail of every blocking
+    strategy: MinHash-LSH passes a float threshold test, the prefix filter
+    and sorted-neighborhood blocking (setsim.py) an exact integer one.
+
+    Only CANDIDATE docs are re-tokenized (semi-join first), so
+    verification cost scales with duplicate density, not corpus size.
+
+    persist(): ``cands`` feeds THREE consumers (doc_a ids, doc_b ids, the
+    final pair assembly) — unpersisted, each re-executes the candidate
+    subtree, which for MinHash is the signature, the job's dominant cost
+    (measured at sf0.1, warm, local[32]: 3.2s -> 1.3s). The candidate
+    docs' shingle arrays feed both pair sides, and unpersisted each side
+    re-runs the tokenize+shingle pass (the round-10 phase attribution
+    measured the verify stage at ~10 s of a ~23 s job on a
+    100%-duplicate-density corpus; SNM-multipass went 6.0 -> 3.5 s at
+    sf0.1). Both caches are duplicate-density-proportional and spill to
+    disk. Lazy persists, not checkpoints: lineage survives executor loss,
+    and construction stays free. CACHE OWNERSHIP: the caches live until
+    session eviction — callers looping over many corpora in one session
+    should spark.catalog.clearCache() between corpora (bench.py does; the
+    dedup-corpus CLI run ends its session)."""
+    cands = cands.persist()
     cand_ids = cands.select(F.col("doc_a").alias("doc_id")).union(
         cands.select(F.col("doc_b").alias("doc_id"))
     ).distinct()
-    cand_docs = docs.join(cand_ids, "doc_id", "left_semi")
-    cand_shingles = cand_docs.select(
-        "doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks")
-    ).select("doc_id", _shingles("__toks", shingle_len).alias("shingles")).persist()
+    cand_shingles = (
+        docs.join(cand_ids, "doc_id", "left_semi")
+        .select("doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks"))
+        .select("doc_id", _shingles("__toks", shingle_len).alias("shingles"))
+        .persist()
+    )
     sh_a = cand_shingles.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sh_b = cand_shingles.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     # |A ∪ B| = |A| + |B| − |A ∩ B|: one array_intersect per pair and the
     # union NEVER materializes (array_union allocated an Sa+Sb array per
-    # pair — the verify stage's largest per-row allocation). Same value
-    # by the identity, so oracle parity is by construction.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - inter
-    ).cast("double")
+    # pair — the verify stage's largest per-row allocation).
+    shared = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - shared
     return (
         cands.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
-        .withColumn("jaccard_raw", jac)
-        .filter(F.col("jaccard_raw") >= F.lit(verify_threshold))
-        .select("doc_a", "doc_b", half_up_round(F.col("jaccard_raw"), 4).alias("jaccard"))
+        .filter(keep(shared, union))
+        .select(
+            "doc_a",
+            "doc_b",
+            half_up_round(shared.cast("double") / union.cast("double"), 4).alias("jaccard"),
+        )
     )
 
 
@@ -371,7 +391,6 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 12) -> DataFrame:
 def simhash_near_dups_blocked(
     docs: DataFrame,
     max_hamming: int = 3,
-    max_bucket_size: int = 10_000,
     portable: bool = False,
 ) -> DataFrame:
     """Scale path for SimHash near-dups: pigeonhole blocking.
@@ -409,21 +428,15 @@ def simhash_near_dups_blocked(
 
     # Bucket-group instead of self-join: the signature subtree (token explode
     # + 64 conditional-SUM aggregates) runs ONCE; candidates expand from the
-    # materialized per-bucket (doc_id, simhash) list via cheap integer
-    # sequence generators (same rationale as minhash_lsh_pairs). array_sort
-    # on the struct orders by doc_id => doc_a < doc_b by construction.
+    # materialized per-bucket (doc_id, simhash) list (``_bucket_pairs``).
+    # array_sort on the struct orders by doc_id => doc_a < doc_b.
     buckets = (
         chunks.groupBy("ci", "cv")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_bucket_size))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= MAX_BUCKET_SIZE))
     )
     pairs = (
-        buckets.select("ds", F.explode(F.expr("sequence(0, size(ds) - 2)")).alias("i"))
-        .select("ds", "i", F.explode(F.expr("sequence(i + 1, size(ds) - 1)")).alias("j"))
-        .select(
-            F.element_at("ds", F.col("i") + 1).alias("a"),
-            F.element_at("ds", F.col("j") + 1).alias("b"),
-        )
+        _bucket_pairs(buckets, "ds")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -509,13 +522,7 @@ def connected_components(
     return labels
 
 
-def dedup_keep_list(
-    docs: DataFrame,
-    shingle_len: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    verify_threshold: float = 0.5,
-) -> DataFrame:
+def dedup_keep_list(docs: DataFrame, verify_threshold: float = 0.5) -> DataFrame:
     """End-to-end near-dup resolution: exact-fingerprint pre-pass ->
     MinHash-LSH on content-distinct representatives -> connected components
     -> (doc_id, keep_id, is_dup). keep_id is the smallest doc id in the
@@ -524,7 +531,7 @@ def dedup_keep_list(
     anti-join of the corpus against this list is the deduplicated corpus.
 
     The exact pre-pass (md5 of the raw text, one groupBy) matters beyond
-    speed: a page duplicated >max_bucket_size times has identical MinHash
+    speed: a page duplicated >MAX_BUCKET_SIZE times has identical MinHash
     signatures, so EVERY band bucket for it would blow the LSH cap and the
     cluster would be dropped silently (see minhash_lsh_pairs). Exact
     clusters become star edges to their smallest id here, and only one
@@ -555,13 +562,7 @@ def dedup_keep_list(
     rep_docs = docs.join(
         reps.select(F.col("__rep").alias("doc_id")), "doc_id", "left_semi"
     )
-    near_pairs = minhash_lsh_pairs(
-        rep_docs,
-        shingle_len=shingle_len,
-        num_hashes=num_hashes,
-        bands=bands,
-        verify_threshold=verify_threshold,
-    )
+    near_pairs = minhash_lsh_pairs(rep_docs, verify_threshold=verify_threshold)
     edges = near_pairs.select("doc_a", "doc_b").unionByName(exact_edges)
     try:
         comps = connected_components(edges)
@@ -688,8 +689,6 @@ def shared_passage_stats(
     docs: DataFrame,
     window_tokens: int = 8,
     portable: bool = True,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-document passage-level dedup statistics: split every document
     into non-overlapping ``window_tokens``-word chunks, hash each chunk, and
@@ -713,9 +712,9 @@ def shared_passage_stats(
     ``portable=True`` uses the md5-derived portable_hash60 (DuckDB oracle
     recomputes it bit-identically); production would use xxhash64."""
     w = window_tokens
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = F.split(F.trim(F.col("text")), " ")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("__toks")
+        "doc_id", toks.alias("__toks")
     ).withColumn("__nc", F.floor(F.size("__toks") / F.lit(w)).cast("long"))
 
     chunk = F.array_join(F.expr(f"slice(__toks, i * {w} + 1, {w})"), " ")

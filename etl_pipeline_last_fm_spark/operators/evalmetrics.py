@@ -35,18 +35,13 @@ from pyspark.sql import functions as F
 D38 = "decimal(38,0)"
 
 
-def _cents(value_col: str):
+def _cents():
     from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
 
-    return half_up_round(F.col(value_col) * 100).cast("long")
+    return half_up_round(F.col("value") * 100).cast("long")
 
 
-def score_census(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def score_census(events: DataFrame) -> DataFrame:
     """Per-distinct-score label census (v, n_pos_v, n_neg_v) — the
     ADDITIVE state behind ``roc_auc``. Censuses of disjoint batches
     merge by per-value count sum, order-free, so ROC AUC is
@@ -60,11 +55,11 @@ def score_census(
     diverged — Spark grouped the NULL score while the oracle's CASE
     dropped the label differently)."""
     events = events.where(
-        F.col(value_col).isNotNull() & F.col(type_col).isNotNull()
+        F.col("value").isNotNull() & F.col("event_type").isNotNull()
     )
     labeled = events.select(
-        (F.col(type_col) == pos_type).alias("__pos"),
-        _cents(value_col).alias("v"),
+        (F.col("event_type") == "purchase").alias("__pos"),
+        _cents().alias("v"),
     )
     return labeled.groupBy("v").agg(
         F.sum(F.col("__pos").cast("long")).alias("n_pos_v"),
@@ -112,14 +107,9 @@ def auc_from_census(census: DataFrame) -> DataFrame:
     )
 
 
-def roc_auc(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def roc_auc(events: DataFrame) -> DataFrame:
     """Exact ROC AUC (ppm) of ``value`` as a score for ``event_type ==
-    pos_type``, ties at midranks — the probability a random positive
+    'purchase'``, ties at midranks — the probability a random positive
     outscores a random negative, with ties counting half. One row:
     (n_pos, n_neg, auc_ppm), auc_ppm = (R2⁺ − n⁺(n⁺+1)) · 10⁶ div
     (2·n⁺·n⁻) where R2⁺ is the DOUBLED ascending-rank sum of positives
@@ -127,7 +117,7 @@ def roc_auc(
     Composed as census → read-time scoring so the streaming twin folds
     the SAME census code path."""
     return auc_from_census(
-        score_census(events, pos_type, type_col, value_col)
+        score_census(events)
     )
 
 
@@ -166,13 +156,7 @@ def _bin_census(census: DataFrame, k: int) -> DataFrame:
     )
 
 
-def calibration_bins(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    k: int = 10,
-) -> DataFrame:
+def calibration_bins(events: DataFrame, k: int = 10) -> DataFrame:
     """Reliability diagram: k fixed-width bins over the score range
     [0, max], per bin the exact mean normalized score and the empirical
     positive rate (both truncated ppm). A calibrated score has
@@ -188,9 +172,7 @@ def calibration_bins(
     streaming AUC census state.
 
     Requires score cents >= 0 (fails loudly otherwise — _bin_census)."""
-    census = score_census(
-        events, pos_type, type_col, value_col
-    ).localCheckpoint()
+    census = score_census(events).localCheckpoint()
     binned = _bin_census(census, k)
     return (
         binned.groupBy("bin")
@@ -282,11 +264,7 @@ def cohens_kappa(
     )
 
 
-def mann_kendall(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def mann_kendall(events: DataFrame) -> DataFrame:
     """Mann–Kendall trend test on the DAILY total of ``value`` —
     S = Σ_{i<j} sgn(xⱼ − xᵢ) over day-ordered daily sums, with Kendall's
     tau-a (ppm, truncated toward zero via ABS+sign) and the tie-corrected
@@ -308,8 +286,8 @@ def mann_kendall(
     # div == flooring // only for non-negative epoch-µs).
     daily = (
         events.select(
-            ts_us(F.col(ts_col)).alias("__us"),
-            _cents(value_col).alias("__c"),
+            ts_us(F.col("ts")).alias("__us"),
+            _cents().alias("__c"),
         )
         .select(F.expr("__us div 86400000000").alias("__d"), "__c")
         .groupBy("__d")
@@ -370,16 +348,9 @@ def mann_kendall(
     )
 
 
-def lift_deciles(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    tie_col: str = "event_id",
-    k: int = 10,
-) -> DataFrame:
+def lift_deciles(events: DataFrame, k: int = 10) -> DataFrame:
     """Targeting lift table: rank every row by score descending (ties
-    pinned by ``tie_col``), cut into k tiles with the round-8 two-phase
+    pinned by ``event_id``), cut into k tiles with the round-8 two-phase
     rank device — the corpus-sized cut runs WITHOUT any unpartitioned
     window (value_ordered_row_number + exact_ntile_expr, the
     rfm_segments machinery on corpus rows) — and report each tile's
@@ -399,11 +370,11 @@ def lift_deciles(
     # NULL score/label rows are not observations — excluded explicitly
     # on both engines (round-9 hostile nulls sweep).
     labeled = events.where(
-        F.col(value_col).isNotNull() & F.col(type_col).isNotNull()
+        F.col("value").isNotNull() & F.col("event_type").isNotNull()
     ).select(
-        F.col(tie_col).alias("__tie"),
-        (F.col(type_col) == pos_type).alias("__pos"),
-        _cents(value_col).alias("__v"),
+        F.col("event_id").alias("__tie"),
+        (F.col("event_type") == "purchase").alias("__pos"),
+        _cents().alias("__v"),
     )
     # Round-8 close: the global row count rides OUT of the rank device
     # (computed on its bucket dim, total_col) and the positive total
@@ -448,13 +419,7 @@ def lift_deciles(
     )
 
 
-def calibration_ece(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    k: int = 10,
-) -> DataFrame:
+def calibration_ece(events: DataFrame, k: int = 10) -> DataFrame:
     """Expected / maximum calibration error over the same k fixed-width
     bins as ``calibration_bins`` — the single-number summary of the
     reliability diagram. Per bin the gap |empirical rate − mean
@@ -471,9 +436,7 @@ def calibration_ece(
     family.
 
     Requires score cents >= 0 (fails loudly otherwise — _bin_census)."""
-    census = score_census(
-        events, pos_type, type_col, value_col
-    ).localCheckpoint()
+    census = score_census(events).localCheckpoint()
     per_bin = _bin_census(census, k).groupBy("bin").agg(
         F.sum("__cnt").alias("__n_b"),
         F.sum("__np").alias("__pos_b"),
@@ -502,12 +465,7 @@ def calibration_ece(
     )
 
 
-def pr_curve(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def pr_curve(events: DataFrame) -> DataFrame:
     """Precision-recall curve over every distinct score threshold
     (predict positive when score >= v): per distinct cents value,
     (threshold_cents, n_pred, n_tp, precision_ppm, recall_ppm), both
@@ -520,9 +478,7 @@ def pr_curve(
     cumsum projection), so it is localCheckpoint-ed like the rest of
     the calibration family — the Q15 rule; without it the events corpus
     would be scanned twice (ADVICE r8)."""
-    census = score_census(
-        events, pos_type, type_col, value_col
-    ).localCheckpoint()
+    census = score_census(events).localCheckpoint()
     w = Window.orderBy(F.col("v").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -556,13 +512,7 @@ def pr_curve(
     )
 
 
-def isotonic_calibration(
-    events: DataFrame,
-    pos_type: str = "purchase",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    k: int = 20,
-) -> DataFrame:
+def isotonic_calibration(events: DataFrame, k: int = 20) -> DataFrame:
     """Isotonic calibration map via Pool-Adjacent-Violators over the
     k-bin score table: the non-decreasing fit of the per-bin positive
     rates under n_b weights — the classic monotone recalibration next
@@ -593,9 +543,7 @@ def isotonic_calibration(
     never data-sized.
 
     Requires score cents >= 0 (fails loudly otherwise — _bin_census)."""
-    census = score_census(
-        events, pos_type, type_col, value_col
-    ).localCheckpoint()
+    census = score_census(events).localCheckpoint()
     per_bin = (
         _bin_census(census, k)
         .groupBy("bin")

@@ -24,32 +24,26 @@ from pyspark.sql import functions as F
 from etl_pipeline_last_fm_spark.functions.scalar import ts_us
 
 
-def funnel_stages(
-    events: DataFrame,
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-user deepest funnel stage, strict sequential semantics.
+def funnel_stages(events: DataFrame) -> DataFrame:
+    """Per-user deepest stage of the view -> click -> purchase funnel,
+    strict sequential semantics.
 
-    stage_depth: 0 = never did stages[0]; k = completed stages[0..k-1] in
+    stage_depth: 0 = never viewed; k = completed the first k stages in
     order (each stage's first qualifying event strictly after the previous
     stage's). Returns (user_id, stage_depth, stage).
     """
-    s1, s2, s3 = stages
-    us = ts_us(ts_col)
-    w = Window.partitionBy(user_col)
+    us = ts_us("ts")
+    w = Window.partitionBy("user_id")
     t1 = events.withColumn(
-        "__t1", F.min(F.when(F.col(type_col) == s1, us)).over(w)
+        "__t1", F.min(F.when(F.col("event_type") == "view", us)).over(w)
     )
     t2 = t1.withColumn(
         "__t2",
-        F.min(F.when((F.col(type_col) == s2) & (us > F.col("__t1")), us)).over(w),
+        F.min(F.when((F.col("event_type") == "click") & (us > F.col("__t1")), us)).over(w),
     )
     t3 = t2.withColumn(
         "__t3",
-        F.min(F.when((F.col(type_col) == s3) & (us > F.col("__t2")), us)).over(w),
+        F.min(F.when((F.col("event_type") == "purchase") & (us > F.col("__t2")), us)).over(w),
     )
     depth = (
         F.when(F.col("__t3").isNotNull(), 3)
@@ -58,14 +52,14 @@ def funnel_stages(
         .otherwise(0)
     )
     label = (
-        F.when(F.col("__t3").isNotNull(), F.lit("_".join(stages)))
-        .when(F.col("__t2").isNotNull(), F.lit("_".join(stages[:2])))
-        .when(F.col("__t1").isNotNull(), F.lit(s1))
+        F.when(F.col("__t3").isNotNull(), F.lit("view_click_purchase"))
+        .when(F.col("__t2").isNotNull(), F.lit("view_click"))
+        .when(F.col("__t1").isNotNull(), F.lit("view"))
         .otherwise(F.lit("none"))
     )
     return (
         t3.select(
-            user_col,
+            "user_id",
             depth.cast("int").alias("stage_depth"),
             label.alias("stage"),
         )

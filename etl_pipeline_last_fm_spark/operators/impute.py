@@ -36,17 +36,15 @@ def impute_zero_with_partition_mean(
     df: DataFrame,
     value_col: str,
     partition_cols: list[str],
-    sentinel: float = 0,
     out_col: str | None = None,
-    cast_to: str = "int",
 ) -> DataFrame:
-    """Replace sentinel values with the half-up-rounded mean of non-sentinel
-    values within each partition."""
+    """Replace the sentinel 0 with the half-up-rounded mean of the non-zero
+    values within each partition, as int."""
     out_col = out_col or value_col
     v = F.col(value_col)
     w = Window.partitionBy(*partition_cols)
-    mean_nonzero: Column = F.avg(F.when(v != F.lit(sentinel), v)).over(w)
-    imputed = F.when(v == F.lit(sentinel), half_up_round(mean_nonzero).cast(cast_to)).otherwise(
-        v.cast(cast_to)
+    mean_nonzero: Column = F.avg(F.when(v != F.lit(0), v)).over(w)
+    imputed = F.when(v == F.lit(0), half_up_round(mean_nonzero).cast("int")).otherwise(
+        v.cast("int")
     )
     return df.withColumn(out_col, imputed)

@@ -35,8 +35,6 @@ _US_DAY = 86_400_000_000
 def interval_concurrency(
     intervals: DataFrame,
     key_cols: list[str],
-    start_col: str = "session_start",
-    end_col: str = "session_end",
     bucket_us: int = _US_DAY,
 ) -> DataFrame:
     """(key_cols..., start_us, n_concurrent): for each interval, the
@@ -54,12 +52,12 @@ def interval_concurrency(
             F.explode(
                 F.array(
                     F.struct(
-                        ts_us(F.col(start_col)).alias("__us"),
+                        ts_us(F.col("session_start")).alias("__us"),
                         F.lit(0).alias("__kind"),
                         F.lit(1).alias("__delta"),
                     ),
                     F.struct(
-                        ts_us(F.col(end_col)).alias("__us"),
+                        ts_us(F.col("session_end")).alias("__us"),
                         F.lit(1).alias("__kind"),
                         F.lit(-1).alias("__delta"),
                     ),

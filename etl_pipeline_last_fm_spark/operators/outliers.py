@@ -65,9 +65,7 @@ def _grouped_lower_median(
 
 def mad_outliers(
     events: DataFrame,
-    value_col: str = "value",
     group_cols: list[str] | None = None,
-    id_col: str = "event_id",
     cutoff: int = 3,
 ) -> DataFrame:
     """Rows whose |value - median(group)| > cutoff * MAD(group), plus the
@@ -80,11 +78,11 @@ def mad_outliers(
     # NULLS FIRST while DuckDB defaults to NULLS LAST, so a NULL reaching
     # the rank computation would shift the median rank differently per
     # engine — and a NULL measurement is not an outlier candidate anyway.
-    events = events.filter(F.col(value_col).isNotNull())
-    med = _grouped_lower_median(events, value_col, group_cols, "med").drop("__n")
+    events = events.filter(F.col("value").isNotNull())
+    med = _grouped_lower_median(events, "value", group_cols, "med").drop("__n")
     with_med = events.join(med, group_cols)
     dev = with_med.withColumn(
-        "__dev", F.abs(F.col(value_col) - F.col("med"))
+        "__dev", F.abs(F.col("value") - F.col("med"))
     )
     mad = (
         _grouped_lower_median(dev, "__dev", group_cols, "mad")
@@ -94,9 +92,9 @@ def mad_outliers(
         F.col("__dev") > F.lit(cutoff) * F.col("mad")
     )
     return flagged.select(
-        F.col(id_col),
+        F.col("event_id"),
         *group_cols,
-        F.col(value_col),
+        F.col("value"),
         half_up_round(F.col("med"), 4).alias("med"),
         half_up_round(F.col("mad"), 4).alias("mad"),
     )

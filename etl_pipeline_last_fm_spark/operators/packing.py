@@ -112,7 +112,6 @@ def value_ordered_cumsum(
     value_col: str,
     tie_col: str,
     n_buckets: int = 1024,
-    out_col: str = "__cum",
 ) -> DataFrame:
     """Inclusive cumulative sum of ``value_col`` over the global
     (value desc, tie asc) order WITHOUT a corpus-sized unpartitioned
@@ -157,7 +156,7 @@ def value_ordered_cumsum(
     )
     return (
         base.join(F.broadcast(bucket_offsets), "__bkt")
-        .withColumn(out_col, F.col("__boff") + F.sum(value_col).over(w))
+        .withColumn("__cum", F.col("__boff") + F.sum(value_col).over(w))
         .drop("__bkt", "__vmin", "__vmax", "__boff")
     )
 
@@ -373,8 +372,6 @@ def vocab_coverage(docs: DataFrame, top_k: int = 20) -> DataFrame:
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> list[tuple[int, str, str, str, int]]:
     """Byte-pair-encoding merge training over the corpus: ``n_merges``
     iterations of (count adjacent symbol pairs) -> (pick the most frequent,
@@ -416,10 +413,10 @@ def bpe_train(
     # NULL text docs contribute no symbols — excluded explicitly on both
     # engines (round-9 hostile nulls sweep: a NULL token array poisoned
     # the driver-side argmax row into Nones).
-    toks = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
+    toks = docs.where(F.col("text").isNotNull()).select(
+        "doc_id",
         F.filter(
-            F.split(F.trim(F.col(text_col)), " "), lambda t: t != F.lit("")
+            F.split(F.trim(F.col("text")), " "), lambda t: t != F.lit("")
         ).alias("__toks"),
     ).persist()
     merges: list[tuple[int, str, str, str, int]] = []
@@ -472,8 +469,6 @@ def bpe_train(
 def apply_bpe(
     docs: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Encode documents with a learned BPE merge table: the merges are
     applied IN TRAINING ORDER, each as the same greedy left-to-right
@@ -494,7 +489,7 @@ def apply_bpe(
         return s.replace("\\", "\\\\").replace("'", "\\'")
 
     # Same empty-token drop as bpe_train (train/apply consistency).
-    expr = f"filter(split(trim({text_col}), ' '), t -> t != '')"
+    expr = "filter(split(trim(text), ' '), t -> t != '')"
     for _step, left, right, merged, _n in merges:
         expr = f"""aggregate(
             {expr},
@@ -509,5 +504,5 @@ def apply_bpe(
     # attribute reference — two F.expr copies in one select would evaluate
     # the whole nested fold twice per row (Spark only declines to collapse
     # when the non-cheap expression is referenced from a CHILD projection)
-    encoded = docs.select(F.col(id_col).alias("doc_id"), F.expr(expr).alias("toks"))
+    encoded = docs.select("doc_id", F.expr(expr).alias("toks"))
     return encoded.select("doc_id", "toks", F.size("toks").alias("n_toks"))

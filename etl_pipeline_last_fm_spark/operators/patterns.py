@@ -56,10 +56,6 @@ def _symbol(col: Column, alphabet: dict[str, str]) -> Column:
 def encode_event_strings(
     events: DataFrame,
     alphabet: dict[str, str] | None = None,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
     keep_array: bool = False,
 ) -> DataFrame:
     """(user, symbol string) — each user's events as one ordered string.
@@ -73,11 +69,11 @@ def encode_event_strings(
     alphabet = alphabet or DEFAULT_ALPHABET
     agged = (
         events.select(
-            F.col(user_col).alias("user_id"),
+            "user_id",
             F.struct(
-                ts_us(F.col(ts_col)).alias("us"),
-                F.col(tiebreak_col).alias("tb"),
-                _symbol(F.col(type_col), alphabet).alias("c"),
+                ts_us(F.col("ts")).alias("us"),
+                F.col("event_id").alias("tb"),
+                _symbol(F.col("event_type"), alphabet).alias("c"),
             ).alias("__s"),
         )
         .groupBy("user_id")
@@ -98,17 +94,11 @@ def match_event_pattern(
     events: DataFrame,
     pattern: str,
     alphabet: dict[str, str] | None = None,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
 ) -> DataFrame:
     """Per user: total events, leftmost non-overlapping matches of
     ``pattern``, and the first match (MEASURES-lite). Users with zero
     matches are kept (n_matches = 0) — the funnel-drop-off rows matter."""
-    enc = encode_event_strings(
-        events, alphabet, user_col, type_col, ts_col, tiebreak_col
-    )
+    enc = encode_event_strings(events, alphabet)
     # Pattern passed as a COLUMN LITERAL (F.lit / the builtin's literal
     # conversion), never interpolated into SQL text: f-string-into-F.expr
     # mangles backslashes (SQL literal parsing eats them -> silent
@@ -126,15 +116,7 @@ def match_event_pattern(
     )
 
 
-def match_event_pattern_measures(
-    events: DataFrame,
-    pattern: str,
-    alphabet: dict[str, str] | None = None,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def match_event_pattern_measures(events: DataFrame, pattern: str) -> DataFrame:
     """Per-MATCH measures (SQL:2016 MEASURES clause): one row per
     leftmost non-overlapping match carrying match_no, the matched symbol
     run, and the FIRST/LAST event id + epoch-µs timestamp of the match —
@@ -163,10 +145,7 @@ def match_event_pattern_measures(
             f"pattern {pattern!r} can match the empty string; "
             "per-match measures need non-empty matches"
         )
-    enc = encode_event_strings(
-        events, alphabet, user_col, type_col, ts_col, tiebreak_col,
-        keep_array=True,
-    )
+    enc = encode_event_strings(events, keep_array=True)
     # Pattern as a column literal for the regex builtins (the F.expr
     # interpolation trap — see match_event_pattern); F.split takes the
     # pattern as a plain Python arg, no SQL-literal round trip involved.

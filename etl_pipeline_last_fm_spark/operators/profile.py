@@ -20,9 +20,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str], approximate: bool = False
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """Profile numeric columns: one output row per column with
     (col_name, n_rows, n_nonnull, n_distinct, min_val, max_val, avg_val).
 
@@ -32,19 +30,15 @@ def profile_columns(
     that the 5th+ decimals are rounded per row, never silently truncated
     below the output precision.
 
-    ``approximate=True`` swaps the exact count-distincts for HyperLogLog
-    sketches (``approx_count_distinct``): N exact distincts in one agg make
+    The distinct counts are exact: N count-distincts in one agg make
     Catalyst expand the input N+1-fold before the shuffle — fine at fixture
-    scale and required for the value oracle, but at 100 TB the expand IS
-    the job. The sketch variant keeps the single-scan single-shuffle shape
-    with constant-size state per column (and is not oracle-paired, since
-    HLL estimates are engine-specific)."""
-    nd = F.approx_count_distinct if approximate else F.countDistinct
+    scale and required for the value oracle, but at 100 TB the expand is
+    the job."""
     aggs: list = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [
             F.count(c).alias(f"__nn_{c}"),
-            nd(c).alias(f"__nd_{c}"),
+            F.countDistinct(c).alias(f"__nd_{c}"),
             F.min(F.col(c).cast("double")).alias(f"__min_{c}"),
             F.max(F.col(c).cast("double")).alias(f"__max_{c}"),
             # exact 1e-4-unit sum for the mean (order-insensitive; round-9
@@ -81,11 +75,7 @@ def profile_columns(
     ).select("col_name", "n_rows", "n_nonnull", "n_distinct", "min_val", "max_val", "avg_val")
 
 
-def quantile_buckets(
-    docs: DataFrame,
-    n_buckets: int = 10,
-    exact: bool = True,
-) -> DataFrame:
+def quantile_buckets(docs: DataFrame, n_buckets: int = 10) -> DataFrame:
     """Curriculum/length bucketing WITHOUT a global sort: an ntile-style
     equal-population bucket id per doc, computed scalably.
 
@@ -101,12 +91,10 @@ def quantile_buckets(
     comparison, so the edge doubles are bit-identical cross-engine (the
     same discipline as every derived double here).
 
-    ``exact=True`` (the oracle-checkable default) uses ``percentile``,
-    which buffers each aggregation state's values — fine at fixture scale,
-    wrong at 100 TB. ``exact=False`` swaps in ``approx_percentile``
-    (t-digest sketch, constant state, same interface); bucket semantics are
-    identical, edge placement is approximate — the variant a real corpus
-    runs, not oracle-paired because sketches are engine-specific.
+    The edges are exact ``percentile``s, which buffer each aggregation
+    state's values — fine at fixture scale and what the oracle replays,
+    but a corpus-scale run would need a sketch (``approx_percentile``)
+    and give up oracle parity.
     """
     # A NULL text has no length to bucket — excluded explicitly on both
     # engines (round-9 hostile nulls sweep).
@@ -114,11 +102,10 @@ def quantile_buckets(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), " ")).cast("long").alias("n_tokens"),
     )
-    pfn = "percentile" if exact else "approx_percentile"
     edges = toks.agg(
         *[
             half_up_round(
-                F.expr(f"{pfn}(n_tokens, {i / n_buckets})"), 4
+                F.expr(f"percentile(n_tokens, {i / n_buckets})"), 4
             ).alias(f"__e{i}")
             for i in range(1, n_buckets)
         ]
@@ -180,10 +167,8 @@ def fixed_width_histogram(
     )
 
 
-def contingency_chi2(
-    df: DataFrame, row_col: str = "lang", col_col: str = "source"
-) -> DataFrame:
-    """Per-cell χ² contingency terms for two categorical columns — the
+def contingency_chi2(df: DataFrame) -> DataFrame:
+    """Per-cell χ² contingency terms for (lang, source) — the
     drift/independence test a corpus monitor runs on (lang × source),
     entirely in exact integers. The full table INCLUDES zero cells
     (every row-category × col-category pair; absent observations are
@@ -207,20 +192,20 @@ def contingency_chi2(
     is scanned ONCE (the cell table is consumed four ways →
     localCheckpoint, the twice-consumed-subtree rule)."""
     o = (
-        df.groupBy(row_col, col_col)
+        df.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("__o"))
         .localCheckpoint()
     )
-    r = o.groupBy(row_col).agg(F.sum("__o").alias("__r"))
-    c = o.groupBy(col_col).agg(F.sum("__o").alias("__c"))
+    r = o.groupBy("lang").agg(F.sum("__o").alias("__r"))
+    c = o.groupBy("source").agg(F.sum("__o").alias("__c"))
     n = o.agg(F.sum("__o").alias("__n"))
     return (
         r.crossJoin(F.broadcast(c))
-        .join(o, [row_col, col_col], "left")
+        .join(o, ["lang", "source"], "left")
         .crossJoin(F.broadcast(n))
         .select(
-            row_col,
-            col_col,
+            "lang",
+            "source",
             F.coalesce(F.col("__o"), F.lit(0)).cast("long").alias("observed"),
             F.expr(
                 "CAST(CAST(__r AS DECIMAL(38,0)) * __c * 1000000"

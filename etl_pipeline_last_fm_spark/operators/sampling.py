@@ -74,13 +74,7 @@ def split_assign(
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> DataFrame:
+def stratified_sample(df: DataFrame, strata_col: str, n_per_stratum: int) -> DataFrame:
     """Deterministic n-per-stratum sample: rank records inside each stratum
     by (hash, id) and keep the first n. A fixed-size balanced subsample —
     the 'equal docs per language/source' knob every data-mixing recipe needs.
@@ -90,22 +84,17 @@ def stratified_sample(
     in-flight rather than sorting whole strata.
     """
     h = portable_hash60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))
+        F.concat(F.lit("v1"), F.lit(":"), F.col("doc_id").cast("string"))
     )
-    w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col("doc_id").asc())
     return (
         df.withColumn("sample_rank", F.row_number().over(w).cast("int"))
         .filter(F.col("sample_rank") <= n_per_stratum)
-        .select(id_col, strata_col, "sample_rank")
+        .select("doc_id", strata_col, "sample_rank")
     )
 
 
-def group_split_assign(
-    df: DataFrame,
-    group_col: str = "user_id",
-    weights: dict[str, int] | None = None,
-    salt: str = "gs1",
-) -> DataFrame:
+def group_split_assign(df: DataFrame, group_col: str = "user_id") -> DataFrame:
     """Leakage-safe split: hash the GROUP key, not the record id, so every
     record of a group lands in the same split. The difference between this
     and ``split_assign`` is the difference between a valid eval and train/
@@ -116,37 +105,29 @@ def group_split_assign(
     re-weighting); pure per-row expression — no shuffle, no group
     materialization, groups need never fit anywhere.
     """
-    weights = weights or _DEFAULT_WEIGHTS
-    bucket = _bucket_expr(salt, group_col)
-    return df.withColumn("split", _split_case(bucket, weights))
+    bucket = _bucket_expr("gs1", group_col)
+    return df.withColumn("split", _split_case(bucket, _DEFAULT_WEIGHTS))
 
 
-def mixture_sample(
-    df: DataFrame,
-    rates_bps: dict[str, int],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    default_bps: int = 10_000,
-    salt: str = "mix1",
-) -> DataFrame:
+def mixture_sample(df: DataFrame, rates_bps: dict[str, int]) -> DataFrame:
     """Deterministic per-stratum Bernoulli sampling — the mixture-weights
     knob of a training corpus (downsample the dominant language, upsample
     the rare ones, temperature-flatten sources).
 
-    ``rates_bps`` maps stratum value -> keep rate in basis points (10000 =
-    keep all); unlisted strata keep ``default_bps``. Keep/drop is a pure
-    function of (salt, id): re-runs, repartitions, and engine changes keep
+    ``rates_bps`` maps ``lang`` value -> keep rate in basis points (10000 =
+    keep all); unlisted strata keep all. Keep/drop is a pure function of
+    (salt, doc_id): re-runs, repartitions, and engine changes keep
     the same docs, and raising a rate strictly GROWS the kept set (nested
     samples — the property that makes mixture sweeps comparable run to
     run). Plain scan + filter: no shuffle at any scale.
     """
     bucket = F.pmod(
-        portable_hash60(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))),
+        portable_hash60(F.concat(F.lit("mix1"), F.lit(":"), F.col("doc_id").cast("string"))),
         F.lit(10_000),
     )
-    rate = F.lit(default_bps)
+    rate = F.lit(10_000)
     for value, bps in rates_bps.items():
-        rate = F.when(F.col(stratum_col) == value, F.lit(bps)).otherwise(rate)
+        rate = F.when(F.col("lang") == value, F.lit(bps)).otherwise(rate)
     return df.filter(bucket < rate)
 
 
@@ -156,7 +137,6 @@ def token_budget_sample(
     source_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    salt: str = "v1",
 ) -> DataFrame:
     """Per-source token-budget cap — the mixing knob that is denominated in
     TOKENS, not documents (a data recipe says '30B tokens of web, 5B of
@@ -179,7 +159,7 @@ def token_budget_sample(
     on n_sources * 256 rows — kilobytes at any corpus size.
     Returns (doc_id, source, n_tokens, cum_before)."""
     h = portable_hash60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))
+        F.concat(F.lit("v1"), F.lit(":"), F.col(id_col).cast("string"))
     )
     n_tok = F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")
     budget = F.lit(None).cast("long")
@@ -228,13 +208,7 @@ def token_budget_sample(
     )
 
 
-def weighted_sample(
-    docs: DataFrame,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "ws1",
-) -> DataFrame:
+def weighted_sample(docs: DataFrame, k: int = 50) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k items, inclusion odds
     proportional to token count — the Efraimidis-Spirakis A-ES scheme:
     key = u^(1/w) with u uniform in (0,1], keep the k largest keys.
@@ -248,16 +222,16 @@ def weighted_sample(
     Returns (doc_id, n_tokens, wkey) ordered by wkey desc; wkey is emitted
     rounded (display only) — selection ranks on the full-precision key.
     """
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), " ")).cast("long")
+    n_tok = F.size(F.split(F.trim(F.col("text")), " ")).cast("long")
     h = portable_hash60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))
+        F.concat(F.lit("ws1"), F.lit(":"), F.col("doc_id").cast("string"))
     )
     # (h+1) / 2^60 in (0, 1]: h is uniform in [0, 2^60).
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     wkey = F.pow(u, F.lit(1.0) / n_tok)
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             n_tok.alias("n_tokens"),
             wkey.alias("__wkey"),
         )

@@ -25,26 +25,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def scd2_history(
-    log: DataFrame,
-    key: str = "o_custkey",
-    attr: str = "o_orderpriority",
-    ts: str = "o_orderdate",
-    tiebreak: str = "o_orderkey",
-) -> DataFrame:
-    """Collapse an observation log into SCD2 rows.
+def scd2_history(log: DataFrame) -> DataFrame:
+    """Collapse an orders log into SCD2 rows of each customer's order
+    priority, ordered by (o_orderdate, o_orderkey).
 
-    Returns (key, attr, version, valid_from, valid_to, is_current) with
-    version numbering from 1 per entity, valid_from/valid_to formatted
+    Returns (o_custkey, o_orderpriority, version, valid_from, valid_to,
+    is_current) with version numbering from 1 per entity, valid_from/valid_to formatted
     yyyy-MM-dd (half-open; valid_to NULL on the current row).
     """
     obs = log.select(
-        key,
-        attr,
-        F.date_format(ts, "yyyy-MM-dd").alias("__d"),
-        F.col(tiebreak).cast("long").alias("__tb"),
+        "o_custkey",
+        "o_orderpriority",
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("__d"),
+        F.col("o_orderkey").cast("long").alias("__tb"),
     )
-    return _scd2_from_obs(obs, key, attr)
+    return _scd2_from_obs(obs, "o_custkey", "o_orderpriority")
 
 
 def _scd2_from_obs(obs: DataFrame, key: str, attr: str) -> DataFrame:
@@ -82,12 +77,7 @@ def _scd2_from_obs(obs: DataFrame, key: str, attr: str) -> DataFrame:
     )
 
 
-def scd2_as_of(
-    history: DataFrame,
-    as_of: str,
-    key: str = "o_custkey",
-    attr: str = "o_orderpriority",
-) -> DataFrame:
+def scd2_as_of(history: DataFrame, as_of: str) -> DataFrame:
     """Point-in-time lookup over an SCD2 table: each entity's attribute
     value as of a date — the query SCD2 exists to answer. Half-open
     interval semantics (valid_from <= d < valid_to, NULL valid_to = open):
@@ -98,7 +88,7 @@ def scd2_as_of(
     return history.filter(
         (F.col("valid_from") <= d)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > d))
-    ).select(key, attr, "version", "valid_from")
+    ).select("o_custkey", "o_orderpriority", "version", "valid_from")
 
 
 def snapshot_diff(
@@ -171,18 +161,14 @@ MERGE_CUTOFF_US = 1705363200000000  # 2024-01-16T00:00:00Z
 # ---------------------------------------------------------------------------
 
 
-def merge_upsert(
-    events: DataFrame,
-    cutoff_us: int = MERGE_CUTOFF_US,
-    delete_type: str = "error",
-) -> DataFrame:
+def merge_upsert(events: DataFrame, cutoff_us: int = MERGE_CUTOFF_US) -> DataFrame:
     """ANSI ``MERGE INTO`` semantics over the event log — the general
     upsert the reference's ``ON CONFLICT DO NOTHING`` (SURVEY §2.7) is
     the insert-only special case of:
 
         target:  latest pre-cutoff event per user  -> (user_id, value, ...)
         source:  post-cutoff events, compacted to the latest op per user;
-                 ``delete_type`` events are DELETEs, all others UPSERTs
+                 ``error`` events are DELETEs, all others UPSERTs
         WHEN MATCHED     AND op = delete -> DELETE
         WHEN MATCHED     AND op = upsert -> UPDATE value, updated_us
         WHEN NOT MATCHED AND op = upsert -> INSERT
@@ -225,7 +211,7 @@ def merge_upsert(
         .filter(F.col("__rn") == 1)
         .select(
             F.col("user_id").alias("s_uid"),
-            (F.col("event_type") == delete_type).alias("s_del"),
+            (F.col("event_type") == "error").alias("s_del"),
             F.col("value").alias("s_value"),
             F.col("us").alias("s_us"),
         )

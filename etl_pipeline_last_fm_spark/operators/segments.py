@@ -23,13 +23,7 @@ from etl_pipeline_last_fm_spark.operators.timeseries import (
 )
 
 
-def rfm_segments(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    n_tiles: int = 5,
-) -> DataFrame:
+def rfm_segments(events: DataFrame, n_tiles: int = 5) -> DataFrame:
     """RFM segmentation: per user, Recency (whole days between the
     user's last event and the corpus frontier), Frequency (event count)
     and Monetary (exact cents), each bucketed into ``n_tiles`` quantile
@@ -55,9 +49,9 @@ def rfm_segments(
         value_ordered_row_number,
     )
 
-    cents = half_up_round(F.col(value_col) * 100).cast("long")
-    per_user = events.groupBy(F.col(key_col).alias("user_id")).agg(
-        F.max(ts_us(F.col(ts_col))).alias("__last_us"),
+    cents = half_up_round(F.col("value") * 100).cast("long")
+    per_user = events.groupBy("user_id").agg(
+        F.max(ts_us(F.col("ts"))).alias("__last_us"),
         F.count(F.lit(1)).alias("frequency"),
         F.sum(cents).alias("monetary_cents"),
     )
@@ -102,13 +96,7 @@ def rfm_segments(
     )
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def time_weighted_avg(events: DataFrame) -> DataFrame:
     """Per-key TIME-weighted average of the value under last-observation-
     carried-forward weighting: each event's cents hold from its timestamp
     to the next event's, so twap = Σ vᵢ·(tᵢ₊₁−tᵢ) div (t_n − t_1) — the
@@ -127,15 +115,15 @@ def time_weighted_avg(
     NULL value/key/ts rows are not observations (round-9 hostile nulls
     sweep; same rule as the ordered folds' batch state)."""
     events = events.where(
-        F.col(value_col).isNotNull()
-        & F.col(key_col).isNotNull()
-        & F.col(ts_col).isNotNull()
+        F.col("value").isNotNull()
+        & F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
     )
     base = events.select(
-        F.col(key_col).alias("user_id"),
-        ts_us(F.col(ts_col)).alias("__us"),
-        F.col(tiebreak_col).alias("__tb"),
-        half_up_round(F.col(value_col) * 100).cast("long").alias("__cents"),
+        "user_id",
+        ts_us(F.col("ts")).alias("__us"),
+        F.col("event_id").alias("__tb"),
+        half_up_round(F.col("value") * 100).cast("long").alias("__cents"),
     )
     w = Window.partitionBy("user_id").orderBy("__us", "__tb")
     seg = base.select(
@@ -193,14 +181,7 @@ def _twap_step(acc, e):
     )
 
 
-def twap_fold_batch(
-    state: DataFrame | None,
-    batch: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def twap_fold_batch(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """Fold one time-slice batch into per-key TWAP state
     (key, n_events, first_us, num, last_cents, last_us, last_tb) —
     ordered-fold member #5 on the shared kernel (``fold_ordered``: same
@@ -211,7 +192,7 @@ def twap_fold_batch(
     exact arithmetic)."""
     return fold_ordered(
         state,
-        _ema_batch_state(batch, key_col, ts_col, value_col, tiebreak_col),
+        _ema_batch_state(batch, "user_id", "ts", "value", "event_id"),
         "twap_fold_batch",
         lambda prev: F.struct(
             F.coalesce(prev("num"), F.lit(0).cast(_DEC)).cast(_DEC).alias("num"),
@@ -229,7 +210,7 @@ def twap_fold_batch(
     )
 
 
-def present_twap_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
+def present_twap_state(state: DataFrame) -> DataFrame:
     """Project the carried fold state to the graded TWAP shape — the
     SAME filter and truncating division as the one-shot operator, so
     the maintenance identity is checkable at the output schema."""
@@ -238,7 +219,7 @@ def present_twap_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
             (F.col("n_events") >= 2) & (F.col("last_us") > F.col("first_us"))
         )
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "n_events",
             (F.col("last_us") - F.col("first_us")).alias("span_us"),
             F.expr(

@@ -49,8 +49,8 @@ Scale notes (documents is the 100 TB table):
   shingle; rank/size is one window per doc_id;
 - the candidate join shuffles only PREFIX rows (a ~(1-t) fraction of each
   doc, and the rarest tokens at that);
-- verification re-shingles only candidate docs (semi-join first), exactly
-  like minhash_lsh_pairs' verification stage.
+- verification re-shingles only candidate docs (semi-join first):
+  dedup.verify_pairs, the verifier minhash_lsh_pairs shares.
 """
 
 from __future__ import annotations
@@ -58,8 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
-from etl_pipeline_last_fm_spark.operators.dedup import _shingles
+from etl_pipeline_last_fm_spark.operators.dedup import _bucket_pairs, verify_pairs
 from etl_pipeline_last_fm_spark.operators.spread import spread_scan
 
 
@@ -143,13 +142,10 @@ def prefix_filter_pairs(
     df_counts = rows.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     prefix = _prefixed(rows, df_counts, threshold_num, threshold_den)
 
-    # Candidates via bucket expansion, NOT a prefix-to-prefix self-join: a
-    # self-join executes the prefix subtree (shingle rows + df join + two
-    # windows) TWICE, the plan's dominant cost — the same trap
-    # minhash_lsh_pairs' band self-join had. One groupBy materializes each
-    # prefix token's id list in the aggregation buffer; pair expansion
-    # explodes cheap integer sequences over the stored array. ids sorted
-    # ascending => doc_a < doc_b by construction.
+    # Candidates via bucket expansion (dedup._bucket_pairs), NOT a
+    # prefix-to-prefix self-join: a self-join executes the prefix subtree
+    # (shingle rows + df join + two windows) TWICE, the plan's dominant
+    # cost. ids sorted ascending => doc_a < doc_b by construction.
     buckets = (
         prefix.groupBy("shingle")
         .agg(
@@ -159,84 +155,27 @@ def prefix_filter_pairs(
         )
         .filter(F.size("ids") >= 2)
     )
-    # persist(): cands feeds three consumers (both id sides + the pair
-    # assembly); candidate volume is sum(df_prefix^2) over PREFIX tokens —
-    # the rarest-first order makes that near-linear in the corpus, the
-    # lemma makes it complete. Default storage level spills to disk.
-    # Length filter (AllPairs, lossless): J(A,B) >= t needs |A∩B| >=
-    # t*max(|A|,|B|), and |A∩B| <= min(|A|,|B|), so den*min >= num*max —
-    # checked in INTEGER arithmetic inside the pair expansion, before the
-    # pair ever materializes past this projection.
-    a_s = F.element_at("ids", F.col("i") + 1)
-    b_s = F.element_at("ids", F.col("j") + 1)
+    # Candidate volume is sum(df_prefix^2) over PREFIX tokens — the
+    # rarest-first order makes that near-linear in the corpus, the lemma
+    # makes it complete. Length filter (AllPairs, lossless): J(A,B) >= t
+    # needs |A∩B| >= t*max(|A|,|B|), and |A∩B| <= min(|A|,|B|), so
+    # den*min >= num*max — checked in INTEGER arithmetic inside the pair
+    # expansion, before the pair ever materializes past this projection.
     cands = (
-        buckets.select(
-            "ids", F.explode(F.expr("sequence(0, size(ids) - 2)")).alias("i")
-        )
-        .select(
-            "ids", "i", F.explode(F.expr("sequence(i + 1, size(ids) - 1)")).alias("j")
-        )
+        _bucket_pairs(buckets, "ids")
         .filter(
-            F.least(a_s["sz"], b_s["sz"]) * F.lit(threshold_den)
-            >= F.greatest(a_s["sz"], b_s["sz"]) * F.lit(threshold_num)
+            F.least("a.sz", "b.sz") * F.lit(threshold_den)
+            >= F.greatest("a.sz", "b.sz") * F.lit(threshold_num)
         )
-        .select(a_s["doc_id"].alias("doc_a"), b_s["doc_id"].alias("doc_b"))
-        .distinct()
-        .persist()
-    )
-
-    # Exact verification on candidate docs only (semi-join first), integer
-    # threshold comparison — mirrors minhash_lsh_pairs' verification stage.
-    return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
-
-
-def _verify_pairs(
-    docs: DataFrame,
-    cands: DataFrame,
-    threshold_num: int,
-    threshold_den: int,
-    shingle_len: int,
-) -> DataFrame:
-    """Exact-Jaccard verification of (doc_a, doc_b) candidates: re-shingle
-    only candidate docs (semi-join first), integer threshold comparison —
-    the shared tail of every blocking strategy in this module."""
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .union(cands.select(F.col("doc_b").alias("doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # persist() (OPTIMIZATION r14): cand_shingles feeds BOTH pair sides —
-    # unpersisted, each side re-runs the tokenize+shingle pass over every
-    # candidate doc (the same 2x minhash_lsh_pairs' verify stage fixed in
-    # r10; measured here: SNM-multipass 6.0 -> 3.5 s min-of-4 interleaved
-    # at sf0.1). Footprint = candidate docs' shingle arrays — duplicate-
-    # density-proportional, spills to disk; same cache-ownership note as
-    # the callers' cands persists (lives until session eviction;
-    # bench.py clearCaches between samples).
-    cand_shingles = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks"))
-        .select("doc_id", _shingles("__toks", shingle_len).alias("shingles"))
-        .persist()
-    )
-    sh_a = cand_shingles.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    sh_b = cand_shingles.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - shared
-    return (
-        cands.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .filter(shared * F.lit(threshold_den) >= F.lit(threshold_num) * union)
-        .select(
-            "doc_a",
-            "doc_b",
-            half_up_round(shared.cast("double") / union, 4).alias("jaccard"),
-        )
-    )
+    return verify_pairs(docs, cands, _at_least(threshold_num, threshold_den), shingle_len)
+
+
+def _at_least(num: int, den: int):
+    """``verify_pairs``' exact threshold test: shared·den >= num·union."""
+    return lambda shared, union: shared * F.lit(den) >= F.lit(num) * union
 
 
 def sorted_neighborhood_pairs(
@@ -244,7 +183,6 @@ def sorted_neighborhood_pairs(
     window: int = 10,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    shingle_len: int = 3,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) candidate generation: sort by a cheap key
     (trimmed text, doc_id tie-break), slide a ``window``-row neighborhood,
@@ -267,10 +205,8 @@ def sorted_neighborhood_pairs(
     with a bounded window-1 fan-out per row, so candidate volume is
     exactly (window-1) * n — linear by construction.
     """
-    cands = _snm_candidates(
-        docs, F.trim(F.col("text")), window
-    ).persist()
-    return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
+    cands = _snm_candidates(docs, F.trim(F.col("text")), window)
+    return verify_pairs(docs, cands, _at_least(threshold_num, threshold_den), 3)
 
 
 def _snm_candidates(docs: DataFrame, key: Column, window: int) -> DataFrame:
@@ -309,7 +245,6 @@ def sorted_neighborhood_pairs_multipass(
     window: int = 10,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    shingle_len: int = 3,
 ) -> DataFrame:
     """Classic multi-pass SNM: a second pass sorted by the REVERSED text
     unions its candidates with the forward pass before one shared
@@ -320,5 +255,5 @@ def sorted_neighborhood_pairs_multipass(
     linear by construction."""
     fwd = _snm_candidates(docs, F.trim(F.col("text")), window)
     rev = _snm_candidates(docs, F.reverse(F.trim(F.col("text"))), window)
-    cands = fwd.unionByName(rev).distinct().persist()
-    return _verify_pairs(docs, cands, threshold_num, threshold_den, shingle_len)
+    cands = fwd.unionByName(rev).distinct()
+    return verify_pairs(docs, cands, _at_least(threshold_num, threshold_den), 3)

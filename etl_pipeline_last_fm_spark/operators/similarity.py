@@ -45,6 +45,10 @@ from etl_pipeline_last_fm_spark.operators.rounds import fold_rounds
 _ID, _VEC = "vec_id", "embedding"
 _LSH_SEED = 42
 
+#: Product quantization: subspaces per vector and codes per subspace.
+PQ_SUBSPACES = 4
+PQ_CODES = 16
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -336,9 +340,11 @@ def _seeds(df: DataFrame, n: int, vec: str | Column = "e") -> list[tuple[int, li
     """(id, vector) of the rows with id < ``n``, in id order — the one
     bounded driver collect behind every seeded index. The selection is
     pure SQL (``WHERE id < n``), so the DuckDB oracles rebuild the
-    identical index."""
-    rows = df.filter(F.col("id") < n).select("id", vec).orderBy("id").collect()
-    return [(int(r[0]), list(r[1])) for r in rows]
+    identical index. The at most ``n`` rows are sorted on the driver: a
+    global ``orderBy`` would add a range-partitioning sample job and a
+    shuffle to every build."""
+    rows = df.filter(F.col("id") < n).select("id", vec).collect()
+    return sorted((int(r[0]), list(r[1])) for r in rows)
 
 
 def seeded_centroids(emb: DataFrame, n_centroids: int = 16) -> list[tuple[int, list[float]]]:
@@ -481,7 +487,7 @@ def _tables(books, sv: str = "sv", vv: str = "vv") -> list[Column]:
 
 
 def pq_seed_codebooks(
-    emb: DataFrame, n_subspaces: int = 4, n_codes: int = 16
+    emb: DataFrame, n_subspaces: int = PQ_SUBSPACES, n_codes: int = PQ_CODES
 ) -> list[list[tuple[int, list[float]]]]:
     """Seed PQ codebooks: subspace m's codes are the m-th subvectors of the
     ``n_codes`` lowest-id corpus vectors (no training — the same bounded,
@@ -496,17 +502,11 @@ def _raw_subspaces(v: DataFrame, books) -> DataFrame:
     return _with_subspaces(v, ["id", "e"], [_sub_vec_sql("e", m, sub) for m in range(len(books))])
 
 
-def pq_ann_topk_seeded(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-) -> DataFrame:
+def pq_ann_topk_seeded(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
     """Product-quantization ANN (ADC scoring), fully value-checkable.
 
     The memory side of the ANN trade (IVF/LSH bound CANDIDATES; PQ bounds
-    BYTES): each corpus vector is encoded as n_subspaces small code ids —
+    BYTES): each corpus vector is encoded as PQ_SUBSPACES small code ids —
     64 floats become 4 bytes here — and query-to-vector distance is
     approximated from a per-query distance TABLE (query subvector to each
     code), never from the original vectors. At 100 TB the decoded corpus
@@ -519,11 +519,11 @@ def pq_ann_topk_seeded(
     oracle reproduces the index, the codes, and the ranks exactly.
     Returns (q_id, cand_id, approx_d, rnk); approx_d is the rounded ADC
     squared-L2 (ascending ranks)."""
-    books = pq_seed_codebooks(emb, n_subspaces, n_codes)
+    books = pq_seed_codebooks(emb)
     vx = _raw_subspaces(_vectors(emb), books)
     corpus = vx.select("id", *_codes(books))
     q = vx.filter(F.col("id") < n_queries).select(F.col("id").alias("q_id"), *_tables(books))
-    return _adc_topk(_pairs(corpus, q), n_subspaces, k)
+    return _adc_topk(_pairs(corpus, q), PQ_SUBSPACES, k)
 
 
 def ann_recall_gate(
@@ -573,8 +573,6 @@ def ivfpq_ann_topk_seeded(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
 ) -> DataFrame:
     """IVF-PQ: the 100 TB ANN composition the IVF and PQ docstrings point
     at, actually built — coarse seeded-centroid bucketing bounds the
@@ -596,10 +594,10 @@ def ivfpq_ann_topk_seeded(
     """
     # ONE bounded collect serves both seed structures (OPTIMIZATION r13):
     # the centroid and codebook selections are both `id < n` prefixes of
-    # the same rows, so fetch max(n_centroids, n_codes) once and slice.
-    seeds = _seeds(_vectors(emb), max(n_centroids, n_codes))
+    # the same rows, so fetch max(n_centroids, PQ_CODES) once and slice.
+    seeds = _seeds(_vectors(emb), max(n_centroids, PQ_CODES))
     cents = [s for s in seeds if s[0] < n_centroids]
-    books = _codebooks([s for s in seeds if s[0] < n_codes], n_subspaces)
+    books = _codebooks([s for s in seeds if s[0] < PQ_CODES], PQ_SUBSPACES)
     # The full-vector norm is the FULL fold over e, not sqrt(vv0+..+vv3):
     # the identical float op sequence to the inline form, so identical
     # doubles.
@@ -608,17 +606,13 @@ def ivfpq_ann_topk_seeded(
     q = vx.filter(F.col("id") < n_queries).select(
         F.col("id").alias("q_id"), _probes(cents, nprobe).alias("cluster"), *_tables(books)
     )
-    return _adc_topk(_pairs(corpus, q, "cluster"), n_subspaces, k)
+    return _adc_topk(_pairs(corpus, q, "cluster"), PQ_SUBSPACES, k)
 
 
 def ivfpq_residual_ann_topk_seeded(
     emb: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
 ) -> DataFrame:
     """RESIDUAL IVF-PQ — the FAISS-faithful refinement of
     ``ivfpq_ann_topk_seeded``: codes quantize v - centroid(v) instead of
@@ -627,10 +621,11 @@ def ivfpq_residual_ann_topk_seeded(
     already captured). The query side mirrors it: each probe gets its own
     distance tables computed from q - centroid(probe).
 
-    Still fully value-checked: centroids are the seeded literals; the
-    residual codebooks are the residual subvectors of the ``n_codes``
+    Still fully value-checked: centroids are the 16 seeded literals, of
+    which each query probes 4; the
+    residual codebooks are the residual subvectors of the ``PQ_CODES``
     lowest-id vectors, computed by the SAME expressions the oracle
-    re-derives relationally (bounded n_codes-row collect on the Spark
+    re-derives relationally (bounded PQ_CODES-row collect on the Spark
     side, CTE on the DuckDB side); every argmin/rank is a packed rounded
     integer. The subtraction is materialized per element on both engines
     (zip_with / list_zip x[1]-x[2]) so the float operation sequence is
@@ -641,8 +636,8 @@ def ivfpq_residual_ann_topk_seeded(
     broadcast probe join + one window); the residual subtraction adds one
     vectorized pass per subspace.
     """
-    cents = seeded_centroids(emb, n_centroids)
-    sub = len(cents[0][1]) // n_subspaces
+    cents = seeded_centroids(emb)
+    sub = len(cents[0][1]) // PQ_SUBSPACES
     v = _normed(_vectors(emb))
     # Literal centroid subvector lookup tables, POSITIONAL in `cents`
     # order. The cluster column carries the centroid ID (a raw seed
@@ -656,7 +651,7 @@ def ivfpq_residual_ann_topk_seeded(
         "array("
         + ", ".join(_sql_double_array(ce[m * sub : (m + 1) * sub]) for _, ce in cents)
         + ")"
-        for m in range(n_subspaces)
+        for m in range(PQ_SUBSPACES)
     ]
     cid_to_pos_sql = "map(" + ", ".join(
         f"{cid}, {pos}" for pos, (cid, _) in enumerate(cents)
@@ -667,27 +662,27 @@ def ivfpq_residual_ann_topk_seeded(
             f"zip_with({_sub_vec_sql(vec_sql, m, sub)},"
             f" element_at({csub_sql[m]}, element_at({cid_to_pos_sql}, cluster) + 1),"
             f" (x, y) -> x - y)"
-            for m in range(n_subspaces)
+            for m in range(PQ_SUBSPACES)
         ]
 
     rx = _with_subspaces(
         v.withColumn("cluster", _nearest_cluster(cents)),
         ["id", "e", "cluster"], residuals("e"), "rsv", "rvv",
     )
-    # Residual codebooks: the residual subvectors of the n_codes lowest-id
+    # Residual codebooks: the residual subvectors of the PQ_CODES lowest-id
     # vectors, computed by the expressions above (bounded collect; the
     # oracle re-derives the same rows relationally).
-    rsv = F.concat(*[f"rsv{m}" for m in range(n_subspaces)])
-    books = _codebooks(_seeds(rx, n_codes, rsv), n_subspaces)
+    rsv = F.concat(*[f"rsv{m}" for m in range(PQ_SUBSPACES)])
+    books = _codebooks(_seeds(rx, PQ_CODES, rsv), PQ_SUBSPACES)
     corpus = rx.select("id", "cluster", *_codes(books, "rsv", "rvv"))
     # Per (query, probe): residual vs the PROBED centroid, then its tables.
     qbase = v.filter(F.col("id") < n_queries).select(
-        F.col("id").alias("q_id"), F.col("e").alias("qe"), _probes(cents, nprobe).alias("cluster")
+        F.col("id").alias("q_id"), F.col("e").alias("qe"), _probes(cents, 4).alias("cluster")
     )
     q = _with_subspaces(qbase, ["q_id", "cluster"], residuals("qe"), "qr", "qv").select(
         "q_id", "cluster", *_tables(books, "qr", "qv")
     )
-    return _adc_topk(_pairs(corpus, q, "cluster"), n_subspaces, k)
+    return _adc_topk(_pairs(corpus, q, "cluster"), PQ_SUBSPACES, k)
 
 
 # ---------------------------------------------------------------------------

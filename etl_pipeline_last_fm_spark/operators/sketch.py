@@ -66,7 +66,6 @@ def hll_distinct(
     value_col: str,
     group_cols: list[str] | None = None,
     b: int = 6,
-    salt: str = "hll1",
 ) -> DataFrame:
     """Approximate COUNT(DISTINCT value_col) per group, cross-engine
     reproducible. Returns group cols + (n_exact, n_approx) — the exact
@@ -76,7 +75,7 @@ def hll_distinct(
     (13% at b=6). The m registers per group are the full sketch state.
     """
     group_cols = group_cols or []
-    per_bucket = hll_registers(df, value_col, group_cols, b, salt)
+    per_bucket = hll_registers(df, value_col, group_cols, b)
     # countDistinct inside buckets would defeat the point; the exact count
     # is a separate partial+final distinct agg on the same shuffle data.
     exact = df.groupBy(*group_cols).agg(
@@ -93,14 +92,13 @@ def hll_registers(
     value_col: str,
     group_cols: list[str],
     b: int = 6,
-    salt: str = "hll1",
 ) -> DataFrame:
     """Register maxima, one row per (group, bucket): the full HLL state
     (group_cols, __bkt, __mj)."""
     m = 1 << b
     width = 60 - b  # bits remaining after the register index
     h = portable_hash60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(value_col).cast("string"))
+        F.concat(F.lit("hll1"), F.lit(":"), F.col(value_col).cast("string"))
     )
     return (
         df.select(
@@ -171,11 +169,9 @@ def _grid_from_census(
 
 def cms_heavy_hitters(
     docs: DataFrame,
-    text_col: str = "text",
     top_k: int = 20,
     depth: int = 4,
     width: int = 1024,
-    salt: str = "cms1",
 ) -> DataFrame:
     """Heavy hitters with Count-Min estimates: the exact top-k tokens (the
     candidate set a real pipeline gets from a cheap pre-pass or prior day)
@@ -186,7 +182,7 @@ def cms_heavy_hitters(
     All counts are exact integers on both engines — no float anywhere.
     """
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("tok")
+        F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     # ONE census feeds both the grid and the exact top-k — the explode +
     # count over the raw stream is the only pass that touches every row,
@@ -195,7 +191,7 @@ def cms_heavy_hitters(
     census = toks.groupBy(F.col("tok").alias("__tok")).agg(
         F.count(F.lit(1)).alias("__n")
     )
-    grid = _grid_from_census(census, depth=depth, width=width, salt=salt)
+    grid = _grid_from_census(census, depth=depth, width=width, salt="cms1")
 
     exact_top = (
         census.select(F.col("__tok").alias("tok"), F.col("__n").alias("n_exact"))
@@ -208,7 +204,7 @@ def cms_heavy_hitters(
         F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("__d"),
     )
     probe_cell = portable_hash60(
-        F.concat(F.lit(salt), F.col("__d").cast("string"), F.lit(":"), F.col("tok"))
+        F.concat(F.lit("cms1"), F.col("__d").cast("string"), F.lit(":"), F.col("tok"))
     ).bitwiseAND(F.lit(width - 1))
     est = (
         probes.withColumn("__cell", probe_cell)

@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 def star_join(
     fact: DataFrame,
     dims: Sequence[tuple[DataFrame, str | list[str] | Column]],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
-    """Join ``fact`` against each ``(dim, on)`` pair with inner equi-joins.
+    """Join ``fact`` against each ``(dim, on)`` pair with inner equi-joins,
+    every dim broadcast-hinted.
 
     ``on`` may be a column name, list of names (USING-style: single output
     key column, as in reference dags/from_dds_to_dm_pg.py:49 ``USING(song_id)``),
@@ -31,6 +31,5 @@ def star_join(
     """
     out = fact
     for dim, on in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on, "inner")
+        out = out.join(F.broadcast(dim), on, "inner")
     return out

@@ -19,7 +19,8 @@ Two implementations:
   two-phase numbering. Range-repartition by the natural key, count rows per
   partition, prefix-sum the counts on the driver (#partitions values, not
   rows), then number within partitions via a partition-local row_number.
-  Equivalent output, no single-partition bottleneck.
+  Equivalent output with no existing dimension (ids 1..N), no
+  single-partition bottleneck; sorted-neighborhood blocking ranks with it.
 
 ``assign_surrogate_keys`` takes its max-id offset from ``offset_by_max``,
 an in-plan 1-row aggregate, so building its frame launches no Spark job.
@@ -73,22 +74,17 @@ def assign_surrogate_keys_distributed(
     new_rows: DataFrame,
     key_col: str,
     natural_order: list[str],
-    existing: DataFrame | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Scalable variant: same ids as ``assign_surrogate_keys`` (dense,
-    natural-key-ordered, max-offset) without a global single-partition sort.
+    """Scalable variant: same ids as ``assign_surrogate_keys`` with no
+    ``existing`` dimension (dense 1..N, natural-key-ordered) without a
+    global single-partition sort.
 
     spark_partition_id + per-partition counts -> driver prefix sum (one int
     per partition) -> partition-local row_number. The only global step moves
     #partitions integers, not rows. The persisted intermediate it pins
     lives until session eviction (see the persist() comment below).
     """
-    offset = 0
-    if existing is not None:
-        row = existing.agg(F.max(key_col).alias("m")).collect()[0]
-        offset = row["m"] or 0
-
     parts = num_partitions or new_rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     ranged = new_rows.repartitionByRange(int(parts), *[F.col(c) for c in natural_order])
     # persist(): the per-partition counts are collected in ONE action and
@@ -105,7 +101,7 @@ def assign_surrogate_keys_distributed(
         for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     prefix: dict[int, int] = {}
-    running = offset
+    running = 0
     for pid in sorted(counts):
         prefix[pid] = running
         running += counts[pid]
@@ -118,7 +114,7 @@ def assign_surrogate_keys_distributed(
         # Empty batch: create_map() with no entries types as map<void,void>
         # and map()[int] fails analysis — there are no rows to number, so
         # any well-typed offset expression is correct (never evaluated).
-        mapping = F.lit(offset)
+        mapping = F.lit(0)
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in natural_order])
     return (
         with_pid.withColumn(

@@ -47,21 +47,16 @@ def _km_step(s, n, d):
     return ((num - num % den) / den).cast("long")
 
 
-def km_survival(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    censor_days: int = DEFAULT_CENSOR_DAYS,
-) -> DataFrame:
+def km_survival(events: DataFrame, censor_days: int = DEFAULT_CENSOR_DAYS) -> DataFrame:
     """Kaplan–Meier risk table over per-key lifetimes (whole days from
     first to last event). Output, one row per distinct lifetime day:
     (t_day, n_risk, n_churned, n_censored, survival_ppm) — survival_ppm
     the exact truncated-integer KM product AFTER day t's churns."""
     from etl_pipeline_last_fm_spark.functions.scalar import ts_us
 
-    us = ts_us(F.col(ts_col))
+    us = ts_us(F.col("ts"))
     day_us = 86_400_000_000
-    per_key = events.groupBy(key_col).agg(
+    per_key = events.groupBy("user_id").agg(
         F.min(us).alias("__first"), F.max(us).alias("__last")
     )
     frontier = per_key.agg(F.max("__last").alias("__frontier"))

@@ -63,11 +63,15 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def rolling_fingerprint_rows(
-    docs: DataFrame, k: int = 16, window: int = 8, portable: bool = False
-) -> DataFrame:
-    """Winnowing document fingerprints (the MOSS scheme): hash every k-char
-    gram (rolling-hash family), keep each sliding window's minimum, dedupe.
+#: Winnowing: characters per hashed gram, and grams per sliding window.
+GRAM_CHARS = 16
+WINNOW_WINDOW = 8
+
+
+def rolling_fingerprint_rows(docs: DataFrame, portable: bool = False) -> DataFrame:
+    """Winnowing document fingerprints (the MOSS scheme): hash every
+    ``GRAM_CHARS``-char gram (rolling-hash family), keep each
+    ``WINNOW_WINDOW``-gram sliding window's minimum, dedupe.
     Returns distinct (doc_id, fp) rows.
 
     Relational formulation built for both scale and codegen: the generator
@@ -88,24 +92,24 @@ def rolling_fingerprint_rows(
     # per-doc results are independent of partitioning (same window
     # partitioned by doc_id, unchanged oracle).
     docs = spread_scan(docs, "doc_id")
-    gram = F.expr(f"substring(text, pos, {k})")
+    gram = F.expr(f"substring(text, pos, {GRAM_CHARS})")
     gh = portable_hash60(gram) if portable else F.xxhash64(gram)
     grams = docs.select(
         "doc_id",
-        F.expr(f"explode(sequence(1, greatest(length(text) - {k} + 1, 1)))").alias("pos"),
+        F.expr(f"explode(sequence(1, greatest(length(text) - {GRAM_CHARS} + 1, 1)))").alias("pos"),
         F.col("text"),
     ).select(
         "doc_id",
         "pos",
         gh.alias("gh"),
-        F.greatest(F.length("text") - F.lit(k - 1), F.lit(1)).alias("__ng"),
+        F.greatest(F.length("text") - F.lit(GRAM_CHARS - 1), F.lit(1)).alias("__ng"),
     )
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
+    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_WINDOW - 1)
     return (
         grams.withColumn("__wmin", F.min("gh").over(w))
         # Only full windows (plus the single partial window of a too-short
         # doc) — mirrors winnowing's window count of max(G - w + 1, 1).
-        .filter(F.col("pos") <= F.greatest(F.col("__ng") - F.lit(window - 1), F.lit(1)))
+        .filter(F.col("pos") <= F.greatest(F.col("__ng") - F.lit(WINNOW_WINDOW - 1), F.lit(1)))
         .select("doc_id", F.col("__wmin").alias("fp"))
         .distinct()
     )
@@ -114,15 +118,13 @@ def rolling_fingerprint_rows(
 def fingerprint_overlap_pairs(
     docs: DataFrame,
     min_shared: int = 5,
-    k: int = 16,
-    window: int = 8,
     portable: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared winnowing fingerprints
     (equi-join on the fingerprint — shared fingerprints localize common
     passages, so the join output is proportional to actual overlap,
     near-linear for a mostly-unique corpus)."""
-    fps = rolling_fingerprint_rows(docs, k, window, portable=portable)
+    fps = rolling_fingerprint_rows(docs, portable=portable)
     a = fps.alias("a")
     b = fps.alias("b")
     return (
@@ -225,7 +227,7 @@ def binary_meta(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def lm_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lm_score(docs: DataFrame) -> DataFrame:
     """Unigram language-model document scoring (the CCNet-style statistical
     quality filter): mean per-token log-probability under the corpus's own
     add-one-smoothed unigram distribution. Docs of frequent tokens score
@@ -255,7 +257,7 @@ def lm_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (floor division — exact).
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_tokens()).alias("tok")
+        "doc_id", F.explode(_tokens()).alias("tok")
     ).filter(F.col("tok") != "")
     census = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     totals = census.agg(
@@ -291,7 +293,7 @@ def lm_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lm_score_bigram(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lm_score_bigram(docs: DataFrame) -> DataFrame:
     """BIGRAM language-model document scoring — the conditional sibling
     of ``lm_score``: mean per-bigram log P(wᵢ | wᵢ₋₁) under the corpus's
     own add-one-smoothed bigram model, P(b|a) = (c(a,b)+1)/(ctx(a)+V)
@@ -311,7 +313,7 @@ def lm_score_bigram(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     bigram census (vocab-sized aggregate, no second corpus pass); the
     logprob table is bigram-type-sized and corpus-growing, so it is NOT
     hint-broadcast (AQE decides); one per-doc sum."""
-    base = docs.select(F.col(id_col).alias("doc_id"), _tokens().alias("__toks"))
+    base = docs.select("doc_id", _tokens().alias("__toks"))
     big = (
         base.filter(F.size("__toks") >= 2)
         .select(
@@ -636,9 +638,7 @@ def collocations(
     )
 
 
-def hashed_features(
-    docs: DataFrame, n_buckets: int = 64, salt: str = "feathash"
-) -> DataFrame:
+def hashed_features(docs: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Hashing-trick featurizer (Weinberger et al.): sparse per-document
     token-count vectors with bucket = portable_hash(salt:token) mod
     n_buckets — the vocabulary-free vectorization a tokenizer-less
@@ -655,7 +655,7 @@ def hashed_features(
     operator, cheaper digest)."""
     tok = F.explode(_tokens()).alias("__t")
     bucket = F.pmod(
-        portable_hash60(F.concat(F.lit(salt), F.lit(":"), F.col("__t"))),
+        portable_hash60(F.concat(F.lit("feathash"), F.lit(":"), F.col("__t"))),
         F.lit(n_buckets),
     ).cast("int")
     return (
@@ -666,7 +666,7 @@ def hashed_features(
     )
 
 
-def token_entropy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy of the doc's OWN token distribution,
     in integer micro-nats: H = ln n − (1/n)·Σ c·ln c over the doc's
     token-type counts — the lexical-DIVERSITY rung of the quality ladder
@@ -684,7 +684,7 @@ def token_entropy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Scale shape: explode → one (doc, token) hash aggregate → one per-doc
     aggregate. No joins, no windows; both aggregates combine map-side."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_tokens()).alias("tok")
+        "doc_id", F.explode(_tokens()).alias("tok")
     ).filter(F.col("tok") != "")
     census = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     return (

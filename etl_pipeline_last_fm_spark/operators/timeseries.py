@@ -69,13 +69,7 @@ def gapfill_daily(
 # --- Exponential decay fold (round 6) ----------------------------------
 
 
-def ema_halflife(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def ema_halflife(events: DataFrame) -> DataFrame:
     """Per-key exponential moving average with α = ½ and zero init —
     the ORDER-DEPENDENT recurrence  s₀ = 0,  sᵢ = (sᵢ₋₁ + vᵢ) div 2
     over events sorted by (epoch-µs, tiebreak), in exact integer cents
@@ -92,10 +86,7 @@ def ema_halflife(
     then F.aggregate folds the recurrence inside codegen. Per-key cost is
     the key's own history. Oracle: list_reduce(list_prepend(0, list(v
     ORDER BY ...)), (acc, x) -> (acc + x) // 2)."""
-    return present_ema_state(
-        ema_fold_batch(None, events, key_col, ts_col, value_col, tiebreak_col),
-        key_col,
-    )
+    return present_ema_state(ema_fold_batch(None, events))
 
 
 def _halve(acc, s):
@@ -216,14 +207,7 @@ def _n_events(prev) -> F.Column:
     ).alias("n_events")
 
 
-def ema_fold_batch(
-    state: DataFrame | None,
-    batch: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def ema_fold_batch(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """Fold one time-slice batch into per-key EMA state — the
     NON-commutative sibling of the additive mart folds: because the
     recurrence depends on event ORDER, batches must arrive as
@@ -236,7 +220,7 @@ def ema_fold_batch(
     State schema: (key, n_events, ema_cents, max_us, max_tb)."""
     return fold_ordered(
         state,
-        _ema_batch_state(batch, key_col, ts_col, value_col, tiebreak_col),
+        _ema_batch_state(batch, "user_id", "ts", "value", "event_id"),
         "ema_fold_batch",
         lambda prev: F.coalesce(prev("ema_cents"), F.lit(0).cast("long")),
         _halve,
@@ -244,19 +228,14 @@ def ema_fold_batch(
     )
 
 
-def present_ema_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
+def present_ema_state(state: DataFrame) -> DataFrame:
     """Graded output shape of the EMA state: (key, n_events, ema_cents),
     the ``ema_halflife`` shape — the fold frontier stays internal."""
-    return state.select(F.col("key").alias(key_col), "n_events", "ema_cents")
+    return state.select(F.col("key").alias("user_id"), "n_events", "ema_cents")
 
 
-def trend_fit(
-    events: DataFrame,
-    group_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-group ordinary-least-squares TREND: the slope of value (cents)
+def trend_fit(events: DataFrame) -> DataFrame:
+    """Per-event_type ordinary-least-squares TREND: the slope of value (cents)
     against time (whole days), from the closed form
         slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)
     computed ENTIRELY in integers and presented as exact ppm-cents/day
@@ -267,11 +246,10 @@ def trend_fit(
     no sort, no second pass."""
     from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, ts_us
 
-    group_cols = group_cols or ["event_type"]
-    x = (ts_us(F.col(ts_col)) / F.lit(86_400_000_000)).cast("long")  # day idx
-    y = half_up_round(F.col(value_col) * 100).cast("long")
+    x = (ts_us(F.col("ts")) / F.lit(86_400_000_000)).cast("long")  # day idx
+    y = half_up_round(F.col("value") * 100).cast("long")
     d38 = "decimal(38,0)"
-    agged = events.groupBy(*group_cols).agg(
+    agged = events.groupBy("event_type").agg(
         F.count(F.lit(1)).cast(d38).alias("__n"),
         F.sum(x.cast(d38)).alias("__sx"),
         F.sum(y.cast(d38)).alias("__sy"),
@@ -279,7 +257,7 @@ def trend_fit(
         F.sum((x * x).cast(d38)).alias("__sxx"),
     )
     return agged.select(
-        *group_cols,
+        "event_type",
         F.col("__n").cast("long").alias("n"),
         # per-row products stay int64 (they can't overflow row-wise);
         # the SUMS and their cross-multiplies are the decimal terms.
@@ -475,13 +453,7 @@ def _holt_step(acc, e):
     return F.struct(l2.alias("l"), t2.alias("t"))
 
 
-def holt_linear(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def holt_linear(events: DataFrame) -> DataFrame:
     """Per-key Holt LINEAR (double-exponential) smoothing with
     α = β = ½ and zero init — the trend-aware sibling of ema_halflife:
     the carried state is the PAIR (level, trend), updated per event by
@@ -495,20 +467,10 @@ def holt_linear(
     ema_halflife plan with a struct accumulator. Per-key state is two
     longs; per-key cost is the key's own history. Oracle: a recursive
     CTE (holt_linear_oracle_sql)."""
-    return present_holt_state(
-        holt_fold_batch(None, events, key_col, ts_col, value_col, tiebreak_col),
-        key_col,
-    )
+    return present_holt_state(holt_fold_batch(None, events))
 
 
-def holt_fold_batch(
-    state: DataFrame | None,
-    batch: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def holt_fold_batch(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     """Fold one time-slice batch into per-key Holt (level, trend) state —
     order-dependent IVM member #6, and the first whose carried numeric
     state is a VECTOR (the 2-dimensional (l, t) pair) rather than a
@@ -523,7 +485,7 @@ def holt_fold_batch(
     max_tb)."""
     return fold_ordered(
         state,
-        _ema_batch_state(batch, key_col, ts_col, value_col, tiebreak_col),
+        _ema_batch_state(batch, "user_id", "ts", "value", "event_id"),
         "holt_fold_batch",
         lambda prev: F.struct(
             F.coalesce(prev("level_cents"), F.lit(0)).cast("long").alias("l"),
@@ -538,12 +500,12 @@ def holt_fold_batch(
     )
 
 
-def present_holt_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
+def present_holt_state(state: DataFrame) -> DataFrame:
     """Graded output shape of the Holt state: (key, n_events,
     level_cents, trend_cents, forecast_cents) — forecast derived at
     presentation so the carried state stays minimal."""
     return state.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("user_id"),
         "n_events",
         "level_cents",
         "trend_cents",
@@ -554,13 +516,7 @@ def present_holt_state(state: DataFrame, key_col: str = "user_id") -> DataFrame:
 # --- Durbin–Watson serial-correlation statistic (round 7c) --------------
 
 
-def durbin_watson(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def durbin_watson(events: DataFrame) -> DataFrame:
     """Per-key Durbin–Watson statistic of the (ts, tiebreak)-ordered
     value series — the classic serial-correlation screen (DW ≈ 2(1 − r₁):
     ~2 means uncorrelated, →0 positive, →4 negative autocorrelation),
@@ -580,11 +536,11 @@ def durbin_watson(
 
     from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, ts_us
 
-    y = half_up_round(F.col(value_col) * 100).cast("long")
-    us = ts_us(F.col(ts_col))
-    w = Window.partitionBy(key_col).orderBy(us.asc(), F.col(tiebreak_col).asc())
+    y = half_up_round(F.col("value") * 100).cast("long")
+    us = ts_us(F.col("ts"))
+    w = Window.partitionBy("user_id").orderBy(us.asc(), F.col("event_id").asc())
     lagged = events.select(
-        F.col(key_col).alias("__k"),
+        F.col("user_id").alias("__k"),
         y.alias("__y"),
         F.lag(y, 1).over(w).alias("__prev"),
     )
@@ -605,7 +561,7 @@ def durbin_watson(
         ).alias("__sd2"),
     )
     return agged.select(
-        F.col("__k").alias(key_col),
+        F.col("__k").alias("user_id"),
         F.col("__n").cast("long").alias("n_events"),
         F.expr(
             "CAST(__n * COALESCE(__sd2, 0) * 1000000"
@@ -617,13 +573,7 @@ def durbin_watson(
 # --- Mann–Whitney rank-sum test (round 7c) -------------------------------
 
 
-def rank_sum_test(
-    events: DataFrame,
-    group_a: str,
-    group_b: str,
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def rank_sum_test(events: DataFrame, group_a: str, group_b: str) -> DataFrame:
     """Mann–Whitney U (Wilcoxon rank-sum) test statistic between two
     event types' value distributions — the NONPARAMETRIC location test
     next to contingency_chi2's independence screen. Emitted EXACTLY:
@@ -640,9 +590,9 @@ def rank_sum_test(
     anywhere; the corpus is touched exactly once."""
     from etl_pipeline_last_fm_spark.functions.scalar import half_up_round
 
-    cents = half_up_round(F.col(value_col) * 100).cast("long")
-    two = events.filter(F.col(type_col).isin([group_a, group_b])).select(
-        (F.col(type_col) == group_a).alias("__is_a"), cents.alias("__v")
+    cents = half_up_round(F.col("value") * 100).cast("long")
+    two = events.filter(F.col("event_type").isin([group_a, group_b])).select(
+        (F.col("event_type") == group_a).alias("__is_a"), cents.alias("__v")
     )
     per_v = two.groupBy("__v").agg(
         F.sum(F.col("__is_a").cast("long")).alias("__na"),

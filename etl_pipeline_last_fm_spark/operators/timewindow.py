@@ -28,26 +28,20 @@ from pyspark.sql import functions as F
 from etl_pipeline_last_fm_spark.functions.scalar import cents, ts_us
 
 
-def tumbling_window_agg(
-    events: DataFrame,
-    window_minutes: int = 60,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def tumbling_window_agg(events: DataFrame, window_minutes: int = 60) -> DataFrame:
     """Per (key, tumbling window): event count and pinned-rounded value sum.
     Returns (key, win_start_us, n_events, value_sum)."""
     w_us = window_minutes * 60_000_000
-    start = (ts_us(ts_col) - F.pmod(ts_us(ts_col), F.lit(w_us))).alias(
+    start = (ts_us("ts") - F.pmod(ts_us("ts"), F.lit(w_us))).alias(
         "win_start_us"
     )
     return (
-        events.select(F.col(key_col), start, F.col(value_col))
-        .groupBy(key_col, "win_start_us")
+        events.select(F.col("event_type"), start, F.col("value"))
+        .groupBy("event_type", "win_start_us")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact cent sum (order-insensitive; round-9 float-sum audit)
-            (F.sum(cents(value_col)).cast("double") / F.lit(100.0)).alias(
+            (F.sum(cents("value")).cast("double") / F.lit(100.0)).alias(
                 "value_sum"
             ),
         )
@@ -58,9 +52,6 @@ def hopping_window_agg(
     events: DataFrame,
     window_minutes: int = 60,
     hop_minutes: int = 15,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Overlapping windows: length W, advancing every H (W must be a
     multiple of H). Each event lands in W/H windows; window w covers
@@ -70,7 +61,7 @@ def hopping_window_agg(
     w_us = window_minutes * 60_000_000
     h_us = hop_minutes * 60_000_000
     n = w_us // h_us
-    us = ts_us(ts_col)
+    us = ts_us("ts")
     # Latest window start containing the event is us div H * H; the n
     # containing windows step back from it by H.
     last_start = us - F.pmod(us, F.lit(h_us))
@@ -79,15 +70,15 @@ def hopping_window_agg(
     )
     return (
         events.select(
-            F.col(key_col),
+            F.col("event_type"),
             F.explode(starts).alias("win_start_us"),
-            F.col(value_col),
+            F.col("value"),
         )
-        .groupBy(key_col, "win_start_us")
+        .groupBy("event_type", "win_start_us")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact cent sum (order-insensitive; round-9 float-sum audit)
-            (F.sum(cents(value_col)).cast("double") / F.lit(100.0)).alias(
+            (F.sum(cents("value")).cast("double") / F.lit(100.0)).alias(
                 "value_sum"
             ),
         )
@@ -98,9 +89,6 @@ def streaming_tumbling_window(
     events_stream: DataFrame,
     window_minutes: int = 60,
     watermark_minutes: int = 120,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Streaming twin of ``tumbling_window_agg``: same integer bucket
     arithmetic, windowed state bounded by the watermark (buckets older than
@@ -117,23 +105,23 @@ def streaming_tumbling_window(
     equals the batch operator exactly (tested)."""
     w_us = window_minutes * 60_000_000
     bucket_ts = F.timestamp_micros(
-        ts_us(ts_col) - F.pmod(ts_us(ts_col), F.lit(w_us))
+        ts_us("ts") - F.pmod(ts_us("ts"), F.lit(w_us))
     )
     return (
         events_stream.select(
-            F.col(key_col), bucket_ts.alias("__win"), F.col(value_col)
+            F.col("event_type"), bucket_ts.alias("__win"), F.col("value")
         )
         .withWatermark("__win", f"{watermark_minutes} minutes")
-        .groupBy(key_col, "__win")
+        .groupBy("event_type", "__win")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact cent sum (order-insensitive; round-9 float-sum audit)
-            (F.sum(cents(value_col)).cast("double") / F.lit(100.0)).alias(
+            (F.sum(cents("value")).cast("double") / F.lit(100.0)).alias(
                 "value_sum"
             ),
         )
         .select(
-            key_col,
+            "event_type",
             F.unix_micros(F.col("__win")).alias("win_start_us"),
             "n_events",
             "value_sum",

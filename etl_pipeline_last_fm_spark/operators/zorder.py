@@ -74,9 +74,8 @@ def write_zordered(
     y_col: str,
     bits: int = 10,
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
-    """Write parquet clustered on the Morton key of (x_col, y_col): range
+    """Overwrite ``path`` with parquet clustered on the Morton key of (x_col, y_col): range
     shuffle on the key, sort within files, drop the key from the payload.
     Filters on EITHER column then prune on parquet min/max stats.
 
@@ -96,6 +95,6 @@ def write_zordered(
         .repartitionByRange(n_files, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

@@ -21,11 +21,10 @@ def write_compacted(
     df: DataFrame,
     path: str,
     target_rows_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Write parquet in AQE-sized tasks with at most
+    """Overwrite ``path`` with parquet in AQE-sized tasks with at most
     ``target_rows_per_file`` rows per output file, in one Spark action."""
-    write_compacted_partitioned(df, path, [], target_rows_per_file, mode)
+    write_compacted_partitioned(df, path, [], target_rows_per_file)
 
 
 def write_compacted_partitioned(

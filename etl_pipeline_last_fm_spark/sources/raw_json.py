@@ -31,15 +31,15 @@ def read_raw_chart(
     spark: SparkSession,
     raw_root: str,
     ingest_date: str | Date | None = None,
-    country: str | None = None,
 ) -> DataFrame:
     """Scan the raw zone with the declared schema (never infer: schema
     inference is an extra full pass over the data).
 
     Returns columns: ``tracks`` (nested struct), ``ingest_date``, ``country``
-    (partition columns). Filters on the partition columns become directory
-    pruning (``PartitionFilters`` in the scan node), the Spark-native
-    equivalent of the reference's prefix-scoped S3 LIST
+    (partition columns), every country of ``ingest_date`` (or of every date
+    when it is None). The date filter becomes directory pruning
+    (``PartitionFilters`` in the scan node), the Spark-native equivalent of
+    the reference's prefix-scoped S3 LIST
     (dags/transformed_from_s3_to_pg.py:24).
     """
     reader = (
@@ -52,8 +52,6 @@ def read_raw_chart(
     df = reader.json(raw_root)
     if ingest_date is not None:
         df = df.filter(F.col("ingest_date") == F.lit(str(ingest_date)))
-    if country is not None:
-        df = df.filter(F.col("country") == F.lit(country))
     return df
 
 

@@ -24,26 +24,26 @@ from etl_pipeline_last_fm_spark.operators.incremental import additive_step, sum_
 CK_MOD = 2_305_843_009_213_693_952  # 2^61
 
 
-def checksum_state(batch_df: DataFrame, hash_col: str = "__h") -> DataFrame:
+def checksum_state(batch_df: DataFrame) -> DataFrame:
     """Per-bucket (n_rows, checksum) over pre-hashed rows — the additive
     state behind the graded q_table_checksum. Modular addition is
     associative and commutative, so disjoint batches fold in any order."""
     return (
-        batch_df.groupBy(F.pmod(F.col(hash_col), F.lit(64)).alias("bucket"))
+        batch_df.groupBy(F.pmod(F.col("__h"), F.lit(64)).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.expr(
-                f"CAST(SUM(CAST({hash_col} AS DECIMAL(38,0))) % {CK_MOD} AS BIGINT)"
+                f"CAST(SUM(CAST(__h AS DECIMAL(38,0))) % {CK_MOD} AS BIGINT)"
             ).alias("checksum"),
         )
     )
 
 
-def auc_step(pos_type: str = "purchase"):
+def auc_step():
     """Score census (evalmetrics.score_census — the SAME code path as the
     batch roc_auc). Per-value label counts are additive and order-free,
     so any batching of the event stream yields the same state; the AUC is
     computed at READ time (``evalmetrics.auc_from_census``)."""
     return additive_step(
-        lambda batch: score_census(batch, pos_type), sum_by(["v"])
+        score_census, sum_by(["v"])
     )

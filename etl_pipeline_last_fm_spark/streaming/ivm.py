@@ -49,7 +49,7 @@ from etl_pipeline_last_fm_spark.operators.incremental import join_delta
 JOIN_PARTS = ("a", "b", "m")
 
 
-def join_step(on: Sequence[str], side_col: str = "side"):
+def join_step(on: Sequence[str]):
     """Fold step over ``JOIN_PARTS``: split the tagged batch into ΔA and
     ΔB, apply the delta rule, and append each delta to its state."""
     on = list(on)
@@ -66,7 +66,7 @@ def join_step(on: Sequence[str], side_col: str = "side"):
         bad_on = [k for k in on if k.startswith(("a_", "b_"))]
         if bad_on:
             raise ValueError(f"join keys must not use side prefixes: {bad_on}")
-        stray = cols - {side_col} - set(on) - {
+        stray = cols - {"side"} - set(on) - {
             c for c in cols if c.startswith(("a_", "b_"))
         }
         if stray:
@@ -74,8 +74,8 @@ def join_step(on: Sequence[str], side_col: str = "side"):
                 f"unprefixed payload columns would be dropped: {sorted(stray)};"
                 " name side-a payloads a_* and side-b payloads b_*"
             )
-        da = batch_df.filter(F.col(side_col) == "a").drop(side_col)
-        db = batch_df.filter(F.col(side_col) == "b").drop(side_col)
+        da = batch_df.filter(F.col("side") == "a").drop("side")
+        db = batch_df.filter(F.col("side") == "b").drop("side")
         da = da.select(*on, *[c for c in da.columns if c.startswith("a_")])
         db = db.select(*on, *[c for c in db.columns if c.startswith("b_")])
         delta = join_delta(da, db, a_state, b_state, on)

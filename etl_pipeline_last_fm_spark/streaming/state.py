@@ -23,8 +23,8 @@ part is the guard.
 - **Reads.** Every part is read at its latest version BELOW the batch_id.
   A crash after some parts committed v=N but before the guard did replays
   batch N against exactly the pre-batch states, so the replay recommits
-  v=N idempotently instead of double-counting. That needs ``retain >= 2``;
-  if the guard exists but another part has no pre-batch version the fold
+  v=N idempotently instead of double-counting. That is why
+  ``commit_state`` keeps the newest two snapshots; if the guard exists but another part has no pre-batch version the fold
   raises rather than silently refolding from empty.
 - **Commits** run in ``parts`` order, guard last, so the guard never
   claims a batch whose other parts are missing. A crash mid-write leaves
@@ -81,11 +81,10 @@ def list_state_versions(spark: SparkSession, root: str) -> list[tuple[int, str]]
     return sorted(out)
 
 
-def commit_state(state_df: DataFrame, root: str, batch_id: int,
-                 retain: int = 2) -> None:
+def commit_state(state_df: DataFrame, root: str, batch_id: int) -> None:
     """Crash-safe state commit: write the new snapshot to its OWN
-    versioned directory (``root/_v=<batch_id>``), then prune snapshots
-    older than the newest ``retain``. The previous snapshot is deleted
+    versioned directory (``root/_v=<batch_id>``), then prune all but the
+    newest two snapshots. The previous snapshot is deleted
     only AFTER the new one's ``_SUCCESS`` exists, so at every instant at
     least one complete copy of the state is on disk. Overwrite semantics
     apply only WITHIN a version: a replay that crashed mid-write re-runs
@@ -96,7 +95,7 @@ def commit_state(state_df: DataFrame, root: str, batch_id: int,
     state_df.write.mode("overwrite").parquet(
         f"{root.rstrip('/')}/_v={int(batch_id)}"
     )
-    for _bid, path in list_state_versions(spark, root)[:-max(1, int(retain))]:
+    for _bid, path in list_state_versions(spark, root)[:-2]:
         fs.delete_recursive(spark, path)
 
 

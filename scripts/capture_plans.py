@@ -6,10 +6,15 @@ Usage:
 Defaults to the bench HEADLINE + EXTENDED set when no query names are given.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 
-Expression ids (``#123``, ``#123L``) and ``plan_id=`` values are stripped:
-they count up per session, so without this two captures of the same plan
-differ. Two captures of one tree then ``diff -r`` clean, which makes a
-parent/change plan comparison a plain directory diff.
+Five session counters are stripped: expression ids (``#123``, ``#123L``),
+``plan_id=`` values, the numeric suffix of Python lambda variables
+(``lambda x_12#`` becomes ``lambda x#``), the RDD ids in ``Scan
+ExistingRDD`` arguments (``MapPartitionsRDD[113]``) and the suffix of the
+optimizer's common subexpressions (``_common_expr_18``). They count up per
+session, so without this two captures of the same plan differ, and so do
+plans built from the same Column expressions in another order or after a
+different set of queries. Two captures of one tree then ``diff -r`` clean,
+which makes a parent/change plan comparison a plain directory diff.
 """
 
 from __future__ import annotations
@@ -22,7 +27,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_last_fm_spark.session import get_spark  # noqa: E402
 
-_NOISE = [(re.compile(r"#\d+L?"), "#"), (re.compile(r"plan_id=\d+"), "plan_id=")]
+_NOISE = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(lambda \w+)_\d+#"), r"\1#"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_"),
+]
 
 
 def normalize(txt: str) -> str:

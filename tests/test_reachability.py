@@ -10,7 +10,9 @@ roots or delete it. The engine never imports ``grading``.
 
 Below the module level, the engine's package ``__init__`` files import
 nothing (a re-export would count as a reader of every name it lists),
-and every top-level engine name has a reader somewhere in the repo.
+every top-level engine name has a reader somewhere in the repo, and every
+defaulted parameter of a top-level engine function is set by some call
+(a default nothing overrides is a constant, not a parameter).
 
 The same source walk pins one structural rule: streaming state is folded
 only through the replay-guarded driver in ``streaming/state.py``.
@@ -19,6 +21,7 @@ only through the replay-guarded driver in ``streaming/state.py``.
 from __future__ import annotations
 
 import ast
+import math
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -244,3 +247,83 @@ def test_every_engine_name_has_a_reader():
                 ):
                     unread.append(f"{path.relative_to(REPO)}:{name}")
     assert not unread, "engine names nothing references: " + ", ".join(unread)
+
+
+#: Deployment settings: each is set per installation, so it stays a
+#: parameter although no call in the repo passes it.
+DEPLOYMENT_SETTINGS = {
+    # MinIO needs path-style URLs; AWS S3 prefers virtual-host buckets.
+    f"{PKG}/session.py:s3a_conf:path_style_access",
+    # TRUNCATE keeps a BI table's grants and views across an overwrite.
+    f"{PKG}/sources/jdbc.py:write_jdbc:truncate",
+    # Which isolation levels a BI database accepts is the database's choice.
+    f"{PKG}/sources/jdbc.py:write_jdbc:isolation_level",
+    # The insert batch size is tuned to the BI database's round trip.
+    f"{PKG}/sources/jdbc.py:write_jdbc_staged:batchsize",
+    # The swap DDL is dialect-specific (MySQL's atomic multi-RENAME).
+    f"{PKG}/sources/jdbc.py:write_jdbc_staged:rename_template",
+    # Driver options (credentials, SSL) belong to the deployment.
+    f"{PKG}/sources/jdbc.py:write_jdbc_staged:options",
+}
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[tuple[str, int | None]]:
+    """(name, position) of each defaulted parameter; keyword-only ones
+    have no position."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out: list[tuple[str, int | None]] = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _callee(f: ast.expr) -> str | None:
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _call_sites() -> dict[str, list[tuple[set[str], float, bool]]]:
+    """Called name -> (keywords, positional count, splats) for every call
+    in the repo; ``functools.partial(f, ...)`` counts as a call of ``f``.
+    ``splats`` is True for a ``**kwargs`` call, which may set anything;
+    a ``*args`` call may set any position."""
+    sites: dict[str, list[tuple[set[str], float, bool]]] = {}
+    for path in _repo_sources():
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            name, args = _callee(node.func), node.args
+            if name == "partial" and args:
+                name, args = _callee(args[0]), args[1:]
+            if name is None:
+                continue
+            star = any(isinstance(a, ast.Starred) for a in args)
+            npos = math.inf if star else len(args)
+            keywords = {k.arg for k in node.keywords if k.arg}
+            splat = any(k.arg is None for k in node.keywords)
+            sites.setdefault(name, []).append((keywords, npos, splat))
+    return sites
+
+
+def test_every_engine_default_is_set_by_a_caller():
+    """A defaulted parameter of a top-level engine function that no call in
+    the repo sets is a configuration nothing has ever run: fold its default
+    into the body. Calls match by function name, and a parameter counts as
+    set by keyword, by position, through ``functools.partial`` or by a
+    ``**kwargs`` call."""
+    sites = _call_sites()
+    unset = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        for fn in ast.parse(path.read_text(), filename=str(path)).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for name, pos in _defaulted(fn):
+                key = f"{path.relative_to(REPO)}:{fn.name}:{name}"
+                if key in DEPLOYMENT_SETTINGS:
+                    continue
+                if not any(
+                    splat or name in kws or (pos is not None and npos > pos)
+                    for kws, npos, splat in sites.get(fn.name, [])
+                ):
+                    unset.append(key)
+    assert not unset, "engine defaults no call sets: " + ", ".join(unset)
